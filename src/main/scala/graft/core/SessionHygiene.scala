@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Per-query session cleanup for the suite runners (Bench, Verify, the
   * dev timing tools) — the r04/r05 RUNNER CONTRACT says queries may
@@ -36,4 +37,15 @@ object SessionHygiene {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
   }
+
+  /** Free the blocks behind ONE `localCheckpoint()`ed frame — the
+    * per-frame counterpart of [[releaseAll]] for the `…Releasable`
+    * handles. A checkpointed frame's plan is a `LogicalRDD` leaf over
+    * the persisted RDD, which `Dataset.unpersist` never touches. Same
+    * rule as above: every reader must have materialized first. */
+  def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 }

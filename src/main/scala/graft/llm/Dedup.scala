@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.SessionHygiene.releaseCheckpoint
 
 /** Deduplication operators, designed for the 100 TB regime: every variant
   * is bucketed — candidate pairs come from hash buckets (exact hash,
@@ -232,7 +233,7 @@ object Dedup {
     * Scale shape: the index is scanned column-pruned (bands need
     * `sig`; the verify joins need `shingles` for candidate ids only);
     * candidates are bounded by the caps; nothing re-reads corpus text.
-    * The release handle drops the new batch's fingerprint cache. */
+    * The release handle drops the new batch's fingerprint checkpoint. */
   def nearDupsAgainstIndexReleasable(
       newDf: DataFrame,
       textCol: String,
@@ -256,8 +257,7 @@ object Dedup {
         graft.functions.ShingleHashes(col(textCol), shingleN)
           .as("shingles"))
       .filter(col("sig").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    newFp.count()
+      .localCheckpoint()
     // an id occupies `bands` buckets → the same pair can surface once
     // per band; distinct() collapses them (the bipartite expansion has
     // no built-in dedup — its other callers are one-bucket-per-id)
@@ -291,7 +291,7 @@ object Dedup {
           col("__it")).cast("double"))
       .filter(col("jaccard") >= jaccardThreshold)
       .select("new_id", "corpus_id", "jaccard")
-    (out, () => { newFp.unpersist(); () })
+    (out, () => releaseCheckpoint(newFp))
   }
 
   /** [[nearDupsAgainstIndexReleasable]] without the release handle. */
@@ -338,9 +338,9 @@ object Dedup {
     verifyJaccardReleasable(cands, df, textCol, idCol, shingleN)._1
 
   /** [[verifyJaccard]] plus a release handle for the internal shingle
-    * cache — call it once the verify output has been materialized.
-    * (The plain `verifyJaccard` leaves the cache for the session's
-    * cache-hygiene policy, e.g. per-query `clearCache`.) */
+    * checkpoint — call it once the verify output has been materialized.
+    * (The plain `verifyJaccard` leaves its blocks to GC or
+    * [[graft.core.SessionHygiene.releaseAll]]; `clearCache` misses them.) */
   def verifyJaccardReleasable(
       cands: DataFrame,
       df: DataFrame,
@@ -348,13 +348,13 @@ object Dedup {
       idCol: String,
       shingleN: Int = 3): (DataFrame, () => Unit) = {
     // Shingle ONLY docs that appear in some candidate pair (semi-join
-    // pushdown), and only ONCE: without the cache, each side of the
-    // pair join recomputes the full shingle table — shingling is the
-    // dominant cost of the verify stage. The cache is bounded by the
-    // candidate-doc set (≪ corpus) and spills to disk at scale.
+    // pushdown), and only ONCE: without the checkpoint, each side of
+    // the pair join recomputes the full shingle table — shingling is
+    // the dominant cost of the verify stage. The checkpoint is bounded
+    // by the candidate-doc set (≪ corpus) and spills to disk at scale.
     // Shingle sets are the fused sorted-distinct FNV-hash arrays
     // (ShingleHashes): |A∩B| over longs ≡ over the shingle strings
-    // absent 64-bit collisions, the cached table is 8 bytes per
+    // absent 64-bit collisions, the checkpoint holds 8 bytes per
     // shingle instead of the string, and the intersection comparisons
     // are long equality instead of string compares.
     val ids = cands.select(col("ida").as(idCol))
@@ -362,8 +362,7 @@ object Dedup {
     val sh = df.join(ids, Seq(idCol), "left_semi")
       .select(col(idCol),
         graft.functions.ShingleHashes(col(textCol), shingleN).as("shs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sh.count() // materialize before the two join branches race to fill it
+      .localCheckpoint()
     val sa = sh.select(col(idCol).as("ida"), col("shs").as("sha"))
     val sb = sh.select(col(idCol).as("idb"), col("shs").as("shb"))
     val out = cands.join(sa, "ida").join(sb, "idb")
@@ -375,7 +374,7 @@ object Dedup {
         col("inter").cast("double") /
           (col("na") + col("nb") - col("inter")))
       .select("ida", "idb", "jaccard")
-    (out, () => { sh.unpersist(); () })
+    (out, () => releaseCheckpoint(sh))
   }
 
   /** Containment verification for candidate pairs: |A∩B| / |A| and
@@ -393,8 +392,8 @@ object Dedup {
     verifyContainmentReleasable(cands, df, textCol, idCol, shingleN)._1
 
   /** [[verifyContainment]] plus a release handle for the internal
-    * shingle cache — same contract as [[verifyJaccardReleasable]]. The
-    * persist + materialize matters here exactly as in verifyJaccard:
+    * shingle checkpoint — same contract as [[verifyJaccardReleasable]].
+    * The materialization matters here exactly as in verifyJaccard:
     * without it, ShingleHashes recomputes for BOTH join branches,
     * doubling the dominant cost of the verify stage (ADVICE r05). */
   def verifyContainmentReleasable(
@@ -408,8 +407,7 @@ object Dedup {
     val sh = df.join(ids, Seq(idCol), "left_semi")
       .select(col(idCol),
         graft.functions.ShingleHashes(col(textCol), shingleN).as("shs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sh.count() // materialize before the two join branches race to fill it
+      .localCheckpoint()
     val sa = sh.select(col(idCol).as("ida"), col("shs").as("sha"))
     val sb = sh.select(col(idCol).as("idb"), col("shs").as("shb"))
     val out = cands.join(sa, "ida").join(sb, "idb")
@@ -422,7 +420,7 @@ object Dedup {
         (col("inter").cast("double") / col("nb")).as("containment_b"),
         (col("inter").cast("double") /
           (col("na") + col("nb") - col("inter"))).as("jaccard"))
-    (out, () => { sh.unpersist(); () })
+    (out, () => releaseCheckpoint(sh))
   }
 
   // -------------------------------------------------------------- simhash
@@ -786,10 +784,11 @@ object Dedup {
     * would have PRUNED the oversized buckets and kept every copy;
     * collapsing first is strictly more complete dedup in that regime.
     *
-    * Cache lifecycle: intermediates (signatures, shingles, verified
-    * pairs) are released before returning; `reps` stays cached because
-    * the returned plan reads it — release it via the session's cache
-    * hygiene (e.g. per-query `clearCache`) once consumed. */
+    * Checkpoint lifecycle: every stage is an eager `localCheckpoint`,
+    * not a persist (SCALE.md, "Near-dup materialization"); all but
+    * `reps` are released before returning. The returned plan reads
+    * `reps`: its blocks free on GC or `SessionHygiene.releaseAll` —
+    * not on `clearCache` — or via [[dedupNearMinhashReleasable]]. */
   def dedupNearMinhash(
       df: DataFrame,
       textCol: String,
@@ -801,12 +800,11 @@ object Dedup {
     dedupNearMinhashReleasable(
       df, textCol, idCol, jaccardThreshold, k, bands, shingleN)._1
 
-  /** [[dedupNearMinhash]] plus a release handle for the one cache the
-    * returned plan still reads (the exact-dedup representatives table) —
-    * call it once the survivor output has been materialized. The plain
-    * variant leaves that cache to the session's cache-hygiene policy
-    * (e.g. per-query `clearCache`); in a long-lived session use THIS
-    * variant so the suite accumulates zero net cached tables
+  /** [[dedupNearMinhash]] plus a release handle for the one checkpoint
+    * the returned plan still reads (the exact-dedup representatives
+    * table) — call it once the survivor output has been materialized;
+    * the output cannot recompute afterwards. In a long-lived session
+    * use THIS variant so the suite accumulates no checkpoint blocks
     * (VERDICT r05 §4). */
   def dedupNearMinhashReleasable(
       df: DataFrame,
@@ -816,37 +814,33 @@ object Dedup {
       k: Int = 64,
       bands: Int = 16,
       shingleN: Int = 3): (DataFrame, () => Unit) = {
-    val reps = exactDedup(df, textCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigs = minhashSignatures(reps, textCol, idCol, k, shingleN).persist()
-    sigs.count() // materialize once for the banding + estimation branches
+    val reps = exactDedup(df, textCol, idCol).localCheckpoint()
+    val sigs = minhashSignatures(reps, textCol, idCol, k, shingleN)
+      .localCheckpoint() // once for the banding + estimation branches
     val cands = lshCandidates(sigs, idCol, bands, k / bands)
     // r17 (guide §5 persist discipline): the estimate-filtered pair
     // table feeds TWO consumers inside the verify stage (the
-    // candidate-id set that bounds the shingle cache, and the verify
-    // join itself) — without the persist the banding + pair expansion
+    // candidate-id set that bounds the shingle checkpoint, and the verify
+    // join itself) — without the checkpoint the banding + pair expansion
     // + both estimate joins re-executed for each (the r16 shape ran
     // the whole candidate stage twice per query). Pair-table-sized.
     val est = estimateJaccard(cands, sigs, idCol)
       .filter(col("est_jaccard") >= jaccardThreshold * 0.5) // cheap prefilter
       .select("ida", "idb")
-      .persist()
-    est.count() // materialize before the two verify-stage consumers
+      .localCheckpoint()
     val (verifiedAll, releaseShingles) =
       verifyJaccardReleasable(est, reps, textCol, idCol, shingleN)
     val verified = verifiedAll
       .filter(col("jaccard") >= jaccardThreshold)
       .select("ida", "idb")
-      .persist()
-    verified.count() // materialize, then the upstream caches can go
+      .localCheckpoint() // materialized, so the upstream stages can go
     releaseShingles()
-    est.unpersist()
-    sigs.unpersist()
+    Seq(est, sigs).foreach(releaseCheckpoint)
     val out = nearDupSurvivors(reps, idCol, verified)
     // survivors has materialized the drop list (components collect /
     // persisted drop) by the time it returns — the pair set can go too
-    verified.unpersist()
-    (out, () => { reps.unpersist(); () })
+    releaseCheckpoint(verified)
+    (out, () => releaseCheckpoint(reps))
   }
 
   /** End-to-end SimHash near-dup dedup: signatures → banded hamming
@@ -863,7 +857,7 @@ object Dedup {
     dedupNearSimhashReleasable(df, textCol, idCol, maxHamming)._1
 
   /** [[dedupNearSimhash]] plus a release handle for the representatives
-    * cache the returned plan reads — same contract as
+    * checkpoint the returned plan reads — same contract as
     * [[dedupNearMinhashReleasable]]. The signature table itself needs NO
     * cache since the grouped [[simhashCandidates]] reads it exactly once
     * (the old banded self-join read it twice). */
@@ -872,15 +866,14 @@ object Dedup {
       textCol: String,
       idCol: String,
       maxHamming: Int = 3): (DataFrame, () => Unit) = {
-    val reps = exactDedup(df, textCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val reps = exactDedup(df, textCol, idCol).localCheckpoint()
     val pairs = simhashCandidates(simhash(reps, textCol, idCol),
         idCol, maxHamming)
       .select("ida", "idb")
     // survivors materializes the drop list (components collect /
     // persisted drop) before returning
     val out = nearDupSurvivors(reps, idCol, pairs)
-    (out, () => { reps.unpersist(); () })
+    (out, () => releaseCheckpoint(reps))
   }
 
   // ------------------------------------------------------ decontamination

@@ -3249,7 +3249,7 @@ object LlmQueries {
       val (survivors, release) = Dedup.dedupNearMinhashReleasable(
         d, "text", "doc_id", jaccardThreshold = 0.8)
       // single aggregate row → collect it, then the representatives
-      // cache the survivor plan reads can be released immediately
+      // checkpoint the survivor plan reads can be released immediately
       collectAndRelease(s,
         survivors.agg(count(lit(1)).as("survivors"),
           (lit(d.count()) - count(lit(1))).as("removed")))(release)

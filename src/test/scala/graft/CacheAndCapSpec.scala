@@ -153,14 +153,80 @@ class CacheAndCapSpec extends SparkSpec {
     }
     assert(GraftSqlBridge.cacheIsEmpty(spark),
       "a pipeline left a persisted intermediate behind")
-    // library-level Releasable contracts, end to end
+    // library-level Releasable contracts, end to end. The near-dup
+    // stages are localCheckpoints — RDD persists the SQL cache never
+    // sees — so the persistent-RDD set must come back unchanged too.
+    def rddIds = spark.sparkContext.getPersistentRDDs.keySet
+    val before = rddIds
     val (surv, rel) =
       Dedup.dedupNearSimhashReleasable(docs, "text", "doc_id", maxHamming = 0)
     assert(surv.count() == 4L) // exact dup 3 collapses; no hamming-0 pair
     rel()
+    assert((rddIds -- before).isEmpty, "simhash dedup leaked RDD blocks")
     val (surv2, rel2) = Dedup.dedupNearMinhashReleasable(docs, "text", "doc_id")
     assert(surv2.count() == 4L) // jaccard(0,1) = 0.75 < 0.8 → survives
     rel2()
+    assert((rddIds -- before).isEmpty, "minhash dedup leaked RDD blocks")
     assert(GraftSqlBridge.cacheIsEmpty(spark))
+  }
+
+  test("near-dup plans stay flat behind a persisted input") {
+    // A persisted stage nests the cached plans of the stages it reads
+    // inside its own InMemoryRelation; with two branches reading each
+    // stage, the plan AQE re-prints on every stage completion grows
+    // ~5× per stage (thousands of InMemoryRelation copies behind a
+    // persisted input). Checkpointed stages are plan leaves.
+    // 60 families of 4: a doc, its exact copy, the doc plus one word
+    // (jaccard 38/39 over word 3-shingles) and an unrelated doc — the
+    // copy and the near-dup (ids ≡ 1, 2 mod 4) are the ones dropped
+    val d = (0L until 240L).map { i =>
+      val fam = i / 4
+      val base = (0 until 40).map(j => s"f${fam}w$j").mkString(" ")
+      (i, i % 4 match {
+        case 0 | 1 => base
+        case 2 => base + " edited"
+        case _ => s"unrelated doc $i " + base.reverse
+      })
+    }.toDF("doc_id", "text")
+    def survivors(in: org.apache.spark.sql.DataFrame): Set[Long] = {
+      val (out, rel) = Dedup.dedupNearMinhashReleasable(in, "text", "doc_id")
+      val ids = out.select("doc_id").collect().map(_.getLong(0)).toSet
+      rel()
+      ids
+    }
+    val expected = survivors(d)
+    val input = d.persist() // one caller persist, as in a curation run
+    input.count()
+    val sc = spark.sparkContext
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      import org.apache.spark.sql.execution.ui._
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          plans.add(u.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    val got =
+      try {
+        val ids = survivors(input)
+        org.apache.spark.TestListenerBus.drain(sc)
+        ids
+      } finally {
+        sc.removeSparkListener(listener)
+        input.unpersist()
+      }
+    val counts = plans.toArray(Array.empty[String])
+      .map("InMemoryRelation".r.findAllIn(_).length)
+    assert(counts.nonEmpty, "no SQL plan events were recorded")
+    assert(counts.max <= 10,
+      s"a plan holds ${counts.max} InMemoryRelation copies")
+    assert(got == expected)
+    assert(got == (0L until 240L).filter(i => i % 4 == 0 || i % 4 == 3).toSet)
   }
 }
