@@ -94,7 +94,7 @@ object Dedup {
     * null-text docs produce no shingle rows at all (ADVICE r05). */
   /** One row per (id, band, band-signature-slice) — the LSH banding
     * shared by the monopartite ([[lshCandidates]]) and incremental
-    * ([[nearDupsAgainstIndex]]) candidate generators. */
+    * ([[nearDupsAgainstIndexReleasable]]) candidate generators. */
   private def bandedRows(
       sigs: DataFrame, idCol: String, bands: Int, rows: Int): DataFrame =
     sigs.filter(col("sig").isNotNull).select(
@@ -126,8 +126,9 @@ object Dedup {
     * checking: one row per doc — (idCol, `sig` array<long> (the k-perm
     * MinHash signature, ~8k bytes), `shingles` array<long>
     * (sorted-distinct shingle hashes)). Daily ingest then runs
-    * entirely against fingerprints ([[nearDupsAgainstIndex]]): the old
-    * corpus TEXT is never re-read and its signatures never recomputed
+    * entirely against fingerprints
+    * ([[nearDupsAgainstIndexReleasable]]): the old corpus TEXT is never
+    * re-read and its signatures never recomputed
     * — the production incremental-dedup shape (a 100 TB corpus is
     * fingerprinted once; each day's batch pays only its own size).
     * Null-signature (null/empty-text) docs are excluded — they
@@ -150,13 +151,13 @@ object Dedup {
 
   /** Append a (deduped) batch's fingerprints to an existing index —
     * day N's close of the incremental loop: check the batch with
-    * [[nearDupsAgainstIndex]], drop its near-dups, then append the
+    * [[nearDupsAgainstIndexReleasable]], drop its near-dups, then append the
     * survivors' fingerprints so day N+1 sees them. Same row layout as
     * [[writeMinhashIndex]].
     *
     * Precondition: the batch's ids must not already be in the index —
     * this is append-only (no upsert); re-appending an id would leave
-    * duplicate fingerprint rows. [[nearDupsAgainstIndex]] defends by
+    * duplicate fingerprint rows. [[nearDupsAgainstIndexReleasable]] defends by
     * deduping the index by id at read time, but duplicate rows still
     * waste index scan bytes, so don't create them. */
   def appendToMinhashIndex(
@@ -294,20 +295,6 @@ object Dedup {
     (out, () => releaseCheckpoint(newFp))
   }
 
-  /** [[nearDupsAgainstIndexReleasable]] without the release handle. */
-  def nearDupsAgainstIndex(
-      newDf: DataFrame,
-      textCol: String,
-      idCol: String,
-      index: DataFrame,
-      jaccardThreshold: Double = 0.8,
-      k: Int = 64,
-      bands: Int = 16,
-      shingleN: Int = 3,
-      maxBucket: Int = 1000): DataFrame =
-    nearDupsAgainstIndexReleasable(newDf, textCol, idCol, index,
-      jaccardThreshold, k, bands, shingleN, maxBucket)._1
-
   /** Estimated Jaccard from signatures for candidate pairs (fraction of
     * matching signature positions). Signature tables are re-joined by id —
     * broadcast when the candidate set is small. */
@@ -328,18 +315,11 @@ object Dedup {
     * [[graft.functions.ShingleHashes]] kernel) and intersect with the
     * built-in `array_intersect` — per-pair cost linear in the shingle
     * counts, and the joins move only |candidates| rows. Runs ONLY over
-    * candidate pairs (J-verify stage of the pipeline); never all-pairs. */
-  def verifyJaccard(
-      cands: DataFrame,
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      shingleN: Int = 3): DataFrame =
-    verifyJaccardReleasable(cands, df, textCol, idCol, shingleN)._1
-
-  /** [[verifyJaccard]] plus a release handle for the internal shingle
-    * checkpoint — call it once the verify output has been materialized.
-    * (The plain `verifyJaccard` leaves its blocks to GC or
+    * candidate pairs (J-verify stage of the pipeline); never all-pairs.
+    *
+    * Returns a release handle for the internal shingle checkpoint —
+    * call it once the verify output has been materialized. (Without
+    * the handle the blocks wait for GC or
     * [[graft.core.SessionHygiene.releaseAll]]; `clearCache` misses them.) */
   def verifyJaccardReleasable(
       cands: DataFrame,
@@ -382,20 +362,11 @@ object Dedup {
     * detector (a doc QUOTING another scores near 1.0 on the smaller
     * side while symmetric Jaccard stays low). Same candidate-only
     * cost model and fused shingle-hash machinery as
-    * [[verifyJaccard]]. */
-  def verifyContainment(
-      cands: DataFrame,
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      shingleN: Int = 3): DataFrame =
-    verifyContainmentReleasable(cands, df, textCol, idCol, shingleN)._1
-
-  /** [[verifyContainment]] plus a release handle for the internal
-    * shingle checkpoint — same contract as [[verifyJaccardReleasable]].
-    * The materialization matters here exactly as in verifyJaccard:
-    * without it, ShingleHashes recomputes for BOTH join branches,
-    * doubling the dominant cost of the verify stage (ADVICE r05). */
+    * [[verifyJaccardReleasable]], and the same release handle for the
+    * internal shingle checkpoint. The materialization matters here
+    * exactly as there: without it, ShingleHashes recomputes for BOTH
+    * join branches, doubling the dominant cost of the verify stage
+    * (ADVICE r05). */
   def verifyContainmentReleasable(
       cands: DataFrame,
       df: DataFrame,
@@ -787,24 +758,11 @@ object Dedup {
     * Checkpoint lifecycle: every stage is an eager `localCheckpoint`,
     * not a persist (SCALE.md, "Near-dup materialization"); all but
     * `reps` are released before returning. The returned plan reads
-    * `reps`: its blocks free on GC or `SessionHygiene.releaseAll` —
-    * not on `clearCache` — or via [[dedupNearMinhashReleasable]]. */
-  def dedupNearMinhash(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      jaccardThreshold: Double = 0.8,
-      k: Int = 64,
-      bands: Int = 16,
-      shingleN: Int = 3): DataFrame =
-    dedupNearMinhashReleasable(
-      df, textCol, idCol, jaccardThreshold, k, bands, shingleN)._1
-
-  /** [[dedupNearMinhash]] plus a release handle for the one checkpoint
-    * the returned plan still reads (the exact-dedup representatives
-    * table) — call it once the survivor output has been materialized;
-    * the output cannot recompute afterwards. In a long-lived session
-    * use THIS variant so the suite accumulates no checkpoint blocks
+    * `reps`, freed by the returned release handle — call it once the
+    * survivor output has been materialized; the output cannot
+    * recompute afterwards. Without the handle the blocks free on GC or
+    * `SessionHygiene.releaseAll` — not on `clearCache` — so a
+    * long-lived session that skips it accumulates checkpoint blocks
     * (VERDICT r05 §4). */
   def dedupNearMinhashReleasable(
       df: DataFrame,
@@ -848,19 +806,11 @@ object Dedup {
     * minhash pipeline (min id per component); exact copies hash
     * identically (hamming 0) so no separate exact pass is needed —
     * but they are collapsed first anyway for the same quadratic-bucket
-    * reason as [[dedupNearMinhash]]. */
-  def dedupNearSimhash(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      maxHamming: Int = 3): DataFrame =
-    dedupNearSimhashReleasable(df, textCol, idCol, maxHamming)._1
-
-  /** [[dedupNearSimhash]] plus a release handle for the representatives
-    * checkpoint the returned plan reads — same contract as
-    * [[dedupNearMinhashReleasable]]. The signature table itself needs NO
-    * cache since the grouped [[simhashCandidates]] reads it exactly once
-    * (the old banded self-join read it twice). */
+    * reason as [[dedupNearMinhashReleasable]]. Returns a release handle
+    * for the representatives checkpoint the returned plan reads — same
+    * contract as [[dedupNearMinhashReleasable]]. The signature table
+    * itself needs NO cache since the grouped [[simhashCandidates]]
+    * reads it exactly once (the old banded self-join read it twice). */
   def dedupNearSimhashReleasable(
       df: DataFrame,
       textCol: String,

@@ -359,7 +359,7 @@ object LanguageModel {
     * n_bigrams` (avg micro-nats per bigram — monotone in perplexity,
     * no float), and the tertile cutoffs come from a distributed
     * prefix-sum cumsum over the DISTINCT-SCORE table
-    * ([[graft.stats.GlobalOrder.exclusivePrefix]] — r17: continuous
+    * ([[graft.stats.GlobalOrder.exclusivePrefixReleasable]] — r17: continuous
     * scores make distinct count ≈ doc count, so the former
     * single-partition window was the corpus through one task) —
     * `c1 = min score with 3·cum ≥ n`, `c2 = min score with
@@ -411,7 +411,7 @@ object LanguageModel {
     val dist = scores
       .groupBy(gs.map(col) :+ col("score_micro"): _*)
       .agg(count(lit(1)).as("__c"))
-    val (pref, _) = graft.stats.GlobalOrder.exclusivePrefix(
+    val (pref, _, _) = graft.stats.GlobalOrder.exclusivePrefixReleasable(
       dist, gs.map(col) :+ col("score_micro"), col("__c"), "__excl",
       // no precheckpoint: dist is ONE cheap aggregate over the
       // checkpointed scores table — running it twice (sampling +

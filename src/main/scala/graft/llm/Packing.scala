@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * formulation (one `Window.orderBy` over everything) funnels the full
   * corpus through a single task.
   *
-  * Scale shape: the shared [[graft.stats.GlobalOrder.exclusivePrefix]]
-  * decomposition — range-partition by `idCol`, P-row partials to the
-  * driver, broadcast offsets, partition-local running sum; only the
-  * narrow (id, n_tokens) count table ever shuffles.
+  * Scale shape: the shared
+  * [[graft.stats.GlobalOrder.exclusivePrefixReleasable]] decomposition
+  * — range-partition by `idCol`, P-row partials to the driver,
+  * broadcast offsets, partition-local running sum; only the narrow
+  * (id, n_tokens) count table ever shuffles.
   */
 object Packing {
 
@@ -29,23 +30,10 @@ object Packing {
     * [[Bpe.count]] to pack on REAL subword counts.
     *
     * RUNNER CONTRACT: persists the range-partitioned count table the
-    * returned plan reads (two passes: partial sums + final); released
-    * by the session's per-query cache hygiene like the other persisted
-    * pipelines — or eagerly via [[packSequencesReleasable]]'s handle
-    * (ADVICE r06). */
-  def packSequences(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      ctxLen: Int,
-      numParts: Int = 0,
-      tokenCounter: org.apache.spark.sql.Column =>
-        org.apache.spark.sql.Column = TextAnalysis.tokenCount): DataFrame =
-    packSequencesReleasable(df, textCol, idCol, ctxLen, numParts,
-      tokenCounter)._1
-
-  /** [[packSequences]] plus the prefix cache's release handle — call
-    * it once the packing table has been materialized. */
+    * returned plan reads (two passes: partial sums + final) and returns
+    * it with its release handle — call the handle once the packing
+    * table has been materialized (ADVICE r06; the
+    * [[graft.stats.GlobalOrder.exclusivePrefixReleasable]] contract). */
   def packSequencesReleasable(
       df: DataFrame,
       textCol: String,
@@ -73,10 +61,11 @@ object Packing {
     * `idCol` order and cut every `ctxLen` ids — one row per training
     * sequence `(seq_id, n_tokens, token_ids)`, the final partial
     * sequence allowed short. The last pipeline mile:
-    * [[packSequences]] is the ASSIGNMENT view (which docs land where);
-    * this emits the sequences a trainer actually reads.
+    * [[packSequencesReleasable]] is the ASSIGNMENT view (which docs
+    * land where); this emits the sequences a trainer actually reads.
     *
-    * Scale shape: the same [[graft.stats.GlobalOrder.exclusivePrefix]]
+    * Scale shape: the same
+    * [[graft.stats.GlobalOrder.exclusivePrefixReleasable]]
     * decomposition computes each doc's token offset over the NARROW
     * (id, count) table; offsets join back to the id arrays (one hash
     * join keyed on the doc id), and tokens explode with their global
@@ -84,21 +73,15 @@ object Packing {
     * (a token's sequence is a global function of the whole corpus).
     * Sequence assembly is a groupBy(seq_id) whose per-group state is
     * bounded by `ctxLen`, so no skew surface exists; the exploded rows
-    * are 3 narrow numerics each. */
-  def materializeSequences(
-      df: DataFrame,
-      idsCol: String,
-      idCol: String,
-      ctxLen: Int,
-      numParts: Int = 0): DataFrame =
-    materializeSequencesReleasable(df, idsCol, idCol, ctxLen, numParts)._1
-
-  /** [[materializeSequences]] plus the prefix cache's release handle —
+    * are 3 narrow numerics each.
+    *
+    * Returns the prefix cache's release handle with the sequences —
     * fire it only AFTER the result is materialized (both prefix passes
     * read the cache; releasing earlier recomputes the range exchange,
     * whose sampled partitioning the collected partials no longer
-    * describe). Callers that can't control materialization order use
-    * the plain form and the session's per-query cache hygiene. */
+    * describe). Callers that can't control materialization order drop
+    * the handle and leave the cache to the session's per-query
+    * hygiene. */
   def materializeSequencesReleasable(
       df: DataFrame,
       idsCol: String,
@@ -152,7 +135,7 @@ object Packing {
     * arithmetic full-bin run), and one broadcast join of the corpus
     * counts against the segment table. Copy indices (the per-length
     * rank by id) come from the shared
-    * [[graft.stats.GlobalOrder.exclusivePrefix]] decomposition under
+    * [[graft.stats.GlobalOrder.exclusivePrefixReleasable]] decomposition under
     * the (n_tokens, id) total order minus each class's exclusive start
     * count — a closed form of the histogram already on the driver —
     * NOT a `Window.partitionBy(length)` (VERDICT r13: a window
@@ -164,8 +147,8 @@ object Packing {
     * no driver state beyond the histogram.
     *
     * RUNNER CONTRACT: persists the prefix decomposition's
-    * range-partitioned count table (the [[packSequences]] discipline);
-    * released by the session's per-query cache hygiene. */
+    * range-partitioned count table (the [[packSequencesReleasable]]
+    * discipline); released by the session's per-query cache hygiene. */
   def packBinsDecreasing(
       df: DataFrame,
       textCol: String,
@@ -224,7 +207,7 @@ object Packing {
         (n, lo, hi, b0, per, off0, startByLen(n))
       }
       .toDF("__n", "__lo", "__hi", "__bin0", "__per", "__off0", "__start")
-    val (ranked, _) = graft.stats.GlobalOrder.exclusivePrefix(
+    val (ranked, _, _) = graft.stats.GlobalOrder.exclusivePrefixReleasable(
       counts, Seq(col("n_tokens"), col(idCol)), lit(1L), "__grank")
     ranked
       .join(broadcast(segDf), col("n_tokens") === col("__n") &&
@@ -248,7 +231,7 @@ object Packing {
         sum("n_tokens").as("n_tokens_starting"))
 
   /** Length-bucketed curriculum batching (r15) — the THIRD packing
-    * regime next to head-to-tail splitting ([[packSequences]]) and
+    * regime next to head-to-tail splitting ([[packSequencesReleasable]]) and
     * no-split binning ([[packBinsDecreasing]]): docs group into
     * power-of-two LENGTH BUCKETS (`bucket = ⌊log₂ n_tokens⌋` — batches
     * of similar lengths waste ≤ 2× padding by construction), buckets
@@ -303,13 +286,4 @@ object Packing {
         pmod(col("bucket_pos"), lit(batchSize.toLong)).as("slot"))
     (out, release)
   }
-
-  /** [[lengthCurriculumBatchesReleasable]] without the handle (the
-    * short-lived-session form). */
-  def lengthCurriculumBatches(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      batchSize: Int): DataFrame =
-    lengthCurriculumBatchesReleasable(df, textCol, idCol, batchSize)._1
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Like sequence packing this is a GLOBAL ORDERED PREFIX SUM, so it
   * reuses the shared decomposition
-  * ([[graft.stats.GlobalOrder.exclusivePrefix]]): range-partition by
+  * ([[graft.stats.GlobalOrder.exclusivePrefixReleasable]]): range-partition by
   * (priority desc, id), per-partition token totals (a P-row aggregate
   * — the only data that reaches the driver), broadcast exclusive
   * offsets, partition-local running sum. Two budget-specific shapes
@@ -44,27 +44,14 @@ object Select {
     * (null text) count as 0. Join back to the corpus with
     * [[selectedDocs]] when full rows are needed.
     *
-    * RUNNER CONTRACT: persists the range-partitioned narrow count
-    * table the returned plan reads (two passes: partials + final);
-    * released by the session's per-query cache hygiene like the other
-    * persisted pipelines — or eagerly via
-    * [[takeTokenBudgetReleasable]]'s handle (ADVICE r06). */
-  def takeTokenBudget(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      priority: Column,
-      budget: Long,
-      numParts: Int = 0,
-      tokenCounter: Column => Column = TextAnalysis.tokenCount): DataFrame =
-    takeTokenBudgetReleasable(df, textCol, idCol, priority, budget,
-      numParts, tokenCounter)._1
-
-  /** [[takeTokenBudget]] plus the prefix cache's release handle — call
-    * it once the selection has been materialized.
-    *
     * `tokenCounter` defaults to the whitespace heuristic; pass
-    * [[Bpe.count]] to budget on REAL subword counts. */
+    * [[Bpe.count]] to budget on REAL subword counts.
+    *
+    * RUNNER CONTRACT: persists the range-partitioned narrow count
+    * table the returned plan reads (two passes: partials + final) and
+    * returns it with its release handle — call the handle once the
+    * selection has been materialized (ADVICE r06; the
+    * [[graft.stats.GlobalOrder.exclusivePrefixReleasable]] contract). */
   def takeTokenBudgetReleasable(
       df: DataFrame,
       textCol: String,
@@ -89,7 +76,7 @@ object Select {
       .drop("__prio"), release)
   }
 
-  /** Full document rows for a [[takeTokenBudget]] selection: inner
+  /** Full document rows for a [[takeTokenBudgetReleasable]] selection: inner
     * equi-join on `idCol` (AQE broadcasts the selected-id side when it
     * fits, falls back to a hash join when it doesn't — the corpus
     * crosses at most one hash exchange). */

@@ -21,45 +21,27 @@ import org.apache.spark.sql.functions._
   * docs, bounded by document length, never a global sort. Same
   * hash-vs-string contract as line dedup: the engine joins 8-byte
   * gram-hash keys (FNV-1a via the fused [[graft.functions.GramHashes]]
-  * kernel; the composed xxhash64 chain survives behind
-  * `-Dgraft.spans.fused=0` as the A/B mirror), exact absent 64-bit
-  * collisions.
+  * kernel), exact absent 64-bit collisions.
   */
 object Spans {
 
   /** The positional (idCol?, start, __gh) gram table — one row per
     * k-window occurrence, hash = equality key of the window's
-    * single-space-joined tokens. Default: the fused
-    * [[graft.functions.GramHashes]] kernel — ONE byte-level pass,
-    * zero intermediate arrays (r17, guide §4). The composed chain
+    * single-space-joined tokens, from the fused
+    * [[graft.functions.GramHashes]] kernel: ONE byte-level pass, zero
+    * intermediate arrays (r17, guide §4). It replaced a composed chain
     * (token array → `transform(sequence)` window slices → one
-    * `concat_ws` string allocation per window → xxhash64) survives
-    * behind `-Dgraft.spans.fused=0` as the A/B mirror and independent
-    * test oracle; the two differ only in the internal hash function
-    * (FNV-1a vs xxhash64 — same equality classes absent 64-bit
-    * collisions, the suite-wide stance; the DuckDB oracles mirror
-    * gram STRINGS and pin both). */
+    * `concat_ws` string allocation per window → xxhash64), which LlmSpec
+    * keeps as the independent test mirror; the two differ only in the
+    * internal hash function (FNV-1a vs xxhash64 — same equality classes
+    * absent 64-bit collisions, the suite-wide stance; the DuckDB
+    * oracles mirror gram STRINGS and pin both). */
   private def gramTable(
       df: DataFrame, textCol: String, idCols: Seq[String], k: Int)
-      : DataFrame = {
-    val ids = idCols.map(col)
-    if (!sys.props.get("graft.spans.fused").contains("0"))
-      df.select(ids :+ posexplode(
-        graft.functions.GramHashes(col(textCol), k))
-        .as(Seq("start", "__gh")): _*)
-    else {
-      val toks = split(trim(col(textCol)), "\\s+")
-      df.withColumn("__toks", toks)
-        .filter(col("__toks").isNotNull && size(col("__toks")) >= k &&
-          !(size(col("__toks")) === 1 &&
-            element_at(col("__toks"), 1) === ""))
-        .select(ids :+ posexplode(
-          transform(sequence(lit(0), size(col("__toks")) - k),
-            i => xxhash64(concat_ws(" ", slice(col("__toks"), i + 1,
-              lit(k))))))
-          .as(Seq("start", "__gh")): _*)
-    }
-  }
+      : DataFrame =
+    df.select(idCols.map(col) :+ posexplode(
+      graft.functions.GramHashes(col(textCol), k))
+      .as(Seq("start", "__gh")): _*)
 
   /** (idCol, span_start, span_end, n_grams): maximal merged token
     * intervals [span_start, span_end) of `df`'s whitespace token
@@ -72,18 +54,10 @@ object Spans {
     * RUNNER CONTRACT: persists the narrow gram projection (the hot-gram
     * count and the occurrence join both read it — without the cache the
     * tokenize+posexplode subtree executes TWICE, doubling the
-    * operator's dominant cost at scale, VERDICT r06 §2); released by
-    * the session's per-query cache hygiene, or eagerly via
-    * [[duplicatedSpansReleasable]]. */
-  def duplicatedSpans(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      k: Int): DataFrame =
-    duplicatedSpansReleasable(df, textCol, idCol, k)._1
-
-  /** [[duplicatedSpans]] plus the gram cache's release handle — call it
-    * once the span table has been materialized. */
+    * operator's dominant cost at scale, VERDICT r06 §2) and returns
+    * it with its release handle — call the handle once the span table
+    * has been materialized, or leave the cache to the session's
+    * per-query cache hygiene. */
   def duplicatedSpansReleasable(
       df: DataFrame,
       textCol: String,
@@ -99,10 +73,8 @@ object Spans {
       // partial aggregate fully combines (one row per gram crosses its
       // exchange instead of up to P) and the probe exchange becomes a
       // 1:1 local fetch (r17, guide §2.1 — the SuffixDedup base/__tok
-      // finding; same A/B escape hatch convention)
-      .transform(g =>
-        if (sys.props.get("graft.spans.copart").contains("0")) g
-        else g.repartition(col("__gh")))
+      // finding)
+      .repartition(col("__gh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     grams.count() // materialize before the two consumers race to fill it
     // one map-side-combined count finds grams occurring ≥2 times
@@ -120,7 +92,7 @@ object Spans {
     * window is per-document — parallel across docs, bounded by doc
     * length, never a global sort. Input: (idCol, start); output:
     * (idCol, span_start, span_end, n_grams). */
-  private[llm] def mergeIslands(
+  private[graft] def mergeIslands(
       dup: DataFrame, idCol: String, k: Int): DataFrame = {
     val w = Window.partitionBy(idCol).orderBy("start")
     dup
@@ -159,8 +131,8 @@ object Spans {
     * in `benchmark` — SPAN-LEVEL decontamination (the surgical variant
     * of [[Dedup.contamination]]'s doc-level flag): a long document
     * quoting a benchmark passage loses the passage, not the document.
-    * Output shape = [[duplicatedSpans]] ((idCol, span_start, span_end,
-    * n_grams)).
+    * Output shape = [[duplicatedSpansReleasable]] ((idCol, span_start,
+    * span_end, n_grams)).
     *
     * Scale shape: the benchmark gram-hash set is DISTINCT'd and
     * broadcast (a benchmark is small by definition — the
@@ -183,10 +155,10 @@ object Spans {
   }
 
   /** The decontamination ACTION: rewrite `textCol` with every
-    * benchmark-contaminated span cut out (the [[removeDuplicatedSpans]]
-    * contract — span-free docs keep their text byte-for-byte, fully
-    * contaminated docs become the empty string for downstream length
-    * gates to judge). */
+    * benchmark-contaminated span cut out (the
+    * [[removeDuplicatedSpansReleasable]] contract — span-free docs keep
+    * their text byte-for-byte, fully contaminated docs become the empty
+    * string for downstream length gates to judge). */
   def removeContaminatedSpans(
       df: DataFrame,
       benchmark: DataFrame,
@@ -207,15 +179,9 @@ object Spans {
     * (start, end) pairs per document (bounded by doc length / k), so
     * the join back is one hash exchange of the corpus against a much
     * smaller side (AQE broadcasts it when it fits); the token cut is a
-    * map-only higher-order filter — no explode, no per-token rows. */
-  def removeDuplicatedSpans(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      k: Int): DataFrame =
-    removeDuplicatedSpansReleasable(df, textCol, idCol, k)._1
-
-  /** [[removeDuplicatedSpans]] plus the gram cache's release handle. */
+    * map-only higher-order filter — no explode, no per-token rows.
+    * Returns the gram cache's release handle with the rewritten frame
+    * (the [[duplicatedSpansReleasable]] RUNNER CONTRACT). */
   def removeDuplicatedSpansReleasable(
       df: DataFrame,
       textCol: String,

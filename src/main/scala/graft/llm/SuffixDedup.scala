@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * canonical copy is [[graft.llm.C4]]'s span rule, a different
   * operator).
   *
-  * Same SEMANTICS as [[Spans.duplicatedSpans]], different MECHANISM —
-  * and the difference is the point at 100 TB:
+  * Same SEMANTICS as [[Spans.duplicatedSpansReleasable]], different
+  * MECHANISM — and the difference is the point at 100 TB:
   *
   *  - the gram-hash path shuffles 8-byte xxhash64 window keys, an
   *    honest-but-documented collision contract that over-deduplicates
@@ -113,11 +113,10 @@ object SuffixDedup {
 
   /** Canonical class-representative key of one corpus position — the
     * value `min()` picks per equality class. Exposed package-wide so
-    * the dev profilers (SuffixProfile, ExplainFrames) mirror the
-    * library's exact key shape instead of hand-copying it (ADVICE
-    * r16). Any DETERMINISTIC INJECTIVE encoding of (id, pos) works:
-    * representatives are internal labels — the final output never
-    * sees them.
+    * the ExplainFrames dev tool mirrors the library's exact key shape
+    * instead of hand-copying it (ADVICE r16). Any DETERMINISTIC
+    * INJECTIVE encoding of (id, pos) works: representatives are
+    * internal labels — the final output never sees them.
     *
     * r17 (guide §4): integral ids encode to ONE Decimal(38,0)
     * ([[Keys.pairKey]]) so the per-round `min()` class aggregates run
@@ -158,11 +157,6 @@ object SuffixDedup {
     // construction, fixed-width, and orderable, so min() canonicalizes
     // without any global offset (the former GlobalOrder prefix sum
     // cost a sampling pass + a range exchange + an offsets join here)
-    // A/B escape hatch for the r17 co-partitioned-persist measurement;
-    // default ON (the measured winner — see OPTIMIZATION_r17.md)
-    val copart = !sys.props.get("graft.suffix.copart").contains("0")
-    def keyed(dfp: DataFrame, cs: Column*): DataFrame =
-      if (copart) dfp.repartition(cs: _*) else dfp
     val base = docs
       // generator first, arithmetic on its output in a second select
       .select(col("__id"), col("__n"),
@@ -182,7 +176,7 @@ object SuffixDedup {
       // exchange was near-full-table because classes are mostly
       // distinct early). Skew unchanged: the probe exchange already
       // clustered hot tokens onto one partition.
-      .transform(keyed(_, col("__tok")))
+      .repartition(col("__tok"))
       .persist()
     base.count()
     // depth-1 classes: min (doc, pos) among equal tokens (exact string
@@ -199,6 +193,7 @@ object SuffixDedup {
       .select(col("__id"), col("__pos"), col("__g"), col("__valid"),
         col("__cls"))
     var toRelease: List[DataFrame] = List(base)
+    var checkpoints: List[DataFrame] = Nil
     def barrier(dfp: DataFrame): DataFrame = {
       val p = dfp.persist()
       p.count()
@@ -216,11 +211,11 @@ object SuffixDedup {
       // successor class at pos+h via a per-doc range frame; NULL
       // (doc end, or successor pruned as unique) exits before the
       // aggregate — both provably non-duplicated
-      val paired = barrier(keyed(ranks
+      val paired = barrier(ranks
         .withColumn("__cls2",
           max("__cls").over(wDoc.rangeBetween(h, h)))
-        .filter(col("__cls2").isNotNull),
-        col("__cls"), col("__cls2")))
+        .filter(col("__cls2").isNotNull)
+        .repartition(col("__cls"), col("__cls2")))
       val classes = paired.groupBy("__cls", "__cls2")
         .agg(min("__g").as("__ncls"), count(lit(1)).as("__nc"))
         .filter(col("__nc") > 1) // singleton class = unique window
@@ -231,8 +226,12 @@ object SuffixDedup {
           col("__ncls").as("__cls"))
       // one round's chain re-enters the analyzer each subsequent round
       // — truncate lineage before the analyzed plan compounds (the
-      // starContract lesson)
-      if (j % 3 == 0 && j < a) ranks = ranks.localCheckpoint()
+      // starContract lesson); the next round's persist reads the
+      // checkpoint, so only the final handle may free it
+      if (j % 3 == 0 && j < a) {
+        ranks = ranks.localCheckpoint()
+        checkpoints ::= ranks
+      }
       j += 1
     }
     // k-window key = (leading h-class, trailing h-class); the trailing
@@ -241,12 +240,12 @@ object SuffixDedup {
     // whose trailing position was pruned holds a unique sub-window —
     // dropped, as at the former inner join.
     val h2 = 1L << a
-    val keys = barrier(keyed(ranks
+    val keys = barrier(ranks
       .withColumn("__cls2",
         max("__cls").over(wDoc.rangeBetween(k - h2, k - h2)))
       .filter(col("__valid") && col("__cls2").isNotNull)
-      .select(col("__id"), col("__pos"), col("__cls"), col("__cls2")),
-      col("__cls"), col("__cls2")))
+      .select(col("__id"), col("__pos"), col("__cls"), col("__cls2"))
+      .repartition(col("__cls"), col("__cls2")))
     val hot = keys.groupBy("__cls", "__cls2")
       .agg(count(lit(1)).as("__c"))
       .filter(col("__c") > 1)
@@ -254,11 +253,14 @@ object SuffixDedup {
     val out = keys.join(hot.hint("shuffle_hash"), Seq("__cls", "__cls2"))
       .select(col("__id").as(idCol), col("__pos").as("start"))
     val finalCaches = toRelease
-    (out, () => { finalCaches.foreach(_.unpersist()); () })
+    (out, () => {
+      finalCaches.foreach(_.unpersist())
+      checkpoints.foreach(graft.core.SessionHygiene.releaseCheckpoint)
+    })
   }
 
   /** Maximal duplicated-substring spans ≥ k tokens, (idCol,
-    * span_start, span_end, n_grams) — [[Spans.duplicatedSpans]]'
+    * span_start, span_end, n_grams) — [[Spans.duplicatedSpansReleasable]]'
     * output shape from the exact suffix-ranking mechanism. */
   def duplicatedSuffixSpansReleasable(
       df: DataFrame,
@@ -271,7 +273,7 @@ object SuffixDedup {
   }
 
   /** The ExactSubstr ACTION: rewrite `textCol` with every duplicated
-    * span cut out (the [[Spans.removeDuplicatedSpans]] contract —
+    * span cut out (the [[Spans.removeDuplicatedSpansReleasable]] contract —
     * span-free docs keep their bytes, fully-duplicated docs become the
     * empty string for downstream length gates to judge). */
   def dedupExactSubstringsReleasable(

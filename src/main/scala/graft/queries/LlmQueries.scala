@@ -2383,10 +2383,12 @@ object LlmQueries {
     "llm_pack_emit" -> ((s, dir) => {
       val ids = t(s, dir, "documents")
         .select(col("doc_id"), Bpe.encode(col("text")).as("ids"))
-      // RUNNER CONTRACT: the prefix cache releases via the runners'
-      // per-query clearCache (the result is token-sized — bounded but
-      // not driver-small, so no collectAndRelease)
-      Packing.materializeSequences(ids, "ids", "doc_id", ctxLen = 128)
+      // RUNNER CONTRACT: the prefix cache and checkpoint release via
+      // the runners' per-query SessionHygiene.releaseAll (the result is
+      // token-sized — bounded but not driver-small, so no
+      // collectAndRelease)
+      Packing.materializeSequencesReleasable(
+          ids, "ids", "doc_id", ctxLen = 128)._1
         .select(col("seq_id"), posexplode(col("token_ids"))
           .as(Seq("ipos", "token_id")))
         .select(col("seq_id"), col("ipos").cast("long").as("ipos"),

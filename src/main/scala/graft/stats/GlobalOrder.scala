@@ -3,6 +3,7 @@ package graft.stats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.SessionHygiene
 
 /** The distributed GLOBAL ORDERED PREFIX SUM — the decomposition shared
   * by sequence packing ([[graft.llm.Packing]]), token-budget selection
@@ -22,10 +23,11 @@ object GlobalOrder {
     * (must be long-typed) under the TOTAL order `orderCols` (callers
     * must include a tiebreaker — equal keys across a partition
     * boundary would otherwise make the prefix depend on placement).
-    * Returns the frame and the GRAND TOTAL (free from the partials —
-    * no extra pass). `maxPrefix` drops partitions whose exclusive
-    * offset already reaches the bound BEFORE the finishing window, so
-    * a budget-style consumer pays O(selected prefix), not O(input).
+    * Returns the frame, the GRAND TOTAL (free from the partials — no
+    * extra pass) and the release handle below. `maxPrefix` drops
+    * partitions whose exclusive offset already reaches the bound
+    * BEFORE the finishing window, so a budget-style consumer pays
+    * O(selected prefix), not O(input).
     *
     * Keep `df` NARROW — exactly the order/value/carry-through columns:
     * everything in it rides the range exchange, the persist, and the
@@ -33,31 +35,14 @@ object GlobalOrder {
     * three).
     *
     * RUNNER CONTRACT: persists the range-partitioned input the
-    * returned plan reads (two passes: partials + final); released by
-    * the session's per-query cache hygiene like the other persisted
-    * pipelines. Long-lived sessions should use
-    * [[exclusivePrefixReleasable]] and fire the release handle once
-    * the result is materialized (ADVICE r06 — this form leaks one
-    * cached table per call otherwise). */
-  def exclusivePrefix(
-      df: DataFrame,
-      orderCols: Seq[Column],
-      valueCol: Column,
-      prefixName: String,
-      numParts: Int = 0,
-      maxPrefix: Option[Long] = None,
-      precheckpoint: Boolean = true): (DataFrame, Long) = {
-    val (out, total, _) = exclusivePrefixReleasable(
-      df, orderCols, valueCol, prefixName, numParts, maxPrefix,
-      precheckpoint)
-    (out, total)
-  }
-
-  /** [[exclusivePrefix]] plus a release handle for the internal
-    * range-partitioned cache — same contract as the Dedup
-    * `...Releasable` variants: call the thunk once the returned plan's
-    * output has been materialized (both passes read the cache, so
-    * releasing earlier would recompute the range exchange). */
+    * returned plan reads (two passes: partials + final) and, with
+    * `precheckpoint`, checkpoints the narrow input before the range
+    * exchange; both are freed by the returned release handle — call it
+    * once the returned plan's output has been materialized (both
+    * passes read the cache, so releasing earlier would recompute the
+    * range exchange, and the checkpoint cannot recompute at all).
+    * Without the handle each call leaks its blocks until the session's
+    * per-query hygiene drops them (ADVICE r06). */
   def exclusivePrefixReleasable(
       df: DataFrame,
       orderCols: Seq[Column],
@@ -81,13 +66,9 @@ object GlobalOrder {
     // callers whose input is one cheap aggregate over an
     // already-materialized table pass false — the extra job costs more
     // than the re-execution saves (measured per caller, see
-    // OPTIMIZATION_r17.md; the sys-prop is the A/B escape hatch).
+    // OPTIMIZATION_r17.md).
     val pre0 = df.withColumn("__val", valueCol)
-    val pre = sys.props.get("graft.prefix.precheckpoint") match {
-      case Some("0") => pre0
-      case Some("1") => pre0.localCheckpoint()
-      case _ => if (precheckpoint) pre0.localCheckpoint() else pre0
-    }
+    val pre = if (precheckpoint) pre0.localCheckpoint() else pre0
     val parted = pre
       .repartitionByRange(p, orderCols: _*)
       .sortWithinPartitions(orderCols: _*)
@@ -117,23 +98,21 @@ object GlobalOrder {
         sum("__val").over(w) - col("__val") +
           element_at(typedlit(offsets), col("__pid")))
       .drop("__pid", "__val")
-    (out, perPart.sum, () => { parted.unpersist(); () })
+    (out, perPart.sum, () => {
+      parted.unpersist()
+      // without precheckpoint `pre` is the caller's plan, whose
+      // checkpoint leaves belong to the caller
+      if (precheckpoint) SessionHygiene.releaseCheckpoint(pre)
+    })
   }
 
   /** `df` plus `rankName` = 0-based global rank under the total order
     * `orderCols`, and `pctName` = rank/(N−1) — the corpus-percentile
     * normalization applied to quality scores before thresholding
     * ("keep the top 30%"). A single-row corpus degenerates to
-    * percentile 0. One narrow range exchange; no global window. */
-  def percentileRank(
-      df: DataFrame,
-      orderCols: Seq[Column],
-      rankName: String = "rank",
-      pctName: String = "percentile",
-      numParts: Int = 0): DataFrame =
-    percentileRankReleasable(df, orderCols, rankName, pctName, numParts)._1
-
-  /** [[percentileRank]] plus the prefix cache's release handle. */
+    * percentile 0. One narrow range exchange; no global window.
+    * Returns the prefix cache's release handle with the frame (the
+    * [[exclusivePrefixReleasable]] RUNNER CONTRACT). */
   def percentileRankReleasable(
       df: DataFrame,
       orderCols: Seq[Column],

@@ -3,22 +3,24 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Same-JVM interleaved A/B probe: runs ONE registry query end to end
-  * under two values of a system property (the library reads the
-  * property per call), strictly alternating A,B,A,B,... so ambient
+  * under two values of a `spark.*` session conf (consulted at plan
+  * time on every run), strictly alternating A,B,A,B,... so ambient
   * load hits both variants equally — the only reliable comparison
   * protocol on this shared host (cross-session medians shift 1.3–1.7×
   * on UNCHANGED queries; see OPTIMIZATION_r17.md).
   *
-  * Usage: `sbt "runMain graft.tools.AbProbe <query> <prop> <valA>
+  * Usage: `sbt "runMain graft.tools.AbProbe <query> <conf> <valA>
   * <valB> [pairs]"` — e.g.
-  * `AbProbe llm_suffix_dedup graft.suffix.copart 0 1 7`.
+  * `AbProbe llm_suffix_dedup spark.sql.shuffle.partitions 16 32 7`.
   * SPARK_GRAFT_SF_DIR overrides the sf0.1 default.
   */
 object AbProbe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4,
-      "usage: AbProbe <query> <prop> <valA> <valB> [pairs]")
+      "usage: AbProbe <query> <conf> <valA> <valB> [pairs]")
     val Array(qname, prop, valA, valB) = args.take(4)
+    require(prop.startsWith("spark."),
+      s"AbProbe varies session confs only (spark.*), got $prop")
     val pairs = if (args.length > 4) args(4).toInt else 7
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -31,10 +33,7 @@ object AbProbe {
     spark.sparkContext.setLogLevel("ERROR")
     val fn = graft.SparkEntry.queries(qname)
     def once(v: String): Double = {
-      // "spark.*" props are session SQL confs (consulted at cache/plan
-      // time each run); anything else is a JVM system property
-      if (prop.startsWith("spark.")) spark.conf.set(prop, v)
-      else System.setProperty(prop, v)
+      spark.conf.set(prop, v)
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       graft.core.SessionHygiene.releaseAll(spark)

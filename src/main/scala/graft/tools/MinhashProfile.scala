@@ -29,15 +29,21 @@ object MinhashProfile {
     println(s"candidate pairs: $nc")
     time("estimate")(
       Dedup.estimateJaccard(cands, sigs, "doc_id").count())
-    val verified = Dedup.verifyJaccard(cands, d, "text", "doc_id")
+    val (verifiedAll, releaseShingles) =
+      Dedup.verifyJaccardReleasable(cands, d, "text", "doc_id")
+    val verified = verifiedAll
       .filter(col("jaccard") >= 0.8).select("ida", "idb").persist()
     time("verify")(verified.count())
+    releaseShingles()
     time("components")(
       Dedup.nearDupComponents(verified).count())
     time("survivors")(
       Dedup.nearDupSurvivors(d, "doc_id", verified).count())
-    time("end-to-end dedupNearMinhash")(
-      Dedup.dedupNearMinhash(d, "text", "doc_id", 0.8).count())
+    time("end-to-end dedupNearMinhash") {
+      val (surv, release) =
+        Dedup.dedupNearMinhashReleasable(d, "text", "doc_id", 0.8)
+      val n = surv.count(); release(); n
+    }
 
     val sh = time("simhash signatures")(
       Dedup.simhash(d, "text", "doc_id").persist())

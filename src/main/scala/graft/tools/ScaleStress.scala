@@ -73,8 +73,11 @@ object ScaleStress {
         n
       }
       spark.catalog.clearCache()
-      time(s"pack sequences x$mult")(
-        force(graft.llm.Packing.packSequences(d, "text", "doc_id", 2048)))
+      time(s"pack sequences x$mult") {
+        val (p, rel) = graft.llm.Packing
+          .packSequencesReleasable(d, "text", "doc_id", 2048)
+        val n = force(p); rel(); n
+      }
       time(s"grouped topk x$mult")(
         force(d.groupBy("source")
           .agg(graft.functions.TopKByScore(col("n_chars"), col("doc_id"), 5)

@@ -167,6 +167,53 @@ class CacheAndCapSpec extends SparkSpec {
     assert(surv2.count() == 4L) // jaccard(0,1) = 0.75 < 0.8 → survives
     rel2()
     assert((rddIds -- before).isEmpty, "minhash dedup leaked RDD blocks")
+    // every other handle kind: materialize, fire the handle, and the
+    // persistent-RDD set must be back where it started — persists AND
+    // checkpoints (the GlobalOrder input checkpoint, the SuffixDedup
+    // round checkpoint at k = 16)
+    def freesAll(what: String)(
+        run: => (org.apache.spark.sql.DataFrame, () => Unit)): Unit = {
+      val before = rddIds
+      val (out, rel) = run
+      out.collect()
+      rel()
+      assert((rddIds -- before).isEmpty, s"$what leaked RDD blocks")
+    }
+    val pair = Seq((0L, 1L)).toDF("ida", "idb")
+    val twice = docs.withColumn("text",
+      concat_ws(" ", col("text"), col("text"))) // ≥ 16 tokens per doc
+    freesAll("span removal")(
+      Spans.removeDuplicatedSpansReleasable(docs, "text", "doc_id", 3))
+    freesAll("sequence packing")(
+      Packing.packSequencesReleasable(docs, "text", "doc_id", ctxLen = 4))
+    freesAll("sequence materialization")(
+      Packing.materializeSequencesReleasable(
+        docs.select(col("doc_id"),
+          transform(split(col("text"), " "), length(_)).as("ids")),
+        "ids", "doc_id", ctxLen = 4))
+    freesAll("length curriculum")(
+      Packing.lengthCurriculumBatchesReleasable(
+        docs, "text", "doc_id", batchSize = 2))
+    freesAll("token budget")(
+      Select.takeTokenBudgetReleasable(docs, "text", "doc_id",
+        col("doc_id").cast("double"), budget = 20L))
+    freesAll("percentile rank")(
+      graft.stats.GlobalOrder.percentileRankReleasable(
+        docs.select("doc_id"), Seq(col("doc_id"))))
+    freesAll("suffix dedup k=16")(
+      SuffixDedup.dedupExactSubstringsReleasable(
+        twice, "text", "doc_id", 16))
+    freesAll("jaccard verify")(
+      Dedup.verifyJaccardReleasable(pair, docs, "text", "doc_id"))
+    freesAll("containment verify")(
+      Dedup.verifyContainmentReleasable(pair, docs, "text", "doc_id"))
+    val idxPath = "target/test_release_index"
+    Dedup.writeMinhashIndex(
+      docs.filter(col("doc_id") =!= 3L), "text", "doc_id", idxPath)
+    freesAll("index near-dups")(
+      Dedup.nearDupsAgainstIndexReleasable(
+        docs.filter(col("doc_id") === 3L), "text", "doc_id",
+        spark.read.parquet(idxPath)))
     assert(GraftSqlBridge.cacheIsEmpty(spark))
   }
 

@@ -62,8 +62,8 @@ class GoldenLlmPipelineSpec extends SparkSpec {
       .cast("double") / length(col("text"))
     val clean = exact.filter(alpha > 0.5)
     // 4. near-dedup: the appended-word variants fall to their sources
-    val survivors = Dedup.dedupNearMinhash(clean, "text", "doc_id",
-      jaccardThreshold = 0.5)
+    val survivors = Dedup.dedupNearMinhashReleasable(clean, "text", "doc_id",
+      jaccardThreshold = 0.5)._1
     // 5. leakage-controlled split on exact-dup components is already
     //    resolved (exact dedup ran); per-source mixing: drop srcB half
     val mixed = Mixing.mixBySources(survivors, "source", "doc_id",
@@ -74,8 +74,8 @@ class GoldenLlmPipelineSpec extends SparkSpec {
     val kept = mixed.join(ppl.filter(col("ppl") <= 50.0), Seq("doc_id"))
     // 7. token budget: priority = doc_id asc (deterministic), cap well
     //    above the survivor volume so selection is total
-    val fin = Select.takeTokenBudget(kept, "text", "doc_id",
-      -col("doc_id").cast("double"), budget = 100000L)
+    val fin = Select.takeTokenBudgetReleasable(kept, "text", "doc_id",
+      -col("doc_id").cast("double"), budget = 100000L)._1
     fin.select("doc_id").as[Long].collect().toSeq.sorted
   }
 
@@ -93,8 +93,8 @@ class GoldenLlmPipelineSpec extends SparkSpec {
     // the 10 junk docs (130-139) die at the quality gate
     assert(clean.count() == 100)
     assert(clean.filter(col("doc_id").between(130, 139)).count() == 0)
-    val survivors = Dedup.dedupNearMinhash(clean, "text", "doc_id",
-      jaccardThreshold = 0.5)
+    val survivors = Dedup.dedupNearMinhashReleasable(clean, "text", "doc_id",
+      jaccardThreshold = 0.5)._1
     // the 10 near-dup variants (230-239, one word appended to 0-9)
     // collapse onto their earlier twins
     assert(survivors.filter(col("doc_id").between(230, 239)).count() == 0)

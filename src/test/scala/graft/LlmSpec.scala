@@ -44,8 +44,8 @@ class LlmSpec extends SparkSpec {
       .head.getDouble(2)
     assert(est == 1.0) // identical docs → identical signatures
     // exact verify agrees with hand jaccard for (0,1): 6 shared of 8 union
-    val ver = Dedup.verifyJaccard(
-      Seq((0L, 1L)).toDF("ida", "idb"), docs, "text", "doc_id")
+    val ver = Dedup.verifyJaccardReleasable(
+      Seq((0L, 1L)).toDF("ida", "idb"), docs, "text", "doc_id")._1
       .head.getDouble(2)
     assert(math.abs(ver - 6.0 / 8.0) < 1e-12)
   }
@@ -57,8 +57,8 @@ class LlmSpec extends SparkSpec {
       (20L, "alpha beta gamma delta epsilon"),
       (21L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
       .toDF("doc_id", "text")
-    val r = Dedup.verifyContainment(
-        Seq((20L, 21L)).toDF("ida", "idb"), d, "text", "doc_id")
+    val r = Dedup.verifyContainmentReleasable(
+        Seq((20L, 21L)).toDF("ida", "idb"), d, "text", "doc_id")._1
       .head()
     assert(r.getAs[Double]("containment_a") == 1.0)
     assert(r.getAs[Double]("containment_b") < 0.5)
@@ -121,7 +121,8 @@ class LlmSpec extends SparkSpec {
 
   test("end-to-end simhash and embedding dedup keep one copy per cluster") {
     // docs 0 and 3 are identical → hamming 0 → one survivor
-    val surv = Dedup.dedupNearSimhash(docs, "text", "doc_id", maxHamming = 0)
+    val surv = Dedup.dedupNearSimhashReleasable(
+        docs, "text", "doc_id", maxHamming = 0)._1
       .select("doc_id").as[Long].collect().sorted
     assert(surv.contains(0L) && !surv.contains(3L))
     val embs = Seq(
@@ -135,8 +136,8 @@ class LlmSpec extends SparkSpec {
   }
 
   test("end-to-end minhash dedup keeps one copy per near-dup cluster") {
-    val survivors = Dedup.dedupNearMinhash(docs, "text", "doc_id",
-        jaccardThreshold = 0.7)
+    val survivors = Dedup.dedupNearMinhashReleasable(docs, "text", "doc_id",
+        jaccardThreshold = 0.7)._1
       .select("doc_id").as[Long].collect().sorted
     // 0 and 3 identical (jaccard 1.0) and 1 near-dup of both (0.75):
     // one survivor (id 0) for {0,1,3}; 2 and 4 untouched
@@ -398,8 +399,8 @@ class LlmSpec extends SparkSpec {
       (30L, "the quick brown fox jumps over the lazy dog tonight"),
       (31L, "a fourth corpus document which later gets deduped away"))
       .toDF("doc_id", "text")
-    val got = Dedup.nearDupsAgainstIndex(
-        probe, "text", "doc_id", idx, jaccardThreshold = 0.8)
+    val got = Dedup.nearDupsAgainstIndexReleasable(
+        probe, "text", "doc_id", idx, jaccardThreshold = 0.8)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == Seq((30L, 1L)))
   }
@@ -1048,8 +1049,8 @@ class LlmSpec extends SparkSpec {
       .withColumn("text",
         concat_ws(" ", transform(sequence(lit(0), pmod(col("doc_id"), lit(7))),
           i => concat(lit("w"), i))))
-    val packed = Packing.packSequences(many, "text", "doc_id", ctxLen = 16,
-      numParts = 8)
+    val packed = Packing.packSequencesReleasable(many, "text", "doc_id",
+      ctxLen = 16, numParts = 8)._1
     val global = org.apache.spark.sql.expressions.Window.orderBy("doc_id")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
@@ -1063,8 +1064,8 @@ class LlmSpec extends SparkSpec {
     assert(packed.exceptAll(expect).isEmpty && expect.exceptAll(packed).isEmpty)
     // more partitions than rows → empty range partitions must not
     // poison the offsets map
-    val sparse = Packing.packSequences(many.limit(10), "text", "doc_id",
-      ctxLen = 16, numParts = 32)
+    val sparse = Packing.packSequencesReleasable(many.limit(10), "text",
+      "doc_id", ctxLen = 16, numParts = 32)._1
     assert(sparse.filter(col("token_offset").isNull).count() == 0)
     assert(sparse.count() == 10)
     // every sequence except the last is exactly full
@@ -2580,7 +2581,7 @@ class LlmSpec extends SparkSpec {
       (3L, "xx yy"), // shorter than k → no rows
       (4L, null.asInstanceOf[String])
     ).toDF("doc_id", "text")
-    val got = Spans.duplicatedSpans(d, "text", "doc_id", 3)
+    val got = Spans.duplicatedSpansReleasable(d, "text", "doc_id", 3)._1
       .select(col("doc_id"), col("span_start").cast("long"),
         col("span_end").cast("long"), col("n_grams"))
       .as[(Long, Long, Long, Long)].collect().sorted.toSeq
@@ -2590,7 +2591,7 @@ class LlmSpec extends SparkSpec {
     // the removal action: spanned tokens cut, survivors rejoined;
     // fully-duplicated doc → empty string; span-free docs keep their
     // text byte-for-byte; null text stays null
-    val rem = Spans.removeDuplicatedSpans(d, "text", "doc_id", 3)
+    val rem = Spans.removeDuplicatedSpansReleasable(d, "text", "doc_id", 3)._1
       .select("doc_id", "text").as[(Long, Option[String])]
       .collect().sortBy(_._1).toSeq
     assert(rem == Seq(
@@ -2603,16 +2604,30 @@ class LlmSpec extends SparkSpec {
 
   test("spans gram table: fused GramHashes ≡ composed xxhash64 chain " +
       "(duplicated + contaminated spans, r17)") {
-    // the two gram-table builders hash differently (FNV-1a vs
-    // xxhash64) but must produce IDENTICAL span tables absent 64-bit
+    // the library's gram table is the fused FNV-1a GramHashes kernel;
+    // the mirror is the composed chain it replaced (token array →
+    // window slices → one concat_ws string per window → xxhash64) fed
+    // through the same hot-gram / broadcast-join and mergeIslands
+    // steps. The two must produce IDENTICAL span tables absent 64-bit
     // collisions — random corpora with heavy repetition so hot grams,
     // gap splits and overlap merges all occur
     val rnd = new scala.util.Random(20260820L)
     val vocab = Array("u", "v", "w", "xx", "yy", "z0")
-    def run[T](fused: Boolean)(body: => T): T = {
-      System.setProperty("graft.spans.fused", if (fused) "1" else "0")
-      try body finally System.clearProperty("graft.spans.fused")
+    def composedGrams(df: org.apache.spark.sql.DataFrame,
+        ids: Seq[String], k: Int) = {
+      val toks = col("__toks")
+      df.withColumn("__toks", split(trim(col("text")), "\\s+"))
+        .filter(toks.isNotNull && size(toks) >= k &&
+          !(size(toks) === 1 && element_at(toks, 1) === ""))
+        .select(ids.map(col) :+ posexplode(
+          transform(sequence(lit(0), size(toks) - k),
+            i => xxhash64(concat_ws(" ", slice(toks, i + 1, lit(k))))))
+          .as(Seq("start", "__gh")): _*)
     }
+    def rows(spans: org.apache.spark.sql.DataFrame) =
+      spans.orderBy("doc_id", "span_start").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).toSeq
     (0 until 3).foreach { trial =>
       val corpus = (0 until 12).map { i =>
         val n = rnd.nextInt(26)
@@ -2625,23 +2640,23 @@ class LlmSpec extends SparkSpec {
           .mkString(" "))
       }.toDF("doc_id", "text")
       Seq(1, 3, 8).foreach { k =>
-        def spansOf(fused: Boolean) = run(fused) {
-          val (sp, rel) = Spans.duplicatedSpansReleasable(
-            corpus, "text", "doc_id", k)
-          val got = sp.orderBy("doc_id", "span_start").collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-              r.getLong(3))).toSeq
-          rel(); got
-        }
-        assert(spansOf(true) == spansOf(false),
+        val (sp, rel) = Spans.duplicatedSpansReleasable(
+          corpus, "text", "doc_id", k)
+        val fused = rows(sp)
+        rel()
+        val grams = composedGrams(corpus, Seq("doc_id"), k)
+        val hot = grams.groupBy("__gh").agg(count(lit(1)).as("__c"))
+          .filter(col("__c") > 1).select("__gh")
+        val composed = rows(Spans.mergeIslands(
+          grams.join(hot, Seq("__gh")), "doc_id", k))
+        assert(fused == composed,
           s"trial $trial k=$k: fused != composed (duplicatedSpans)")
-        def contOf(fused: Boolean) = run(fused) {
-          Spans.contaminatedSpans(corpus, bench, "text", "doc_id", k)
-            .orderBy("doc_id", "span_start").collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-              r.getLong(3))).toSeq
-        }
-        assert(contOf(true) == contOf(false),
+        val bset = composedGrams(bench, Seq.empty, k)
+          .select("__gh").distinct()
+        val contComposed = rows(Spans.mergeIslands(
+          grams.join(broadcast(bset), Seq("__gh")), "doc_id", k))
+        assert(rows(Spans.contaminatedSpans(
+            corpus, bench, "text", "doc_id", k)) == contComposed,
           s"trial $trial k=$k: fused != composed (contaminatedSpans)")
       }
     }
@@ -2718,22 +2733,22 @@ class LlmSpec extends SparkSpec {
     import graft.stats.GlobalOrder
     val d = Seq((0L, 10.0), (1L, 5.0), (2L, 5.0), (3L, 20.0))
       .toDF("id", "s")
-    val r = GlobalOrder.percentileRank(d, Seq(col("s"), col("id")),
-        numParts = 3)
+    val r = GlobalOrder.percentileRankReleasable(d, Seq(col("s"), col("id")),
+        numParts = 3)._1
       .select("id", "rank", "percentile")
       .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
     // order (s, id): 1(5), 2(5 — tie broken by id), 0(10), 3(20)
     assert(r == Seq((0L, 2L, 2.0 / 3), (1L, 0L, 0.0), (2L, 1L, 1.0 / 3),
       (3L, 3L, 1.0)))
     // the decomposition reproduces the single-partition global window
-    val one = GlobalOrder.percentileRank(d, Seq(col("s"), col("id")),
-        numParts = 1)
+    val one = GlobalOrder.percentileRankReleasable(d, Seq(col("s"), col("id")),
+        numParts = 1)._1
       .select("id", "rank", "percentile")
       .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
     assert(one == r)
     // single-row corpus: percentile 0, no division by zero
-    val s1 = GlobalOrder.percentileRank(Seq((9L, 1.0)).toDF("id", "s"),
-        Seq(col("s"), col("id")))
+    val s1 = GlobalOrder.percentileRankReleasable(
+        Seq((9L, 1.0)).toDF("id", "s"), Seq(col("s"), col("id")))._1
       .select("percentile").as[Double].head()
     assert(s1 == 0.0)
   }
@@ -2901,21 +2916,21 @@ class LlmSpec extends SparkSpec {
     ).toDF("doc_id", "text", "prio")
     // priority order: 3(0 tok), 0(3), 1(2), 2(4), 4(1);
     // tokens_before:  0,        0,    3,    5,    9
-    val sel = Select.takeTokenBudget(d, "text", "doc_id", col("prio"),
-        budget = 6L, numParts = 3)
+    val sel = Select.takeTokenBudgetReleasable(d, "text", "doc_id", col("prio"),
+        budget = 6L, numParts = 3)._1
       .select("doc_id", "n_tokens", "tokens_before")
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     // doc 2 straddles (5 < 6 but 5+4 > 6) → INCLUDED; doc 4 (9 ≥ 6) out
     assert(sel == Seq((0L, 3L, 0L), (1L, 2L, 3L), (2L, 4L, 5L),
       (3L, 0L, 0L)))
     // budget beyond the corpus: everything selected
-    val all = Select.takeTokenBudget(d, "text", "doc_id", col("prio"),
-      budget = 100L, numParts = 2)
+    val all = Select.takeTokenBudgetReleasable(d, "text", "doc_id", col("prio"),
+      budget = 100L, numParts = 2)._1
     assert(all.count() == 5)
     // partition-count invariance (the pruning + offsets decomposition
     // reproduces the single-partition global window exactly)
-    val one = Select.takeTokenBudget(d, "text", "doc_id", col("prio"),
-        budget = 6L, numParts = 1)
+    val one = Select.takeTokenBudgetReleasable(d, "text", "doc_id", col("prio"),
+        budget = 6L, numParts = 1)._1
       .select("doc_id", "n_tokens", "tokens_before")
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(one == sel)
