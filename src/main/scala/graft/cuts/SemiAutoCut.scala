@@ -47,10 +47,14 @@ final case class Thresholds(lower: Option[Double], upper: Option[Double]) {
   * cuts and bin limits, T4, `semiautocuts.py:508-541`) but the returned
   * predicate applies to any row (T1-T3 return plain `Column`s).
   *
+  * Every estimate is one Spark action that runs once: the cardinality
+  * guard rides in the estimation job ([[Quantiles.guardedEstimate]]).
   * Binned variants (T6/T7) replace the reference's serial per-bin Python
   * loops (`semiautocuts.py:696-716,835-855`) with one
-  * `groupBy(bin).agg(percentile)` plus a broadcast join of the ≤bins-row
-  * threshold table back onto the events — the scale-safe shape (J3/J4).
+  * `groupBy(bin).agg(...)` whose ≤bins-row result is collected, resolved
+  * on the driver and applied as a per-bin array literal: the returned
+  * frame is the input plan plus one projected boolean column, with no
+  * aggregation or join left in it for later actions to re-run (J3/J4).
   */
 object SemiAutoCut {
 
@@ -135,13 +139,29 @@ object SemiAutoCut {
   def timeIntervalCut(time: Column, pairs: Seq[(Double, Double)]): Column =
     pairs.map { case (lo, hi) => time >= lo && time <= hi }.reduce(_ || _)
 
-  /** T6: binned cut — per-bin thresholds, one grouped aggregation + a
-    * broadcast join back (J3). `bin` must be a deterministic bucket
-    * expression (see [[graft.stats.Hist.bucket]]). Rows with a null bin
-    * (out of range) fail the cut. Per-bin `exceptions` override the
-    * estimated thresholds (`exceptions_dict`, `semiautocuts.py:675-736`).
+  /** T6: binned cut — per-bin thresholds from ONE grouped estimation
+    * action (J3), resolved on the driver and applied as literals.
     *
-    * Returns the cut DataFrame: `df` plus boolean `cutName`.
+    * `bin` must be a deterministic, integral bucket expression. A row
+    * whose bin is null fails the cut. Keeping rows outside a binning
+    * range out of the bins is the bin expression's job:
+    * [[graft.stats.Hist.bucket]] never returns null — it clamps rows above
+    * its range into the last bin and gives rows below it negative bins,
+    * which are then estimated as bins of their own — so wrap it as
+    * `when(in range, bucket)` (as [[rateCut]] does) to make out-of-range
+    * rows fail. A bin with no estimation rows and no exception fails the
+    * cut, matching the reference, where an empty estimation slice yields
+    * nan thresholds and an all-false mask. Per-bin `exceptions` override
+    * the estimated thresholds (`exceptions_dict`,
+    * `semiautocuts.py:675-736`), also for bins absent from the
+    * estimation sample.
+    *
+    * The threshold table (≤ one row per bin) is collected once; the
+    * returned frame is `df` plus the boolean `cutName`, a projection that
+    * indexes an array literal of per-bin thresholds spanning the smallest
+    * to the largest resolved bin. Later actions on it re-run no
+    * estimation. The literal grows with that span, so the bin expression
+    * should be dense.
     */
   def binnedCut(
       df: DataFrame,
@@ -153,104 +173,71 @@ object SemiAutoCut {
       estimationCondition: Column = lit(true),
       maxExactRows: Int = graft.stats.Quantiles.defaultMaxExactRows)
       : DataFrame = {
-    val binned = df.withColumn("__bin__", bin)
+    val b = bin.cast("long")
     val x = col(rq)
+    val est = df.filter(estimationCondition && b.isNotNull)
+      .select(b.as("__bin__"), x)
 
-    // per-bin threshold aggregation over the estimation sample.
-    // Same cardinality guard as the global thresholds (T2/T3): exact
-    // per-bin percentile shuffles every bin's full value multiset, so
-    // past maxExactRows estimation rows the aggregation switches to the
-    // GK sketch (rank error ≤ 1/approxAcc per bin).
-    val est = binned.filter(estimationCondition && col("__bin__").isNotNull)
-    val useApprox = (pars.isPercentile || pars.isSigma) &&
-      graft.stats.Quantiles.exceedsExactLimit(est, maxExactRows)
-    def pct(p: Column): Column =
-      if (useApprox)
-        percentile_approx(x, p, lit(graft.stats.Quantiles.approxAcc))
-      else percentile(x, p)
-    val thr: DataFrame =
+    // per-bin thresholds over the estimation sample, behind the same
+    // cardinality guard as the global thresholds (T2/T3): past
+    // maxExactRows estimation rows the per-bin percentiles come from the
+    // GK sketch (rank error ≤ 1/approxAcc per bin). A bin whose values
+    // are all null has no quantiles and passes every row.
+    def estimated(ps: Seq[Double])(thr: Seq[Double] => Thresholds)
+        : Map[Long, Thresholds] =
+      Quantiles.guardedEstimate(est, Seq(col("__bin__")), maxExactRows)(
+        pct => Seq(pct(x, array(ps.map(lit): _*))))._1
+        .map(r => r.getLong(0) ->
+          (if (r.isNullAt(1)) Thresholds(None, None)
+           else thr(r.getSeq[Double](1))))
+        .toMap
+    val perBin: Map[Long, Thresholds] =
       if (pars.isValue) {
-        est.select(col("__bin__")).distinct()
-          .withColumn("__lo__",
-            pars.valLower.map(lit).getOrElse(lit(null)).cast("double"))
-          .withColumn("__hi__",
-            pars.valUpper.map(lit).getOrElse(lit(null)).cast("double"))
+        est.select("__bin__").distinct().collect()
+          .map(_.getLong(0) -> Thresholds(pars.valLower, pars.valUpper))
+          .toMap
       } else if (pars.isPercentile) {
         val (pl, pu) = pars.percent match {
           case Some(p) => (Some(0.5 - p / 200.0), Some(0.5 + p / 200.0))
           case None    => (pars.percentLower.map(_ / 100.0),
                            pars.percentUpper.map(_ / 100.0))
         }
-        est.groupBy(col("__bin__")).agg(
-          pl.map(p => pct(lit(p))).getOrElse(lit(null).cast("double"))
-            .as("__lo__"),
-          pu.map(p => pct(lit(p))).getOrElse(lit(null).cast("double"))
-            .as("__hi__"))
+        estimated(pl.toSeq ++ pu.toSeq)(q =>
+          Thresholds(pl.map(_ => q.head), pu.map(_ => q.last)))
       } else { // sigma family
-        val qs = pct(array(lit(0.15865), lit(0.5), lit(0.84135)))
-        val base = est.groupBy(col("__bin__")).agg(qs.as("__q__"))
-          .withColumn("__med__", col("__q__").getItem(1))
-          .withColumn("__sig__",
-            ((col("__q__").getItem(1) - col("__q__").getItem(0)) +
-              (col("__q__").getItem(2) - col("__q__").getItem(1))) / 2.0)
         val (kl, ku) = pars.sigma match {
           case Some(k) => (Some(k), Some(k))
           case None    => (pars.sigmaLower, pars.sigmaUpper)
         }
-        base.select(
-          col("__bin__"),
-          kl.map(k => col("__med__") - lit(k) * col("__sig__"))
-            .getOrElse(lit(null).cast("double")).as("__lo__"),
-          ku.map(k => col("__med__") + lit(k) * col("__sig__"))
-            .getOrElse(lit(null).cast("double")).as("__hi__"))
+        estimated(Quantiles.sigmaPercentiles) { q =>
+          val (med, sig) = Quantiles.medianRobustSigma(q)
+          Thresholds(kl.map(k => med - k * sig), ku.map(k => med + k * sig))
+        }
       }
+    val resolved = perBin ++ exceptions
 
-    // apply per-bin exception overrides (small driver map). FULL outer:
-    // an exception for a bin absent from the estimation sample must still
-    // apply (the reference's exceptions_dict is unconditional,
-    // `semiautocuts.py:696-716`).
-    val thrMarked = thr.withColumn("__est__", lit(true))
-    val thrFinal =
-      if (exceptions.isEmpty) thrMarked
+    // pass = strict inside (lo, hi); an unset bound passes its side
+    val cut =
+      if (resolved.isEmpty) lit(false)
       else {
-        val spark = df.sparkSession
-        import spark.implicits._
-        val ex = exceptions.toSeq
-          .map { case (b, t) =>
-            (b, t.lower.map(Double.box).orNull, t.upper.map(Double.box).orNull)
-          }
-          .toDF("__bin__", "__exlo__", "__exhi__")
-          .withColumn("__exc__", lit(true))
-        thrMarked.join(broadcast(ex), Seq("__bin__"), "full_outer")
-          .select(
-            col("__bin__"),
-            when(col("__exc__").isNotNull, col("__exlo__"))
-              .otherwise(col("__lo__")).as("__lo__"),
-            when(col("__exc__").isNotNull, col("__exhi__"))
-              .otherwise(col("__hi__")).as("__hi__"),
-            coalesce(col("__est__"), col("__exc__")).as("__est__"))
+        val (lo, hi) = (resolved.keys.min, resolved.keys.max)
+        val table = typedLit((lo to hi).map(k =>
+          resolved.get(k).map(t => (t.lower, t.upper))))
+        val t = when(b.between(lo, hi), get(table, (b - lo).cast("int")))
+        coalesce(t.isNotNull &&
+          (t("_1").isNull || x > t("_1")) &&
+          (t("_2").isNull || x < t("_2")), lit(false))
       }
-
-    // broadcast join thresholds back; pass = strict inside (lo, hi).
-    // Bins with NO threshold row (estimation sample empty there and no
-    // exception) FAIL the cut — matching the reference, where an empty
-    // estimation slice yields nan thresholds and an all-false mask.
-    val pass =
-      (col("__lo__").isNull || x > col("__lo__")) &&
-        (col("__hi__").isNull || x < col("__hi__"))
-    binned
-      .join(broadcast(thrFinal), Seq("__bin__"), "left")
-      .withColumn(
-        cutName,
-        when(col("__bin__").isNull || col("__est__").isNull, lit(false))
-          .otherwise(coalesce(pass, lit(false))))
-      .drop("__bin__", "__lo__", "__hi__", "__est__")
+    df.withColumn(cutName, cut)
   }
 
   /** T7: rate cut — count events with `inRange` per time bin; cut WHOLE
     * bins whose count exceeds a threshold; events keep/lose by their bin's
-    * verdict (J4 broadcast join — the reference does an O(events×bins)
-    * Python loop, `semiautocuts.py:800-811`).
+    * verdict (J4). The reference does an O(events×bins) Python loop
+    * (`semiautocuts.py:800-811`); here the ≤ `bins` counts are collected
+    * once, the threshold and verdicts are resolved on the driver, and the
+    * returned frame is `df` plus `cutName`, a projection that indexes a
+    * boolean array literal by the event's bin.
     *
     * `limit` semantics (`_do_time_binned_count_cut`, `semiautocuts.py:
     * 738-811`): Left(absolute count) | Right((mode, k)) where mode is
@@ -267,38 +254,33 @@ object SemiAutoCut {
       limit: Either[Double, (String, Double)],
       cutName: String): DataFrame = {
     val spark = df.sparkSession
+    import spark.implicits._
     // ALL bins participate in the threshold estimation, empty ones with
     // count 0 — the reference allocates a zeros array of nbins and takes
     // the percentile over it (`semiautocuts.py:744,788`); dropping empty
     // bins would bias the threshold upward.
-    val counts = spark.range(bins).toDF("bin")
-      .join(Hist.timeBinnedCount(df, time, tlo, thi, bins, inRange),
-        Seq("bin"), "left")
-      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
+    val counts = new Array[Long](bins)
+    Hist.timeBinnedCount(df, time, tlo, thi, bins, inRange).collect()
+      .foreach(r => counts(r.getLong(0).toInt) = r.getLong(1))
+    def cnt = counts.toSeq.toDF("cnt").select(col("cnt").cast("double"))
     val threshold: Double = limit match {
       case Left(abs) => abs
       case Right(("percent", p)) =>
-        Quantiles.exact1(counts, col("cnt").cast("double"), p / 100.0)
+        Quantiles.exact1(cnt, col("cnt"), p / 100.0)
       case Right(("sigma", k)) =>
-        val (med, sig) =
-          Quantiles.medianRobustSigma(counts, col("cnt").cast("double"))
+        val (med, sig) = Quantiles.medianRobustSigma(cnt, col("cnt"))
         med + k * sig
       case Right((m, _)) =>
         throw new IllegalArgumentException(s"unknown rate-cut mode $m")
     }
-    val verdict = counts
-      .select(col("bin"), (col("cnt") <= threshold).as("__keep__"))
     // events OUTSIDE [tlo, thi] belong to no bin and always keep (the
     // reference flips only events strictly inside a bin's window) — so
     // the bucket is null out of range, never clamped into an edge bin.
     val binCol = when(time >= tlo && time <= thi,
-      Hist.bucket(time, tlo, thi, bins)).otherwise(lit(null))
-    df.withColumn("__bin__", binCol)
-      .join(
-        broadcast(verdict.withColumnRenamed("bin", "__bin__")),
-        Seq("__bin__"), "left")
-      .withColumn(cutName, coalesce(col("__keep__"), lit(true)))
-      .drop("__bin__", "__keep__")
+      Hist.bucket(time, tlo, thi, bins))
+    df.withColumn(cutName, coalesce(
+      get(typedLit(counts.toSeq.map(_ <= threshold)), binCol.cast("int")),
+      lit(true)))
   }
 }
 

@@ -60,8 +60,9 @@ object CutQueries {
         .agg(count(lit(1)).as("cnt")).orderBy("event_type")
     }),
 
-    // T6/J3: per-time-bin sigma thresholds via one grouped aggregation +
-    // broadcast join back (replaces the reference's per-bin Python loop)
+    // T6/J3: per-time-bin sigma thresholds via one grouped aggregation,
+    // applied as per-bin literals (replaces the reference's per-bin
+    // Python loop)
     "t6_binned_sigma_cut" -> ((s, dir) => {
       val ev = events(s, dir).withColumn("tus", tsUs.cast("double"))
       val (tlo, thi) = Hist.minmax(ev, "tus")

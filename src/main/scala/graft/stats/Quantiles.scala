@@ -1,6 +1,6 @@
 package graft.stats
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Quantile/robust-scale estimators.
@@ -17,10 +17,12 @@ object Quantiles {
 
   /** A4: exact percentiles (linear interpolation, numpy-compatible).
     * `ps` in [0,1]. Returns one array column. */
-  def exact(df: DataFrame, c: Column, ps: Seq[Double]): Seq[Double] = {
-    val r = df
-      .agg(percentile(c, array(ps.map(lit): _*)).as("q"))
-      .head()
+  def exact(df: DataFrame, c: Column, ps: Seq[Double]): Seq[Double] =
+    nonEmpty(df.agg(percentile(c, array(ps.map(lit): _*))).head(), c)
+
+  /** The quantile array in the first column of a global aggregate's row;
+    * null there means the sample had no non-null value of `c`. */
+  private def nonEmpty(r: Row, c: Column): Seq[Double] = {
     if (r.isNullAt(0))
       throw new IllegalArgumentException(
         s"empty estimation sample for quantile over $c — the source " +
@@ -32,7 +34,7 @@ object Quantiles {
     exact(df, c, Seq(p)).head
 
   /** Above this estimation-sample row count, THRESHOLD estimation
-    * (T2/T3) switches from the exact percentile — which shuffles the
+    * (T2/T3/T6) switches from the exact percentile — which shuffles the
     * full per-group value multiset — to the GK sketch (rank error
     * ≤ 1/[[approxAcc]] of the sample size). The reference's regime keeps
     * estimation samples conditioned and small, so the exact path is the
@@ -46,38 +48,65 @@ object Quantiles {
     * the cardinality guard routed to the sketch. */
   final case class GuardedQuantiles(values: Seq[Double], approximated: Boolean)
 
-  /** T2/T3 cardinality guard: exact percentiles while the estimation
-    * sample is at most `maxExactRows` rows, GK sketch above. The size
-    * probe is LIMIT-bounded — it scans at most maxExactRows+1 rows and
-    * stops, so the check itself never pays a full pass at scale. */
-  /** True when `df` MAY exceed `maxExactRows` rows. The r06 byte-size
-    * shortcut (`sizeInBytes ≤ 8·maxExactRows ⇒ small`) was UNSOUND for
-    * parquet scans — `sizeInBytes` there is COMPRESSED file size, so a
-    * highly compressed sample far above the row limit could be declared
-    * "provably small" and routed to the exact percentile, defeating the
-    * guard (ADVICE r06). Only the plan's `rowCount` statistic is trusted
-    * now — when Catalyst reports one (LocalRelation, Range, cached
-    * relations) it is a real row count, not a byte guess. Otherwise a
-    * LIMIT-bounded count probe decides — it scans at most
-    * maxExactRows+1 rows and stops, so the check never pays a full
-    * pass at scale. */
-  def exceedsExactLimit(df: DataFrame, maxExactRows: Int): Boolean = {
-    if (maxExactRows == Int.MaxValue) return false
-    df.queryExecution.optimizedPlan.stats.rowCount match {
-      case Some(n) => n > maxExactRows
-      case None    => df.limit(maxExactRows + 1).count() > maxExactRows
+  /** The cardinality guard, folded into the estimation itself: runs
+    * `estimate(pct)` grouped by `keys` over `sample` and collects the
+    * rows (keys, then the estimate columns), where `pct(x, p)` is the
+    * exact percentile while `sample` has at most `maxExactRows` rows and
+    * the GK sketch above. Also returns whether the sketch was used.
+    *
+    * When the optimized plan reports a `rowCount` (a `LocalRelation`,
+    * whose filters the optimizer folds in, or an unfiltered `Range`; a
+    * filtered `Range` reports none) it decides up front. The
+    * plan's byte size is never trusted: for parquet it is the
+    * COMPRESSED file size, so a highly compressed sample far above the
+    * limit would pass as small (ADVICE r06). Otherwise (a parquet scan,
+    * anything filtered) ONE action aggregates
+    * `sample.limit(maxExactRows + 1)` with a `count` beside the exact
+    * percentiles: a total of at most `maxExactRows` means the limit
+    * removed nothing, so the percentiles are exact; a larger total
+    * re-runs the estimate with the sketch over the full sample. The
+    * exact aggregate therefore never sees more than `maxExactRows + 1`
+    * rows, and a sample within the limit costs one action. */
+  def guardedEstimate(
+      sample: DataFrame,
+      keys: Seq[Column],
+      maxExactRows: Int)(
+      estimate: ((Column, Column) => Column) => Seq[Column])
+      : (Array[Row], Boolean) = {
+    def run(src: DataFrame, sketch: Boolean, extra: Seq[Column]) = {
+      val aggs = estimate { (x, p) =>
+        if (sketch) percentile_approx(x, p, lit(approxAcc))
+        else percentile(x, p)
+      } ++ extra
+      src.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*).collect()
+    }
+    val known =
+      if (maxExactRows == Int.MaxValue) Some(false)
+      else sample.queryExecution.optimizedPlan.stats.rowCount
+        .map(_ > maxExactRows)
+    known match {
+      case Some(sketch) => (run(sample, sketch, Nil), sketch)
+      case None =>
+        val rows = run(sample.limit(maxExactRows + 1), sketch = false,
+          Seq(count(lit(1))))
+        if (rows.map(r => r.getLong(r.length - 1)).sum > maxExactRows)
+          (run(sample, sketch = true, Nil), true)
+        else (rows, false)
     }
   }
 
+  /** T2/T3 threshold quantiles behind the cardinality guard
+    * ([[guardedEstimate]]): one estimation action unless the sample is
+    * over the limit. */
   def thresholdQuantiles(
       df: DataFrame,
       c: Column,
       ps: Seq[Double],
       maxExactRows: Int = defaultMaxExactRows): GuardedQuantiles = {
-    val sample = df.filter(c.isNotNull)
-    if (exceedsExactLimit(sample, maxExactRows))
-      GuardedQuantiles(approx(sample, c, ps, approxAcc), approximated = true)
-    else GuardedQuantiles(exact(sample, c, ps), approximated = false)
+    val (rows, approximated) =
+      guardedEstimate(df.filter(c.isNotNull), Nil, maxExactRows)(pct =>
+        Seq(pct(c, array(ps.map(lit): _*))))
+    GuardedQuantiles(nonEmpty(rows.head, c), approximated)
   }
 
   /** A5: approximate percentile (t-digest-free Greenwald-Khanna in Spark)
@@ -91,25 +120,28 @@ object Quantiles {
     r.getSeq[Double](0)
   }
 
-  /** A6: median + robust sigma from the 15.865/50/84.135 percentiles —
+  /** The ±1σ-equivalent and median percentiles behind the robust sigma. */
+  val sigmaPercentiles: Seq[Double] = Seq(0.15865, 0.5, 0.84135)
+
+  /** A6: median + robust sigma from the [[sigmaPercentiles]] values `q` —
     * sigma = mean of the two one-sided distances
-    * (`_get_cut_mask` sigma branch, `semiautocuts.py:588-627`).
-    * One exact-percentile pass. */
-  def medianRobustSigma(df: DataFrame, c: Column): (Double, Double) = {
-    val Seq(q1, med, q3) = exact(df, c, Seq(0.15865, 0.5, 0.84135))
-    val sigma = ((med - q1) + (q3 - med)) / 2.0
-    (med, sigma)
+    * (`_get_cut_mask` sigma branch, `semiautocuts.py:588-627`). */
+  def medianRobustSigma(q: Seq[Double]): (Double, Double) = {
+    val Seq(q1, med, q3) = q
+    (med, ((med - q1) + (q3 - med)) / 2.0)
   }
+
+  /** [[medianRobustSigma]] of `c` over `df`: one exact-percentile pass. */
+  def medianRobustSigma(df: DataFrame, c: Column): (Double, Double) =
+    medianRobustSigma(exact(df, c, sigmaPercentiles))
 
   /** [[medianRobustSigma]] behind the T3 cardinality guard. */
   def medianRobustSigmaGuarded(
       df: DataFrame,
       c: Column,
-      maxExactRows: Int = defaultMaxExactRows): (Double, Double) = {
-    val g = thresholdQuantiles(df, c, Seq(0.15865, 0.5, 0.84135), maxExactRows)
-    val Seq(q1, med, q3) = g.values
-    (med, ((med - q1) + (q3 - med)) / 2.0)
-  }
+      maxExactRows: Int = defaultMaxExactRows): (Double, Double) =
+    medianRobustSigma(
+      thresholdQuantiles(df, c, sigmaPercentiles, maxExactRows).values)
 
   /** W2: equal-count bin edges at percentiles of `c`
     * (`semiautocuts.py:244-255`) — returns bins+1 edges including min/max. */

@@ -1,12 +1,50 @@
 package graft
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.functions._
 import graft.cuts._
-import graft.stats.Hist
+import graft.stats.{Hist, Quantiles}
 
 /** T1-T8 threshold cuts vs serial hand computation. */
 class SemiAutoCutSpec extends SparkSpec {
   import spark.implicits._
+
+  /** `d` written to and read back from parquet: a scan whose optimized
+    * plan reports no row count, the input every production cut sees. */
+  private def viaParquet(d: DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("semiautocut")
+      .resolve("d").toString
+    d.coalesce(1).write.parquet(dir)
+    val out = spark.read.parquet(dir)
+    assert(out.queryExecution.optimizedPlan.stats.rowCount.isEmpty)
+    out
+  }
+
+  /** `body`'s result and the number of Spark jobs it launched. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      TestListenerBus.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** numpy-style linearly interpolated percentile of sorted `s`. */
+  private def npPct(s: Seq[Double], p: Double): Double = {
+    val pos = p * (s.size - 1); val lo = pos.toInt
+    s(lo) + (pos - lo) * (s(math.min(lo + 1, s.size - 1)) - s(lo))
+  }
 
   private lazy val vals = (0 until 500).map(i => ((i * 37) % 500) / 5.0)
   private lazy val df = vals.zipWithIndex
@@ -200,5 +238,97 @@ class SemiAutoCutSpec extends SparkSpec {
           s"q=$q trial=$trial rank=$rank target=${q * n}")
       }
     }
+  }
+
+  test("estimation runs once: one action per estimate, none left in the cut") {
+    val d = viaParquet(vals.zipWithIndex
+      .map { case (v, i) => (i.toDouble, v, (i % 3).toDouble) }
+      .toDF("t", "rq", "trig"))
+    Seq(CutPars(sigma = Some(2.0)), CutPars(percentUpper = Some(90.0)))
+      .foreach { pars =>
+        val (t, jobs) = jobsOf(SemiAutoCut.thresholds(d, "rq", pars))
+        assert(t.upper.isDefined)
+        assert(jobs <= 2, s"thresholds($pars) launched $jobs jobs")
+      }
+    val (_, inputJobs) = jobsOf(d.count())
+    val binned = SemiAutoCut.binnedCut(d, "rq",
+      Hist.bucket(col("t"), 0.0, 500.0, 5), CutPars(sigma = Some(2.0)),
+      "cut_b")
+    val rated = SemiAutoCut.rateCut(binned, col("t"), 0.0, 500.0, 10,
+      col("trig") === 0.0, Right(("sigma", 1.0)), "cut_r")
+    Seq(binned, rated).foreach { out =>
+      val plan = out.queryExecution.optimizedPlan
+      assert(plan.collect { case a: Aggregate => a }.isEmpty, plan.toString)
+      assert(plan.collect { case j: Join => j }.isEmpty, plan.toString)
+      val (n, jobs) = jobsOf(out.count())
+      assert(n == vals.size)
+      assert(jobs == inputJobs, s"count() launched $jobs jobs, input $inputJobs")
+    }
+  }
+
+  test("guard on a parquet sample: exact up to n rows, sketch past it") {
+    val n = 10
+    val d = viaParquet((0 until n).map(_.toDouble).toDF("x"))
+    val exact = Quantiles.thresholdQuantiles(d, col("x"), Seq(0.5),
+      maxExactRows = n)
+    assert(!exact.approximated)
+    assert(exact.values == Seq(4.5)) // numpy-style interpolated median
+    assert(Quantiles.thresholdQuantiles(d, col("x"), Seq(0.5),
+      maxExactRows = n - 1).approximated)
+    val err = intercept[IllegalArgumentException](
+      Quantiles.thresholdQuantiles(d.filter(col("x") > 1e9), col("x"),
+        Seq(0.5)))
+    assert(err.getMessage.contains("empty estimation sample"))
+  }
+
+  test("T6 guard on a parquet sample: the per-bin total decides") {
+    // 2 bins × 0..19: exact p50 is 9.5 (v ≤ 9 pass, 10 per bin); the
+    // sketch returns the element 9, so strict < drops it (9 per bin)
+    val d = viaParquet((0 until 40)
+      .map(i => ((i / 20).toDouble, (i % 20).toDouble)).toDF("t", "v"))
+    def passCount(maxExact: Int): Long =
+      SemiAutoCut.binnedCut(d, "v", col("t"),
+        CutPars(percentUpper = Some(50.0)), "keep", maxExactRows = maxExact)
+        .filter(col("keep")).count()
+    assert(passCount(40) == 20L)
+    assert(passCount(39) == 18L)
+  }
+
+  test("T6 empty estimation sample fails every row without throwing") {
+    val d = viaParquet(df)
+    val out = SemiAutoCut.binnedCut(d, "rq",
+      Hist.bucket(col("rq"), 0.0, 100.0, 5),
+      CutPars(percentUpper = Some(80.0)), "cut",
+      estimationCondition = col("rq") > 1e9)
+    assert(out.count() == vals.size)
+    assert(out.filter(col("cut")).count() == 0)
+  }
+
+  test("T6 out-of-range rows: Hist.bucket bins them, a null bin fails") {
+    val below = Seq(-30.0, -31.0, -32.0) // bin -2, estimated on its own
+    val above = Seq(250.0, 260.0)        // clamped into the last bin, 4
+    val all = vals ++ below ++ above
+    val d = all.toDF("rq")
+    val pars = CutPars(percentUpper = Some(80.0))
+    val out = SemiAutoCut.binnedCut(d, "rq",
+      Hist.bucket(col("rq"), 0.0, 100.0, 5), pars, "cut")
+    val expected = all.groupBy(v => math.min(math.floor(v / 20.0), 4.0))
+      .values.map { vs =>
+        val thr = npPct(vs.sorted, 0.8)
+        vs.count(_ < thr)
+      }.sum
+    assert(out.filter(col("cut")).count() == expected)
+    assert(out.filter(col("cut") && col("rq") < 0.0).count() == 2)
+    // restricting the bin to the range makes every out-of-range row fail
+    val inRange = col("rq") >= 0.0 && col("rq") <= 100.0
+    val restricted = SemiAutoCut.binnedCut(d, "rq",
+      when(inRange, Hist.bucket(col("rq"), 0.0, 100.0, 5)), pars, "cut")
+    assert(restricted.filter(col("cut") && !inRange).count() == 0)
+    val expectedInRange = vals.groupBy(v => math.min((v / 20.0).toInt, 4))
+      .values.map { vs =>
+        val thr = npPct(vs.sorted, 0.8)
+        vs.count(_ < thr)
+      }.sum
+    assert(restricted.filter(col("cut")).count() == expectedInRange)
   }
 }
