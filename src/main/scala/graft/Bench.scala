@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are fully materialized via a noop-format
   * write so Catalyst cannot prune the measured work (a bare `.count()`
@@ -45,6 +43,10 @@ import org.apache.spark.sql.SparkSession
   *     every run by a varying factor, so the fastest 3 still spread;
   *     BenchGateSpec pins both directions on synthetic series) — and
   *     the run should not be compared round-over-round.
+  *   - FAILED QUERIES: a run that throws records no time. Any query
+  *     with a failed run is listed in `failed` on the headline line and
+  *     in the detail file, and the series publishes `"valid":false`
+  *     with a null value — a time-to-exception is not a measurement.
   *   - LOAD GUARD (r07): a series whose noisy count exceeds
   *     SPARK_GRAFT_BENCH_NOISY_MAX (default max(8, suite/8)) is
   *     re-measured, up to SPARK_GRAFT_BENCH_ATTEMPTS (default 3) total
@@ -109,7 +111,7 @@ object Bench {
 
   /** The per-query noise verdict over the kept runs: relative spread
     * over 30% AND absolute range over 0.15 s AND median ≥ 0.3 s. */
-  private[graft] def isNoisy(kept: Seq[Double]): Boolean = {
+  private[graft] def isNoisy(kept: Seq[Double]): Boolean = kept.nonEmpty && {
     val med = median(kept)
     val range = kept.max - kept.min
     med >= 0.30 && range / med > 0.30 && range > 0.15
@@ -122,21 +124,29 @@ object Bench {
     * rejected, and a load-inflated total would become the round's
     * number of record (exactly what happened to the r14 driver
     * artifact: 3-of-3 kept, ~1.7× ambient inflation, published).
-    * Returns the reason the headline must carry `"valid":false` and a
-    * null value, or None when the estimator has teeth. Pure so
-    * BenchGateSpec can replay the degraded-budget path. */
-  private[graft] def headlineInvalidReason(runs: Int): Option[String] = {
+    * A series in which any query `failed` is invalid too: its total
+    * lacks that query's cost. Returns the reason the headline must
+    * carry `"valid":false` and a null value, or None when every query
+    * ran and the estimator has teeth. Pure so BenchGateSpec can replay
+    * both paths. */
+  private[graft] def headlineInvalidReason(
+      runs: Int, failed: Seq[String]): Option[String] = {
     val warmDrop = if (runs >= 7) 2 else if (runs >= 4) 1 else 0
     val rejectable = runs - warmDrop - 3
-    if (rejectable <= 0)
+    if (failed.nonEmpty)
+      Some(s"failed queries: ${failed.mkString(",")}")
+    else if (rejectable <= 0)
       Some(s"insufficient selection power: $runs passes = fastest-3-of-" +
         s"${runs - warmDrop} kept, zero rejectable; compare the last " +
         "gate-clean series (SCALE.md round notes) instead")
     else None
   }
 
-  /** (name, raw runs, median, spread, noisy) for one measured series. */
-  private type QueryStat = (String, Seq[Double], Double, Double, Boolean)
+  /** One query of a measured series: its successful runs' times, the
+    * median and spread of the kept ones, and whether it is noisy or
+    * had a failed run. */
+  private final case class QueryStat(name: String, runs: Seq[Double],
+      median: Double, spread: Double, noisy: Boolean, failed: Boolean)
 
   /** The printed-subset / subset-mode query set: the suite's headline
     * operators (one per family), ~¼ of the full suite's pass cost. */
@@ -194,19 +204,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val wall0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - wall0) / 1e9
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = tools.Run.sfDir
     val runsWanted = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "7").toInt
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_TIME_BUDGET_S", "2400")
       .toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     val verifyOnly = Set(
       "w4_rechunk_decl",     // mirror of the benched rechunkExec path
       "llm_ann_recall",      // recall gate: brute force + every ANN path
@@ -221,28 +223,23 @@ object Bench {
       "llm_ann_pq_persisted", // codebook write+read lifecycle (side-effect)
       "llm_ann_ivfpq_persisted", // full IVF-PQ index lifecycle (side-effect)
       "llm_dedup_recall") // recall gate: planted dups + LSH + verify (r14)
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(q => verifyOnly(q._1))
-    val subsetNames = names.filter(q => headlineSet(q._1))
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filterNot(verifyOnly)
+    val subsetNames = names.filter(headlineSet)
 
+    // one pass over `qnames`: each query's time, or None if it threw
+    // (Run.once also releases what the query left behind, so queries
+    // don't perturb each other's memory budget)
     def onePass(measure: Boolean,
-        qnames: Seq[(String, (SparkSession, String) =>
-          org.apache.spark.sql.DataFrame)]): Seq[(String, Double)] =
-      qnames.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
+        qnames: Seq[String]): Map[String, Option[Double]] =
+      qnames.map { name =>
+        val outcome = tools.Run.once(spark, sfDir, name)
+        outcome.left.foreach { e =>
           if (measure)
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // release per-query persisted intermediates (SQL caches AND
-        // leaked localCheckpoint blocks — clearCache alone misses the
-        // latter, see SessionHygiene) so queries don't perturb each
-        // other's memory budget
-        graft.core.SessionHygiene.releaseAll(spark)
-        name -> dt
-      }
+        name -> outcome.toOption
+      }.toMap
 
     // Load guard (VERDICT r06 §1: the official BENCH_r06 artifact was
     // load-flagged by the repo's own protocol yet recorded as the
@@ -264,10 +261,9 @@ object Bench {
     // also warms subset-mode queries); per-query times seed BOTH pass
     // estimates. Warm-up is the SLOWEST pass — codegen compiles live —
     // so the first projections are conservative, the safe direction.
-    val warmTimes = onePass(measure = false, names).toMap
-    var fullPassEstS = warmTimes.values.sum
-    var subsetPassEstS =
-      subsetNames.map { case (n, _) => warmTimes(n) }.sum
+    val warmTimes = onePass(measure = false, names)
+    var fullPassEstS = warmTimes.values.flatten.sum
+    var subsetPassEstS = subsetNames.flatMap(warmTimes).sum
     // r17 (VERDICT r16 "Next round" 1): the COLD warm-up systematically
     // overestimates a warm pass (live codegen/JIT ran inside it), so
     // seeding the planner from it alone biased r16 into subset mode —
@@ -284,13 +280,12 @@ object Bench {
       System.err.println(s"[bench] cold estimate (full ~" +
         s"${fullPassEstS.toInt}s/pass) would degrade mode/runs — " +
         "re-estimating with one warm pass")
-      val warm2 = onePass(measure = false, names).toMap
-      fullPassEstS = warm2.values.sum
-      subsetPassEstS = subsetNames.map { case (n, _) => warm2(n) }.sum
+      val warm2 = onePass(measure = false, names)
+      fullPassEstS = warm2.values.flatten.sum
+      subsetPassEstS = subsetNames.flatMap(warm2).sum
     }
 
-    def measureSeries(runs: Int, subset: Boolean)
-        : (Seq[QueryStat], Int) = {
+    def measureSeries(runs: Int, subset: Boolean): Seq[QueryStat] = {
       val qnames = if (subset) subsetNames else names
       // measurement-artifact exclusion (see scaladoc): extended
       // warm-up head dropped, then the fastest 3 of the rest kept —
@@ -303,25 +298,30 @@ object Bench {
         if (subset) subsetPassEstS = passS else fullPassEstS = passS
         p
       }
-      val byQuery = qnames.map { case (name, _) =>
-        val ts = passes.map(_.find(_._1 == name).get._2)
+      qnames.map { name =>
+        val outcomes = passes.map(_(name))
+        val ts = outcomes.flatten
         val kept = keptRuns(ts, runs)
         val med = median(kept)
         val spread = if (med > 0) (kept.max - kept.min) / med else 0.0
-        (name, ts, med, spread, isNoisy(kept))
+        QueryStat(name, ts, med, spread, isNoisy(kept),
+          failed = outcomes.contains(None))
       }
-      (byQuery, byQuery.count(_._5))
     }
+    def noisyCount(series: Seq[QueryStat]): Int = series.count(_.noisy)
+    def failedNames(series: Seq[QueryStat]): Seq[String] =
+      series.filter(_.failed).map(_.name)
+    def jnum(v: Double): String = f"$v%.3f"
+    def jlist(xs: Seq[String]): String =
+      xs.map("\"" + _ + "\"").mkString("[", ",", "]")
 
-    def headlineLine(series: (Seq[QueryStat], Int), runs: Int,
+    def headlineLine(series: Seq[QueryStat], runs: Int,
         attempt: Int, subset: Boolean): String = {
-      val byQuery = series._1
-      val total = byQuery.map(_._3).sum
-      val loadFlagged = series._2 > noisyMaxFor(byQuery.size)
-      def jnum(v: Double): String = f"$v%.3f"
-      val qs = byQuery.collect {
-        case (name, _, med, _, _) if headlineSet(name) =>
-          "\"" + name + "\":" + jnum(med)
+      val total = series.map(_.median).sum
+      val loadFlagged = noisyCount(series) > noisyMaxFor(series.size)
+      val qs = series.collect {
+        case q if headlineSet(q.name) =>
+          "\"" + q.name + "\":" + (if (q.failed) "null" else jnum(q.median))
       }.mkString("{", ",", "}")
       // r15: a series without selection power publishes NO total — an
       // explicit invalid marker, never a silently contaminated number
@@ -329,48 +329,48 @@ object Bench {
       // suite the total covers — a headline-subset total is not
       // comparable to a full-suite one, but a valid subset series
       // beats an invalid full one for round-over-round tracking.
-      val invalid = headlineInvalidReason(runs)
+      val invalid = headlineInvalidReason(runs, failedNames(series))
       val valueJson = if (invalid.isDefined) "null" else jnum(total)
       val invalidJson = invalid
         .map(r => s""""valid":false,"invalid_reason":"$r",""")
         .getOrElse(s""""valid":true,""")
       val mode = if (subset) "headline_subset" else "full"
       s"""{"metric":"total_median","value":$valueJson,"unit":"sec",""" +
-        s""""mode":"$mode","benched":${byQuery.size},""" +
-        s""""runs":$runs,"noisy":${series._2},"attempts":$attempt,""" +
+        s""""mode":"$mode","benched":${series.size},""" +
+        s""""runs":$runs,"noisy":${noisyCount(series)},""" +
+        s""""failed":${jlist(failedNames(series))},"attempts":$attempt,""" +
         invalidJson +
         s""""load_flagged":$loadFlagged,"queries":$qs,"sf":"$sfDir"}"""
     }
 
-    def writeDetail(series: (Seq[QueryStat], Int), runs: Int,
+    def writeDetail(series: Seq[QueryStat], runs: Int,
         attempt: Int, subset: Boolean): Unit = try {
-      def jnum(v: Double): String = f"$v%.3f"
-      val byQuery = series._1
-      val detail = byQuery.map { case (name, ts, med, spread, _) =>
-        s""""$name":{"median":${jnum(med)},"spread":${jnum(spread)},"runs":[${ts.map(jnum).mkString(",")}]}"""
+      val detail = series.map { q =>
+        val med = if (q.failed) "null" else jnum(q.median)
+        s""""${q.name}":{"median":$med,"spread":${jnum(q.spread)},"runs":[${q.runs.map(jnum).mkString(",")}]}"""
       }.mkString("{", ",", "}")
-      val noisyList =
-        byQuery.filter(_._5).map("\"" + _._1 + "\"").mkString("[", ",", "]")
+      val failed = failedNames(series)
       val mode = if (subset) "headline_subset" else "full"
       java.nio.file.Files.write(
         java.nio.file.Paths.get("target/bench_detail.json"),
-        (s"""{"metric":"total_median","value":${jnum(byQuery.map(_._3).sum)},"unit":"sec",""" +
-          s""""mode":"$mode","benched":${byQuery.size},""" +
+        (s"""{"metric":"total_median","value":${jnum(series.map(_.median).sum)},"unit":"sec",""" +
+          s""""mode":"$mode","benched":${series.size},""" +
           s""""runs":$runs,"attempts":$attempt,""" +
-          s""""valid":${headlineInvalidReason(runs).isEmpty},""" +
-          s""""load_flagged":${series._2 > noisyMaxFor(byQuery.size)},"noisy":$noisyList,""" +
+          s""""valid":${headlineInvalidReason(runs, failed).isEmpty},""" +
+          s""""failed":${jlist(failed)},""" +
+          s""""load_flagged":${noisyCount(series) > noisyMaxFor(series.size)},"noisy":${jlist(series.filter(_.noisy).map(_.name))},""" +
           s""""queries":$detail,"sf":"$sfDir"}""").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
 
     // Attempt loop under the time budget.
     var attempt = 0
-    var best: (Seq[QueryStat], Int) = null
+    var best: Seq[QueryStat] = null
     var bestRuns = runsWanted
     var bestSubset = false
     var line: String = null
     var budgetStop = false
     while (attempt < maxAttempts && !budgetStop &&
-        (best == null || best._2 > noisyMaxFor(best._1.size))) {
+        (best == null || noisyCount(best) > noisyMaxFor(best.size))) {
       // plan this attempt's shape (mode × run count) against the
       // remaining budget — planAttempt is pure, BenchGateSpec replays
       planAttempt(budgetS - elapsedS - slackS, fullPassEstS,
@@ -393,8 +393,8 @@ object Bench {
           // prefer by noisy FRACTION — a subset series and a full
           // series have different sizes
           if (best == null ||
-              series._2.toDouble / series._1.size <
-                best._2.toDouble / best._1.size) {
+              noisyCount(series).toDouble / series.size <
+                noisyCount(best).toDouble / best.size) {
             best = series; bestRuns = plannedRuns; bestSubset = subset
           }
           // emit after EVERY completed attempt: a driver kill later in
@@ -402,10 +402,10 @@ object Bench {
           line = headlineLine(best, bestRuns, attempt, bestSubset)
           println(line)
           writeDetail(best, bestRuns, attempt, bestSubset)
-          val noisyMax = noisyMaxFor(series._1.size)
-          if (series._2 > noisyMax) {
+          val noisyMax = noisyMaxFor(series.size)
+          if (noisyCount(series) > noisyMax) {
             System.err.println(s"[bench] load-flagged series: noisy=" +
-              s"${series._2} > $noisyMax (attempt $attempt/$maxAttempts)" +
+              s"${noisyCount(series)} > $noisyMax (attempt $attempt/$maxAttempts)" +
               (if (attempt < maxAttempts) " — re-running" else
                 " — out of attempts, recording the least noisy series"))
           // Bounded inter-attempt backoff (VERDICT r07 §5: 10 s resampled

@@ -1,28 +1,38 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** The oracle_sql.json body: the entries of `oracle` whose query is
+    * in `only` (every entry when None), so the checker replays exactly
+    * the dumped queries. JSON string escape: backslash, quote, and ALL
+    * control chars (<0x20) — a tab or CR in an oracle query would
+    * otherwise make the checker's json.load fail and report no
+    * correctness result at all. */
+  private[graft] def oracleJson(oracle: Map[String, String],
+      only: Option[Set[String]]): String = {
+    def q(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    oracle.filter { case (name, _) => only.forall(_.contains(name)) }
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+  }
+
   def main(args: Array[String]): Unit = {
-    // args: sfDir outDir [comma-separated query-name filter — builder
-    // dev aid for targeted re-checks; the driver passes two args]
+    // args: sfDir outDir [comma-separated query names: dump only these
+    // and their oracle entries, for targeted re-checks]
     val sfDir = args(0)
     val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet timestamp[us] (TIMESTAMP_NTZ in Spark);
-      // compared against DuckDB epoch_us(ts) via unix_micros under UTC.
-      // nanosAsLong kept for older nanos-typed fixtures (no-op on us).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -35,21 +45,8 @@ object Verify {
       // SQL caches AND leaked localCheckpoint blocks (SessionHygiene)
       graft.core.SessionHygiene.releaseAll(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql, only))
     spark.stop()
   }
 }

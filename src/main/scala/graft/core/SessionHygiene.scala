@@ -3,10 +3,11 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Per-query session cleanup for the suite runners (Bench, Verify, the
-  * dev timing tools) — the r04/r05 RUNNER CONTRACT says queries may
-  * leave persisted intermediates behind and the runner releases them
-  * between queries.
+/** Per-query session cleanup for the suite runners (`graft.Verify`, and
+  * `graft.tools.Run.once`, through which `graft.Bench` and every
+  * `Run` mode execute a query) — the r04/r05 RUNNER CONTRACT says
+  * queries may leave persisted intermediates behind and the runner
+  * releases them between queries.
   *
   * `spark.catalog.clearCache()` alone honors only HALF of that
   * contract: it drops SQL-cached tables (`Dataset.persist`) but never
@@ -17,8 +18,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Those blocks otherwise free only when the JVM happens to GC the RDD
   * reference, so back-to-back queries in one session accumulate dead
   * checkpoint blocks until the block manager evicts LIVE caches to
-  * disk. Measured (r17, quiet-window TimeQueries at sf0.1): five
-  * same-JVM repeats of llm_hybrid_rrf degrade 2.2 → 6.5 s with
+  * disk. Measured (r17, quiet-window TimeQueries — now `Run time` —
+  * at sf0.1): five same-JVM repeats of llm_hybrid_rrf degrade 2.2 → 6.5 s with
   * clearCache alone and hold ~1.4 s once leaked RDD persists are
   * dropped too; llm_dup_spans 2.7 → 1.8 the same way.
   *

@@ -112,9 +112,7 @@ import org.apache.spark.sql.functions._
 object SuffixDedup {
 
   /** Canonical class-representative key of one corpus position — the
-    * value `min()` picks per equality class. Exposed package-wide so
-    * the ExplainFrames dev tool mirrors the library's exact key shape
-    * instead of hand-copying it (ADVICE r16). Any DETERMINISTIC
+    * value `min()` picks per equality class. Any DETERMINISTIC
     * INJECTIVE encoding of (id, pos) works: representatives are
     * internal labels — the final output never sees them.
     *
@@ -127,7 +125,7 @@ object SuffixDedup {
     * llm_suffix_dedup_round_before.txt). Non-integral ids keep the
     * struct form — correct, just sort-aggregated (and the scaladoc's
     * fixed-width claim holds only for integral ids, ADVICE r16). */
-  private[graft] def posKey(
+  private def posKey(
       idType: org.apache.spark.sql.types.DataType,
       id: org.apache.spark.sql.Column,
       pos: org.apache.spark.sql.Column): org.apache.spark.sql.Column =

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.{PytesdaqReader, RawConvert, VaexHdf5Reader}
 
 /** HDF5 → curated-Parquet conversion CLI — the offline ingest step that
@@ -39,13 +37,8 @@ object ConvertCli {
     val rawMode = flags.contains("--raw") || flags.contains("--raw-counts")
     val out = positional.head
     val files = positional.tail.toSeq
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create(
+      master = sys.env.get("SPARK_MASTER"))
     if (rawMode) {
       val reader =
         new PytesdaqReader(rawCounts = flags.contains("--raw-counts"))

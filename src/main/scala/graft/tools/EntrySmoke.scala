@@ -1,16 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke-run of the driver contract's `SparkEntry.entry` (dev tool). */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.create()
     val df = graft.SparkEntry.entry(spark)
     val rows = df.collect()
     println(s"entry rows=${rows.length}")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Semantics probe (dev tool): is `hll_sketch_estimate` EXACT at small
@@ -10,11 +9,7 @@ import org.apache.spark.sql.functions._
   * summary merge does? */
 object HllProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.create()
     val d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val toks = d.filter(col("text").isNotNull)
       .select(col("doc_id"), col("source"),

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.llm.{Dedup, PairExpansion, Similarity}
 
@@ -20,11 +20,7 @@ import graft.llm.{Dedup, PairExpansion, Similarity}
 object HotBucketStress {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.create()
 
     def time(label: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()

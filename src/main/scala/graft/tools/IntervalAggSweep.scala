@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Temporal
 
@@ -17,11 +17,7 @@ import graft.core.Temporal
 object IntervalAggSweep {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.getOrElse("64")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.create()
     def force(df: DataFrame): Long =
       df.agg(
         sum(pmod(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)),

@@ -1,19 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit (dev tool): prints formatted physical plans for key queries
   * and flags scale anti-patterns — cartesian products where not expected,
   * missing parquet filter pushdown, missing broadcast on capped key
   * joins. Output reviewed in SCALE.md. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.create()
     val dir = "/root/testdata/sf0.01"
 
     val interesting = Seq(

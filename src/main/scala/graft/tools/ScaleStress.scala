@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.llm.{Dedup, Similarity, TextAnalysis}
 
@@ -22,11 +22,7 @@ object ScaleStress {
     // matching timings — dev aid so one new operator's decade doesn't
     // re-run the suite
     val only: Option[String] = args.lift(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.create()
 
     def time(label: String)(f: => Long): Unit =
       if (only.forall(_.split(",").exists(label.contains))) {

@@ -1,8 +1,8 @@
 package org.apache.spark
 
 /** Access to the listener bus's drain, which Spark keeps package-private:
-  * a spec that records listener events reads them only after every event
-  * posted so far has been delivered. */
-object TestListenerBus {
+  * a caller that records listener events reads them only after every
+  * event posted so far has been delivered. */
+object GraftListenerBus {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -104,15 +104,30 @@ class BenchGateSpec extends AnyFunSuite {
     // rejection power — yet the contaminated total was still published
     // as the round's number of record. The guard refuses exactly the
     // zero-power pass counts and no others.
-    assert(Bench.headlineInvalidReason(3).isDefined)  // fastest 3 of 3
-    assert(Bench.headlineInvalidReason(4).isDefined)  // drop 1, 3 of 3
-    assert(Bench.headlineInvalidReason(5).isEmpty)    // drop 1, 3 of 4
-    assert(Bench.headlineInvalidReason(7).isEmpty)    // drop 2, 3 of 5
+    assert(Bench.headlineInvalidReason(3, Nil).isDefined)  // fastest 3 of 3
+    assert(Bench.headlineInvalidReason(4, Nil).isDefined)  // drop 1, 3 of 3
+    assert(Bench.headlineInvalidReason(5, Nil).isEmpty)    // drop 1, 3 of 4
+    assert(Bench.headlineInvalidReason(7, Nil).isEmpty)    // drop 2, 3 of 5
     // the reason names the estimator state and points at the
     // gate-clean comparison path, and stays JSON-safe (no quotes)
-    val r = Bench.headlineInvalidReason(4).get
+    val r = Bench.headlineInvalidReason(4, Nil).get
     assert(r.contains("selection power") && r.contains("gate-clean"))
     assert(!r.contains("\""))
+  }
+
+  test("a failed query invalidates the headline at any pass count") {
+    // a run that throws records no time, so the series' total lacks
+    // that query's cost: never publishable, whatever the power
+    val r = Bench.headlineInvalidReason(7, Seq("q_a", "q_b"))
+    assert(r.isDefined)
+    assert(r.get.contains("failed") && r.get.contains("q_a,q_b"))
+    assert(!r.get.contains("\""))
+    assert(Bench.headlineInvalidReason(3, Seq("q_a")).isDefined)
+    // and a clean series with selection power stays valid
+    assert(Bench.headlineInvalidReason(7, Nil).isEmpty)
+    // a query that failed every run keeps no times, and its empty kept
+    // set is not noisy
+    assert(!Bench.isNoisy(Bench.keptRuns(Nil, 7)))
   }
 
   test("planAttempt: budget-aware mode × runs shape — full preferred, " +
@@ -138,8 +153,8 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.planAttempt(1000.0, 270.0, 70.0, 3, false) ==
       Some((false, 3)))
     // subset mode retains selection power exactly when runs do
-    assert(Bench.headlineInvalidReason(7).isEmpty)
-    assert(Bench.headlineInvalidReason(5).isEmpty)
-    assert(Bench.headlineInvalidReason(3).isDefined)
+    assert(Bench.headlineInvalidReason(7, Nil).isEmpty)
+    assert(Bench.headlineInvalidReason(5, Nil).isEmpty)
+    assert(Bench.headlineInvalidReason(3, Nil).isDefined)
   }
 }

@@ -257,12 +257,12 @@ class CacheAndCapSpec extends SparkSpec {
         case _ =>
       }
     }
-    org.apache.spark.TestListenerBus.drain(sc)
+    org.apache.spark.GraftListenerBus.drain(sc)
     sc.addSparkListener(listener)
     val got =
       try {
         val ids = survivors(input)
-        org.apache.spark.TestListenerBus.drain(sc)
+        org.apache.spark.GraftListenerBus.drain(sc)
         ids
       } finally {
         sc.removeSparkListener(listener)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.TestListenerBus
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
@@ -31,11 +31,11 @@ class SemiAutoCutSpec extends SparkSpec {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    TestListenerBus.drain(sc)
+    GraftListenerBus.drain(sc)
     sc.addSparkListener(listener)
     try {
       val r = body
-      TestListenerBus.drain(sc)
+      GraftListenerBus.drain(sc)
       (r, jobs.get)
     } finally sc.removeSparkListener(listener)
   }
