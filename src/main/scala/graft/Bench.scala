@@ -228,8 +228,8 @@ object Bench {
     val subsetNames = names.filter(headlineSet)
 
     // one pass over `qnames`: each query's time, or None if it threw
-    // (Run.once also releases what the query left behind, so queries
-    // don't perturb each other's memory budget)
+    // or leaked (Run.once closes the query's Scope, so queries don't
+    // perturb each other's memory budget)
     def onePass(measure: Boolean,
         qnames: Seq[String]): Map[String, Option[Double]] =
       qnames.map { name =>

@@ -37,13 +37,10 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // SQL caches AND leaked localCheckpoint blocks (SessionHygiene)
-      graft.core.SessionHygiene.releaseAll(spark)
+      tools.Run.scoped(spark)(fn(spark, sfDir))(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+        .left.foreach(e =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}"))
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       oracleJson(SparkEntry.oracleSql, only))

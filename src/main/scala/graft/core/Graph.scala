@@ -55,16 +55,16 @@ object Graph {
     // twice: the rank init and each round's dangling-node join) — and
     // both re-executed their upstream scan/union/aggregate per round
     // before. Materialize each once; the loop reads bounded caches.
-    // localCheckpoint (not persist) so the returned plan does not
-    // reference caches this method would have to leak to its caller
-    // (blocks free on GC), and the lineage truncation comes free.
-    val spine = nodes.select(col("v")).localCheckpoint()
+    // Checkpoints (not persists) so the returned plan does not
+    // reference caches, and the lineage truncation comes free; the
+    // current Scope frees them.
+    val spine = Scope.checkpoint(nodes.select(col("v")))
     val n = spine.count()
     require(n > 0, "pageRank needs a non-empty node spine")
     val r0 = scale / n
     val base = 15L * r0 / 100L
     val deg = edges.groupBy("src").agg(count(lit(1)).as("__deg"))
-    val e = edges.join(deg, Seq("src")).localCheckpoint()
+    val e = Scope.checkpoint(edges.join(deg, Seq("src")))
     var r = init match {
       case Some(prev) => spine
         .join(prev.select(prev.col("v"),
@@ -89,7 +89,7 @@ object Graph {
       // driver-side bottleneck long before the executors feel it.
       // Every 5 rounds amortizes the materialization at low iters
       // while keeping plan depth bounded at the 50-iteration limit.
-      if (i % 5 == 0 && i < iters) r = r.localCheckpoint()
+      if (i % 5 == 0 && i < iters) r = Scope.checkpoint(r)
     }
     r
   }
@@ -122,12 +122,12 @@ object Graph {
     // r17 (guide §5): spine and edge table are read twice per
     // half-step (2·iters·2 reads) — materialize each ONCE instead of
     // re-executing their upstream scan/union per read (same persist
-    // discipline as [[pageRank]]; localCheckpoint so nothing leaks —
-    // blocks free on GC, and the spine count comes off the cache).
-    val spine = nodes.select(col("v")).localCheckpoint()
+    // discipline as [[pageRank]]; checkpoints, freed by the current
+    // Scope, and the spine count comes off the cache).
+    val spine = Scope.checkpoint(nodes.select(col("v")))
     val n = spine.count()
     require(n > 0, "hits needs a non-empty node spine")
-    val e = edges.select(col("src"), col("dst")).localCheckpoint()
+    val e = Scope.checkpoint(edges.select(col("src"), col("dst")))
 
     /** raw(v) = Σ score(other endpoint) over `e` keyed by `keyCol`,
       * spine-completed with 0, then renormalized to `scale` total.
@@ -142,14 +142,13 @@ object Graph {
       * once per round). */
     def halfStep(score: DataFrame, scoreCol: String,
         joinCol: String, keyCol: String, outCol: String): DataFrame = {
-      val raw = spine
+      val raw = Scope.checkpoint(spine
         .join(e.join(score.withColumnRenamed("v", "__sv"),
               col(joinCol) === col("__sv"))
             .groupBy(col(keyCol).as("v"))
             .agg(sum(scoreCol).as("__r")),
           Seq("v"), "left")
-        .select(col("v"), coalesce(col("__r"), lit(0L)).as("__raw"))
-        .localCheckpoint()
+        .select(col("v"), coalesce(col("__r"), lit(0L)).as("__raw")))
       val tot = raw.agg(sum("__raw").as("__t"))
       raw.crossJoin(broadcast(tot))
         .select(col("v"),

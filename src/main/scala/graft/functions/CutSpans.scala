@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * every token whose index falls inside any `[span_start, span_end)`
   * interval removed, survivors re-joined by single spaces — the
   * span-removal rewrite of
-  * [[graft.llm.Spans.removeDuplicatedSpansReleasable]] as ONE byte-level pass.
+  * [[graft.llm.Spans.removeDuplicatedSpans]] as ONE byte-level pass.
   *
   * The composed form (`filter(split(...), (t, i) => !exists(spans, ...))`
   * + `concat_ws`) evaluates an O(|spans|) `exists` per token and

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 
 import graft.functions.{BpeEncode, BpeMerges}
 
@@ -103,11 +104,10 @@ object Bpe {
     }
     // symbols = code points (substring is code-point-based in both
     // engines; surrogate pairs stay whole)
-    var state = words.select(
+    var state = Scope.checkpoint(words.select(
       expr("transform(sequence(1, length(word)), " +
         "i -> substring(word, i, 1))").as("syms"),
-      col("cnt"))
-      .localCheckpoint()
+      col("cnt")))
     val out = Seq.newBuilder[(String, String, Long)]
     var round = 0
     var done = false
@@ -133,8 +133,7 @@ object Bpe {
             size(acc) > 0 && element_at(acc, -1) === lit(l) && x === lit(r),
             concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
             .otherwise(concat(acc, array(x))))
-        state = state.select(folded.as("syms"), col("cnt"))
-          .localCheckpoint()
+        state = Scope.checkpoint(state.select(folded.as("syms"), col("cnt")))
       }
       round += 1
     }

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 
 /** The C4 cleaning pipeline (Raffel et al. 2020, "Exploring the Limits
   * of Transfer Learning…", JMLR — §2.2's Colossal Clean Crawled Corpus
@@ -132,10 +133,9 @@ object C4 {
     // truncates the upstream line/page-filter lineage, which the
     // removal join would otherwise replay (the r16 before-plan scanned
     // documents.parquet 6× for this operator).
-    val withSents = df.select(col(idCol),
+    val withSents = Scope.checkpoint(df.select(col(idCol),
       regexp_extract_all(coalesce(col(textCol), lit("")),
-        lit(SentenceRe), lit(0)).as("__ss"))
-      .localCheckpoint()
+        lit(SentenceRe), lit(0)).as("__ss")))
     // span keys map-only from each page's own sentence array
     val spanArr = when(size(col("__ss")) >= 3,
       transform(sequence(lit(0), size(col("__ss")) - 3),
@@ -164,14 +164,13 @@ object C4 {
         min(keeperKey(col(idCol), col("start"))).as("__keep"))
       .filter(col("__cnt") > 1)
       .select(col("k"), col("__keep"))
-    val removed = occ.join(dupKeys, Seq("k"))
+    // read twice (reassembly anti-join + the n_sent_removed count);
+    // duplicated-occurrence-sized, so the materialization is small
+    val removed = Scope.checkpoint(occ.join(dupKeys, Seq("k"))
       .filter(keeperKey(col(idCol), col("start")) =!= col("__keep"))
       .select(col(idCol),
         explode(sequence(col("start"), col("start") + 2)).as("sid"))
-      .distinct()
-      // read twice (reassembly anti-join + the n_sent_removed count);
-      // duplicated-occurrence-sized, so the materialization is small
-      .localCheckpoint()
+      .distinct())
     val sents = withSents.select(col(idCol),
       posexplode(col("__ss")).as(Seq("sid", "sent")))
     val rebuilt = sents.join(removed, Seq(idCol, "sid"), "left_anti")
@@ -208,9 +207,8 @@ object C4 {
     // whole regex chain re-ran for every consumer (6 scans of the
     // corpus in the r16 plan dump); now the corpus is scanned once and
     // every downstream stage reads the doc-sized cleaned table.
-    val paged = pageVerdict(lines, "text_lines", idCol,
-      badWords, minSentences)
-      .localCheckpoint()
+    val paged = Scope.checkpoint(pageVerdict(lines, "text_lines", idCol,
+      badWords, minSentences))
     val deduped = dedupSpans(
       paged.filter(col("page_kept")), "text_lines", idCol)
     paged.join(deduped, Seq(idCol), "left")

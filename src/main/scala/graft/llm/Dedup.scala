@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.SessionHygiene.releaseCheckpoint
+import graft.core.Scope
 
 /** Deduplication operators, designed for the 100 TB regime: every variant
   * is bucketed — candidate pairs come from hash buckets (exact hash,
@@ -94,7 +94,7 @@ object Dedup {
     * null-text docs produce no shingle rows at all (ADVICE r05). */
   /** One row per (id, band, band-signature-slice) — the LSH banding
     * shared by the monopartite ([[lshCandidates]]) and incremental
-    * ([[nearDupsAgainstIndexReleasable]]) candidate generators. */
+    * ([[nearDupsAgainstIndex]]) candidate generators. */
   private def bandedRows(
       sigs: DataFrame, idCol: String, bands: Int, rows: Int): DataFrame =
     sigs.filter(col("sig").isNotNull).select(
@@ -127,7 +127,7 @@ object Dedup {
     * MinHash signature, ~8k bytes), `shingles` array<long>
     * (sorted-distinct shingle hashes)). Daily ingest then runs
     * entirely against fingerprints
-    * ([[nearDupsAgainstIndexReleasable]]): the old corpus TEXT is never
+    * ([[nearDupsAgainstIndex]]): the old corpus TEXT is never
     * re-read and its signatures never recomputed
     * — the production incremental-dedup shape (a 100 TB corpus is
     * fingerprinted once; each day's batch pays only its own size).
@@ -151,13 +151,13 @@ object Dedup {
 
   /** Append a (deduped) batch's fingerprints to an existing index —
     * day N's close of the incremental loop: check the batch with
-    * [[nearDupsAgainstIndexReleasable]], drop its near-dups, then append the
+    * [[nearDupsAgainstIndex]], drop its near-dups, then append the
     * survivors' fingerprints so day N+1 sees them. Same row layout as
     * [[writeMinhashIndex]].
     *
     * Precondition: the batch's ids must not already be in the index —
     * this is append-only (no upsert); re-appending an id would leave
-    * duplicate fingerprint rows. [[nearDupsAgainstIndexReleasable]] defends by
+    * duplicate fingerprint rows. [[nearDupsAgainstIndex]] defends by
     * deduping the index by id at read time, but duplicate rows still
     * waste index scan bytes, so don't create them. */
   def appendToMinhashIndex(
@@ -234,8 +234,9 @@ object Dedup {
     * Scale shape: the index is scanned column-pruned (bands need
     * `sig`; the verify joins need `shingles` for candidate ids only);
     * candidates are bounded by the caps; nothing re-reads corpus text.
-    * The release handle drops the new batch's fingerprint checkpoint. */
-  def nearDupsAgainstIndexReleasable(
+    * The new batch's fingerprints are checkpointed in the current
+    * [[Scope]]. */
+  def nearDupsAgainstIndex(
       newDf: DataFrame,
       textCol: String,
       idCol: String,
@@ -244,21 +245,20 @@ object Dedup {
       k: Int = 64,
       bands: Int = 16,
       shingleN: Int = 3,
-      maxBucket: Int = 1000): (DataFrame, () => Unit) = {
+      maxBucket: Int = 1000): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val rows = k / bands
     // defend against accidental double-append in the fingerprint
     // index: duplicate rows for one corpus_id would multiply every
     // joined candidate pair (and its output rows) by the dup count
     val index = index0.dropDuplicates(idCol)
-    val newFp = graft.core.FanOut.cpuBound(newDf)
+    val newFp = Scope.checkpoint(graft.core.FanOut.cpuBound(newDf)
       .select(col(idCol),
         graft.functions.MinHashTextSig(col(textCol), k, shingleN)
           .as("sig"),
         graft.functions.ShingleHashes(col(textCol), shingleN)
           .as("shingles"))
-      .filter(col("sig").isNotNull)
-      .localCheckpoint()
+      .filter(col("sig").isNotNull))
     // an id occupies `bands` buckets → the same pair can surface once
     // per band; distinct() collapses them (the bipartite expansion has
     // no built-in dedup — its other callers are one-bucket-per-id)
@@ -280,7 +280,7 @@ object Dedup {
           lit(0), (acc, v) => acc + v).cast("double") / size(col("siga")))
       .filter(col("__est") >= jaccardThreshold * 0.5) // cheap prefilter
       .select("new_id", "corpus_id")
-    val out = est
+    est
       .join(newFp.select(col(idCol).as("new_id"),
         col("shingles").as("sha")), "new_id")
       .join(index.select(col(idCol).as("corpus_id"),
@@ -292,7 +292,6 @@ object Dedup {
           col("__it")).cast("double"))
       .filter(col("jaccard") >= jaccardThreshold)
       .select("new_id", "corpus_id", "jaccard")
-    (out, () => releaseCheckpoint(newFp))
   }
 
   /** Estimated Jaccard from signatures for candidate pairs (fraction of
@@ -316,17 +315,13 @@ object Dedup {
     * built-in `array_intersect` — per-pair cost linear in the shingle
     * counts, and the joins move only |candidates| rows. Runs ONLY over
     * candidate pairs (J-verify stage of the pipeline); never all-pairs.
-    *
-    * Returns a release handle for the internal shingle checkpoint —
-    * call it once the verify output has been materialized. (Without
-    * the handle the blocks wait for GC or
-    * [[graft.core.SessionHygiene.releaseAll]]; `clearCache` misses them.) */
-  def verifyJaccardReleasable(
+    * The internal shingle checkpoint lives in the current [[Scope]]. */
+  def verifyJaccard(
       cands: DataFrame,
       df: DataFrame,
       textCol: String,
       idCol: String,
-      shingleN: Int = 3): (DataFrame, () => Unit) = {
+      shingleN: Int = 3): DataFrame = {
     // Shingle ONLY docs that appear in some candidate pair (semi-join
     // pushdown), and only ONCE: without the checkpoint, each side of
     // the pair join recomputes the full shingle table — shingling is
@@ -339,13 +334,12 @@ object Dedup {
     // are long equality instead of string compares.
     val ids = cands.select(col("ida").as(idCol))
       .union(cands.select(col("idb").as(idCol))).distinct()
-    val sh = df.join(ids, Seq(idCol), "left_semi")
+    val sh = Scope.checkpoint(df.join(ids, Seq(idCol), "left_semi")
       .select(col(idCol),
-        graft.functions.ShingleHashes(col(textCol), shingleN).as("shs"))
-      .localCheckpoint()
+        graft.functions.ShingleHashes(col(textCol), shingleN).as("shs")))
     val sa = sh.select(col(idCol).as("ida"), col("shs").as("sha"))
     val sb = sh.select(col(idCol).as("idb"), col("shs").as("shb"))
-    val out = cands.join(sa, "ida").join(sb, "idb")
+    cands.join(sa, "ida").join(sb, "idb")
       .withColumn("inter",
         size(array_intersect(col("sha"), col("shb"))).cast("long"))
       .withColumn("na", size(col("sha")).cast("long"))
@@ -354,7 +348,6 @@ object Dedup {
         col("inter").cast("double") /
           (col("na") + col("nb") - col("inter")))
       .select("ida", "idb", "jaccard")
-    (out, () => releaseCheckpoint(sh))
   }
 
   /** Containment verification for candidate pairs: |A∩B| / |A| and
@@ -362,26 +355,25 @@ object Dedup {
     * detector (a doc QUOTING another scores near 1.0 on the smaller
     * side while symmetric Jaccard stays low). Same candidate-only
     * cost model and fused shingle-hash machinery as
-    * [[verifyJaccardReleasable]], and the same release handle for the
-    * internal shingle checkpoint. The materialization matters here
+    * [[verifyJaccard]], and the same scoped shingle checkpoint. The
+    * materialization matters here
     * exactly as there: without it, ShingleHashes recomputes for BOTH
     * join branches, doubling the dominant cost of the verify stage
     * (ADVICE r05). */
-  def verifyContainmentReleasable(
+  def verifyContainment(
       cands: DataFrame,
       df: DataFrame,
       textCol: String,
       idCol: String,
-      shingleN: Int = 3): (DataFrame, () => Unit) = {
+      shingleN: Int = 3): DataFrame = {
     val ids = cands.select(col("ida").as(idCol))
       .union(cands.select(col("idb").as(idCol))).distinct()
-    val sh = df.join(ids, Seq(idCol), "left_semi")
+    val sh = Scope.checkpoint(df.join(ids, Seq(idCol), "left_semi")
       .select(col(idCol),
-        graft.functions.ShingleHashes(col(textCol), shingleN).as("shs"))
-      .localCheckpoint()
+        graft.functions.ShingleHashes(col(textCol), shingleN).as("shs")))
     val sa = sh.select(col(idCol).as("ida"), col("shs").as("sha"))
     val sb = sh.select(col(idCol).as("idb"), col("shs").as("shb"))
-    val out = cands.join(sa, "ida").join(sb, "idb")
+    cands.join(sa, "ida").join(sb, "idb")
       .withColumn("inter",
         size(array_intersect(col("sha"), col("shb"))).cast("long"))
       .withColumn("na", size(col("sha")).cast("long"))
@@ -391,7 +383,6 @@ object Dedup {
         (col("inter").cast("double") / col("nb")).as("containment_b"),
         (col("inter").cast("double") /
           (col("na") + col("nb") - col("inter"))).as("jaccard"))
-    (out, () => releaseCheckpoint(sh))
   }
 
   // -------------------------------------------------------------- simhash
@@ -517,7 +508,13 @@ object Dedup {
   def nearDupComponents(
       pairs: DataFrame,
       maxIters: Int = 64,
-      driverEdgeLimit: Long = 5000000L): DataFrame = {
+      driverEdgeLimit: Long = 5000000L): DataFrame =
+    components(pairs, maxIters, driverEdgeLimit)._1
+
+  /** [[nearDupComponents]], and whether the distributed fallback built
+    * them (then they are a persisted frame of the current [[Scope]]). */
+  private def components(pairs: DataFrame, maxIters: Int,
+      driverEdgeLimit: Long): (DataFrame, Boolean) = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val spark = pairs.sparkSession
     val ca = pairs.columns(0)
@@ -526,19 +523,15 @@ object Dedup {
     val integralId =
       idType == LongType || idType == IntegerType ||
         idType == ShortType || idType == ByteType
-    // Persist the caller's frame itself, not a rename-only projection of
-    // it: a pure-alias Project canonicalizes to the same plan, so
-    // persisting/unpersisting the projection would silently evict any
-    // cache the caller holds on `pairs` (and force a full recompute of
-    // the verify pipeline on every reuse).
-    val alreadyCached = pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    if (!alreadyCached) pairs.persist()
+    // Persist the caller's frame itself; a cache the caller already
+    // holds on it is not the scope's, so releasing it keeps the caller's
+    Scope.persist(pairs)
     val nEdges = pairs.count()
     if (integralId && nEdges <= driverEdgeLimit) {
       val collected = pairs.collect().map(r =>
         (r.get(0).asInstanceOf[Number].longValue,
           r.get(1).asInstanceOf[Number].longValue))
-      if (!alreadyCached) pairs.unpersist()
+      Scope.release(pairs)
       // union-find, path-halving; union attaches the larger root under the
       // smaller, so every root is the min id of its component by induction
       val parent = new java.util.HashMap[Long, Long]()
@@ -570,18 +563,17 @@ object Dedup {
       val nParts = math.max(1,
         math.min(spark.sparkContext.defaultParallelism,
           resolved.length / 100000 + 1))
-      spark.sparkContext.parallelize(resolved.toIndexedSeq, nParts)
+      (spark.sparkContext.parallelize(resolved.toIndexedSeq, nParts)
         .toDF("id", "component")
         .select(col("id").cast(idType).as("id"),
-          col("component").cast(idType).as("component"))
+          col("component").cast(idType).as("component")), false)
     } else {
       // distributed fallback: alternating star contraction — returns a
-      // CACHED frame (not a projection of one) so downstream
-      // release-after-materialize logic (nearDupSurvivors) sees the
-      // storage level and can release it
+      // scope-owned persisted frame, which nearDupSurvivors releases
+      // once its drop list is materialized
       val (labels, _) = starContractComponents(pairs, maxIters)
-      if (!alreadyCached) pairs.unpersist()
-      labels
+      Scope.release(pairs)
+      (labels, true)
     }
   }
 
@@ -622,7 +614,7 @@ object Dedup {
     *
     * Returns `(labels, rounds)`: `labels` = `(id, component)` with one
     * row per distinct id in `pairs` (self-paired ids label themselves),
-    * PERSISTED and materialized — the caller releases it; `rounds` is
+    * PERSISTED in the current [[Scope]] and materialized; `rounds` is
     * the contraction-round count, exposed so ScaleStress can assert the
     * ~log(n) shape on deliberately chain-shaped pair graphs.
     */
@@ -633,8 +625,8 @@ object Dedup {
     val cb = pairs.columns(1)
     // the label frame's row set: every id in the input, including ids
     // that only appear self-paired (those never enter the edge state)
-    val ids = pairs.select(col(ca).as("id"))
-      .union(pairs.select(col(cb).as("id"))).distinct().persist()
+    val ids = Scope.persist(pairs.select(col(ca).as("id"))
+      .union(pairs.select(col(cb).as("id"))).distinct())
     ids.count()
 
     // star-forest test (scaladoc conditions (i) and (ii)) — one action,
@@ -646,12 +638,11 @@ object Dedup {
           .join(ee.select("u"), Seq("u"), "left_semi"))
         .isEmpty
 
-    var ee = pairs
+    var ee = Scope.persist(pairs
       .select(greatest(col(ca), col(cb)).as("u"),
         least(col(ca), col(cb)).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .persist()
+      .distinct())
     ee.count()
     var rounds = 0
     var converged = isStarForest(ee)
@@ -669,15 +660,14 @@ object Dedup {
       // small-star on the large-star output (already oriented u > v, so
       // Γ(u) here is exactly the smaller neighborhood and m < u)
       val minsS = large.groupBy("u").agg(min("v").as("m"))
-      val next = large.join(minsS, Seq("u"))
+      val next = Scope.persist(large.join(minsS, Seq("u"))
         .filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(minsS.select(col("u"), col("m").as("v")))
-        .distinct()
-        .persist()
+        .distinct())
       next.count() // materialize before releasing the previous state
       converged = isStarForest(next)
-      ee.unpersist()
+      Scope.release(ee)
       // Lineage truncation every 3 rounds: one round references `ee`
       // five times (bidirectional union, two min-joins, the small-star
       // union), so the ANALYZED plan grows ~5× per round — exponential.
@@ -686,30 +676,29 @@ object Dedup {
       // explainString). 5³ subtree copies per segment is harmless. Same
       // localCheckpoint pattern as Graph.pageRank (Graph.scala:83).
       ee = if (!converged && (rounds + 1) % 3 == 0) {
-        val cp = next.localCheckpoint() // eager — reads the warm cache
-        next.unpersist()
+        val cp = Scope.checkpoint(next) // eager — reads the warm cache
+        Scope.release(next)
         cp
       } else next
       rounds += 1
     }
     if (!converged) {
-      ee.unpersist()
-      ids.unpersist()
+      Scope.release(ee)
+      Scope.release(ids)
       // fail loudly: a partially contracted forest would silently keep
       // duplicate "survivors". 64 rounds covers any graph a real corpus
       // can produce (the round count is logarithmic in component size).
       throw new IllegalStateException(
         s"star contraction did not converge in $maxRounds rounds")
     }
-    val labels = ids
+    val labels = Scope.persist(ids
       .join(ee.select(col("u").as("id"), col("v").as("component")),
         Seq("id"), "left")
       .select(col("id"),
-        coalesce(col("component"), col("id")).as("component"))
-      .persist()
+        coalesce(col("component"), col("id")).as("component")))
     labels.count()
-    ee.unpersist()
-    ids.unpersist()
+    Scope.release(ee)
+    Scope.release(ids)
     (labels, rounds)
   }
 
@@ -719,19 +708,18 @@ object Dedup {
       df: DataFrame,
       idCol: String,
       pairs: DataFrame): DataFrame = {
-    val comps = nearDupComponents(pairs)
+    val (comps, distributed) = components(pairs, 64, 5000000L)
     val drop0 = comps
       .filter(col("id") =!= col("component"))
       .select(col("id").as(idCol))
     // distributed CC returns a cached frame: materialize the (smaller)
     // drop list so the component frontier can be released; the union-find
     // fast path returns a driver-local relation — no extra job needed
-    val cached = comps.storageLevel.useMemory || comps.storageLevel.useDisk
     val drop =
-      if (cached) {
-        val d = drop0.persist()
+      if (distributed) {
+        val d = Scope.persist(drop0)
         d.count()
-        comps.unpersist()
+        Scope.release(comps)
         d
       } else drop0
     df.join(drop, Seq(idCol), "left_anti")
@@ -755,26 +743,24 @@ object Dedup {
     * would have PRUNED the oversized buckets and kept every copy;
     * collapsing first is strictly more complete dedup in that regime.
     *
-    * Checkpoint lifecycle: every stage is an eager `localCheckpoint`,
-    * not a persist (SCALE.md, "Near-dup materialization"); all but
-    * `reps` are released before returning. The returned plan reads
-    * `reps`, freed by the returned release handle — call it once the
-    * survivor output has been materialized; the output cannot
-    * recompute afterwards. Without the handle the blocks free on GC or
-    * `SessionHygiene.releaseAll` — not on `clearCache` — so a
-    * long-lived session that skips it accumulates checkpoint blocks
-    * (VERDICT r05 §4). */
-  def dedupNearMinhashReleasable(
+    * Checkpoint lifecycle: every stage is an eager checkpoint in the
+    * current [[Scope]], not a persist (SCALE.md, "Near-dup
+    * materialization"); all but `reps` are released before returning.
+    * The returned plan reads `reps`, which the scope frees at `close` —
+    * after the survivor output has been materialized; the output cannot
+    * recompute afterwards. */
+  def dedupNearMinhash(
       df: DataFrame,
       textCol: String,
       idCol: String,
       jaccardThreshold: Double = 0.8,
       k: Int = 64,
       bands: Int = 16,
-      shingleN: Int = 3): (DataFrame, () => Unit) = {
-    val reps = exactDedup(df, textCol, idCol).localCheckpoint()
-    val sigs = minhashSignatures(reps, textCol, idCol, k, shingleN)
-      .localCheckpoint() // once for the banding + estimation branches
+      shingleN: Int = 3): DataFrame = {
+    val reps = Scope.checkpoint(exactDedup(df, textCol, idCol))
+    // once for the banding + estimation branches
+    val sigs = Scope.checkpoint(
+      minhashSignatures(reps, textCol, idCol, k, shingleN))
     val cands = lshCandidates(sigs, idCol, bands, k / bands)
     // r17 (guide §5 persist discipline): the estimate-filtered pair
     // table feeds TWO consumers inside the verify stage (the
@@ -782,23 +768,32 @@ object Dedup {
     // join itself) — without the checkpoint the banding + pair expansion
     // + both estimate joins re-executed for each (the r16 shape ran
     // the whole candidate stage twice per query). Pair-table-sized.
-    val est = estimateJaccard(cands, sigs, idCol)
+    val est = Scope.checkpoint(estimateJaccard(cands, sigs, idCol)
       .filter(col("est_jaccard") >= jaccardThreshold * 0.5) // cheap prefilter
-      .select("ida", "idb")
-      .localCheckpoint()
-    val (verifiedAll, releaseShingles) =
-      verifyJaccardReleasable(est, reps, textCol, idCol, shingleN)
-    val verified = verifiedAll
+      .select("ida", "idb"))
+    // the shingle checkpoint gets its own scope, closed once `verified`
+    // is materialized (so the upstream stages can go)
+    val (verifiedAll, shingles) =
+      Scope.run(verifyJaccard(est, reps, textCol, idCol, shingleN))
+    val verified = Scope.checkpoint(verifiedAll
       .filter(col("jaccard") >= jaccardThreshold)
-      .select("ida", "idb")
-      .localCheckpoint() // materialized, so the upstream stages can go
-    releaseShingles()
-    Seq(est, sigs).foreach(releaseCheckpoint)
+      .select("ida", "idb"))
+    shingles.close()
+    Seq(est, sigs).foreach(Scope.release)
     val out = nearDupSurvivors(reps, idCol, verified)
     // survivors has materialized the drop list (components collect /
     // persisted drop) by the time it returns — the pair set can go too
-    releaseCheckpoint(verified)
-    (out, () => releaseCheckpoint(reps))
+    Scope.release(verified)
+    out
+  }
+
+  /** [[dedupNearMinhash]] in its own scope; the handle closes it. */
+  def dedupNearMinhashReleasable(
+      df: DataFrame,
+      textCol: String,
+      idCol: String): (DataFrame, () => Unit) = {
+    val (o, s) = Scope.run(dedupNearMinhash(df, textCol, idCol))
+    (o, () => s.close())
   }
 
   /** End-to-end SimHash near-dup dedup: signatures → banded hamming
@@ -806,24 +801,22 @@ object Dedup {
     * minhash pipeline (min id per component); exact copies hash
     * identically (hamming 0) so no separate exact pass is needed —
     * but they are collapsed first anyway for the same quadratic-bucket
-    * reason as [[dedupNearMinhashReleasable]]. Returns a release handle
-    * for the representatives checkpoint the returned plan reads — same
-    * contract as [[dedupNearMinhashReleasable]]. The signature table
+    * reason as [[dedupNearMinhash]], whose scoped representatives
+    * checkpoint it shares. The signature table
     * itself needs NO cache since the grouped [[simhashCandidates]]
     * reads it exactly once (the old banded self-join read it twice). */
-  def dedupNearSimhashReleasable(
+  def dedupNearSimhash(
       df: DataFrame,
       textCol: String,
       idCol: String,
-      maxHamming: Int = 3): (DataFrame, () => Unit) = {
-    val reps = exactDedup(df, textCol, idCol).localCheckpoint()
+      maxHamming: Int = 3): DataFrame = {
+    val reps = Scope.checkpoint(exactDedup(df, textCol, idCol))
     val pairs = simhashCandidates(simhash(reps, textCol, idCol),
         idCol, maxHamming)
       .select("ida", "idb")
     // survivors materializes the drop list (components collect /
     // persisted drop) before returning
-    val out = nearDupSurvivors(reps, idCol, pairs)
-    (out, () => releaseCheckpoint(reps))
+    nearDupSurvivors(reps, idCol, pairs)
   }
 
   // ------------------------------------------------------ decontamination

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 
 /** Corpus-version drift monitoring — the data-ops QA step between two
   * snapshots of a training corpus (yesterday's crawl vs today's, or
@@ -43,11 +44,10 @@ object Drift {
       textCol: String,
       k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    def counts(df: DataFrame, as: String) = df
+    def counts(df: DataFrame, as: String) = Scope.checkpoint(df
       .select(explode(TextAnalysis.tokens(col(textCol))).as("token"))
       .filter(col("token") =!= "")
-      .groupBy("token").agg(count(lit(1)).as(as))
-      .localCheckpoint()
+      .groupBy("token").agg(count(lit(1)).as(as)))
     val ca = counts(dfA, "count_a")
     val cb = counts(dfB, "count_b")
     val totA = ca.agg(coalesce(sum("count_a"), lit(0L))).head().getLong(0)

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 
 /** N-gram language-model quality scoring — the CCNet/KenLM-style
   * perplexity filter every web-scale pretraining pipeline runs: train
@@ -53,8 +54,8 @@ object LanguageModel {
     * lineage). */
   private def tokTable(df: DataFrame, textCol: String, idCol: String)
       : DataFrame =
-    df.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__toks"))
-      .localCheckpoint()
+    Scope.checkpoint(
+      df.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__toks")))
 
   /** Bigram stream from a token-array table ([[tokTable]] shape). */
   private def bigramsFromToks(toks: DataFrame, idCol: String): DataFrame =
@@ -359,7 +360,7 @@ object LanguageModel {
     * n_bigrams` (avg micro-nats per bigram — monotone in perplexity,
     * no float), and the tertile cutoffs come from a distributed
     * prefix-sum cumsum over the DISTINCT-SCORE table
-    * ([[graft.stats.GlobalOrder.exclusivePrefixReleasable]] — r17: continuous
+    * ([[graft.stats.GlobalOrder.exclusivePrefix]] — r17: continuous
     * scores make distinct count ≈ doc count, so the former
     * single-partition window was the corpus through one task) —
     * `c1 = min score with 3·cum ≥ n`, `c2 = min score with
@@ -392,10 +393,9 @@ object LanguageModel {
     // range partitioner's sampling pass — materialize it once (r17,
     // guide §5: it is doc-count-sized — id, group, two longs — and
     // every consumer otherwise re-executes the whole scoring chain)
-    val scores = withG.select(
+    val scores = Scope.checkpoint(withG.select(
       (col(idCol) +: gs.map(col)) :+ col("n_bigrams") :+
-        expr("(-__slp) div n_bigrams").as("score_micro"): _*)
-      .localCheckpoint()
+        expr("(-__slp) div n_bigrams").as("score_micro"): _*))
     // DISTINCT-(group, score) table, cumulated by the distributed
     // prefix-sum decomposition (r17, guide §2 — the former
     // Window.partitionBy(groups).orderBy(score) funnelled the whole
@@ -411,7 +411,7 @@ object LanguageModel {
     val dist = scores
       .groupBy(gs.map(col) :+ col("score_micro"): _*)
       .agg(count(lit(1)).as("__c"))
-    val (pref, _, _) = graft.stats.GlobalOrder.exclusivePrefixReleasable(
+    val (pref, _) = graft.stats.GlobalOrder.exclusivePrefix(
       dist, gs.map(col) :+ col("score_micro"), col("__c"), "__excl",
       // no precheckpoint: dist is ONE cheap aggregate over the
       // checkpointed scores table — running it twice (sampling +
@@ -480,11 +480,10 @@ object LanguageModel {
     require(keepBuckets.nonEmpty, "keepBuckets must not be empty")
     // the paragraph table feeds the whole scoring chain AND the
     // reassembly join — materialize the split once (r17, guide §5)
-    val paras = df.select(col(idCol),
+    val paras = Scope.checkpoint(df.select(col(idCol),
         posexplode(split(col(textCol), "\n")).as(Seq("__ppos", "__ptext")))
       .withColumn("__pkey", concat(col(idCol).cast("string"),
-        lit("_"), col("__ppos").cast("string")))
-      .localCheckpoint()
+        lit("_"), col("__ppos").cast("string"))))
     val buckets = perplexityBuckets(
       paras, "__ptext", "__pkey", broadcastModel)
     val scored = paras.join(

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * corpus through a single task.
   *
   * Scale shape: the shared
-  * [[graft.stats.GlobalOrder.exclusivePrefixReleasable]] decomposition
+  * [[graft.stats.GlobalOrder.exclusivePrefix]] decomposition
   * — range-partition by `idCol`, P-row partials to the driver,
   * broadcast offsets, partition-local running sum; only the narrow
   * (id, n_tokens) count table ever shuffles.
@@ -29,12 +29,11 @@ object Packing {
     * the whitespace heuristic ([[TextAnalysis.tokenCount]]); pass
     * [[Bpe.count]] to pack on REAL subword counts.
     *
-    * RUNNER CONTRACT: persists the range-partitioned count table the
-    * returned plan reads (two passes: partial sums + final) and returns
-    * it with its release handle — call the handle once the packing
-    * table has been materialized (ADVICE r06; the
-    * [[graft.stats.GlobalOrder.exclusivePrefixReleasable]] contract). */
-  def packSequencesReleasable(
+    * Materializes the range-partitioned count table the returned plan
+    * reads (two passes: partial sums + final) in the current
+    * [[graft.core.Scope]] (the [[graft.stats.GlobalOrder.exclusivePrefix]]
+    * discipline). */
+  def packSequences(
       df: DataFrame,
       textCol: String,
       idCol: String,
@@ -42,18 +41,29 @@ object Packing {
       numParts: Int = 0,
       tokenCounter: org.apache.spark.sql.Column =>
         org.apache.spark.sql.Column = TextAnalysis.tokenCount)
-      : (DataFrame, () => Unit) = {
+      : DataFrame = {
     require(ctxLen > 0, "ctxLen must be positive")
     val counts = df.select(col(idCol),
       tokenCounter(col(textCol)).as("n_tokens"))
-    val (packed, _, release) =
-      graft.stats.GlobalOrder.exclusivePrefixReleasable(
+    val (packed, _) =
+      graft.stats.GlobalOrder.exclusivePrefix(
         counts, Seq(col(idCol)), col("n_tokens"), "token_offset", numParts)
-    (packed
+    packed
       .withColumn("seq_id", expr(s"token_offset div $ctxLen"))
       .withColumn("n_seqs_spanned",
         expr(s"(token_offset + n_tokens - 1) div $ctxLen") -
-          col("seq_id") + lit(1L)), release)
+          col("seq_id") + lit(1L))
+  }
+
+  /** [[packSequences]] in its own scope; the handle closes it. */
+  def packSequencesReleasable(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      ctxLen: Int): (DataFrame, () => Unit) = {
+    val (o, s) =
+      graft.core.Scope.run(packSequences(df, textCol, idCol, ctxLen))
+    (o, () => s.close())
   }
 
   /** MATERIALIZE the packed training sequences (r09): every document's
@@ -61,11 +71,11 @@ object Packing {
     * `idCol` order and cut every `ctxLen` ids — one row per training
     * sequence `(seq_id, n_tokens, token_ids)`, the final partial
     * sequence allowed short. The last pipeline mile:
-    * [[packSequencesReleasable]] is the ASSIGNMENT view (which docs
+    * [[packSequences]] is the ASSIGNMENT view (which docs
     * land where); this emits the sequences a trainer actually reads.
     *
     * Scale shape: the same
-    * [[graft.stats.GlobalOrder.exclusivePrefixReleasable]]
+    * [[graft.stats.GlobalOrder.exclusivePrefix]]
     * decomposition computes each doc's token offset over the NARROW
     * (id, count) table; offsets join back to the id arrays (one hash
     * join keyed on the doc id), and tokens explode with their global
@@ -75,24 +85,21 @@ object Packing {
     * bounded by `ctxLen`, so no skew surface exists; the exploded rows
     * are 3 narrow numerics each.
     *
-    * Returns the prefix cache's release handle with the sequences —
-    * fire it only AFTER the result is materialized (both prefix passes
-    * read the cache; releasing earlier recomputes the range exchange,
-    * whose sampled partitioning the collected partials no longer
-    * describe). Callers that can't control materialization order drop
-    * the handle and leave the cache to the session's per-query
-    * hygiene. */
-  def materializeSequencesReleasable(
+    * The prefix cache lives in the current [[graft.core.Scope]]; close
+    * it only AFTER the result is materialized (both prefix passes read
+    * the cache; freeing it earlier recomputes the range exchange, whose
+    * sampled partitioning the collected partials no longer describe). */
+  def materializeSequences(
       df: DataFrame,
       idsCol: String,
       idCol: String,
       ctxLen: Int,
-      numParts: Int = 0): (DataFrame, () => Unit) = {
+      numParts: Int = 0): DataFrame = {
     require(ctxLen > 0, "ctxLen must be positive")
     val counts = df.select(col(idCol),
       coalesce(size(col(idsCol)), lit(0)).cast("long").as("n_tokens"))
-    val (packed, _, release) =
-      graft.stats.GlobalOrder.exclusivePrefixReleasable(
+    val (packed, _) =
+      graft.stats.GlobalOrder.exclusivePrefix(
         counts, Seq(col(idCol)), col("n_tokens"), "token_offset", numParts)
     val toks = df.select(col(idCol), col(idsCol).as("__ids"))
       .join(packed.select(col(idCol), col("token_offset")), Seq(idCol))
@@ -100,14 +107,14 @@ object Packing {
         col("token_offset"))
       .select(col("__tid"),
         (col("token_offset") + col("__p")).as("__gpos"))
-    (toks
+    toks
       .groupBy(expr(s"__gpos div $ctxLen").as("seq_id"))
       .agg(sort_array(collect_list(struct(
         pmod(col("__gpos"), lit(ctxLen.toLong)).as("p"),
         col("__tid").as("t")))).as("pt"))
       .select(col("seq_id"),
         size(col("pt")).cast("long").as("n_tokens"),
-        expr("transform(pt, x -> x.t)").as("token_ids")), release)
+        expr("transform(pt, x -> x.t)").as("token_ids"))
   }
 
   /** No-split BIN packing, decreasing order (r13, VERDICT r12 task 6)
@@ -135,7 +142,7 @@ object Packing {
     * arithmetic full-bin run), and one broadcast join of the corpus
     * counts against the segment table. Copy indices (the per-length
     * rank by id) come from the shared
-    * [[graft.stats.GlobalOrder.exclusivePrefixReleasable]] decomposition under
+    * [[graft.stats.GlobalOrder.exclusivePrefix]] decomposition under
     * the (n_tokens, id) total order minus each class's exclusive start
     * count — a closed form of the histogram already on the driver —
     * NOT a `Window.partitionBy(length)` (VERDICT r13: a window
@@ -146,9 +153,9 @@ object Packing {
     * partitions). No corpus-sized shuffle, no single-partition window,
     * no driver state beyond the histogram.
     *
-    * RUNNER CONTRACT: persists the prefix decomposition's
-    * range-partitioned count table (the [[packSequencesReleasable]]
-    * discipline); released by the session's per-query cache hygiene. */
+    * Materializes the prefix decomposition's range-partitioned count
+    * table in the current [[graft.core.Scope]] (the [[packSequences]]
+    * discipline). */
   def packBinsDecreasing(
       df: DataFrame,
       textCol: String,
@@ -207,7 +214,7 @@ object Packing {
         (n, lo, hi, b0, per, off0, startByLen(n))
       }
       .toDF("__n", "__lo", "__hi", "__bin0", "__per", "__off0", "__start")
-    val (ranked, _, _) = graft.stats.GlobalOrder.exclusivePrefixReleasable(
+    val (ranked, _) = graft.stats.GlobalOrder.exclusivePrefix(
       counts, Seq(col("n_tokens"), col(idCol)), lit(1L), "__grank")
     ranked
       .join(broadcast(segDf), col("n_tokens") === col("__n") &&
@@ -231,7 +238,7 @@ object Packing {
         sum("n_tokens").as("n_tokens_starting"))
 
   /** Length-bucketed curriculum batching (r15) — the THIRD packing
-    * regime next to head-to-tail splitting ([[packSequencesReleasable]]) and
+    * regime next to head-to-tail splitting ([[packSequences]]) and
     * no-split binning ([[packBinsDecreasing]]): docs group into
     * power-of-two LENGTH BUCKETS (`bucket = ⌊log₂ n_tokens⌋` — batches
     * of similar lengths waste ≤ 2× padding by construction), buckets
@@ -255,16 +262,16 @@ object Packing {
     * [[graft.stats.GlobalOrder]] decomposition instead (one narrow
     * range exchange, P-row partials), and the per-bucket offset comes
     * from a bucket-bounded aggregate broadcast back. Returns
-    * (idCol, n_tokens, bucket, bucket_pos, batch_id, slot) plus the
-    * prefix cache's release handle. */
-  def lengthCurriculumBatchesReleasable(
+    * (idCol, n_tokens, bucket, bucket_pos, batch_id, slot); the prefix
+    * cache lives in the current [[graft.core.Scope]]. */
+  def lengthCurriculumBatches(
       df: DataFrame,
       textCol: String,
       idCol: String,
       batchSize: Int,
       tokenCounter: org.apache.spark.sql.Column =>
         org.apache.spark.sql.Column = c => TextAnalysis.tokenCount(c))
-      : (DataFrame, () => Unit) = {
+      : DataFrame = {
     require(batchSize > 0, "batchSize must be positive")
     val narrow = df.select(col(idCol),
         coalesce(tokenCounter(col(textCol)), lit(0L)).as("n_tokens"))
@@ -272,18 +279,17 @@ object Packing {
         (length(bin(greatest(col("n_tokens"), lit(1L)))) - 1).cast("long"))
       .withColumn("__hv",
         graft.functions.Fnv64(col(idCol).cast("string")))
-    val (ranked, _, release) =
-      graft.stats.GlobalOrder.exclusivePrefixReleasable(
+    val (ranked, _) =
+      graft.stats.GlobalOrder.exclusivePrefix(
         narrow, Seq(col("bucket"), col("__hv"), col(idCol)),
         lit(1L), "__gpos")
     val starts = ranked.groupBy("bucket")
       .agg(min("__gpos").as("__bstart"))
-    val out = ranked.join(broadcast(starts), Seq("bucket"))
+    ranked.join(broadcast(starts), Seq("bucket"))
       .withColumn("bucket_pos", col("__gpos") - col("__bstart"))
       .select(col(idCol), col("n_tokens"), col("bucket"),
         col("bucket_pos"),
         expr(s"bucket_pos div $batchSize").as("batch_id"),
         pmod(col("bucket_pos"), lit(batchSize.toLong)).as("slot"))
-    (out, release)
   }
 }

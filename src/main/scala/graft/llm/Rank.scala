@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 import org.apache.spark.sql.Column
 
 /** BM25 relevance scoring of a corpus against a query term set — the
@@ -150,8 +151,8 @@ object Rank {
     val avgdl = sumdl.toDouble / n
     val qt = queries.select(col(queryIdCol).as("query_id"),
       posexplode(col(termsCol)).as(Seq("qpos", "term")))
-    val hits = post.join(broadcast(qt.select("term").distinct()),
-      Seq("term")).localCheckpoint()
+    val hits = Scope.checkpoint(post.join(
+      broadcast(qt.select("term").distinct()), Seq("term")))
     val dfreq = hits.groupBy("term")
       .agg(count(lit(1)).as("dfreq"))
     val tf = col("tf").cast("double")
@@ -227,12 +228,11 @@ object Rank {
     // candidate pairs: bounded by queries × Σ per-list k — small; the
     // checkpoint keeps the top-k and the audit join-back from running
     // the upstream retrieval twice
-    val cands = prepared.reduce(_.unionByName(_))
+    val cands = Scope.checkpoint(prepared.reduce(_.unionByName(_))
       .select(col("query_id"), col("doc_id"),
         expr(s"$RrfScale div ($k0 + rank + 1)").as("__c"))
       .groupBy("query_id", "doc_id")
-      .agg(sum("__c").as("rrf_score"), count(lit(1)).as("n_lists"))
-      .localCheckpoint()
+      .agg(sum("__c").as("rrf_score"), count(lit(1)).as("n_lists")))
     // rrf_score < 2^53 by construction, so the double round trip
     // through the k-bounded aggregate is exact; the emitted score
     // still comes from the integer column via the join-back

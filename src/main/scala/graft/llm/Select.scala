@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Like sequence packing this is a GLOBAL ORDERED PREFIX SUM, so it
   * reuses the shared decomposition
-  * ([[graft.stats.GlobalOrder.exclusivePrefixReleasable]]): range-partition by
+  * ([[graft.stats.GlobalOrder.exclusivePrefix]]): range-partition by
   * (priority desc, id), per-partition token totals (a P-row aggregate
   * — the only data that reaches the driver), broadcast exclusive
   * offsets, partition-local running sum. Two budget-specific shapes
@@ -47,12 +47,11 @@ object Select {
     * `tokenCounter` defaults to the whitespace heuristic; pass
     * [[Bpe.count]] to budget on REAL subword counts.
     *
-    * RUNNER CONTRACT: persists the range-partitioned narrow count
-    * table the returned plan reads (two passes: partials + final) and
-    * returns it with its release handle — call the handle once the
-    * selection has been materialized (ADVICE r06; the
-    * [[graft.stats.GlobalOrder.exclusivePrefixReleasable]] contract). */
-  def takeTokenBudgetReleasable(
+    * Materializes the range-partitioned narrow count table the returned
+    * plan reads (two passes: partials + final) in the current
+    * [[graft.core.Scope]] (the [[graft.stats.GlobalOrder.exclusivePrefix]]
+    * discipline). */
+  def takeTokenBudget(
       df: DataFrame,
       textCol: String,
       idCol: String,
@@ -60,23 +59,23 @@ object Select {
       budget: Long,
       numParts: Int = 0,
       tokenCounter: Column => Column = TextAnalysis.tokenCount)
-      : (DataFrame, () => Unit) = {
+      : DataFrame = {
     require(budget > 0, "budget must be positive")
     // narrow FIRST: this projection is all that shuffles and caches
     val counts = df.select(col(idCol), priority.as("__prio"),
       coalesce(tokenCounter(col(textCol)), lit(0L))
         .as("n_tokens"))
-    val (ranked, _, release) =
-      graft.stats.GlobalOrder.exclusivePrefixReleasable(
+    val (ranked, _) =
+      graft.stats.GlobalOrder.exclusivePrefix(
         counts, Seq(col("__prio").desc_nulls_last, col(idCol)),
         col("n_tokens"), "tokens_before", numParts,
         maxPrefix = Some(budget))
-    (ranked
+    ranked
       .filter(col("tokens_before") < budget)
-      .drop("__prio"), release)
+      .drop("__prio")
   }
 
-  /** Full document rows for a [[takeTokenBudgetReleasable]] selection: inner
+  /** Full document rows for a [[takeTokenBudget]] selection: inner
     * equi-join on `idCol` (AQE broadcasts the selected-id side when it
     * fits, falls back to a hash join when it doesn't — the corpus
     * crosses at most one hash exchange). */

@@ -358,7 +358,7 @@ object Similarity {
     var cents = ivfCentroidsLloyd(df, embCol, idCol, k, iters, roundTo)
     var round = 0
     while (round <= maxRounds) {
-      val assigned = ivfAssign(df, embCol, cents).persist()
+      val assigned = graft.core.Scope.persist(ivfAssign(df, embCol, cents))
       try {
         val sizes = assigned.groupBy("ivf_list")
           .agg(count(lit(1)).as("n")).collect()
@@ -386,7 +386,7 @@ object Similarity {
           ivfCentroidsLloyd(sub, embCol, idCol, subK, iters, roundTo)
         }
         cents = (keep ++ splits).toArray
-      } finally assigned.unpersist()
+      } finally graft.core.Scope.release(assigned)
       round += 1
     }
     cents

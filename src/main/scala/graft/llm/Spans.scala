@@ -51,37 +51,34 @@ object Spans {
     * span (span length = span_end − span_start ∈ [k, k + n_grams − 1]).
     * Documents shorter than k tokens emit nothing.
     *
-    * RUNNER CONTRACT: persists the narrow gram projection (the hot-gram
-    * count and the occurrence join both read it — without the cache the
-    * tokenize+posexplode subtree executes TWICE, doubling the
-    * operator's dominant cost at scale, VERDICT r06 §2) and returns
-    * it with its release handle — call the handle once the span table
-    * has been materialized, or leave the cache to the session's
-    * per-query cache hygiene. */
-  def duplicatedSpansReleasable(
+    * Persists the narrow gram projection in the current
+    * [[graft.core.Scope]]: the hot-gram count and the occurrence join
+    * both read it — without the cache the tokenize+posexplode subtree
+    * executes TWICE, doubling the operator's dominant cost at scale
+    * (VERDICT r06 §2). */
+  def duplicatedSpans(
       df: DataFrame,
       textCol: String,
       idCol: String,
-      k: Int): (DataFrame, () => Unit) = {
+      k: Int): DataFrame = {
     require(k > 0, "window length must be positive")
     // ONE scan of the corpus: the 20-byte (id, start, gram-hash) rows
     // are cached (disk-spilling) across the two consumers below —
     // linear in corpus tokens, the irreducible substring-dedup size
-    val grams = gramTable(df, textCol, Seq(idCol), k)
-      // persist CO-PARTITIONED on the gram hash both consumers cluster
-      // on (the hot-gram count and the occurrence join) — the count's
-      // partial aggregate fully combines (one row per gram crosses its
-      // exchange instead of up to P) and the probe exchange becomes a
-      // 1:1 local fetch (r17, guide §2.1 — the SuffixDedup base/__tok
-      // finding)
-      .repartition(col("__gh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // persist CO-PARTITIONED on the gram hash both consumers cluster
+    // on (the hot-gram count and the occurrence join) — the count's
+    // partial aggregate fully combines (one row per gram crosses its
+    // exchange instead of up to P) and the probe exchange becomes a
+    // 1:1 local fetch (r17, guide §2.1 — the SuffixDedup base/__tok
+    // finding)
+    val grams = graft.core.Scope.persist(
+      gramTable(df, textCol, Seq(idCol), k).repartition(col("__gh")))
     grams.count() // materialize before the two consumers race to fill it
     // one map-side-combined count finds grams occurring ≥2 times
     val hot = grams.groupBy("__gh").agg(count(lit(1)).as("__c"))
       .filter(col("__c") > 1).select("__gh")
     val dup = grams.join(hot, Seq("__gh"))
-    (mergeIslands(dup, idCol, k), () => { grams.unpersist(); () })
+    mergeIslands(dup, idCol, k)
   }
 
   /** Gaps-and-islands merge of duplicated k-window start positions
@@ -131,7 +128,7 @@ object Spans {
     * in `benchmark` — SPAN-LEVEL decontamination (the surgical variant
     * of [[Dedup.contamination]]'s doc-level flag): a long document
     * quoting a benchmark passage loses the passage, not the document.
-    * Output shape = [[duplicatedSpansReleasable]] ((idCol, span_start,
+    * Output shape = [[duplicatedSpans]] ((idCol, span_start,
     * span_end, n_grams)).
     *
     * Scale shape: the benchmark gram-hash set is DISTINCT'd and
@@ -156,7 +153,7 @@ object Spans {
 
   /** The decontamination ACTION: rewrite `textCol` with every
     * benchmark-contaminated span cut out (the
-    * [[removeDuplicatedSpansReleasable]] contract — span-free docs keep
+    * [[removeDuplicatedSpans]] contract — span-free docs keep
     * their text byte-for-byte, fully contaminated docs become the empty
     * string for downstream length gates to judge). */
   def removeContaminatedSpans(
@@ -180,19 +177,28 @@ object Spans {
     * the join back is one hash exchange of the corpus against a much
     * smaller side (AQE broadcasts it when it fits); the token cut is a
     * map-only higher-order filter — no explode, no per-token rows.
-    * Returns the gram cache's release handle with the rewritten frame
-    * (the [[duplicatedSpansReleasable]] RUNNER CONTRACT). */
+    * The gram cache lives in the current [[graft.core.Scope]] (the
+    * [[duplicatedSpans]] discipline). */
+  def removeDuplicatedSpans(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      k: Int): DataFrame =
+    // the rewrite is the graft.functions.CutSpans kernel: one
+    // byte-level pass with a sorted-interval sweep, replacing the
+    // composed filter/exists form whose O(|spans|)-per-token cost
+    // dominated the 64× stress curve (SCALE.md r07)
+    cutSpansRewrite(df, duplicatedSpans(df, textCol, idCol, k),
+      textCol, idCol)
+
+  /** [[removeDuplicatedSpans]] in its own scope; the handle closes it. */
   def removeDuplicatedSpansReleasable(
       df: DataFrame,
       textCol: String,
       idCol: String,
       k: Int): (DataFrame, () => Unit) = {
-    val (spanTable, release) =
-      duplicatedSpansReleasable(df, textCol, idCol, k)
-    // the rewrite is the graft.functions.CutSpans kernel: one
-    // byte-level pass with a sorted-interval sweep, replacing the
-    // composed filter/exists form whose O(|spans|)-per-token cost
-    // dominated the 64× stress curve (SCALE.md r07)
-    (cutSpansRewrite(df, spanTable, textCol, idCol), release)
+    val (o, s) = graft.core.Scope.run(
+      removeDuplicatedSpans(df, textCol, idCol, k))
+    (o, () => s.close())
   }
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 
 /** Suffix-ranking exact-substring dedup (Lee et al. 2021,
   * "Deduplicating Training Data Makes Language Models Better" — the
@@ -13,7 +14,7 @@ import org.apache.spark.sql.functions._
   * canonical copy is [[graft.llm.C4]]'s span rule, a different
   * operator).
   *
-  * Same SEMANTICS as [[Spans.duplicatedSpansReleasable]], different
+  * Same SEMANTICS as [[Spans.duplicatedSpans]], different
   * MECHANISM — and the difference is the point at 100 TB:
   *
   *  - the gram-hash path shuffles 8-byte xxhash64 window keys, an
@@ -133,12 +134,14 @@ object SuffixDedup {
     else struct(id, pos)
 
   /** (idCol, start): every token position opening a duplicated
-    * k-window, via the prefix-doubling ranking above. */
-  def duplicatedWindowStartsReleasable(
+    * k-window, via the prefix-doubling ranking above. Its persists and
+    * checkpoints live in the current [[Scope]]; each round's persist is
+    * released as soon as the next round's is filled. */
+  def duplicatedWindowStarts(
       df: DataFrame,
       textCol: String,
       idCol: String,
-      k: Int): (DataFrame, () => Unit) = {
+      k: Int): DataFrame = {
     require(k > 0, "window length must be positive")
     val toks = split(trim(col(textCol)), "\\s+")
     // docs shorter than k tokens can host no k-window occurrence and
@@ -155,7 +158,7 @@ object SuffixDedup {
     // construction, fixed-width, and orderable, so min() canonicalizes
     // without any global offset (the former GlobalOrder prefix sum
     // cost a sampling pass + a range exchange + an offsets join here)
-    val base = docs
+    val base = Scope.persist(docs
       // generator first, arithmetic on its output in a second select
       .select(col("__id"), col("__n"),
         posexplode(col("__toks")).as(Seq("__pos", "__tok")))
@@ -174,8 +177,7 @@ object SuffixDedup {
       // exchange was near-full-table because classes are mostly
       // distinct early). Skew unchanged: the probe exchange already
       // clustered hot tokens onto one partition.
-      .repartition(col("__tok"))
-      .persist()
+      .repartition(col("__tok")))
     base.count()
     // depth-1 classes: min (doc, pos) among equal tokens (exact string
     // equality — the only round that touches token strings); globally
@@ -190,16 +192,9 @@ object SuffixDedup {
       .join(cls0.hint("shuffle_hash"), Seq("__tok"))
       .select(col("__id"), col("__pos"), col("__g"), col("__valid"),
         col("__cls"))
-    var toRelease: List[DataFrame] = List(base)
-    var checkpoints: List[DataFrame] = Nil
-    def barrier(dfp: DataFrame): DataFrame = {
-      val p = dfp.persist()
-      p.count()
-      // previous rounds' caches are no longer read — release eagerly
-      toRelease.foreach(_.unpersist())
-      toRelease = List(p)
-      p
-    }
+    // the one round cache still read; each round persists its input,
+    // fills it, and frees the previous round's
+    var cached = base
     // doubling rounds to depth h = 2^⌊log₂ k⌋
     val a = (31 - Integer.numberOfLeadingZeros(k))
     val wDoc = Window.partitionBy("__id").orderBy("__pos")
@@ -209,11 +204,14 @@ object SuffixDedup {
       // successor class at pos+h via a per-doc range frame; NULL
       // (doc end, or successor pruned as unique) exits before the
       // aggregate — both provably non-duplicated
-      val paired = barrier(ranks
+      val paired = Scope.persist(ranks
         .withColumn("__cls2",
           max("__cls").over(wDoc.rangeBetween(h, h)))
         .filter(col("__cls2").isNotNull)
         .repartition(col("__cls"), col("__cls2")))
+      paired.count()
+      Scope.release(cached)
+      cached = paired
       val classes = paired.groupBy("__cls", "__cls2")
         .agg(min("__g").as("__ncls"), count(lit(1)).as("__nc"))
         .filter(col("__nc") > 1) // singleton class = unique window
@@ -225,11 +223,8 @@ object SuffixDedup {
       // one round's chain re-enters the analyzer each subsequent round
       // — truncate lineage before the analyzed plan compounds (the
       // starContract lesson); the next round's persist reads the
-      // checkpoint, so only the final handle may free it
-      if (j % 3 == 0 && j < a) {
-        ranks = ranks.localCheckpoint()
-        checkpoints ::= ranks
-      }
+      // checkpoint, so only the scope's close may free it
+      if (j % 3 == 0 && j < a) ranks = Scope.checkpoint(ranks)
       j += 1
     }
     // k-window key = (leading h-class, trailing h-class); the trailing
@@ -238,49 +233,42 @@ object SuffixDedup {
     // whose trailing position was pruned holds a unique sub-window —
     // dropped, as at the former inner join.
     val h2 = 1L << a
-    val keys = barrier(ranks
+    val keys = Scope.persist(ranks
       .withColumn("__cls2",
         max("__cls").over(wDoc.rangeBetween(k - h2, k - h2)))
       .filter(col("__valid") && col("__cls2").isNotNull)
       .select(col("__id"), col("__pos"), col("__cls"), col("__cls2"))
       .repartition(col("__cls"), col("__cls2")))
+    keys.count()
+    Scope.release(cached)
     val hot = keys.groupBy("__cls", "__cls2")
       .agg(count(lit(1)).as("__c"))
       .filter(col("__c") > 1)
       .select("__cls", "__cls2")
-    val out = keys.join(hot.hint("shuffle_hash"), Seq("__cls", "__cls2"))
+    keys.join(hot.hint("shuffle_hash"), Seq("__cls", "__cls2"))
       .select(col("__id").as(idCol), col("__pos").as("start"))
-    val finalCaches = toRelease
-    (out, () => {
-      finalCaches.foreach(_.unpersist())
-      checkpoints.foreach(graft.core.SessionHygiene.releaseCheckpoint)
-    })
   }
 
   /** Maximal duplicated-substring spans ≥ k tokens, (idCol,
-    * span_start, span_end, n_grams) — [[Spans.duplicatedSpansReleasable]]'
+    * span_start, span_end, n_grams) — [[Spans.duplicatedSpans]]'
     * output shape from the exact suffix-ranking mechanism. */
-  def duplicatedSuffixSpansReleasable(
+  def duplicatedSuffixSpans(
       df: DataFrame,
       textCol: String,
       idCol: String,
-      k: Int): (DataFrame, () => Unit) = {
-    val (starts, release) =
-      duplicatedWindowStartsReleasable(df, textCol, idCol, k)
-    (Spans.mergeIslands(starts, idCol, k), release)
-  }
+      k: Int): DataFrame =
+    Spans.mergeIslands(duplicatedWindowStarts(df, textCol, idCol, k),
+      idCol, k)
 
   /** The ExactSubstr ACTION: rewrite `textCol` with every duplicated
-    * span cut out (the [[Spans.removeDuplicatedSpansReleasable]] contract —
+    * span cut out (the [[Spans.removeDuplicatedSpans]] contract —
     * span-free docs keep their bytes, fully-duplicated docs become the
     * empty string for downstream length gates to judge). */
-  def dedupExactSubstringsReleasable(
+  def dedupExactSubstrings(
       df: DataFrame,
       textCol: String,
       idCol: String,
-      k: Int): (DataFrame, () => Unit) = {
-    val (spans, release) =
-      duplicatedSuffixSpansReleasable(df, textCol, idCol, k)
-    (Spans.cutSpansRewrite(df, spans, textCol, idCol), release)
-  }
+      k: Int): DataFrame =
+    Spans.cutSpansRewrite(df, duplicatedSuffixSpans(df, textCol, idCol, k),
+      textCol, idCol)
 }

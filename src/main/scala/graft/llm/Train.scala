@@ -209,7 +209,7 @@ object Train {
     *
     * Scale note (r17, guide §2 — VERDICT r16 §4): the negatives-below
     * cumsum runs through the distributed prefix-sum decomposition
-    * ([[graft.stats.GlobalOrder.exclusivePrefixReleasable]]): for CONTINUOUS
+    * ([[graft.stats.GlobalOrder.exclusivePrefix]]): for CONTINUOUS
     * scores the distinct-score table is row-sized, and the former
     * `Window.orderBy` funnelled it through one task ("Moving all data
     * to a single partition"). Range-partitioned partials + a
@@ -224,7 +224,7 @@ object Train {
     // exclusive prefix of __n under the __s order ≡ the former
     // "negatives strictly below this score" window (keys unique after
     // the groupBy, so the order is total)
-    val (withCum, _, _) = graft.stats.GlobalOrder.exclusivePrefixReleasable(
+    val (withCum, _) = graft.stats.GlobalOrder.exclusivePrefix(
       g, Seq(col("__s")), col("__n"), "__cumn")
     withCum
       .agg(

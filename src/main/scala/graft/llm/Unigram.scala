@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 
 import graft.functions.{UnigramDecode, UnigramEncode, UnigramKernel, UnigramSegment, UnigramVocab}
 
@@ -56,12 +57,11 @@ object Unigram {
       minCount: Long = 2L): UnigramVocab = {
     require(seedSize > 0 && vocabSize > 0 && rounds >= 1,
       "seedSize, vocabSize, rounds must be positive")
-    val wc = df.filter(col(textCol).isNotNull)
+    val wc = Scope.checkpoint(df.filter(col(textCol).isNotNull)
       .select(explode(TextAnalysis.tokens(col(textCol))).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt")))
     // seed: all code-point substrings, weighted by word frequency.
     // filter() guards the degenerate sequence(1, 0) (Spark generates a
     // DESCENDING sequence there, not an empty one)

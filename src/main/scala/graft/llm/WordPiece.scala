@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 
 import graft.functions.{WordPieceDecode, WordPieceEncode, WordPieceVocab}
 
@@ -63,12 +64,11 @@ object WordPiece {
       minPairCount: Long = 2L,
       maxDriverWords: Long = 2000000L): Seq[(String, String, Long, Long)] = {
     require(nMerges > 0, "nMerges must be positive")
-    val words = df.filter(col(textCol).isNotNull)
+    val words = Scope.checkpoint(df.filter(col(textCol).isNotNull)
       .select(explode(TextAnalysis.tokens(col(textCol))).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt")))
     if (words.count() <= maxDriverWords) {
       val hist = words.collect().map(r => (r.getString(0), r.getLong(1)))
       hist.find(_._1.contains("##")).foreach { case (w, _) =>
@@ -87,12 +87,11 @@ object WordPiece {
       s"corpus word '${bad.headOption.map(_.getString(0)).orNull}' " +
         "contains the literal '##' continuation marker — WordPiece " +
         "piece strings would be ambiguous")
-    var state = words.select(
+    var state = Scope.checkpoint(words.select(
       expr("transform(sequence(1, length(word)), i -> " +
         "CASE WHEN i = 1 THEN substring(word, i, 1) " +
         "ELSE concat('##', substring(word, i, 1)) END)").as("syms"),
-      col("cnt"))
-      .localCheckpoint()
+      col("cnt")))
     val out = Seq.newBuilder[(String, String, Long, Long)]
     var round = 0
     var done = false
@@ -132,8 +131,7 @@ object WordPiece {
             size(acc) > 0 && element_at(acc, -1) === lit(l) && x === lit(r),
             concat(slice(acc, lit(1), size(acc) - 1), array(lit(merged))))
             .otherwise(concat(acc, array(x))))
-        state = state.select(folded.as("syms"), col("cnt"))
-          .localCheckpoint()
+        state = Scope.checkpoint(state.select(folded.as("syms"), col("cnt")))
       }
       round += 1
     }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 import graft.llm._
 import Q._
 
@@ -459,23 +460,6 @@ object LlmQueries {
       |  ORDER BY c DESC, vec_id LIMIT 5)
       |SELECT vec_id, round(c, 6) AS cosine FROM top
       |ORDER BY cosine DESC, vec_id""".stripMargin
-  }
-
-  /** Materialize a DRIVER-SMALL result (bounded by construction — a
-    * `limit`, an aggregate row, or a hard-filtered pair slice), release
-    * the pipeline's internal caches, and hand back the rows as a local
-    * frame. This is how the cache-holding LLM queries reach "zero net
-    * cached tables" even in a runner that never calls `clearCache`
-    * (VERDICT r05 §4): the returned plan no longer references any
-    * persisted intermediate, so the release handles can fire eagerly
-    * instead of deferring to the session's cache hygiene. */
-  private def collectAndRelease(
-      s: org.apache.spark.sql.SparkSession,
-      df: org.apache.spark.sql.DataFrame)(
-      release: () => Unit): org.apache.spark.sql.DataFrame = {
-    val rows = df.collect()
-    release()
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
 
   /** Shared MinHash mirror CTE chain (tokens → 3-shingles → FNV → k=64
@@ -1099,9 +1083,9 @@ object LlmQueries {
     // tokens (docs span boundaries) — the distributed-prefix-sum
     // operator; the oracle is the closed-form global window cumsum
     "llm_pack_sequences" -> ((s, dir) => {
-      val (packed, release) = Packing.packSequencesReleasable(
+      Packing.packSequences(
         t(s, dir, "documents"), "text", "doc_id", ctxLen = 64)
-      collectAndRelease(s, packed.orderBy("doc_id"))(release)
+        .orderBy("doc_id")
     }),
 
     // no-split bin packing, next-fit-decreasing (r13) — the OTHER
@@ -1144,26 +1128,23 @@ object LlmQueries {
     // dedup shape as one count + one co-partitioned join + per-doc
     // windows
     "llm_dup_spans" -> ((s, dir) => {
-      val (spans, release) = Spans.duplicatedSpansReleasable(
-        t(s, dir, "documents"), "text", "doc_id", 8)
-      collectAndRelease(s,
-        spans.select(col("doc_id"),
+      Spans.duplicatedSpans(t(s, dir, "documents"), "text", "doc_id", 8)
+        .select(col("doc_id"),
           col("span_start").cast("long").as("span_start"),
           col("span_end").cast("long").as("span_end"),
           col("n_grams"))
-          .orderBy("doc_id", "span_start"))(release)
+        .orderBy("doc_id", "span_start")
     }),
 
     // the span-removal action: md5 + length audit of the rewritten
     // corpus (span-free docs keep their bytes; spanned docs rejoin
     // surviving tokens)
     "llm_dup_span_removal" -> ((s, dir) => {
-      val (removed, release) = Spans.removeDuplicatedSpansReleasable(
-        t(s, dir, "documents"), "text", "doc_id", 8)
-      collectAndRelease(s,
-        removed.select(col("doc_id"), md5(col("text")).as("h"),
+      Spans.removeDuplicatedSpans(
+          t(s, dir, "documents"), "text", "doc_id", 8)
+        .select(col("doc_id"), md5(col("text")).as("h"),
           length(col("text")).cast("long").as("len"))
-          .orderBy("doc_id"))(release)
+        .orderBy("doc_id")
     }),
 
     // suffix-ranking ExactSubstr dedup (r15, Lee et al. 2021): same
@@ -1174,12 +1155,11 @@ object LlmQueries {
     // gate different span sets. The oracle mirrors semantics with
     // exact gram strings.
     "llm_suffix_dedup" -> ((s, dir) => {
-      val (removed, release) = SuffixDedup.dedupExactSubstringsReleasable(
-        t(s, dir, "documents"), "text", "doc_id", 6)
-      collectAndRelease(s,
-        removed.select(col("doc_id"), md5(col("text")).as("h"),
+      SuffixDedup.dedupExactSubstrings(
+          t(s, dir, "documents"), "text", "doc_id", 6)
+        .select(col("doc_id"), md5(col("text")).as("h"),
           length(col("text")).cast("long").as("len"))
-          .orderBy("doc_id"))(release)
+        .orderBy("doc_id")
     }),
 
     // incremental dedup against the persisted fingerprint index (r10):
@@ -1193,10 +1173,10 @@ object LlmQueries {
       val path = s"target/minhash_index/${new java.io.File(dir).getName}"
       Dedup.writeMinhashIndex(docs.filter(col("source") =!= "src0"),
         "text", "doc_id", path)
-      val (pairs, release) = Dedup.nearDupsAgainstIndexReleasable(
-        docs.filter(col("source") === "src0"), "text", "doc_id",
-        s.read.parquet(path), jaccardThreshold = 0.5)
-      collectAndRelease(s, pairs.orderBy("new_id", "corpus_id"))(release)
+      Dedup.nearDupsAgainstIndex(
+          docs.filter(col("source") === "src0"), "text", "doc_id",
+          s.read.parquet(path), jaccardThreshold = 0.5)
+        .orderBy("new_id", "corpus_id")
     }),
 
     // cross-source duplication audit: distinct winnowed fingerprints
@@ -2005,10 +1985,9 @@ object LlmQueries {
       // the candidate side, and the survivors' payload join-back) —
       // materialize the canonicalized fetch ONCE; every consumer
       // reads the doc-sized checkpoint instead of re-fetching
-      val canon = fetched.withColumn("canon_url",
+      val canon = Scope.checkpoint(fetched.withColumn("canon_url",
         concat(lit("https://"),
-          regexp_replace(lower(host), "^www\\.", ""), tail))
-        .localCheckpoint()
+          regexp_replace(lower(host), "^www\\.", ""), tail)))
       val polite = graft.sources.Robots.politenessFilter(
           canon, robotsDim(s, dir), "GraftBot", urlCol = "canon_url")
         .filter(col("allowed"))
@@ -2019,12 +1998,12 @@ object LlmQueries {
         "canon_url", expectedItems = 1000000L)
       // survivors table read twice (domain-cap aggregate + payload
       // join-back) — small (id, url, domain, len, hash), checkpoint
-      val scored = novel.select(col("doc_id"), col("canon_url"),
+      val scored = Scope.checkpoint(novel.select(col("doc_id"),
+        col("canon_url"),
         regexp_extract(col("canon_url"), "^https://([^/]+)", 1)
           .as("domain"),
         length(col("extracted")).cast("long").as("n_chars"),
-        md5(col("extracted")).as("content_hash"))
-        .localCheckpoint()
+        md5(col("extracted")).as("content_hash")))
       val capped = scored
         .groupBy("domain")
         .agg(graft.functions.TopKByScore(
@@ -2298,11 +2277,10 @@ object LlmQueries {
       val alpha =
         length(regexp_replace(col("text"), "[^\\p{L}]", "")).cast("double") /
           length(col("text"))
-      val (sel, release) = Select.takeTokenBudgetReleasable(
-        t(s, dir, "documents"), "text", "doc_id", alpha, budget = 12000L)
-      collectAndRelease(s,
-        sel.select("doc_id", "n_tokens", "tokens_before")
-          .orderBy("doc_id"))(release)
+      Select.takeTokenBudget(
+          t(s, dir, "documents"), "text", "doc_id", alpha, budget = 12000L)
+        .select("doc_id", "n_tokens", "tokens_before")
+        .orderBy("doc_id")
     }),
 
     // REAL greedy BPE subword encoding (native codegen'd expression,
@@ -2339,10 +2317,10 @@ object LlmQueries {
     // the heuristic-count packing ships approximations) — same
     // distributed-prefix-sum operator, tokenCounter swapped
     "llm_pack_bpe" -> ((s, dir) => {
-      val (packed, release) = Packing.packSequencesReleasable(
-        t(s, dir, "documents"), "text", "doc_id", ctxLen = 128,
-        tokenCounter = c => Bpe.count(c))
-      collectAndRelease(s, packed.orderBy("doc_id"))(release)
+      Packing.packSequences(
+          t(s, dir, "documents"), "text", "doc_id", ctxLen = 128,
+          tokenCounter = c => Bpe.count(c))
+        .orderBy("doc_id")
     }),
 
     // budget-bounded selection on REAL BPE counts: minimal
@@ -2353,12 +2331,11 @@ object LlmQueries {
       val alpha =
         length(regexp_replace(col("text"), "[^\\p{L}]", "")).cast("double") /
           length(col("text"))
-      val (sel, release) = Select.takeTokenBudgetReleasable(
-        t(s, dir, "documents"), "text", "doc_id", alpha, budget = 40000L,
-        tokenCounter = c => Bpe.count(c))
-      collectAndRelease(s,
-        sel.select("doc_id", "n_tokens", "tokens_before")
-          .orderBy("doc_id"))(release)
+      Select.takeTokenBudget(
+          t(s, dir, "documents"), "text", "doc_id", alpha, budget = 40000L,
+          tokenCounter = c => Bpe.count(c))
+        .select("doc_id", "n_tokens", "tokens_before")
+        .orderBy("doc_id")
     }),
 
     // overlapping chunking of the REAL token-id stream (32-id windows,
@@ -2383,12 +2360,7 @@ object LlmQueries {
     "llm_pack_emit" -> ((s, dir) => {
       val ids = t(s, dir, "documents")
         .select(col("doc_id"), Bpe.encode(col("text")).as("ids"))
-      // RUNNER CONTRACT: the prefix cache and checkpoint release via
-      // the runners' per-query SessionHygiene.releaseAll (the result is
-      // token-sized — bounded but not driver-small, so no
-      // collectAndRelease)
-      Packing.materializeSequencesReleasable(
-          ids, "ids", "doc_id", ctxLen = 128)._1
+      Packing.materializeSequences(ids, "ids", "doc_id", ctxLen = 128)
         .select(col("seq_id"), posexplode(col("token_ids"))
           .as(Seq("ipos", "token_id")))
         .select(col("seq_id"), col("ipos").cast("long").as("ipos"),
@@ -2441,10 +2413,9 @@ object LlmQueries {
     "llm_pack_unigram" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val v = Unigram.learn(docs, "text")
-      val (packed, release) = Packing.packSequencesReleasable(
-        docs, "text", "doc_id", ctxLen = 128,
-        tokenCounter = c => Unigram.count(c, v))
-      collectAndRelease(s, packed.orderBy("doc_id"))(release)
+      Packing.packSequences(docs, "text", "doc_id", ctxLen = 128,
+          tokenCounter = c => Unigram.count(c, v))
+        .orderBy("doc_id")
     }),
 
     // length-bucketed curriculum batching (r15) — the third packing
@@ -2454,9 +2425,9 @@ object LlmQueries {
     // the GlobalOrder decomposition (a per-bucket window would be one
     // task per bucket — buckets are few and huge)
     "llm_length_curriculum" -> ((s, dir) => {
-      val (out, release) = Packing.lengthCurriculumBatchesReleasable(
-        t(s, dir, "documents"), "text", "doc_id", batchSize = 32)
-      collectAndRelease(s, out.orderBy("doc_id"))(release)
+      Packing.lengthCurriculumBatches(
+          t(s, dir, "documents"), "text", "doc_id", batchSize = 32)
+        .orderBy("doc_id")
     }),
 
     // tokenizer-fertility report (r14; wordpiece added r15):
@@ -3015,11 +2986,10 @@ object LlmQueries {
       val alpha =
         length(regexp_replace(col("text"), "[^\\p{L}]", "")).cast("double") /
           length(col("text"))
-      val (ranked, release) =
-        graft.stats.GlobalOrder.percentileRankReleasable(
+      graft.stats.GlobalOrder.percentileRank(
           t(s, dir, "documents").select(col("doc_id"), alpha.as("score")),
           Seq(col("score"), col("doc_id")))
-      collectAndRelease(s, ranked.orderBy("doc_id"))(release)
+        .orderBy("doc_id")
     }),
 
     // BM25 corpus scoring against a 3-term probe with a real idf
@@ -3191,11 +3161,9 @@ object LlmQueries {
       val ids = d.select(col("doc_id"))
       val cands = ids.select(col("doc_id").as("ida"))
         .join(ids.select(col("doc_id").as("idb")), col("ida") < col("idb"))
-      val (ver, release) =
-        Dedup.verifyJaccardReleasable(cands, d, "text", "doc_id")
-      // ≤ C(20,2) pairs by the doc_id < 20 slice — driver-small
-      collectAndRelease(s,
-        ver.filter(col("jaccard") > 0).orderBy("ida", "idb"))(release)
+      // ≤ C(20,2) pairs by the doc_id < 20 slice
+      Dedup.verifyJaccard(cands, d, "text", "doc_id")
+        .filter(col("jaccard") > 0).orderBy("ida", "idb")
     }),
 
     // containment verify (asymmetric duplication): |A∩B|/|A|, /|B|,
@@ -3205,10 +3173,8 @@ object LlmQueries {
       val ids = d.select(col("doc_id"))
       val cands = ids.select(col("doc_id").as("ida"))
         .join(ids.select(col("doc_id").as("idb")), col("ida") < col("idb"))
-      val (ver, release) =
-        Dedup.verifyContainmentReleasable(cands, d, "text", "doc_id")
-      collectAndRelease(s,
-        ver.filter(col("jaccard") > 0).orderBy("ida", "idb"))(release)
+      Dedup.verifyContainment(cands, d, "text", "doc_id")
+        .filter(col("jaccard") > 0).orderBy("ida", "idb")
     }),
 
     // MinHash + banded LSH near-dup pipeline (oracle-checked end to
@@ -3218,43 +3184,35 @@ object LlmQueries {
       val d = t(s, dir, "documents")
       // signatures are consumed twice (banding + estimation): persist —
       // at cluster scale this is a checkpoint of the signature table.
-      // Every cache below is released before the query returns: the
-      // result is limit(20)-bounded, so it is collected eagerly and
-      // handed back as a local frame (collectAndRelease) instead of
-      // deferring cache release to the runners' clearCache (the r04/r05
-      // RUNNER CONTRACT this replaces).
-      val sigs = Dedup.minhashSignatures(d, "text", "doc_id", k = 64)
-        .persist()
+      // The caches below live in the query's Scope, which the runner
+      // closes once the limit(20)-bounded result is written.
+      val sigs = Scope.persist(
+        Dedup.minhashSignatures(d, "text", "doc_id", k = 64))
       sigs.count() // materialize once; banding + estimation branches reuse
       val cands = Dedup.lshCandidates(sigs, "doc_id", bands = 16, rows = 4)
       // verify-what-you-report: rank by the cheap signature estimate
       // first, run exact-Jaccard verification ONLY on the reported
       // top-k pairs (the expensive stage scales with what is shown,
       // not with the full candidate set)
-      val top = Dedup.estimateJaccard(cands, sigs, "doc_id")
+      val top = Scope.persist(Dedup.estimateJaccard(cands, sigs, "doc_id")
         .orderBy(desc("est_jaccard"), col("ida"), col("idb"))
-        .limit(20).persist()
+        .limit(20))
       top.count() // materialized → the signature branches are done
-      sigs.unpersist()
-      val (ver, releaseShingles) = Dedup.verifyJaccardReleasable(
+      Scope.release(sigs)
+      val ver = Dedup.verifyJaccard(
         top.select("ida", "idb"), d, "text", "doc_id")
-      val out = top.join(ver, Seq("ida", "idb"), "left")
+      top.join(ver, Seq("ida", "idb"), "left")
         .withColumn("jaccard", coalesce(col("jaccard"), lit(0.0)))
         .orderBy(desc("est_jaccard"), col("ida"), col("idb"))
-      collectAndRelease(s, out)(() => { releaseShingles(); top.unpersist() })
     }),
 
     // end-to-end near-dup dedup: LSH candidates → verify → connected
     // components → survivors (oracle-checked end to end)
     "llm_neardup_dedup" -> ((s, dir) => {
       val d = t(s, dir, "documents")
-      val (survivors, release) = Dedup.dedupNearMinhashReleasable(
-        d, "text", "doc_id", jaccardThreshold = 0.8)
-      // single aggregate row → collect it, then the representatives
-      // checkpoint the survivor plan reads can be released immediately
-      collectAndRelease(s,
-        survivors.agg(count(lit(1)).as("survivors"),
-          (lit(d.count()) - count(lit(1))).as("removed")))(release)
+      Dedup.dedupNearMinhash(d, "text", "doc_id", jaccardThreshold = 0.8)
+        .agg(count(lit(1)).as("survivors"),
+          (lit(d.count()) - count(lit(1))).as("removed"))
     }),
 
     // SimHash signatures + banded hamming candidates (oracle-checked).
@@ -3447,10 +3405,9 @@ object LlmQueries {
     "llm_ann_recall" -> ((s, dir) => {
       // the gate is a many-action harness (brute-force truth + four
       // batch paths + 16 point probes) over ONE small table — persist
-      // it for the duration and release via collectAndRelease (the
-      // packing queries' zero-net-cache pattern); without this every
-      // action re-reads and re-decodes the parquet
-      val emb = t(s, dir, "embeddings").persist()
+      // it for the query's Scope; without this every action re-reads
+      // and re-decodes the parquet
+      val emb = Scope.persist(t(s, dir, "embeddings"))
       val k = 10
       val queries = emb.filter(pmod(col("vec_id"), lit(20)) === 0)
       def ids(df: org.apache.spark.sql.DataFrame, as: String) =
@@ -3509,26 +3466,24 @@ object LlmQueries {
           pqFullExact = false
       }
       val denom = qids.size * k
-      collectAndRelease(s,
-        truth.join(ivf2, Seq("query_id"), "left")
-          .join(ivf4, Seq("query_id"), "left")
-          .join(ivf8, Seq("query_id"), "left")
-          .join(lsh, Seq("query_id"), "left")
-          .agg(count(lit(1)).as("n_queries"),
-            hits("ivf2_ids").as("__h2"), hits("ivf4_ids").as("__h4"),
-            hits("ivf8_ids").as("__h8"), hits("lsh_ids").as("__hl"))
-          .select(col("n_queries"),
-            (col("__h8") === col("n_queries") * k).as("ivf_full_exact"),
-            (col("__h4") >= col("n_queries") * k * 0.65)
-              .as("ivf4_recall_ok"),
-            (col("__h2") >= col("n_queries") * k * 0.40)
-              .as("ivf2_recall_ok"),
-            (col("__hl") >= col("n_queries") * k * 0.15)
-              .as("lsh_recall_ok"),
-            lit(pqHits >= denom * 0.15).as("pq_recall_ok"),
-            lit(ivfpqHits >= denom * 0.15).as("ivfpq_recall_ok"),
-            lit(pqFullExact).as("pq_full_exact"))
-      )(() => { emb.unpersist(); () })
+      truth.join(ivf2, Seq("query_id"), "left")
+        .join(ivf4, Seq("query_id"), "left")
+        .join(ivf8, Seq("query_id"), "left")
+        .join(lsh, Seq("query_id"), "left")
+        .agg(count(lit(1)).as("n_queries"),
+          hits("ivf2_ids").as("__h2"), hits("ivf4_ids").as("__h4"),
+          hits("ivf8_ids").as("__h8"), hits("lsh_ids").as("__hl"))
+        .select(col("n_queries"),
+          (col("__h8") === col("n_queries") * k).as("ivf_full_exact"),
+          (col("__h4") >= col("n_queries") * k * 0.65)
+            .as("ivf4_recall_ok"),
+          (col("__h2") >= col("n_queries") * k * 0.40)
+            .as("ivf2_recall_ok"),
+          (col("__hl") >= col("n_queries") * k * 0.15)
+            .as("lsh_recall_ok"),
+          lit(pqHits >= denom * 0.15).as("pq_recall_ok"),
+          lit(ivfpqHits >= denom * 0.15).as("ivfpq_recall_ok"),
+          lit(pqFullExact).as("pq_full_exact"))
     }),
 
     // NEAR-DUP RECALL GATE (r14, VERDICT r13 task 5 — the llm_ann_recall
@@ -3564,32 +3519,33 @@ object LlmQueries {
       val vLow = base.select((col("doc_id") + lit(3000000L)).as("doc_id"),
         expr("array_join(transform(__t, (x, i) -> " +
           "IF(i % 4 = 3, concat(x, 'qx'), x)), ' ')").as("text"))
-      val all = base.select("doc_id", "text")
-        .unionByName(vHigh).unionByName(vMid).unionByName(vLow).persist()
+      val all = Scope.persist(base.select("doc_id", "text")
+        .unionByName(vHigh).unionByName(vMid).unionByName(vLow))
       all.count()
       val planted = base.select(col("doc_id").as("ida"))
         .select(col("ida"),
           explode(expr("array(1000000L, 2000000L, 3000000L)")).as("__o"))
         .select(col("ida"), (col("ida") + col("__o")).as("idb"))
-      val (exactDf, relSh) =
-        Dedup.verifyJaccardReleasable(planted, all, "text", "doc_id")
-      val exact = exactDf
+      // each verify's shingle checkpoint gets its own scope, closed once
+      // the verify output is filled
+      val (exactDf, sh) =
+        Scope.run(Dedup.verifyJaccard(planted, all, "text", "doc_id"))
+      val exact = Scope.persist(exactDf
         .withColumn("band", when(col("jaccard") >= 0.8, "high")
-          .when(col("jaccard") >= 0.45, "mid").otherwise("low"))
-        .persist()
-      exact.count(); relSh()
-      val sigs = Dedup.minhashSignatures(all, "text", "doc_id").persist()
+          .when(col("jaccard") >= 0.45, "mid").otherwise("low")))
+      exact.count(); sh.close()
+      val sigs = Scope.persist(Dedup.minhashSignatures(all, "text", "doc_id"))
       sigs.count()
-      val cands = Dedup.lshCandidates(sigs, "doc_id", bands = 16, rows = 4)
-        .persist()
+      val cands = Scope.persist(
+        Dedup.lshCandidates(sigs, "doc_id", bands = 16, rows = 4))
       cands.count()
       val est = Dedup.estimateJaccard(cands, sigs, "doc_id")
         .filter(col("est_jaccard") >= 0.4).select("ida", "idb")
-      val (verAllDf, relSh2) =
-        Dedup.verifyJaccardReleasable(est, all, "text", "doc_id")
-      val verAll = verAllDf.persist()
-      verAll.count(); relSh2()
-      sigs.unpersist()
+      val (verAllDf, sh2) =
+        Scope.run(Dedup.verifyJaccard(est, all, "text", "doc_id"))
+      val verAll = Scope.persist(verAllDf)
+      verAll.count(); sh2.close()
+      Scope.release(sigs)
       val ver = verAll.filter(col("jaccard") >= 0.8).select("ida", "idb")
       // band recall of the candidate stage
       val found = exact
@@ -3607,14 +3563,12 @@ object LlmQueries {
       // completeness (every high-band candidate emitted)
       val precisionOk = ver.join(exact, Seq("ida", "idb"))
         .filter(col("jaccard") < 0.8).count() == 0L
-      val due = exact.filter(col("band") === "high")
-        .join(cands.select("ida", "idb"), Seq("ida", "idb"), "left_semi")
-        .persist()
+      val due = Scope.persist(exact.filter(col("band") === "high")
+        .join(cands.select("ida", "idb"), Seq("ida", "idb"), "left_semi"))
       val nDue = due.count()
       val completeOk =
         due.join(ver, Seq("ida", "idb"), "left_semi").count() == nDue
-      due.unpersist(); verAll.unpersist(); cands.unpersist()
-      exact.unpersist(); all.unpersist()
+      Seq(due, verAll, cands, exact, all).foreach(Scope.release)
       // floors: measured 1.00 high (J ∈ [0.86, 0.91]) and 0.92–0.96
       // mid (J ∈ [0.60, 0.69]) across sf0.001/sf0.01; pinned with
       // margin (regression pins, not quality claims). The low band

@@ -95,7 +95,7 @@ object Sitemap {
     var depth = 0
     var open = true
     while (open) {
-      val parsed = parseSitemaps(level, xmlCol).localCheckpoint()
+      val parsed = graft.core.Scope.checkpoint(parseSitemaps(level, xmlCol))
       val leaves = parsed.filter(!col("is_index")).drop("is_index")
         .withColumn("sitemap_depth", lit(depth))
       frontier =

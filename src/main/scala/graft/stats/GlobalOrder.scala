@@ -3,7 +3,7 @@ package graft.stats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.SessionHygiene
+import graft.core.Scope
 
 /** The distributed GLOBAL ORDERED PREFIX SUM — the decomposition shared
   * by sequence packing ([[graft.llm.Packing]]), token-budget selection
@@ -23,8 +23,8 @@ object GlobalOrder {
     * (must be long-typed) under the TOTAL order `orderCols` (callers
     * must include a tiebreaker — equal keys across a partition
     * boundary would otherwise make the prefix depend on placement).
-    * Returns the frame, the GRAND TOTAL (free from the partials — no
-    * extra pass) and the release handle below. `maxPrefix` drops
+    * Returns the frame and the GRAND TOTAL (free from the partials — no
+    * extra pass). `maxPrefix` drops
     * partitions whose exclusive offset already reaches the bound
     * BEFORE the finishing window, so a budget-style consumer pays
     * O(selected prefix), not O(input).
@@ -34,23 +34,19 @@ object GlobalOrder {
     * window (the token-budget plan audit caught document text in all
     * three).
     *
-    * RUNNER CONTRACT: persists the range-partitioned input the
-    * returned plan reads (two passes: partials + final) and, with
-    * `precheckpoint`, checkpoints the narrow input before the range
-    * exchange; both are freed by the returned release handle — call it
-    * once the returned plan's output has been materialized (both
-    * passes read the cache, so releasing earlier would recompute the
-    * range exchange, and the checkpoint cannot recompute at all).
-    * Without the handle each call leaks its blocks until the session's
-    * per-query hygiene drops them (ADVICE r06). */
-  def exclusivePrefixReleasable(
+    * Materializes in the current [[graft.core.Scope]]: the
+    * range-partitioned input the returned plan reads (persisted; two
+    * passes: partials + final) and, with `precheckpoint`, the narrow
+    * input before the range exchange (checkpointed). Both live until the
+    * scope closes, after the returned plan's output is written. */
+  def exclusivePrefix(
       df: DataFrame,
       orderCols: Seq[Column],
       valueCol: Column,
       prefixName: String,
       numParts: Int = 0,
       maxPrefix: Option[Long] = None,
-      precheckpoint: Boolean = true): (DataFrame, Long, () => Unit) = {
+      precheckpoint: Boolean = true): (DataFrame, Long) = {
     require(orderCols.nonEmpty, "order columns required")
     val spark = df.sparkSession
     val p =
@@ -68,12 +64,11 @@ object GlobalOrder {
     // than the re-execution saves (measured per caller, see
     // OPTIMIZATION_r17.md).
     val pre0 = df.withColumn("__val", valueCol)
-    val pre = if (precheckpoint) pre0.localCheckpoint() else pre0
-    val parted = pre
+    val pre = if (precheckpoint) Scope.checkpoint(pre0) else pre0
+    val parted = Scope.persist(pre
       .repartitionByRange(p, orderCols: _*)
       .sortWithinPartitions(orderCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist()
+      .withColumn("__pid", spark_partition_id()))
     // P rows to the driver — the partials, never the data
     val partSums = parted.groupBy("__pid")
       .agg(sum("__val").as("s"))
@@ -98,12 +93,7 @@ object GlobalOrder {
         sum("__val").over(w) - col("__val") +
           element_at(typedlit(offsets), col("__pid")))
       .drop("__pid", "__val")
-    (out, perPart.sum, () => {
-      parted.unpersist()
-      // without precheckpoint `pre` is the caller's plan, whose
-      // checkpoint leaves belong to the caller
-      if (precheckpoint) SessionHygiene.releaseCheckpoint(pre)
-    })
+    (out, perPart.sum)
   }
 
   /** `df` plus `rankName` = 0-based global rank under the total order
@@ -111,18 +101,17 @@ object GlobalOrder {
     * normalization applied to quality scores before thresholding
     * ("keep the top 30%"). A single-row corpus degenerates to
     * percentile 0. One narrow range exchange; no global window.
-    * Returns the prefix cache's release handle with the frame (the
-    * [[exclusivePrefixReleasable]] RUNNER CONTRACT). */
-  def percentileRankReleasable(
+    * Materializes as [[exclusivePrefix]] does. */
+  def percentileRank(
       df: DataFrame,
       orderCols: Seq[Column],
       rankName: String = "rank",
       pctName: String = "percentile",
-      numParts: Int = 0): (DataFrame, () => Unit) = {
-    val (ranked, n, release) =
-      exclusivePrefixReleasable(df, orderCols, lit(1L), rankName, numParts)
-    (ranked.withColumn(pctName,
+      numParts: Int = 0): DataFrame = {
+    val (ranked, n) =
+      exclusivePrefix(df, orderCols, lit(1L), rankName, numParts)
+    ranked.withColumn(pctName,
       if (n <= 1L) lit(0.0)
-      else col(rankName).cast("double") / lit((n - 1).toDouble)), release)
+      else col(rankName).cast("double") / lit((n - 1).toDouble))
   }
 }

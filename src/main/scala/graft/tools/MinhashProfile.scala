@@ -1,6 +1,8 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 import graft.llm.Dedup
 
 /** Stage-by-stage timing of the near-dup pipelines (dev tool). */
@@ -8,40 +10,43 @@ object MinhashProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.GraftSession.create()
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
+    val (_, scope) =
+      Scope.run(profile(spark.read.parquet(s"$sfDir/documents.parquet")))
+    scope.close()
+    spark.stop()
+  }
 
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
+  private def time[T](label: String)(f: => T): T = {
+    val t0 = System.nanoTime()
+    val r = f
+    println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    r
+  }
 
-    val sigs = Dedup.minhashSignatures(d, "text", "doc_id", k = 64).persist()
+  private def profile(d: DataFrame): Unit = {
+    val sigs = Scope.persist(
+      Dedup.minhashSignatures(d, "text", "doc_id", k = 64))
     time("signatures")(sigs.count())
-    val cands = Dedup.lshCandidates(sigs, "doc_id", 16, 4).persist()
+    val cands = Scope.persist(Dedup.lshCandidates(sigs, "doc_id", 16, 4))
     val nc = time("candidates")(cands.count())
     println(s"candidate pairs: $nc")
     time("estimate")(
       Dedup.estimateJaccard(cands, sigs, "doc_id").count())
-    val (verifiedAll, releaseShingles) =
-      Dedup.verifyJaccardReleasable(cands, d, "text", "doc_id")
-    val verified = verifiedAll
-      .filter(col("jaccard") >= 0.8).select("ida", "idb").persist()
+    val (verifiedAll, shingles) =
+      Scope.run(Dedup.verifyJaccard(cands, d, "text", "doc_id"))
+    val verified = Scope.persist(
+      verifiedAll.filter(col("jaccard") >= 0.8).select("ida", "idb"))
     time("verify")(verified.count())
-    releaseShingles()
+    shingles.close()
     time("components")(
       Dedup.nearDupComponents(verified).count())
     time("survivors")(
       Dedup.nearDupSurvivors(d, "doc_id", verified).count())
-    time("end-to-end dedupNearMinhash") {
-      val (surv, release) =
-        Dedup.dedupNearMinhashReleasable(d, "text", "doc_id", 0.8)
-      val n = surv.count(); release(); n
-    }
+    time("end-to-end dedupNearMinhash")(
+      Dedup.dedupNearMinhash(d, "text", "doc_id", 0.8).count())
 
     val sh = time("simhash signatures")(
-      Dedup.simhash(d, "text", "doc_id").persist())
+      Scope.persist(Dedup.simhash(d, "text", "doc_id")))
     sh.count()
     time("simhash candidates")(
       Dedup.simhashCandidates(sh, "doc_id", 3).count())
@@ -51,7 +56,7 @@ object MinhashProfile {
         .orderBy("ida", "idb").count())
 
     // ---- signature-stage anatomy: scan / tokens / shingles / minhash
-    val fanned = graft.core.FanOut.cpuBound(d).persist()
+    val fanned = Scope.persist(graft.core.FanOut.cpuBound(d))
     time("  [anat] fanned text materialize")(fanned.count())
     time("  [anat] tokens only")(
       fanned.select(sum(size(graft.llm.TextAnalysis.tokens(col("text")))))
@@ -75,7 +80,7 @@ object MinhashProfile {
         graft.functions.ShingleHashes(col("text"), 3)))).head())
     time("  [anat] fused simhash_text")(
       fanned.select(max(graft.functions.SimHashText(col("text")))).head())
-    fanned.unpersist()
+    Scope.release(fanned)
 
     // ---- lshCandidates anatomy over the cached signature table
     val banded = sigs.filter(col("sig").isNotNull).select(
@@ -92,6 +97,5 @@ object MinhashProfile {
     time("  [cand] bucket aggregate")(buckets.count())
     time("  [cand] full (incl. pair expand + distinct)")(
       Dedup.lshCandidates(sigs, "doc_id", 16, 4).count())
-    spark.stop()
   }
 }

@@ -33,7 +33,11 @@ object PlanAudit {
     // map-only crossJoin — the build side is a single array row). The
     // LM queries carry the same shape: crossJoin(broadcast(vocabSize))
     // is a one-row scalar broadcast, not a pair blow-up
-    val nestedLoopAllowed = Set("llm_ngram_jaccard", "llm_classifier_score",
+    // (llm_containment builds the same C(20,2) pair set as
+    // llm_ngram_jaccard; the audit sees its plan now that the query
+    // returns its distributed frame)
+    val nestedLoopAllowed = Set("llm_ngram_jaccard", "llm_containment",
+      "llm_classifier_score",
       "llm_lm_perplexity", "llm_lm_bigrams", "llm_lm_backoff",
       "llm_lm_kneser_ney",
       // the recall GATE's ground truth is brute-force by design — the
@@ -225,26 +229,28 @@ object PlanAudit {
       bad += 1
     }
     // C4 span dedup (r14 reshape, pinned r15): keeper selection is ONE
-    // map-side-combinable aggregate on the exact span key `k` — the
-    // plan must carry NO Window anywhere (the discarded
+    // map-side-combinable aggregate on the exact span key `k` — no plan
+    // the query executes may carry a Window (the discarded
     // row_number+count formulation put every occurrence of a viral
     // boilerplate span on one task), and the span-key aggregate shows
-    // up once (a partial/final pair of plan nodes, 2–3 with AQE)
-    val c4 = graft.SparkEntry.queries("llm_c4_clean")(spark, dir)
-    val c4Plan = c4.queryExecution.executedPlan.toString
-    if (c4Plan.contains("Window")) {
+    // up in exactly one of them. The rule reads EVERY executed plan:
+    // the aggregate runs inside the checkpoint of the removed-sentence
+    // table, so the returned frame's own plan never contains it.
+    val (c4Run, c4Plans) = Run.capturePlans(spark, dir, "llm_c4_clean")
+    c4Run.left.foreach { e =>
+      println(s"!! llm_c4_clean: run failed: ${e.getMessage}"); bad += 1
+    }
+    if (c4Plans.exists(_._2.contains("Window"))) {
       println("!! llm_c4_clean: a Window regressed into the span-dedup " +
         "stage")
       bad += 1
     }
-    // SortAggregate prints `key=[..]` (min(struct) forbids the hash
-    // impl); the gate query consumes the span table twice (text
-    // rebuild + removal audit), so ONE logical aggregate = 2 subtrees
-    // × a partial/final pair = 4 plan nodes
-    val nKAgg = "(?:key|keys)=\\[k#\\d+\\]".r.findAllIn(c4Plan).length
-    if (nKAgg < 2 || nKAgg > 4) {
-      println(s"!! llm_c4_clean: expected the one span-key aggregate " +
-        s"(2-4 partial/final plan nodes on key=[k#..]), found $nKAgg")
+    val kAggPlans = c4Plans.filter { case (_, txt) =>
+      "Keys \\[\\d+\\]: \\[k#\\d+\\]".r.findFirstIn(txt).isDefined }
+    if (kAggPlans.size != 1) {
+      println(s"!! llm_c4_clean: expected the span-key aggregate in " +
+        s"exactly one executed plan, found it in ${kAggPlans.size} " +
+        s"(${kAggPlans.map(_._1).mkString(",")})")
       bad += 1
     }
     // tokenizer fertility (r14, pinned r15; wordpiece added r15): all
@@ -340,10 +346,10 @@ object PlanAudit {
     // de-skew contract applied to the third packing regime
     {
       val cdocs = spark.read.parquet(s"$dir/documents.parquet")
-      val (lc, lcRel) = graft.llm.Packing
-        .lengthCurriculumBatchesReleasable(cdocs, "text", "doc_id", 32)
+      val (lc, lcScope) = graft.core.Scope.run(graft.llm.Packing
+        .lengthCurriculumBatches(cdocs, "text", "doc_id", 32))
       val lcPlan = lc.queryExecution.executedPlan.toString
-      lcRel()
+      lcScope.close()
       val nW = "windowspecdefinition\\(".r.findAllIn(lcPlan).length
       val nPid = "windowspecdefinition\\(__pid".r.findAllIn(lcPlan).length
       if (lcPlan.contains("windowspecdefinition(bucket")) {

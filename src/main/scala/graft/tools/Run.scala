@@ -3,11 +3,11 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 import org.apache.spark.GraftListenerBus
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.{Bench, GraftSession, SparkEntry}
-import graft.core.SessionHygiene
+import graft.core.Scope
 
 /** Dev runner for registry queries, and the one way any runner executes
   * a query ([[once]]; `graft.Bench` measures through it too). Modes:
@@ -32,21 +32,42 @@ object Run {
   def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+  /** The one way a runner executes a query: build it in a fresh
+    * [[Scope]], hand its output to `sink`, then close the scope. Left
+    * when the query or the sink threw, or when the query left behind a
+    * persisted RDD or (in a session whose SQL cache was empty) a SQL
+    * cache entry — a leak is a failure, not something to sweep. State
+    * the session held before the query is not counted. */
+  def scoped[A](spark: SparkSession)(query: => DataFrame)(
+      sink: DataFrame => A): Either[Throwable, A] = {
+    val sc = spark.sparkContext
+    val rdds0 = sc.getPersistentRDDs.keySet
+    val cacheWasEmpty = GraftSqlBridge.cacheIsEmpty(spark)
+    val outcome =
+      try {
+        val (out, scope) = Scope.run(query)
+        try Right(sink(out)) finally scope.close()
+      } catch { case e: Throwable => Left(e) }
+    val leaked = (sc.getPersistentRDDs.keySet -- rdds0).toSeq.sorted
+    outcome.flatMap { a =>
+      if (leaked.nonEmpty) Left(new IllegalStateException(
+        s"left persisted RDDs behind: ${leaked.mkString(",")}"))
+      else if (cacheWasEmpty && !GraftSqlBridge.cacheIsEmpty(spark))
+        Left(new IllegalStateException("left a SQL cache entry behind"))
+      else Right(a)
+    }
+  }
+
   /** Run registry query `name` end to end: a noop write (full
-    * materialization — a bare count lets Catalyst prune work), then
-    * [[SessionHygiene.releaseAll]]. The time of the write, or what it
-    * threw. */
+    * materialization — a bare count lets Catalyst prune work) through
+    * [[scoped]]. The time of the write, or why the run failed. */
   def once(spark: SparkSession, sfDir: String,
       name: String): Either[Throwable, Double] = {
     val t0 = System.nanoTime()
-    val outcome =
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable => Left(e) }
-    SessionHygiene.releaseAll(spark)
-    outcome
+    scoped(spark)(SparkEntry.queries(name)(spark, sfDir)) { out =>
+      out.write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
   }
 
   /** [[once]] with a `QueryExecutionListener` registered: the outcome

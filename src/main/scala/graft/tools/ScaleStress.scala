@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 import graft.llm.{Dedup, Similarity, TextAnalysis}
 
 /** Scaling stress (dev tool): replicates the sf0.1 documents/embeddings
@@ -24,11 +25,14 @@ object ScaleStress {
     val only: Option[String] = args.lift(1)
     val spark = graft.GraftSession.create()
 
+    // each timing runs in its own Scope, closed once `f` has
+    // materialized its rows, so no timing leaves caches to the next
     def time(label: String)(f: => Long): Unit =
       if (only.forall(_.split(",").exists(label.contains))) {
         val t0 = System.nanoTime()
-        val n = f
+        val (n, scope) = Scope.run(f)
         println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
+        scope.close()
       }
 
     // Force FULL evaluation of every column: a bare .agg(sum(x)).count()
@@ -61,24 +65,14 @@ object ScaleStress {
         .write.mode("overwrite").parquet(path)
       val d = spark.read.parquet(path)
       println(s"\n--- x$mult (${nBase * mult} docs) ---")
-      time(s"minhash near-dup dedup x$mult") {
-        val (surv, release) =
-          Dedup.dedupNearMinhashReleasable(d, "text", "doc_id", 0.8)
-        val n = surv.count()
-        release()
-        n
-      }
-      spark.catalog.clearCache()
-      time(s"pack sequences x$mult") {
-        val (p, rel) = graft.llm.Packing
-          .packSequencesReleasable(d, "text", "doc_id", 2048)
-        val n = force(p); rel(); n
-      }
+      time(s"minhash near-dup dedup x$mult")(
+        Dedup.dedupNearMinhash(d, "text", "doc_id", 0.8).count())
+      time(s"pack sequences x$mult")(
+        force(graft.llm.Packing.packSequences(d, "text", "doc_id", 2048)))
       time(s"grouped topk x$mult")(
         force(d.groupBy("source")
           .agg(graft.functions.TopKByScore(col("n_chars"), col("doc_id"), 5)
             .as("t"))))
-      spark.catalog.clearCache()
       // line dedup under replication is the WORST case: every replica
       // line is corpus-boilerplate, so the removal join's build side is
       // at its largest relative to the corpus
@@ -166,7 +160,6 @@ object ScaleStress {
             explode(TextAnalysis.tokens(col("text"))).as("term"))
           .groupBy("source")
           .agg(approx_count_distinct("term", 0.05).as("est"))))
-      spark.catalog.clearCache()
       if (mult <= 16) {
         time(s"exact dedup x$mult")(
           Dedup.exactDedup(d, "text", "doc_id").count())
@@ -176,7 +169,6 @@ object ScaleStress {
         time(s"langid x$mult")(
           d.select(TextAnalysis.langId(col("text")).as("p"))
             .groupBy("p").count().count())
-        spark.catalog.clearCache()
         time(s"decontaminate x$mult")(
           Dedup.decontaminate(
             d.filter(col("source") =!= "src0"),
@@ -188,7 +180,6 @@ object ScaleStress {
             md5(TextAnalysis.redactPii(col("text"))).as("h"))))
         time(s"bigram familiarity x$mult")(
           force(TextAnalysis.bigramFamiliarity(d, "text", "doc_id")))
-        spark.catalog.clearCache()
         time(s"bm25 score x$mult")(
           force(graft.llm.Rank.bm25(d, "text", "doc_id",
             Seq("dup", "key", "batch"))))
@@ -204,7 +195,6 @@ object ScaleStress {
               .cast("double") / length(col("text")) > 0.818)))))
         time(s"chunk overlap x$mult")(
           force(graft.llm.Chunk.chunkTokens(d, "text", "doc_id", 32, 8)))
-        spark.catalog.clearCache()
         // sitemap parse: dimension rows explode into a fact-sized
         // frontier; replication multiplies each host's BODY length
         // ×mult (the 50k-URL protocol-cap worst case — one giant
@@ -447,11 +437,9 @@ object ScaleStress {
         // rows; replication is also the BUCKET-DEGENERATE worst case
         // (replica texts share lengths, so a few buckets hold ~all
         // rows — the shape that melts a per-bucket window)
-        time(s"length curriculum x$mult") {
-          val (out, rel) = graft.llm.Packing
-            .lengthCurriculumBatchesReleasable(d, "text", "doc_id", 2048)
-          val n = force(out); rel(); n
-        }
+        time(s"length curriculum x$mult")(
+          force(graft.llm.Packing
+            .lengthCurriculumBatches(d, "text", "doc_id", 2048)))
         // count-min sketch (r15): the matrix IS the aggregate state —
         // the exchange carries one depth×width matrix per partition
         // regardless of rows, so the curve must be ~linear in tokens
@@ -497,43 +485,31 @@ object ScaleStress {
           force(graft.llm.Repetition.gopherRepetitionVerdict(
             structured, "text3", "doc_id"))
         }
-        spark.catalog.clearCache()
         // suffix-ranking ExactSubstr (r15): the replicated corpus is
         // the worst case — every window is duplicated, so every
         // doubling round's class join carries the full token stream
         // and the removal cuts ~everything. Same k as the gram-hash
         // `span removal` row above it in SCALE.md: the two mechanisms'
         // curves are directly comparable
-        time(s"suffix dedup x$mult") {
-          val (rm, rel) = graft.llm.SuffixDedup
-            .dedupExactSubstringsReleasable(d, "text", "doc_id", 8)
-          val n = force(rm); rel(); n
-        }
-        spark.catalog.clearCache()
+        time(s"suffix dedup x$mult")(
+          force(graft.llm.SuffixDedup
+            .dedupExactSubstrings(d, "text", "doc_id", 8)))
       }
       // round-6 operators promoted to the second decade (VERDICT r06
       // §7): dup spans / span removal / token budget run at 64× too.
       // Worst case under replication: EVERY gram is hot, the dup table
       // equals the full gram table
-      time(s"dup spans x$mult") {
-        val (sp, rel) = graft.llm.Spans.duplicatedSpansReleasable(
-          d, "text", "doc_id", 8)
-        val n = force(sp); rel(); n
-      }
-      time(s"span removal x$mult") {
-        val (rm, rel) = graft.llm.Spans.removeDuplicatedSpansReleasable(
-          d, "text", "doc_id", 8)
-        val n = force(rm); rel(); n
-      }
+      time(s"dup spans x$mult")(
+        force(graft.llm.Spans.duplicatedSpans(d, "text", "doc_id", 8)))
+      time(s"span removal x$mult")(
+        force(graft.llm.Spans.removeDuplicatedSpans(d, "text", "doc_id", 8)))
       // budget scales WITH the corpus (25% of tokens) so the curve
       // shape is comparable across multipliers
-      time(s"token budget x$mult") {
-        val (sel, rel) = graft.llm.Select.takeTokenBudgetReleasable(
-          d, "text", "doc_id", col("n_chars").cast("double"),
-          budget = 68000L * mult)
-        val n = force(sel.select("doc_id", "n_tokens", "tokens_before"))
-        rel(); n
-      }
+      time(s"token budget x$mult")(
+        force(graft.llm.Select.takeTokenBudget(
+            d, "text", "doc_id", col("n_chars").cast("double"),
+            budget = 68000L * mult)
+          .select("doc_id", "n_tokens", "tokens_before")))
       // r10: bigram-LM perplexity — replication multiplies the bigram
       // stream but NOT the vocabulary, so the model (and its broadcast)
       // stays constant-size while scoring scales with rows. This is the
@@ -558,16 +534,14 @@ object ScaleStress {
       time(s"incremental dedup x$mult") {
         val ipath = s"target/scale_stress/mh_index_x$mult"
         graft.llm.Dedup.writeMinhashIndex(d, "text", "doc_id", ipath)
-        val (p, rel) = graft.llm.Dedup.nearDupsAgainstIndexReleasable(
+        force(graft.llm.Dedup.nearDupsAgainstIndex(
           base.limit(500), "text", "doc_id",
-          spark.read.parquet(ipath), jaccardThreshold = 0.8)
-        val n = force(p); rel(); n
+          spark.read.parquet(ipath), jaccardThreshold = 0.8))
       }
       // r10: shard-shuffle — one hash-balanced window; shards stay
       // balanced under replication, so the curve is the per-shard sort
       time(s"shard shuffle x$mult")(
         force(graft.llm.Mixing.shardShuffle(d.select("doc_id"), "doc_id", 64)))
-      spark.catalog.clearCache()
     }
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -610,7 +584,6 @@ object ScaleStress {
           e, "embedding", "vec_id", k = 8 * mult, iters = 1)
         Dedup.dedupSemantic(e, "embedding", "vec_id", cents, 0.35).count()
       }
-      spark.catalog.clearCache()
     }
 
     // r15: RRF fusion in isolation — the upstream ranked lists are
@@ -630,7 +603,6 @@ object ScaleStress {
           .dropDuplicates("query_id", "doc_id")
         force(graft.llm.Rank.rrfFuse(Seq(ranked(0), ranked(4)), k = 10))
       }
-      spark.catalog.clearCache()
     }
 
     // r15: connected components over a CHAIN-shaped pair graph — the
@@ -650,11 +622,9 @@ object ScaleStress {
         // contraction stopped early
         val comps = labels.select("component").distinct().count()
         val cnt = labels.count()
-        labels.unpersist()
         println(s"  chain x$mult: n=$n rounds=$rounds components=$comps")
         cnt
       }
-      spark.catalog.clearCache()
     }
 
     // r16: star contraction at ADVERSARIAL shapes beyond the chain —
@@ -678,7 +648,6 @@ object ScaleStress {
           Dedup.starContractComponents(intra.unionByName(hub))
         val comps = labels.select("component").distinct().count()
         val cnt = labels.count()
-        labels.unpersist()
         println(s"  star-of-chains x$mult: n=${chains * clen + 1} " +
           s"rounds=$rounds components=$comps")
         cnt
@@ -696,12 +665,10 @@ object ScaleStress {
           Dedup.starContractComponents(s1.unionByName(s2))
         val comps = labels.select("component").distinct().count()
         val cnt = labels.count()
-        labels.unpersist()
         println(s"  two-mega x$mult: n=${2 * half + 2} rounds=$rounds " +
           s"components=$comps")
         cnt
       }
-      spark.catalog.clearCache()
     }
 
     // r16: batched merge training at a production-shaped vocabulary —

@@ -17,9 +17,9 @@ object GraftSqlBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** True when the session holds NO cached/persisted plans — the
-    * cache-hygiene assertion for long-lived sessions: every pipeline
-    * that persists intermediates must release them (the `...Releasable`
-    * contract), so a suite run with no `clearCache` ends empty. */
+    * cache-hygiene assertion for long-lived sessions: every persist a
+    * pipeline makes belongs to a `graft.core.Scope`, so once the scope
+    * is closed a run with no `clearCache` ends empty. */
   def cacheIsEmpty(spark: SparkSession): Boolean =
     spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
 }

@@ -133,45 +133,85 @@ class CacheAndCapSpec extends SparkSpec {
     assert(mirror == got)
   }
 
+  private def rddIds = spark.sparkContext.getPersistentRDDs.keySet
+
   test("LLM cache-holding pipelines leave zero net cached tables") {
     spark.catalog.clearCache()
     assert(GraftSqlBridge.cacheIsEmpty(spark))
     val dir = "/root/testdata/sf0.001"
     // every query that persists intermediates (directly or through the
-    // library) — run WITHOUT any clearCache between them, materialize
-    // fully, and assert the session cache ends empty
+    // library) — each built in its own Scope, materialized fully, and
+    // the scope closed: the session cache must end empty and the
+    // persistent-RDD set where it started
     val names = Seq("llm_ngram_jaccard", "llm_containment",
       "llm_minhash_neardup", "llm_neardup_dedup", "llm_simhash_neardup",
       // GlobalOrder prefix-sum users (ADVICE r06: exclusivePrefix used
-      // to persist with no release handle — these now collectAndRelease)
+      // to persist with no owner)
       "llm_token_budget", "llm_pack_sequences", "llm_score_percentile",
       // gram-cache users (VERDICT r06 §2: single-scan dup spans)
       "llm_dup_spans", "llm_dup_span_removal")
+    val before0 = rddIds
     names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, dir)
-      assert(df.count() >= 0L)
+      assert(scoped(SparkEntry.queries(n)(spark, dir).count()) >= 0L)
     }
     assert(GraftSqlBridge.cacheIsEmpty(spark),
       "a pipeline left a persisted intermediate behind")
-    // library-level Releasable contracts, end to end. The near-dup
-    // stages are localCheckpoints — RDD persists the SQL cache never
-    // sees — so the persistent-RDD set must come back unchanged too.
-    def rddIds = spark.sparkContext.getPersistentRDDs.keySet
+    assert((rddIds -- before0).isEmpty, "a pipeline left RDD blocks behind")
+    // library-level pipelines, end to end. The near-dup stages are
+    // localCheckpoints — RDD persists the SQL cache never sees — so the
+    // persistent-RDD set must come back unchanged too.
     val before = rddIds
-    val (surv, rel) =
-      Dedup.dedupNearSimhashReleasable(docs, "text", "doc_id", maxHamming = 0)
-    assert(surv.count() == 4L) // exact dup 3 collapses; no hamming-0 pair
-    rel()
+    assert(scoped(Dedup.dedupNearSimhash(docs, "text", "doc_id",
+      maxHamming = 0).count()) == 4L) // exact dup 3 collapses
     assert((rddIds -- before).isEmpty, "simhash dedup leaked RDD blocks")
-    val (surv2, rel2) = Dedup.dedupNearMinhashReleasable(docs, "text", "doc_id")
-    assert(surv2.count() == 4L) // jaccard(0,1) = 0.75 < 0.8 → survives
-    rel2()
+    // jaccard(0,1) = 0.75 < 0.8 → survives
+    assert(scoped(Dedup.dedupNearMinhash(docs, "text", "doc_id").count()) == 4L)
     assert((rddIds -- before).isEmpty, "minhash dedup leaked RDD blocks")
-    // every other handle kind: materialize, fire the handle, and the
-    // persistent-RDD set must be back where it started — persists AND
-    // checkpoints (the GlobalOrder input checkpoint, the SuffixDedup
-    // round checkpoint at k = 16)
-    def freesAll(what: String)(
+    // every other pipeline kind: materialize inside a scope, close it,
+    // and the persistent-RDD set must be back where it started —
+    // persists AND checkpoints (the GlobalOrder input checkpoint, the
+    // SuffixDedup round checkpoint at k = 16)
+    def freesAll(what: String)(run: => org.apache.spark.sql.DataFrame)
+        : Unit = {
+      val before = rddIds
+      scoped(run.collect())
+      assert((rddIds -- before).isEmpty, s"$what leaked RDD blocks")
+    }
+    val pair = Seq((0L, 1L)).toDF("ida", "idb")
+    val twice = docs.withColumn("text",
+      concat_ws(" ", col("text"), col("text"))) // ≥ 16 tokens per doc
+    freesAll("span removal")(
+      Spans.removeDuplicatedSpans(docs, "text", "doc_id", 3))
+    freesAll("sequence packing")(
+      Packing.packSequences(docs, "text", "doc_id", ctxLen = 4))
+    freesAll("sequence materialization")(
+      Packing.materializeSequences(
+        docs.select(col("doc_id"),
+          transform(split(col("text"), " "), length(_)).as("ids")),
+        "ids", "doc_id", ctxLen = 4))
+    freesAll("length curriculum")(
+      Packing.lengthCurriculumBatches(docs, "text", "doc_id", batchSize = 2))
+    freesAll("token budget")(
+      Select.takeTokenBudget(docs, "text", "doc_id",
+        col("doc_id").cast("double"), budget = 20L))
+    freesAll("percentile rank")(
+      graft.stats.GlobalOrder.percentileRank(
+        docs.select("doc_id"), Seq(col("doc_id"))))
+    freesAll("suffix dedup k=16")(
+      SuffixDedup.dedupExactSubstrings(twice, "text", "doc_id", 16))
+    freesAll("jaccard verify")(
+      Dedup.verifyJaccard(pair, docs, "text", "doc_id"))
+    freesAll("containment verify")(
+      Dedup.verifyContainment(pair, docs, "text", "doc_id"))
+    val idxPath = "target/test_release_index"
+    Dedup.writeMinhashIndex(
+      docs.filter(col("doc_id") =!= 3L), "text", "doc_id", idxPath)
+    freesAll("index near-dups")(
+      Dedup.nearDupsAgainstIndex(
+        docs.filter(col("doc_id") === 3L), "text", "doc_id",
+        spark.read.parquet(idxPath)))
+    // the three release-handle forms are the scope's close
+    def handleFreesAll(what: String)(
         run: => (org.apache.spark.sql.DataFrame, () => Unit)): Unit = {
       val before = rddIds
       val (out, rel) = run
@@ -179,42 +219,71 @@ class CacheAndCapSpec extends SparkSpec {
       rel()
       assert((rddIds -- before).isEmpty, s"$what leaked RDD blocks")
     }
-    val pair = Seq((0L, 1L)).toDF("ida", "idb")
-    val twice = docs.withColumn("text",
-      concat_ws(" ", col("text"), col("text"))) // ≥ 16 tokens per doc
-    freesAll("span removal")(
+    handleFreesAll("minhash dedup handle")(
+      Dedup.dedupNearMinhashReleasable(docs, "text", "doc_id"))
+    handleFreesAll("span removal handle")(
       Spans.removeDuplicatedSpansReleasable(docs, "text", "doc_id", 3))
-    freesAll("sequence packing")(
+    handleFreesAll("sequence packing handle")(
       Packing.packSequencesReleasable(docs, "text", "doc_id", ctxLen = 4))
-    freesAll("sequence materialization")(
-      Packing.materializeSequencesReleasable(
-        docs.select(col("doc_id"),
-          transform(split(col("text"), " "), length(_)).as("ids")),
-        "ids", "doc_id", ctxLen = 4))
-    freesAll("length curriculum")(
-      Packing.lengthCurriculumBatchesReleasable(
-        docs, "text", "doc_id", batchSize = 2))
-    freesAll("token budget")(
-      Select.takeTokenBudgetReleasable(docs, "text", "doc_id",
-        col("doc_id").cast("double"), budget = 20L))
-    freesAll("percentile rank")(
-      graft.stats.GlobalOrder.percentileRankReleasable(
-        docs.select("doc_id"), Seq(col("doc_id"))))
-    freesAll("suffix dedup k=16")(
-      SuffixDedup.dedupExactSubstringsReleasable(
-        twice, "text", "doc_id", 16))
-    freesAll("jaccard verify")(
-      Dedup.verifyJaccardReleasable(pair, docs, "text", "doc_id"))
-    freesAll("containment verify")(
-      Dedup.verifyContainmentReleasable(pair, docs, "text", "doc_id"))
-    val idxPath = "target/test_release_index"
-    Dedup.writeMinhashIndex(
-      docs.filter(col("doc_id") =!= 3L), "text", "doc_id", idxPath)
-    freesAll("index near-dups")(
-      Dedup.nearDupsAgainstIndexReleasable(
-        docs.filter(col("doc_id") === 3L), "text", "doc_id",
-        spark.read.parquet(idxPath)))
     assert(GraftSqlBridge.cacheIsEmpty(spark))
+  }
+
+  test("prefix caches nobody used to release are owned by the scope") {
+    // packBinsDecreasing, perplexityBuckets and aucExact dropped the
+    // prefix-sum cache handle and relied on a session-wide sweep; in a
+    // scope their range-partitioned persist is freed at close
+    spark.catalog.clearCache()
+    def leavesNothing(what: String)(run: => org.apache.spark.sql.DataFrame)
+        : Unit = {
+      val before = rddIds
+      scoped(run.collect())
+      assert((rddIds -- before).isEmpty, s"$what leaked RDD blocks")
+      assert(GraftSqlBridge.cacheIsEmpty(spark), s"$what left a SQL cache")
+    }
+    leavesNothing("bin packing")(
+      Packing.packBinsDecreasing(docs, "text", "doc_id", ctxLen = 32))
+    leavesNothing("perplexity buckets")(
+      LanguageModel.perplexityBuckets(docs, "text", "doc_id"))
+    leavesNothing("exact AUC")(
+      Train.aucExact(docs.select(col("doc_id").cast("double").as("s"),
+        (col("doc_id") % 2 === 0).as("y")), col("s"), col("y")))
+  }
+
+  test("a cache the caller holds survives the scope") {
+    spark.catalog.clearCache()
+    val pairs = Seq((0L, 1L), (1L, 3L), (2L, 4L)).toDF("ida", "idb")
+      .persist()
+    pairs.count()
+    val held = rddIds
+    def stillCached(): Unit = {
+      assert(pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "the caller's pairs cache was evicted")
+      assert(held.subsetOf(rddIds), "the caller's cached blocks were freed")
+    }
+    // driver union-find path, distributed star contraction, and a
+    // rename-only projection of the caller's frame (which canonicalizes
+    // to the same cached plan)
+    val comps = scoped(Dedup.nearDupComponents(pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(comps == Map(0L -> 0L, 1L -> 0L, 3L -> 0L, 2L -> 2L, 4L -> 2L))
+    stillCached()
+    assert(scoped(Dedup.nearDupComponents(pairs, driverEdgeLimit = 0L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap) == comps)
+    stillCached()
+    scoped(Dedup.nearDupComponents(pairs.toDF("a", "b")).collect())
+    stillCached()
+    // the near-dup pipeline's survivor stage over the same pairs
+    val survivors = scoped(Dedup.nearDupSurvivors(docs, "doc_id", pairs)
+      .select("doc_id").as[Long].collect().sorted.toSeq)
+    assert(survivors == Seq(0L, 2L))
+    stillCached()
+    assert((rddIds -- held).isEmpty, "the scope left its own blocks behind")
+    pairs.unpersist()
+    // outside any scope a pipeline's own early release still frees what
+    // it materialized
+    val fresh = Seq((7L, 8L)).toDF("ida", "idb")
+    assert(Dedup.nearDupComponents(fresh).count() == 2L)
+    assert(fresh.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 
   test("near-dup plans stay flat behind a persisted input") {

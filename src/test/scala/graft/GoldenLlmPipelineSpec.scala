@@ -51,7 +51,7 @@ class GoldenLlmPipelineSpec extends SparkSpec {
     (a ++ b ++ c).toDF("doc_id", "source", "text")
   }
 
-  private def runPipeline(input: DataFrame): Seq[Long] = {
+  private def runPipeline(input: DataFrame): Seq[Long] = scoped {
     // 1. canonicalize (NFC + case fold + whitespace collapse)
     val canon = input.withColumn("text",
       TextAnalysis.normalizeText(col("text")))
@@ -62,8 +62,8 @@ class GoldenLlmPipelineSpec extends SparkSpec {
       .cast("double") / length(col("text"))
     val clean = exact.filter(alpha > 0.5)
     // 4. near-dedup: the appended-word variants fall to their sources
-    val survivors = Dedup.dedupNearMinhashReleasable(clean, "text", "doc_id",
-      jaccardThreshold = 0.5)._1
+    val survivors = Dedup.dedupNearMinhash(clean, "text", "doc_id",
+      jaccardThreshold = 0.5)
     // 5. leakage-controlled split on exact-dup components is already
     //    resolved (exact dedup ran); per-source mixing: drop srcB half
     val mixed = Mixing.mixBySources(survivors, "source", "doc_id",
@@ -74,8 +74,8 @@ class GoldenLlmPipelineSpec extends SparkSpec {
     val kept = mixed.join(ppl.filter(col("ppl") <= 50.0), Seq("doc_id"))
     // 7. token budget: priority = doc_id asc (deterministic), cap well
     //    above the survivor volume so selection is total
-    val fin = Select.takeTokenBudgetReleasable(kept, "text", "doc_id",
-      -col("doc_id").cast("double"), budget = 100000L)._1
+    val fin = Select.takeTokenBudget(kept, "text", "doc_id",
+      -col("doc_id").cast("double"), budget = 100000L)
     fin.select("doc_id").as[Long].collect().toSeq.sorted
   }
 
@@ -93,12 +93,13 @@ class GoldenLlmPipelineSpec extends SparkSpec {
     // the 10 junk docs (130-139) die at the quality gate
     assert(clean.count() == 100)
     assert(clean.filter(col("doc_id").between(130, 139)).count() == 0)
-    val survivors = Dedup.dedupNearMinhashReleasable(clean, "text", "doc_id",
-      jaccardThreshold = 0.5)._1
+    val (survivors, scope) = graft.core.Scope.run(Dedup.dedupNearMinhash(
+      clean, "text", "doc_id", jaccardThreshold = 0.5))
     // the 10 near-dup variants (230-239, one word appended to 0-9)
     // collapse onto their earlier twins
     assert(survivors.filter(col("doc_id").between(230, 239)).count() == 0)
     assert(survivors.count() == 90)
+    scope.close()
     // end-to-end ids
     val ids = runPipeline(corpus)
     assert(ids.nonEmpty && ids.size < 90) // mixing + ppl gates bite

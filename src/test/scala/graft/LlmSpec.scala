@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 import graft.llm._
 
 /** Dedup / similarity / text-analysis / multimodal kernels. */
@@ -44,9 +45,9 @@ class LlmSpec extends SparkSpec {
       .head.getDouble(2)
     assert(est == 1.0) // identical docs → identical signatures
     // exact verify agrees with hand jaccard for (0,1): 6 shared of 8 union
-    val ver = Dedup.verifyJaccardReleasable(
-      Seq((0L, 1L)).toDF("ida", "idb"), docs, "text", "doc_id")._1
-      .head.getDouble(2)
+    val ver = scoped(Dedup.verifyJaccard(
+      Seq((0L, 1L)).toDF("ida", "idb"), docs, "text", "doc_id")
+      .head.getDouble(2))
     assert(math.abs(ver - 6.0 / 8.0) < 1e-12)
   }
 
@@ -57,9 +58,9 @@ class LlmSpec extends SparkSpec {
       (20L, "alpha beta gamma delta epsilon"),
       (21L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
       .toDF("doc_id", "text")
-    val r = Dedup.verifyContainmentReleasable(
-        Seq((20L, 21L)).toDF("ida", "idb"), d, "text", "doc_id")._1
-      .head()
+    val r = scoped(Dedup.verifyContainment(
+        Seq((20L, 21L)).toDF("ida", "idb"), d, "text", "doc_id")
+      .head())
     assert(r.getAs[Double]("containment_a") == 1.0)
     assert(r.getAs[Double]("containment_b") < 0.5)
     assert(r.getAs[Double]("jaccard") < 0.5)
@@ -121,9 +122,9 @@ class LlmSpec extends SparkSpec {
 
   test("end-to-end simhash and embedding dedup keep one copy per cluster") {
     // docs 0 and 3 are identical → hamming 0 → one survivor
-    val surv = Dedup.dedupNearSimhashReleasable(
-        docs, "text", "doc_id", maxHamming = 0)._1
-      .select("doc_id").as[Long].collect().sorted
+    val surv = scoped(Dedup.dedupNearSimhash(
+        docs, "text", "doc_id", maxHamming = 0)
+      .select("doc_id").as[Long].collect().sorted)
     assert(surv.contains(0L) && !surv.contains(3L))
     val embs = Seq(
       (0L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
@@ -136,9 +137,9 @@ class LlmSpec extends SparkSpec {
   }
 
   test("end-to-end minhash dedup keeps one copy per near-dup cluster") {
-    val survivors = Dedup.dedupNearMinhashReleasable(docs, "text", "doc_id",
-        jaccardThreshold = 0.7)._1
-      .select("doc_id").as[Long].collect().sorted
+    val survivors = scoped(Dedup.dedupNearMinhash(docs, "text", "doc_id",
+        jaccardThreshold = 0.7)
+      .select("doc_id").as[Long].collect().sorted)
     // 0 and 3 identical (jaccard 1.0) and 1 near-dup of both (0.75):
     // one survivor (id 0) for {0,1,3}; 2 and 4 untouched
     assert(survivors.toSeq == Seq(0L, 2L, 4L))
@@ -343,11 +344,9 @@ class LlmSpec extends SparkSpec {
     val idx = spark.read.parquet(path)
     assert(idx.columns.toSet == Set("doc_id", "sig", "shingles"))
     assert(idx.count() == 3)
-    val (pairs, release) = Dedup.nearDupsAgainstIndexReleasable(
-      fresh, "text", "doc_id", idx, jaccardThreshold = 0.8)
-    val got = pairs.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    release()
+    val got = scoped(Dedup.nearDupsAgainstIndex(
+        fresh, "text", "doc_id", idx, jaccardThreshold = 0.8)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq)
     // exactly the planted duplicate, at jaccard 1.0; the novel and
     // null-text docs produce nothing
     assert(got == Seq((10L, 1L, 1.0)))
@@ -360,10 +359,9 @@ class LlmSpec extends SparkSpec {
     val day2 = Seq(
       (20L, "a genuinely novel document with no corpus overlap at all"))
       .toDF("doc_id", "text")
-    val (p2, rel2) = Dedup.nearDupsAgainstIndexReleasable(
-      day2, "text", "doc_id", idx2, jaccardThreshold = 0.8)
-    val got2 = p2.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    rel2()
+    val got2 = scoped(Dedup.nearDupsAgainstIndex(
+        day2, "text", "doc_id", idx2, jaccardThreshold = 0.8)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
     assert(got2 == Seq((20L, 11L))) // caught by yesterday's append
   }
 
@@ -399,9 +397,9 @@ class LlmSpec extends SparkSpec {
       (30L, "the quick brown fox jumps over the lazy dog tonight"),
       (31L, "a fourth corpus document which later gets deduped away"))
       .toDF("doc_id", "text")
-    val got = Dedup.nearDupsAgainstIndexReleasable(
-        probe, "text", "doc_id", idx, jaccardThreshold = 0.8)._1
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val got = scoped(Dedup.nearDupsAgainstIndex(
+        probe, "text", "doc_id", idx, jaccardThreshold = 0.8)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
     assert(got == Seq((30L, 1L)))
   }
 
@@ -1049,8 +1047,8 @@ class LlmSpec extends SparkSpec {
       .withColumn("text",
         concat_ws(" ", transform(sequence(lit(0), pmod(col("doc_id"), lit(7))),
           i => concat(lit("w"), i))))
-    val packed = Packing.packSequencesReleasable(many, "text", "doc_id",
-      ctxLen = 16, numParts = 8)._1
+    val (packed, scope) = Scope.run(Packing.packSequences(many, "text",
+      "doc_id", ctxLen = 16, numParts = 8))
     val global = org.apache.spark.sql.expressions.Window.orderBy("doc_id")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
@@ -1064,13 +1062,15 @@ class LlmSpec extends SparkSpec {
     assert(packed.exceptAll(expect).isEmpty && expect.exceptAll(packed).isEmpty)
     // more partitions than rows → empty range partitions must not
     // poison the offsets map
-    val sparse = Packing.packSequencesReleasable(many.limit(10), "text",
-      "doc_id", ctxLen = 16, numParts = 32)._1
+    val (sparse, sparseScope) = Scope.run(Packing.packSequences(
+      many.limit(10), "text", "doc_id", ctxLen = 16, numParts = 32))
     assert(sparse.filter(col("token_offset").isNull).count() == 0)
     assert(sparse.count() == 10)
+    sparseScope.close()
     // every sequence except the last is exactly full
     val fill = Packing.sequenceFill(packed)
     assert(fill.agg(sum("n_docs_starting")).head.getLong(0) == 200L)
+    scope.close()
   }
 
   test("ccnetParagraphs: paragraph-grain bucketing drops tail paras " +
@@ -1608,12 +1608,11 @@ class LlmSpec extends SparkSpec {
     val docs = Seq(1, 2, 3, 4, 7, 8, 9).zipWithIndex.map {
       case (k, i) => (i.toLong, words(k))
     }.toDF("doc_id", "text")
-    val (out, release) = Packing.lengthCurriculumBatchesReleasable(
-      docs, "text", "doc_id", batchSize = 2)
-    val got = out.collect().map(r => r.getLong(0) ->
-      (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-        r.getLong(5)))
-    release()
+    val got = scoped(Packing.lengthCurriculumBatches(
+        docs, "text", "doc_id", batchSize = 2)
+      .collect().map(r => r.getLong(0) ->
+        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
+          r.getLong(5))))
     val byId = got.toMap
     assert(byId(0L)._2 == 0L) // 1 word  → bucket 0
     assert(byId(1L)._2 == 1L && byId(2L)._2 == 1L) // 2-3 words
@@ -1630,18 +1629,16 @@ class LlmSpec extends SparkSpec {
     // null text → 0 tokens → bucket 0
     val withNull = docs.unionByName(
       Seq((99L, null.asInstanceOf[String])).toDF("doc_id", "text"))
-    val (out2, rel2) = Packing.lengthCurriculumBatchesReleasable(
-      withNull, "text", "doc_id", 2)
-    val nullRow = out2.filter(col("doc_id") === 99L).collect()(0)
-    rel2()
+    val nullRow = scoped(Packing.lengthCurriculumBatches(
+        withNull, "text", "doc_id", 2)
+      .filter(col("doc_id") === 99L).collect()(0))
     assert(nullRow.getLong(1) == 0L && nullRow.getLong(2) == 0L)
     // stable under repartitioning (hash order, GlobalOrder ranks)
-    val (out3, rel3) = Packing.lengthCurriculumBatchesReleasable(
-      docs.repartition(5), "text", "doc_id", 2)
-    val again = out3.collect().map(r => r.getLong(0) ->
-      (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-        r.getLong(5)))
-    rel3()
+    val again = scoped(Packing.lengthCurriculumBatches(
+        docs.repartition(5), "text", "doc_id", 2)
+      .collect().map(r => r.getLong(0) ->
+        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
+          r.getLong(5))))
     assert(again.toMap == byId)
   }
 
@@ -2329,18 +2326,16 @@ class LlmSpec extends SparkSpec {
       (4L, "m m m m m m"),
       (5L, null.asInstanceOf[String]),
       (6L, "")).toDF("doc_id", "text")
-    val (spans, rel) = SuffixDedup.duplicatedSuffixSpansReleasable(
-      docs, "text", "doc_id", 4)
-    val got = spans.orderBy("doc_id", "span_start").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    rel()
+    val got = scoped(SuffixDedup.duplicatedSuffixSpans(
+        docs, "text", "doc_id", 4)
+      .orderBy("doc_id", "span_start").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))))
     assert(got.toSeq == Seq((1L, 0L, 7L, 4L), (2L, 2L, 9L, 4L),
       (4L, 0L, 6L, 3L)))
-    val (removed, rel2) = SuffixDedup.dedupExactSubstringsReleasable(
-      docs, "text", "doc_id", 4)
-    val txts = removed.orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    rel2()
+    val txts = scoped(SuffixDedup.dedupExactSubstrings(
+        docs, "text", "doc_id", 4)
+      .orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getString(1))))
     assert(txts.toSeq == Seq((1L, "h i j"), (2L, "x y z"),
       (3L, "p q r s"), (4L, ""), (5L, null), (6L, "")))
     // the mechanism pin: on corpora small enough that 64-bit gram
@@ -2357,18 +2352,15 @@ class LlmSpec extends SparkSpec {
           .mkString(" "))
       }.toDF("doc_id", "text")
       Seq(1, 3, 8).foreach { k =>
-        val (a1, r1) = SuffixDedup.duplicatedSuffixSpansReleasable(
-          corpus, "text", "doc_id", k)
-        val s1 = a1.orderBy("doc_id", "span_start").collect()
+        val s1 = scoped(SuffixDedup.duplicatedSuffixSpans(
+            corpus, "text", "doc_id", k)
+          .orderBy("doc_id", "span_start").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-            r.getLong(3))).toSeq
-        r1()
-        val (a2, r2) = Spans.duplicatedSpansReleasable(
-          corpus, "text", "doc_id", k)
-        val s2 = a2.orderBy("doc_id", "span_start").collect()
+            r.getLong(3))).toSeq)
+        val s2 = scoped(Spans.duplicatedSpans(corpus, "text", "doc_id", k)
+          .orderBy("doc_id", "span_start").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-            r.getLong(3))).toSeq
-        r2()
+            r.getLong(3))).toSeq)
         assert(s1 == s2, s"trial $trial k=$k: suffix != gram-hash")
       }
     }
@@ -2400,13 +2392,10 @@ class LlmSpec extends SparkSpec {
     val docsS = Seq(("1", "a b c d e f"), ("2", "z a b c d e f"),
       ("3", "q r s t")).toDF("doc_id", "text")
     def spansOf(d: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] = {
-      val (sp, rel) = SuffixDedup.duplicatedSuffixSpansReleasable(
-        d, "text", "doc_id", 3)
-      val got = sp.orderBy("doc_id", "span_start")
+      scoped(SuffixDedup.duplicatedSuffixSpans(d, "text", "doc_id", 3)
+        .orderBy("doc_id", "span_start")
         .select(col("span_start"), col("span_end")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-      rel()
-      got
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq)
     }
     assert(spansOf(docsL) == spansOf(docsS),
       "string-id fallback diverges from the long-id path")
@@ -2581,19 +2570,19 @@ class LlmSpec extends SparkSpec {
       (3L, "xx yy"), // shorter than k → no rows
       (4L, null.asInstanceOf[String])
     ).toDF("doc_id", "text")
-    val got = Spans.duplicatedSpansReleasable(d, "text", "doc_id", 3)._1
+    val got = scoped(Spans.duplicatedSpans(d, "text", "doc_id", 3)
       .select(col("doc_id"), col("span_start").cast("long"),
         col("span_end").cast("long"), col("n_grams"))
-      .as[(Long, Long, Long, Long)].collect().sorted.toSeq
+      .as[(Long, Long, Long, Long)].collect().sorted.toSeq)
     assert(got == Seq(
       (0L, 0L, 4L, 2L), (0L, 8L, 12L, 2L),
       (1L, 0L, 8L, 6L)))
     // the removal action: spanned tokens cut, survivors rejoined;
     // fully-duplicated doc → empty string; span-free docs keep their
     // text byte-for-byte; null text stays null
-    val rem = Spans.removeDuplicatedSpansReleasable(d, "text", "doc_id", 3)._1
+    val rem = scoped(Spans.removeDuplicatedSpans(d, "text", "doc_id", 3)
       .select("doc_id", "text").as[(Long, Option[String])]
-      .collect().sortBy(_._1).toSeq
+      .collect().sortBy(_._1).toSeq)
     assert(rem == Seq(
       (0L, Some("M N O P")),
       (1L, Some("")),
@@ -2640,10 +2629,8 @@ class LlmSpec extends SparkSpec {
           .mkString(" "))
       }.toDF("doc_id", "text")
       Seq(1, 3, 8).foreach { k =>
-        val (sp, rel) = Spans.duplicatedSpansReleasable(
-          corpus, "text", "doc_id", k)
-        val fused = rows(sp)
-        rel()
+        val fused =
+          scoped(rows(Spans.duplicatedSpans(corpus, "text", "doc_id", k)))
         val grams = composedGrams(corpus, Seq("doc_id"), k)
         val hot = grams.groupBy("__gh").agg(count(lit(1)).as("__c"))
           .filter(col("__c") > 1).select("__gh")
@@ -2733,23 +2720,23 @@ class LlmSpec extends SparkSpec {
     import graft.stats.GlobalOrder
     val d = Seq((0L, 10.0), (1L, 5.0), (2L, 5.0), (3L, 20.0))
       .toDF("id", "s")
-    val r = GlobalOrder.percentileRankReleasable(d, Seq(col("s"), col("id")),
-        numParts = 3)._1
+    val r = scoped(GlobalOrder.percentileRank(d, Seq(col("s"), col("id")),
+        numParts = 3)
       .select("id", "rank", "percentile")
-      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq)
     // order (s, id): 1(5), 2(5 — tie broken by id), 0(10), 3(20)
     assert(r == Seq((0L, 2L, 2.0 / 3), (1L, 0L, 0.0), (2L, 1L, 1.0 / 3),
       (3L, 3L, 1.0)))
     // the decomposition reproduces the single-partition global window
-    val one = GlobalOrder.percentileRankReleasable(d, Seq(col("s"), col("id")),
-        numParts = 1)._1
+    val one = scoped(GlobalOrder.percentileRank(d, Seq(col("s"), col("id")),
+        numParts = 1)
       .select("id", "rank", "percentile")
-      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq)
     assert(one == r)
     // single-row corpus: percentile 0, no division by zero
-    val s1 = GlobalOrder.percentileRankReleasable(
-        Seq((9L, 1.0)).toDF("id", "s"), Seq(col("s"), col("id")))._1
-      .select("percentile").as[Double].head()
+    val s1 = scoped(GlobalOrder.percentileRank(
+        Seq((9L, 1.0)).toDF("id", "s"), Seq(col("s"), col("id")))
+      .select("percentile").as[Double].head())
     assert(s1 == 0.0)
   }
 
@@ -2916,23 +2903,22 @@ class LlmSpec extends SparkSpec {
     ).toDF("doc_id", "text", "prio")
     // priority order: 3(0 tok), 0(3), 1(2), 2(4), 4(1);
     // tokens_before:  0,        0,    3,    5,    9
-    val sel = Select.takeTokenBudgetReleasable(d, "text", "doc_id", col("prio"),
-        budget = 6L, numParts = 3)._1
+    val sel = scoped(Select.takeTokenBudget(d, "text", "doc_id", col("prio"),
+        budget = 6L, numParts = 3)
       .select("doc_id", "n_tokens", "tokens_before")
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq)
     // doc 2 straddles (5 < 6 but 5+4 > 6) → INCLUDED; doc 4 (9 ≥ 6) out
     assert(sel == Seq((0L, 3L, 0L), (1L, 2L, 3L), (2L, 4L, 5L),
       (3L, 0L, 0L)))
     // budget beyond the corpus: everything selected
-    val all = Select.takeTokenBudgetReleasable(d, "text", "doc_id", col("prio"),
-      budget = 100L, numParts = 2)._1
-    assert(all.count() == 5)
+    assert(scoped(Select.takeTokenBudget(d, "text", "doc_id", col("prio"),
+      budget = 100L, numParts = 2).count()) == 5)
     // partition-count invariance (the pruning + offsets decomposition
     // reproduces the single-partition global window exactly)
-    val one = Select.takeTokenBudgetReleasable(d, "text", "doc_id", col("prio"),
-        budget = 6L, numParts = 1)._1
+    val one = scoped(Select.takeTokenBudget(d, "text", "doc_id", col("prio"),
+        budget = 6L, numParts = 1)
       .select("doc_id", "n_tokens", "tokens_before")
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq)
     assert(one == sel)
   }
 

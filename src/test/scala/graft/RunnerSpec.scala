@@ -2,6 +2,7 @@ package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.GraftSqlBridge
 
 /** The single session factory and the single query runner: the settings
   * every session gets from [[GraftSession]], the plans
@@ -20,17 +21,59 @@ class RunnerSpec extends SparkSpec {
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
   }
 
-  test("explain capture sees every plan of a collect-and-release query") {
-    // llm_pack_sequences builds its output on the driver
-    // (collectAndRelease), so its returned frame's own plan is only a
-    // LocalTableScan; the pipeline's work is in the plans executed
-    // before it
+  test("explain capture sees every plan a query executes") {
+    // llm_pack_sequences fills its prefix-sum cache (the per-partition
+    // partials collect) before it returns a frame, so part of the
+    // pipeline's work is in plans executed before the final write
     val (outcome, plans) =
       tools.Run.capturePlans(spark, sf, "llm_pack_sequences")
     assert(outcome.isRight, outcome)
     assert(plans.size > 1, plans.map(_._1))
     assert(plans.exists { case (_, txt) =>
       txt.contains("Exchange") || txt.contains("Aggregate") })
+  }
+
+  test("every registry query runs through Run.once and leaves nothing") {
+    // an empty SQL cache first, so the runner's cache check is in force
+    spark.catalog.clearCache()
+    val failed = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      tools.Run.once(spark, sf, name).left.toOption
+        .map(e => s"$name: ${e.getMessage}")
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
+    assert(GraftSqlBridge.cacheIsEmpty(spark))
+  }
+
+  test("a query that materializes outside its scope fails the run") {
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val rdds0 = sc.getPersistentRDDs.keySet
+    val filled = spark.range(10).toDF("id")
+    val lazyOnly = spark.range(20).toDF("id")
+    def leaks(body: => org.apache.spark.sql.DataFrame): String =
+      tools.Run.scoped(spark)(body)(_.count()) match {
+        case Left(e) => e.getMessage
+        case Right(n) => fail(s"a leaking query ran clean ($n rows)")
+      }
+    try {
+      assert(leaks { filled.persist(); filled.count(); filled }
+        .contains("persisted RDDs"))
+      assert(leaks(spark.range(5).toDF("id").localCheckpoint())
+        .contains("persisted RDDs"))
+      // persisted but never filled: only the SQL cache shows it
+      spark.catalog.clearCache()
+      assert(leaks { lazyOnly.persist(); spark.range(3).toDF("id") }
+        .contains("SQL cache"))
+      // the same bodies through Scope run clean
+      spark.catalog.clearCache()
+      assert(tools.Run.scoped(spark)(
+        graft.core.Scope.persist(spark.range(10).toDF("id")))(_.count()) ==
+        Right(10L))
+    } finally {
+      spark.catalog.clearCache()
+      (sc.getPersistentRDDs.keySet -- rdds0)
+        .foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+    }
   }
 
   test("a filtered Verify writes only the filtered oracle entries") {
