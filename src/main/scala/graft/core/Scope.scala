@@ -26,7 +26,10 @@ import org.apache.spark.storage.StorageLevel
   * A scope never frees a frame it did not materialize: a `persist` of a
   * plan that is already cached (a caller's cache, possibly through a
   * rename-only projection, which canonicalizes to the same plan) is not
-  * owned, so neither `release` nor `close` can evict it.
+  * owned, so neither `release` nor `close` can evict it. Each `persist`
+  * the scope owns counts, and `release` takes one back: a pipeline that
+  * persists and releases a frame its caller persisted in the same scope
+  * leaves the caller's persist until the caller's release or `close`.
   *
   * Why the runner closes a scope per query: `spark.catalog.clearCache()`
   * drops SQL-cached tables but never RDD-level persists, and every
@@ -45,9 +48,9 @@ import org.apache.spark.storage.StorageLevel
   * written or collected. Frees are non-blocking.
   */
 final class Scope private () extends AutoCloseable {
-  // frame → the kinds (Scope.Checkpointed | Scope.Persisted) this scope
-  // materialized it as, in creation order; a checkpoint the scope then
-  // persisted is both
+  // frame → what this scope holds of it, in creation order:
+  // Scope.Checkpointed if it made the frame's checkpoint, plus
+  // Scope.Persisted for each of its persists not yet released
   private val owned = mutable.LinkedHashMap[DataFrame, Int]()
 
   def close(): Unit = {
@@ -76,29 +79,27 @@ object Scope {
     own(df.localCheckpoint(), Checkpointed)
 
   /** Lazy `MEMORY_AND_DISK` persist of `df`, owned by the current scope
-    * unless its plan was already cached. */
+    * unless its plan was already cached by someone else. */
   def persist(df: DataFrame): DataFrame = {
-    val fresh = df.storageLevel == StorageLevel.NONE
+    val counted = df.storageLevel == StorageLevel.NONE || kindsOf(df) >= Persisted
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if (fresh) own(p, Persisted) else p
+    if (counted) own(p, Persisted) else p
   }
 
-  /** Free `df`'s latest materialization now, at a mid-pipeline point
-    * where no later plan reads it, if the current scope (or, outside
-    * any scope, the library) made it; otherwise do nothing. A persist
-    * made over the scope's own checkpoint of `df` is freed first; the
-    * checkpoint stays until its own release or `close`. */
+  /** Take back `df`'s latest materialization by the current scope (or,
+    * outside any scope, the library), at a mid-pipeline point where no
+    * later plan reads it, and free it unless another persist of `df` is
+    * still held; otherwise do nothing. Persists go before the scope's
+    * own checkpoint of `df`, which stays until its release or `close`. */
   def release(df: DataFrame): Unit = {
     val kinds = kindsOf(df)
-    val latest = if ((kinds & Persisted) != 0) Persisted else kinds
-    if (latest != 0) {
-      free(df, latest)
-      record(df, kinds & ~latest)
-    }
+    val latest = if (kinds >= Persisted) Persisted else kinds
+    if (latest != 0 && kinds - latest < Persisted) free(df, latest)
+    record(df, kinds - latest)
   }
 
   private def own(df: DataFrame, kind: Int): DataFrame = {
-    record(df, kindsOf(df) | kind)
+    record(df, kindsOf(df) + kind)
     df
   }
 
@@ -115,7 +116,7 @@ object Scope {
   // a checkpointed frame's plan is a LogicalRDD leaf over the persisted
   // RDD, which `Dataset.unpersist` never touches
   private def free(df: DataFrame, kinds: Int): Unit = {
-    if ((kinds & Persisted) != 0) df.unpersist(blocking = false)
+    if (kinds >= Persisted) df.unpersist(blocking = false)
     if ((kinds & Checkpointed) != 0) df.queryExecution.logical.foreach {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ =>

@@ -507,14 +507,16 @@ object Dedup {
     */
   def nearDupComponents(
       pairs: DataFrame,
-      maxIters: Int = 64,
-      driverEdgeLimit: Long = 5000000L): DataFrame =
+      maxIters: Int = ComponentMaxIters,
+      driverEdgeLimit: Long = ComponentDriverEdgeLimit): DataFrame =
     components(pairs, maxIters, driverEdgeLimit)._1
+  private val ComponentMaxIters = 64
+  private val ComponentDriverEdgeLimit = 5000000L
 
   /** [[nearDupComponents]], and whether the distributed fallback built
     * them (then they are a persisted frame of the current [[Scope]]). */
-  private def components(pairs: DataFrame, maxIters: Int,
-      driverEdgeLimit: Long): (DataFrame, Boolean) = {
+  private def components(pairs: DataFrame, maxIters: Int = ComponentMaxIters,
+      driverEdgeLimit: Long = ComponentDriverEdgeLimit): (DataFrame, Boolean) = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val spark = pairs.sparkSession
     val ca = pairs.columns(0)
@@ -523,8 +525,8 @@ object Dedup {
     val integralId =
       idType == LongType || idType == IntegerType ||
         idType == ShortType || idType == ByteType
-    // Persist the caller's frame itself; a cache the caller already
-    // holds on it is not the scope's, so releasing it keeps the caller's
+    // Persist the caller's frame itself; releasing it takes back only
+    // this persist, never a cache the caller already holds on it
     Scope.persist(pairs)
     val nEdges = pairs.count()
     if (integralId && nEdges <= driverEdgeLimit) {
@@ -708,7 +710,7 @@ object Dedup {
       df: DataFrame,
       idCol: String,
       pairs: DataFrame): DataFrame = {
-    val (comps, distributed) = components(pairs, 64, 5000000L)
+    val (comps, distributed) = components(pairs)
     val drop0 = comps
       .filter(col("id") =!= col("component"))
       .select(col("id").as(idCol))

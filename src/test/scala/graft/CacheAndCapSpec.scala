@@ -286,6 +286,42 @@ class CacheAndCapSpec extends SparkSpec {
     assert(fresh.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 
+  test("a persist the caller made in the same scope survives the pipeline") {
+    // the caller's pairs are a scope persist over a scope checkpoint it
+    // has already released, so a pairs frame freed by the pipeline would
+    // recompute from missing checkpoint blocks
+    spark.catalog.clearCache()
+    val before = rddIds
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    val (_, scope) = graft.core.Scope.run {
+      val base = graft.core.Scope.checkpoint(
+        Seq((0L, 1L), (1L, 3L), (2L, 4L), (5L, 6L)).toDF("ida", "idb"))
+      val pairs = graft.core.Scope.persist(base.filter(col("ida") < 5L))
+      assert(pairs.count() == 3L)
+      graft.core.Scope.release(base)
+      val comps = Dedup.nearDupComponents(pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(comps == Map(0L -> 0L, 1L -> 0L, 3L -> 0L, 2L -> 2L, 4L -> 2L))
+      assert(pairs.storageLevel != none, "union-find path freed the caller's persist")
+      assert(Dedup.nearDupComponents(pairs, driverEdgeLimit = 0L)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == comps)
+      assert(pairs.storageLevel != none, "star contraction freed the caller's persist")
+      assert(Dedup.nearDupSurvivors(docs, "doc_id", pairs)
+        .select("doc_id").as[Long].collect().sorted.toSeq == Seq(0L, 2L))
+      assert(pairs.storageLevel != none, "survivors freed the caller's persist")
+      // the caller's own release is the one that frees it
+      graft.core.Scope.persist(pairs)
+      graft.core.Scope.release(pairs)
+      assert(pairs.storageLevel != none, "a nested persist/release freed it")
+      graft.core.Scope.release(pairs)
+      assert(pairs.storageLevel == none, "the caller's release kept it")
+      graft.core.Scope.persist(pairs)
+    }
+    scope.close()
+    assert((rddIds -- before).isEmpty, "the scope left its own blocks behind")
+    assert(GraftSqlBridge.cacheIsEmpty(spark))
+  }
+
   test("near-dup plans stay flat behind a persisted input") {
     // A persisted stage nests the cached plans of the stages it reads
     // inside its own InMemoryRelation; with two branches reading each
