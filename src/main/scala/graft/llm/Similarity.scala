@@ -401,7 +401,8 @@ object Similarity {
     * k − nprobe lists' files are never opened — the probe reads
     * ~nprobe/k of the corpus BY I/O, not just by filter. (Plan witness:
     * `PartitionFilters: [ivf_list IN (...)]` on the scan —
-    * PlanAudit asserts it; at 100 TB pair with list-size-aware
+    * `RunnerSpec`'s plan gate asserts it for llm_ann_ivf_persisted;
+    * at 100 TB pair with list-size-aware
     * `maxRecordsPerFile` so each list directory splits into
     * cluster-parallel files.) */
   def writeIvfIndex(

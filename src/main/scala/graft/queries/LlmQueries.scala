@@ -2671,7 +2671,8 @@ object LlmQueries {
     // auto-broadcasting a small model). The SHARED oracle proves the
     // two physical shapes agree bit-for-bit — integer micro-nats make
     // the per-doc sum partition-invariant, which is the whole point
-    // of the micro-nat contract. PlanAudit pins the join shape
+    // of the micro-nat contract. RunnerSpec's plan gate pins the join
+    // shape
     "llm_lm_shuffle" -> ((s, dir) =>
       LanguageModel.bigramPerplexity(t(s, dir, "documents"),
           "text", "doc_id", broadcastModel = false)
@@ -3603,7 +3604,7 @@ object LlmQueries {
     // corpus is WRITTEN as parquet partitioned by ivf_list
     // (Similarity.writeIvfIndex — the ingest-time layout) and the
     // probe runs against the read-back index as a PARTITION-PRUNED
-    // scan (PlanAudit asserts PartitionFilters on the scan). Same
+    // scan (RunnerSpec's plan gate asserts its PartitionFilters). Same
     // answers as llm_ann_ivf — the shared oracle gates both.
     "llm_ann_ivf_persisted" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
@@ -3882,8 +3883,9 @@ object LlmQueries {
     // binary sketch column you can store), unioned with hll_union_agg
     // and estimated — the distinct-count twin of llm_sketch_merge.
     // DataSketches HLL is EXACT below its list/set-mode threshold
-    // (verified by tools/HllProbe: direct == union == exact here), so
-    // the oracle gates true per-source distincts; at real vocabulary
+    // here, so the oracle below compares the unioned estimate with the
+    // exact per-source count(DISTINCT term) (llm_sketch_union in
+    // `oracle`) at sf0.01 and sf0.1; at real vocabulary
     // scale the ±rsd estimate bound governs instead.
     "llm_sketch_union" -> ((s, dir) => {
       val toks = t(s, dir, "documents").filter(col("text").isNotNull)

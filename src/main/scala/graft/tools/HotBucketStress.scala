@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.llm.{Dedup, PairExpansion, Similarity}
+import ScaleStress.time
 
 /** Hot-bucket stress for the EMBEDDING-space pair generators (dev
   * tool, r09 — VERDICT r08 next-round 1): every vector is forced onto
@@ -21,12 +21,6 @@ object HotBucketStress {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.GraftSession.create()
-
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-    }
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val nEmb = emb.count()
@@ -63,7 +57,6 @@ object HotBucketStress {
         Dedup.dedupSemantic(e, "embedding", "vec_id", cents, 0.99,
           maxCluster = cap).count()
       }
-      spark.catalog.clearCache()
     }
 
     // at-cap throughput: cap == bucket size at ×4 (8k members → 32M

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Temporal
+import ScaleStress.{force, time}
 
 /** Bucket-width sweep for [[Temporal.intervalJoinAgg]] on the hot
   * stress axis (dev tool): boundary row-level work ∝ bucketWidth while
@@ -18,11 +18,6 @@ object IntervalAggSweep {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.getOrElse("64")
     val spark = graft.GraftSession.create()
-    def force(df: DataFrame): Long =
-      df.agg(
-        sum(pmod(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)),
-          lit(1000000007L))).as("f"),
-        count(lit(1)).as("n")).head().getLong(1)
     val usPerDay = 86400000000L
     val ev = spark.read.parquet(s"target/temporal_stress/ev_hot_x$mult")
     val signups = ev.filter(col("event_type") === "signup")
@@ -34,15 +29,11 @@ object IntervalAggSweep {
     val widths = Seq(
       "6h" -> usPerDay / 4, "1d" -> usPerDay, "3.5d" -> 7 * usPerDay / 2,
       "7d" -> 7 * usPerDay, "14d" -> 14 * usPerDay)
-    for ((label, w) <- widths) {
-      val t0 = System.nanoTime()
-      val n = force(
+    for ((label, w) <- widths)
+      time(s"intervalagg_hot${"x"}$mult w=$label")(force(
         Temporal.intervalJoinAgg(purchases, "us", Nil, signups,
             "lo", "hi", bucketWidth = w, keys = Seq("user_id"))
-          .select(col("signup_id"), col("n")))
-      println(f"intervalagg_hot${"x"}$mult w=$label: " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-    }
+          .select(col("signup_id"), col("n"))))
     spark.stop()
   }
 }

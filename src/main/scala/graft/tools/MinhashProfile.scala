@@ -4,8 +4,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Scope
 import graft.llm.Dedup
+import ScaleStress.{force, time}
 
-/** Stage-by-stage timing of the near-dup pipelines (dev tool). */
+/** Stage-by-stage timing of the near-dup pipelines (dev tool), each
+  * stage timed by `ScaleStress.time`. */
 object MinhashProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -16,20 +18,12 @@ object MinhashProfile {
     spark.stop()
   }
 
-  private def time[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    r
-  }
-
   private def profile(d: DataFrame): Unit = {
     val sigs = Scope.persist(
       Dedup.minhashSignatures(d, "text", "doc_id", k = 64))
     time("signatures")(sigs.count())
     val cands = Scope.persist(Dedup.lshCandidates(sigs, "doc_id", 16, 4))
-    val nc = time("candidates")(cands.count())
-    println(s"candidate pairs: $nc")
+    time("candidates")(cands.count())
     time("estimate")(
       Dedup.estimateJaccard(cands, sigs, "doc_id").count())
     val (verifiedAll, shingles) =
@@ -45,9 +39,8 @@ object MinhashProfile {
     time("end-to-end dedupNearMinhash")(
       Dedup.dedupNearMinhash(d, "text", "doc_id", 0.8).count())
 
-    val sh = time("simhash signatures")(
-      Scope.persist(Dedup.simhash(d, "text", "doc_id")))
-    sh.count()
+    val sh = Scope.persist(Dedup.simhash(d, "text", "doc_id"))
+    time("simhash signatures")(sh.count())
     time("simhash candidates")(
       Dedup.simhashCandidates(sh, "doc_id", 3).count())
     time("simhash end-to-end (as in bench query)")(
@@ -58,28 +51,27 @@ object MinhashProfile {
     // ---- signature-stage anatomy: scan / tokens / shingles / minhash
     val fanned = Scope.persist(graft.core.FanOut.cpuBound(d))
     time("  [anat] fanned text materialize")(fanned.count())
-    time("  [anat] tokens only")(
-      fanned.select(sum(size(graft.llm.TextAnalysis.tokens(col("text")))))
-        .head())
-    time("  [anat] ngrams (no distinct)")(
-      fanned.select(sum(size(graft.llm.TextAnalysis.ngrams(col("text"), 3))))
-        .head())
-    time("  [anat] shingles (distinct)")(
-      fanned.select(sum(size(Dedup.shingles(col("text"), 3)))).head())
-    time("  [anat] minhash over shingles")(
+    // each anatomy stage is a one-row aggregate, forced in one job
+    time("  [anat] tokens only")(force(fanned.select(
+      sum(size(graft.llm.TextAnalysis.tokens(col("text")))).as("v"))))
+    time("  [anat] ngrams (no distinct)")(force(fanned.select(
+      sum(size(graft.llm.TextAnalysis.ngrams(col("text"), 3))).as("v"))))
+    time("  [anat] shingles (distinct)")(force(
+      fanned.select(sum(size(Dedup.shingles(col("text"), 3))).as("v"))))
+    time("  [anat] minhash over shingles")(force(
       fanned.select(graft.functions.MinHashSig(
         Dedup.shingles(col("text"), 3), 64).as("sig"))
-        .select(max(element_at(col("sig"), 1))).head())
+        .select(max(element_at(col("sig"), 1)).as("v"))))
     // fused single-pass kernels (what the pipelines actually run)
-    time("  [anat] fused minhash_text")(
+    time("  [anat] fused minhash_text")(force(
       fanned.select(graft.functions.MinHashTextSig(col("text"), 64, 3)
         .as("sig"))
-        .select(max(element_at(col("sig"), 1))).head())
-    time("  [anat] fused shingle_hashes")(
+        .select(max(element_at(col("sig"), 1)).as("v"))))
+    time("  [anat] fused shingle_hashes")(force(
       fanned.select(sum(size(
-        graft.functions.ShingleHashes(col("text"), 3)))).head())
-    time("  [anat] fused simhash_text")(
-      fanned.select(max(graft.functions.SimHashText(col("text")))).head())
+        graft.functions.ShingleHashes(col("text"), 3))).as("v"))))
+    time("  [anat] fused simhash_text")(force(
+      fanned.select(max(graft.functions.SimHashText(col("text"))).as("v"))))
     Scope.release(fanned)
 
     // ---- lshCandidates anatomy over the cached signature table

@@ -1,8 +1,10 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -18,10 +20,12 @@ import graft.core.Scope
   *     at plan time on every run), strictly alternating A,B,A,B so
   *     ambient load hits both equally (default 7 pairs after one
   *     warm-up each);
-  *   - `explain <tag> <suffix> <q> [q ...]`: runs each query once and
-  *     writes EVERY plan it executed, in order — checkpoints, the
-  *     counts that fill persists, driver collects and the final write —
-  *     to `plans/<tag>/<q>_<suffix>_<i>_<action>.txt`.
+  *   - `explain <tag> <suffix> <q> [q ...]`: runs each query once
+  *     through [[capture]], prints its job count and writes EVERY plan
+  *     it executed, in order, to
+  *     `plans/<tag>/<q>_<suffix>_<i>_<action>.txt`. `RunnerSpec`
+  *     checks the same record of every registry query against its
+  *     plan rules and job ceiling.
   * Usage: `sbt "runMain graft.tools.Run <mode> ..."`;
   * SPARK_GRAFT_SF_DIR overrides the sf0.1 default.
   */
@@ -70,29 +74,41 @@ object Run {
     }
   }
 
-  /** [[once]] with a `QueryExecutionListener` registered: the outcome
-    * and (action, formatted executed plan) of every query execution
-    * the run made, in order. */
-  def capturePlans(spark: SparkSession, sfDir: String, name: String)
-      : (Either[Throwable, Double], Seq[(String, String)]) = {
-    val plans = mutable.ArrayBuffer[(String, String)]()
-    def record(action: String, qe: QueryExecution): Unit = {
-      val txt = qe.explainString(FormattedMode)
-      plans.synchronized(plans += action -> txt)
-    }
-    val listener = new QueryExecutionListener {
+  /** `body`'s result, with the (action, query execution) of every plan
+    * it executed, in order — checkpoints, the counts that fill persists,
+    * driver collects and the final write — and the number of Spark jobs
+    * it started. `capture(spark)(once(spark, sfDir, q))` is query `q`'s
+    * full execution record. */
+  def capture[A](spark: SparkSession)(body: => A)
+      : (A, Seq[(String, QueryExecution)], Int) = {
+    val sc = spark.sparkContext
+    val plans = mutable.ArrayBuffer[(String, QueryExecution)]()
+    def record(action: String, qe: QueryExecution): Unit =
+      plans.synchronized(plans += action -> qe)
+    val queries = new QueryExecutionListener {
       def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
         record(action, qe)
       def onFailure(action: String, qe: QueryExecution,
           e: Exception): Unit = record(action, qe)
     }
-    spark.listenerManager.register(listener)
+    val jobs = new AtomicInteger()
+    val jobStarts = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // listener callbacks arrive on the asynchronous listener bus: drain
+    // it before (so no earlier job is counted) and after the body
+    GraftListenerBus.drain(sc)
+    spark.listenerManager.register(queries)
+    sc.addSparkListener(jobStarts)
     try {
-      val outcome = once(spark, sfDir, name)
-      // listener callbacks arrive on the asynchronous listener bus
-      GraftListenerBus.drain(spark.sparkContext)
-      (outcome, plans.synchronized(plans.toSeq))
-    } finally spark.listenerManager.unregister(listener)
+      val a = body
+      GraftListenerBus.drain(sc)
+      (a, plans.synchronized(plans.toSeq), jobs.get)
+    } finally {
+      sc.removeSparkListener(jobStarts)
+      spark.listenerManager.unregister(queries)
+    }
   }
 
   private def summary(rs: Seq[Either[Throwable, Double]]): String =
@@ -130,14 +146,15 @@ object Run {
       names: Seq[String]): Unit = {
     val dir = Files.createDirectories(Paths.get(s"plans/$tag"))
     names.foreach { name =>
-      val (outcome, plans) = capturePlans(spark, sfDir, name)
-      plans.zipWithIndex.foreach { case ((action, txt), i) =>
+      val (outcome, plans, jobs) = capture(spark)(once(spark, sfDir, name))
+      plans.zipWithIndex.foreach { case ((action, qe), i) =>
         Files.writeString(
-          dir.resolve(f"${name}_${suffix}_${i + 1}%02d_$action.txt"), txt)
+          dir.resolve(f"${name}_${suffix}_${i + 1}%02d_$action.txt"),
+          qe.explainString(FormattedMode))
       }
       outcome.left.foreach(e =>
         println(s"[explain] $name FAILED: ${e.getMessage}"))
-      println(s"[explain] wrote ${plans.size} plans to " +
+      println(s"[explain] $name: $jobs jobs; wrote ${plans.size} plans to " +
         s"plans/$tag/${name}_${suffix}_*.txt")
     }
   }

@@ -17,38 +17,42 @@ import graft.llm.{Dedup, Similarity, TextAnalysis}
   * Results recorded in SCALE.md.
   */
 object ScaleStress {
+
+  // SPARK_GRAFT_STRESS_OPS=asof,lm — comma-separated label substrings:
+  // a stress tool times only the matching labels (default: all), so one
+  // new operator's decade runs without re-measuring the recorded ones
+  private val only: Option[Seq[String]] =
+    sys.env.get("SPARK_GRAFT_STRESS_OPS").map(_.split(",").map(_.trim).toSeq)
+
+  /** Print how long `f` takes and the rows it reports, under `label`
+    * (skipped unless `label` passes the SPARK_GRAFT_STRESS_OPS filter).
+    * Each timing runs in its own [[Scope]], closed once `f` has
+    * materialized its rows, so no timing leaves caches to the next. */
+  def time(label: String)(f: => Long): Unit =
+    if (only.forall(_.exists(label.contains))) {
+      val t0 = System.nanoTime()
+      val (n, scope) = Scope.run(f)
+      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
+      scope.close()
+    }
+
+  /** Force FULL evaluation of every column of `df` and return its row
+    * count, computed in the SAME job. A bare .agg(sum(x)).count() lets
+    * Catalyst prune the measured expressions under the outer count —
+    * the "flat" curve then times a column-pruned scan, not the operator
+    * (ADVICE r05). xxhash64 over a struct of all columns makes every
+    * column load-bearing, and head() (not a trailing count) reads the
+    * aggregate row itself. pmod keeps the checksum addends < 1e9 so the
+    * ANSI-mode long sum cannot overflow at any realistic row count. */
+  def force(df: DataFrame): Long =
+    df.agg(
+      sum(pmod(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)),
+        lit(1000000007L))).as("f"),
+      count(lit(1)).as("n")).head().getLong(1)
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    // optional label filter (comma-separated substrings): run only
-    // matching timings — dev aid so one new operator's decade doesn't
-    // re-run the suite
-    val only: Option[String] = args.lift(1)
     val spark = graft.GraftSession.create()
-
-    // each timing runs in its own Scope, closed once `f` has
-    // materialized its rows, so no timing leaves caches to the next
-    def time(label: String)(f: => Long): Unit =
-      if (only.forall(_.split(",").exists(label.contains))) {
-        val t0 = System.nanoTime()
-        val (n, scope) = Scope.run(f)
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-        scope.close()
-      }
-
-    // Force FULL evaluation of every column: a bare .agg(sum(x)).count()
-    // lets Catalyst prune the measured expressions under the outer count
-    // — the "flat" curve then times a column-pruned scan, not the
-    // operator (ADVICE r05). xxhash64 over a struct of all columns makes
-    // every column load-bearing, and head() (not a trailing count) reads
-    // the aggregate row itself. Returns the row count, computed in the
-    // SAME job.
-    // pmod keeps the checksum addends < 1e9 so the ANSI-mode long sum
-    // cannot overflow at any realistic row count
-    def force(df: DataFrame): Long =
-      df.agg(
-        sum(pmod(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)),
-          lit(1000000007L))).as("f"),
-        count(lit(1)).as("n")).head().getLong(1)
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
     val nBase = base.count()

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Temporal
+import ScaleStress.{force, time}
 
 /** Scaling stress for the temporal operators (dev tool): replicates the
   * sf0.1 events table N× along TWO axes and times asofJoin /
@@ -22,30 +22,14 @@ import graft.core.Temporal
   *     the design that keeps all cores busy. The crossover between
   *     the two plans is the number this axis exists to print.
   *
-  * Results → SCALE.md. Uses the ScaleStress `force` discipline
-  * (xxhash64-of-struct + head) so Catalyst cannot prune measured work.
+  * Results → SCALE.md. Timed with `ScaleStress.time` (so
+  * SPARK_GRAFT_STRESS_OPS filters the labels) and `ScaleStress.force`,
+  * so Catalyst cannot prune measured work.
   */
 object TemporalStress {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.GraftSession.create()
-
-    // SPARK_GRAFT_STRESS_OPS=asof,rolling — comma-separated label
-    // prefixes to time (default: all). Lets a new operator's decade run
-    // without re-measuring the recorded ones.
-    val opFilter = sys.env.get("SPARK_GRAFT_STRESS_OPS")
-      .map(_.split(",").map(_.trim).toSet)
-    def time(label: String)(f: => Long): Unit =
-      if (opFilter.forall(_.exists(label.startsWith))) {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-      }
-    def force(df: DataFrame): Long =
-      df.agg(
-        sum(pmod(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)),
-          lit(1000000007L))).as("f"),
-        count(lit(1)).as("n")).head().getLong(1)
 
     val base = spark.read.parquet(s"$sfDir/events.parquet")
       .select(col("event_id"), col("user_id"), col("event_type"),

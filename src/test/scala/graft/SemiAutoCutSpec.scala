@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.GraftListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.functions._
@@ -21,23 +19,6 @@ class SemiAutoCutSpec extends SparkSpec {
     val out = spark.read.parquet(dir)
     assert(out.queryExecution.optimizedPlan.stats.rowCount.isEmpty)
     out
-  }
-
-  /** `body`'s result and the number of Spark jobs it launched. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    GraftListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      GraftListenerBus.drain(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   /** numpy-style linearly interpolated percentile of sorted `s`. */
@@ -246,11 +227,12 @@ class SemiAutoCutSpec extends SparkSpec {
       .toDF("t", "rq", "trig"))
     Seq(CutPars(sigma = Some(2.0)), CutPars(percentUpper = Some(90.0)))
       .foreach { pars =>
-        val (t, jobs) = jobsOf(SemiAutoCut.thresholds(d, "rq", pars))
+        val (t, _, jobs) =
+          tools.Run.capture(spark)(SemiAutoCut.thresholds(d, "rq", pars))
         assert(t.upper.isDefined)
         assert(jobs <= 2, s"thresholds($pars) launched $jobs jobs")
       }
-    val (_, inputJobs) = jobsOf(d.count())
+    val (_, _, inputJobs) = tools.Run.capture(spark)(d.count())
     val binned = SemiAutoCut.binnedCut(d, "rq",
       Hist.bucket(col("t"), 0.0, 500.0, 5), CutPars(sigma = Some(2.0)),
       "cut_b")
@@ -260,7 +242,7 @@ class SemiAutoCutSpec extends SparkSpec {
       val plan = out.queryExecution.optimizedPlan
       assert(plan.collect { case a: Aggregate => a }.isEmpty, plan.toString)
       assert(plan.collect { case j: Join => j }.isEmpty, plan.toString)
-      val (n, jobs) = jobsOf(out.count())
+      val (n, _, jobs) = tools.Run.capture(spark)(out.count())
       assert(n == vals.size)
       assert(jobs == inputJobs, s"count() launched $jobs jobs, input $inputJobs")
     }
