@@ -25,8 +25,7 @@ object SparkEntry {
     val frac = table.passageFraction(Cut.Named("cut_all")).head.getDouble(0)
     graft.stats.Hist
       .hist1d(table.filter(Cut.Named("cut_all")), col("value"), 64, 0.0, 500.0)
-      .withColumn("passage_fraction", lit(frac))
-      .orderBy("bin")
+      .withColumn("passage_fraction", lit(frac)) // rows in bin order
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

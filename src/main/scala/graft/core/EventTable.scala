@@ -192,11 +192,13 @@ final class EventTable private (
       .summary()
 
   /** A10: passage fraction of a cut under an optional condition
-    * (`get_passage_fraction`, `semiautocuts.py:1846-1896`):
-    * mean of the boolean cut column over the conditioned view. */
+    * (`get_passage_fraction`, `semiautocuts.py:1846-1896`): mean of the
+    * boolean cut column over the conditioned view, as one
+    * `passage_fraction` row — null when no row has a non-null cut value.
+    * Eager: one Spark job (`Hist.passFractions`, 16 B per task). */
   def passageFraction(cut: Cut, condition: Cut = Cut.All): DataFrame =
-    filter(condition).agg(
-      avg(Cut.toColumn(cut).cast("double")).as("passage_fraction"))
+    graft.stats.Hist.passFractions(filter(condition),
+      Seq("passage_fraction" -> Cut.toColumn(cut)))
 
   def withCutMeta(name: String, meta: CutMeta): EventTable =
     new EventTable(full, cutMeta + (name -> meta), featureMeta, globalFilter)

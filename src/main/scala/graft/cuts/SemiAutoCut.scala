@@ -50,11 +50,12 @@ final case class Thresholds(lower: Option[Double], upper: Option[Double]) {
   * Every estimate is one Spark action that runs once: the cardinality
   * guard rides in the estimation job ([[Quantiles.guardedEstimate]]).
   * Binned variants (T6/T7) replace the reference's serial per-bin Python
-  * loops (`semiautocuts.py:696-716,835-855`) with one
-  * `groupBy(bin).agg(...)` whose ≤bins-row result is collected, resolved
-  * on the driver and applied as a per-bin array literal: the returned
-  * frame is the input plan plus one projected boolean column, with no
-  * aggregation or join left in it for later actions to re-run (J3/J4).
+  * loops (`semiautocuts.py:696-716,835-855`) with one Spark job — T6 a
+  * `groupBy(bin).agg(...)`, T7 a dense per-bin count — whose ≤bins-row
+  * result is resolved on the driver and applied as a per-bin array
+  * literal: the returned frame is the input plan plus one projected
+  * boolean column, with no aggregation or join left in it for later
+  * actions to re-run (J3/J4).
   */
 object SemiAutoCut {
 
@@ -234,10 +235,12 @@ object SemiAutoCut {
   /** T7: rate cut — count events with `inRange` per time bin; cut WHOLE
     * bins whose count exceeds a threshold; events keep/lose by their bin's
     * verdict (J4). The reference does an O(events×bins) Python loop
-    * (`semiautocuts.py:800-811`); here the ≤ `bins` counts are collected
-    * once, the threshold and verdicts are resolved on the driver, and the
-    * returned frame is `df` plus `cutName`, a projection that indexes a
-    * boolean array literal by the event's bin.
+    * (`semiautocuts.py:800-811`); here the `bins` counts come from one
+    * Spark job (`Hist.binCounts`), the threshold (Spark's exact
+    * percentile, reproduced by [[Quantiles.ofSorted]]) and verdicts are
+    * resolved on the driver, and the returned frame is `df` plus
+    * `cutName`, a projection that indexes a boolean array literal by the
+    * event's bin.
     *
     * `limit` semantics (`_do_time_binned_count_cut`, `semiautocuts.py:
     * 738-811`): Left(absolute count) | Right((mode, k)) where mode is
@@ -253,22 +256,20 @@ object SemiAutoCut {
       inRange: Column,
       limit: Either[Double, (String, Double)],
       cutName: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     // ALL bins participate in the threshold estimation, empty ones with
     // count 0 — the reference allocates a zeros array of nbins and takes
     // the percentile over it (`semiautocuts.py:744,788`); dropping empty
     // bins would bias the threshold upward.
-    val counts = new Array[Long](bins)
-    Hist.timeBinnedCount(df, time, tlo, thi, bins, inRange).collect()
-      .foreach(r => counts(r.getLong(0).toInt) = r.getLong(1))
-    def cnt = counts.toSeq.toDF("cnt").select(col("cnt").cast("double"))
+    val n = Hist.binCounts(df, time, tlo, thi, bins, Seq(inRange))
+    val counts = Array.tabulate(bins)(b => n(2 * b + 1))
+    def sorted = counts.map(_.toDouble).sorted
     val threshold: Double = limit match {
       case Left(abs) => abs
       case Right(("percent", p)) =>
-        Quantiles.exact1(cnt, col("cnt"), p / 100.0)
+        Quantiles.ofSorted(sorted, Seq(p / 100.0)).head
       case Right(("sigma", k)) =>
-        val (med, sig) = Quantiles.medianRobustSigma(cnt, col("cnt"))
+        val (med, sig) = Quantiles.medianRobustSigma(
+          Quantiles.ofSorted(sorted, Quantiles.sigmaPercentiles))
         med + k * sig
       case Right((m, _)) =>
         throw new IllegalArgumentException(s"unknown rate-cut mode $m")
@@ -301,18 +302,18 @@ object MasterCuts {
 
   /** A11: cumulative pass-fraction matrix over randoms — for each i, the
     * fraction of condition-rows passing cuts j..i for every j ≤ i
-    * (`get_randoms_passfrac_table`, `semiautocuts.py:2471-2531`). One
-    * aggregation with N(N+1)/2 avg expressions — a single pass. */
+    * (`get_randoms_passfrac_table`, `semiautocuts.py:2471-2531`), as one
+    * row of N(N+1)/2 `frac_<j>_<i>` doubles (null where the AND of the
+    * cuts is null on every row). Eager: one Spark job
+    * (`Hist.passFractions`, 8 B × N(N+1) per task). */
   def cumulativePassFractions(
       df: DataFrame,
       cutNames: Seq[String],
-      condition: Column): DataFrame = {
-    val aggs = for {
-      i <- cutNames.indices
-      j <- 0 to i
-    } yield avg(
-      cutNames.slice(j, i + 1).map(col).reduce(_ && _).cast("double"))
-      .as(s"frac_${j}_$i")
-    df.filter(condition).agg(aggs.head, aggs.tail: _*)
-  }
+      condition: Column): DataFrame =
+    Hist.passFractions(df.filter(condition),
+      for {
+        i <- cutNames.indices
+        j <- 0 to i
+      } yield s"frac_${j}_$i" ->
+        cutNames.slice(j, i + 1).map(col).reduce(_ && _))
 }

@@ -86,22 +86,21 @@ object StatsQueries {
         .select(lit(med).as("med"), lit(sig).as("sigma"), col("cnt"))
     }),
 
-    // A7: 1-D histogram, fixed limits [0, 500], 64 bins
+    // A7: 1-D histogram, fixed limits [0, 500], 64 bins (the count-shaped
+    // views return their rows in bin order)
     "a7_hist1d" -> ((s, dir) =>
-      Hist.hist1d(events(s, dir), col("value"), 64, 0.0, 500.0)
-        .orderBy("bin")),
+      Hist.hist1d(events(s, dir), col("value"), 64, 0.0, 500.0)),
 
     // A7: 1-D histogram with data-driven (minmax) limits
     "a7_hist1d_auto" -> ((s, dir) =>
-      Hist.hist1dAuto(events(s, dir), "value", 64).orderBy("bin")),
+      Hist.hist1dAuto(events(s, dir), "value", 64)),
 
     // A7 overlay: per-cut histogram counts in a single pass
     "a7_hist1d_overlay" -> ((s, dir) =>
       Hist.hist1dOverlay(events(s, dir), col("value"), 32, 0.0, 500.0,
           Map("all" -> lit(true),
             "click" -> (col("event_type") === "click"),
-            "hiuser" -> (col("user_id") >= 50)))
-        .orderBy("bin")),
+            "hiuser" -> (col("user_id") >= 50)))),
 
     // A8 what-variant: mean value per 2-D cell (exact cents)
     "a8_hist2d_mean" -> ((s, dir) => {
@@ -119,7 +118,6 @@ object StatsQueries {
       val (tlo, thi) = Hist.minmax(ev, "tus")
       Hist.hist2d(ev, col("value"), col("tus"), 32, 24,
           (0.0, 500.0), (tlo, thi))
-        .orderBy("xbin", "ybin")
     }),
 
     // A9: per-time-bin count of in-value-range events (rate histogram)
@@ -128,7 +126,6 @@ object StatsQueries {
       val (tlo, thi) = Hist.minmax(ev, "tus")
       Hist.timeBinnedCount(ev, col("tus"), tlo, thi, 30,
           col("value") >= 100.0 && col("value") <= 300.0)
-        .orderBy("bin")
     }),
 
     // A10: passage fraction of a cut under a condition

@@ -30,8 +30,23 @@ object Quantiles {
     r.getSeq[Double](0)
   }
 
-  def exact1(df: DataFrame, c: Column, p: Double): Double =
-    exact(df, c, Seq(p)).head
+  /** [[exact]] on the driver, over an ascending array: Spark's
+    * `percentile` bit for bit. Position pos = (n−1)·p; between distinct
+    * neighbours v[lo] < v[hi] (lo = ⌊pos⌋, hi = ⌈pos⌉) the result is
+    * `(hi − pos)·v[lo] + (pos − lo)·v[hi]`, otherwise v[lo]. For a
+    * sample already on the driver, where a local frame would cost two
+    * Spark jobs. */
+  def ofSorted(v: Array[Double], ps: Seq[Double]): Seq[Double] = {
+    require(v.nonEmpty, "empty estimation sample for a percentile")
+    ps.map { p =>
+      require(p >= 0.0 && p <= 1.0, s"percentile $p outside [0, 1]")
+      val pos = (v.length - 1L) * p
+      val (lo, hi) = (pos.floor.toLong, pos.ceil.toLong)
+      val (vl, vh) = (v(lo.toInt), v(hi.toInt))
+      if (lo == hi || vl == vh) vl
+      else (hi - pos) * vl + (pos - lo) * vh
+    }
+  }
 
   /** Above this estimation-sample row count, THRESHOLD estimation
     * (T2/T3/T6) switches from the exact percentile — which shuffles the

@@ -1,5 +1,6 @@
 package graft.traces
 
+import scala.collection.mutable
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.jtransforms.fft.DoubleFFT_1D
@@ -14,6 +15,20 @@ import org.jtransforms.fft.DoubleFFT_1D
   */
 object Dsp {
 
+  /** One JTransforms plan per length per thread: a plan's twiddle tables
+    * cost about as much to build as one transform of a short trace, and
+    * a plan is not shared across threads. */
+  private val plans = ThreadLocal.withInitial[mutable.HashMap[Int, DoubleFFT_1D]](
+    () => mutable.HashMap.empty)
+  private def plan(n: Int): DoubleFFT_1D =
+    plans.get.getOrElseUpdate(n, new DoubleFFT_1D(n))
+
+  /** [[onesidedScale]] built once per (n, fs); callers only read it. */
+  private val scales =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Double), Array[Double]]()
+  private def scale(n: Int, fs: Double): Array[Double] =
+    scales.computeIfAbsent((n, fs), _ => onesidedScale(n, fs))
+
   /** Real-input FFT → (re, im) arrays of length n/2+1 (numpy rfft). */
   def rfft(x: Array[Double]): (Array[Double], Array[Double]) = {
     val n = x.length
@@ -21,7 +36,7 @@ object Dsp {
     val buf = Array.ofDim[Double](2 * n)
     var i = 0
     while (i < n) { buf(2 * i) = x(i); i += 1 }
-    new DoubleFFT_1D(n).complexForward(buf)
+    plan(n).complexForward(buf)
     val m = n / 2 + 1
     val re = Array.ofDim[Double](m)
     val im = Array.ofDim[Double](m)
@@ -43,7 +58,7 @@ object Dsp {
       }
       k += 1
     }
-    new DoubleFFT_1D(n).complexInverse(buf, true)
+    plan(n).complexInverse(buf, true)
     Array.tabulate(n)(i => buf(2 * i))
   }
 
@@ -66,7 +81,7 @@ object Dsp {
   /** One-sided PSD of a single trace: |rfft|² · scale²  (K2). */
   def psd(x: Array[Double], fs: Double): Array[Double] = {
     val (re, im) = rfft(x)
-    val s = onesidedScale(x.length, fs)
+    val s = scale(x.length, fs)
     Array.tabulate(re.length)(k => (re(k) * re(k) + im(k) * im(k)) * s(k) * s(k))
   }
 
@@ -116,7 +131,7 @@ object Dsp {
   def scaledSpectrumUdf(fs: Double) = udf { x: Seq[Double] =>
     val arr = x.toArray
     val (re, im) = rfft(arr)
-    val s = onesidedScale(arr.length, fs)
+    val s = scale(arr.length, fs)
     val out = Array.ofDim[Double](2 * re.length)
     var k = 0
     while (k < re.length) {

@@ -16,6 +16,17 @@ object GraftSqlBridge {
       : DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `body` over the rows `df`'s physical plan produces, run as ONE SQL
+    * execution named `name` — the wrapping a `collect` gets — so query
+    * listeners (`graft.tools.Run.capture`, `Run explain`) and the SQL UI
+    * see the plan of a job that is not a Dataset action. */
+  def executeRows[T](df: DataFrame, name: String)(
+      body: org.apache.spark.rdd.RDD[catalyst.InternalRow] => T): T = {
+    val qe = df.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some(name))(
+      body(qe.executedPlan.execute()))
+  }
+
   /** True when the session holds NO cached/persisted plans — the
     * cache-hygiene assertion for long-lived sessions: every persist a
     * pipeline makes belongs to a `graft.core.Scope`, so once the scope

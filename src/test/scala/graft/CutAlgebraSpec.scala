@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core._
+import graft.cuts.MasterCuts
 
 /** F1-F9 cut algebra: boolean-algebra laws, register→apply ≡ filter,
   * global-filter identities (SURVEY §5.4). */
@@ -198,5 +200,78 @@ class CutAlgebraSpec extends SparkSpec {
       cond.filter(col("x") > 50.0).count().toDouble / cond.count()
     }
     assert(math.abs(f - manual) < 1e-12)
+  }
+
+  /** Nullable cuts `k1`..`k3` and a condition column `c`. */
+  private lazy val cutsDf = {
+    val rnd = new scala.util.Random(3)
+    def b() = if (rnd.nextInt(6) == 0) None else Some(rnd.nextBoolean())
+    (0 until 300).map(i => (i % 3, b(), b(), b())).toDF("c", "k1", "k2", "k3")
+  }
+
+  /** The `avg(cast double)` formulation A10/A11 had before they became
+    * one counting job. */
+  private def avgFractions(d: DataFrame, names: Seq[String]): DataFrame = {
+    val aggs = for (i <- names.indices; j <- 0 to i) yield avg(
+      names.slice(j, i + 1).map(col).reduce(_ && _).cast("double"))
+      .as(s"frac_${j}_$i")
+    d.agg(aggs.head, aggs.tail: _*)
+  }
+
+  test("passage fraction equals avg(cast double): nulls, empty condition") {
+    val k = Cut.Pred(col("k1"))
+    for ((label, d) <- Seq("6 partitions" -> cutsDf.repartition(6),
+        "empty input" -> cutsDf.filter(lit(false)).repartition(6))) {
+      for (cond <- Seq(Cut.All, Cut.Pred(col("c") === 1),
+          Cut.Pred(col("c") === 7))) {
+        val got = EventTable(d).passageFraction(k, cond)
+        val want = d.filter(Cut.toColumn(cond))
+          .agg(avg(col("k1").cast("double")).as("passage_fraction"))
+        assert(got.schema == want.schema, s"$label, $cond: schema")
+        assert(got.collect().toSeq == want.collect().toSeq, s"$label, $cond")
+      }
+    }
+    // no row under the condition: the fraction is null, not NaN
+    assert(EventTable(cutsDf).passageFraction(k, Cut.Pred(col("c") === 7))
+      .head.isNullAt(0))
+    val (_, plans, jobs) = tools.Run.capture(spark)(
+      EventTable(cutsDf).passageFraction(k, Cut.Pred(col("c") === 1)))
+    assert(jobs == 1 && plans.map(_._1) == Seq("counts"),
+      s"passageFraction ran $jobs jobs: $plans")
+  }
+
+  test("A11 cumulative pass fractions: hand counts, avg formulation, 1 job") {
+    val names = Seq("k1", "k2", "k3")
+    val cond = col("c") =!= 2
+    val got = MasterCuts.cumulativePassFractions(cutsDf.repartition(6),
+      names, cond)
+    assert(got.columns.toSeq ==
+      Seq("frac_0_0", "frac_0_1", "frac_1_1", "frac_0_2", "frac_1_2",
+        "frac_2_2"))
+    // by hand: three-valued AND of cuts j..i, nulls skipped
+    val rows = cutsDf.collect().filter(_.getInt(0) != 2)
+      .map(r => (1 to 3).map(i =>
+        if (r.isNullAt(i)) None else Some(r.getBoolean(i))))
+    val row = got.head()
+    for (i <- 0 until 3; j <- 0 to i) {
+      val ands = rows.map(r => r.slice(j, i + 1).foldLeft(Option(true)) {
+        case (Some(false), _) | (_, Some(false)) => Some(false)
+        case (Some(true), v) => v
+        case (None, _) => None
+      }).flatten
+      val want = ands.count(identity).toDouble / ands.length.toDouble
+      assert(row.getAs[Double](s"frac_${j}_$i") == want, s"frac_${j}_$i")
+    }
+    for ((label, d) <- Seq("6 partitions" -> cutsDf.repartition(6),
+        "empty condition" -> cutsDf.filter(col("c") === 7))) {
+      val out = MasterCuts.cumulativePassFractions(d, names, lit(true))
+      val want = avgFractions(d, names)
+      assert(out.schema == want.schema, s"$label: schema")
+      assert(out.collect().toSeq == want.collect().toSeq, label)
+    }
+    val (_, plans, jobs) = tools.Run.capture(spark)(
+      MasterCuts.cumulativePassFractions(cutsDf, names, cond))
+    assert(jobs == 1 && plans.map(_._1) == Seq("counts"),
+      s"cumulativePassFractions ran $jobs jobs: $plans")
   }
 }

@@ -68,4 +68,50 @@ class DspSpec extends SparkSpec {
     assert(out.take(4).forall(v => math.abs(v) < 1e-12))
     assert(math.abs(out(4) - 3.0) < 1e-12)
   }
+
+  test("reused FFT plans and scales: every thread gets one fresh plan's bits") {
+    import org.jtransforms.fft.DoubleFFT_1D
+    // the kernels as they were before plans were reused: a fresh plan
+    // and a fresh scale per trace
+    def freshRfft(x: Array[Double]) = {
+      val buf = Array.ofDim[Double](2 * x.length)
+      x.indices.foreach(i => buf(2 * i) = x(i))
+      new DoubleFFT_1D(x.length).complexForward(buf)
+      buf.take(2 * (x.length / 2 + 1))
+    }
+    def freshPsd(x: Array[Double]) = {
+      val b = freshRfft(x)
+      val s = Dsp.onesidedScale(x.length, fs)
+      Array.tabulate(s.length)(k =>
+        (b(2 * k) * b(2 * k) + b(2 * k + 1) * b(2 * k + 1)) * s(k) * s(k))
+    }
+    val rnd = new scala.util.Random(7)
+    val traces = Seq(256, 300, 1024, 97, 256, 1024).map(len =>
+      Array.fill(len)(rnd.nextGaussian()))
+    def run(x: Array[Double]): Seq[Array[Double]] = {
+      val (re, im) = Dsp.rfft(x)
+      Seq(re, im, Dsp.irfft(re, im, x.length), Dsp.psd(x, fs))
+    }
+    val one = traces.map(run)
+    traces.zip(one).foreach { case (x, Seq(re, im, _, p)) =>
+      val b = freshRfft(x)
+      assert(re.indices.forall(k => re(k) == b(2 * k) && im(k) == b(2 * k + 1)),
+        s"rfft of length ${x.length} differs from a fresh plan's")
+      assert(java.util.Arrays.equals(p, freshPsd(x)),
+        s"psd of length ${x.length} differs from a fresh plan's")
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val futures = (0 until 16).map(i => pool.submit(() =>
+        (0 until 20).map(r => traces((i + r) % traces.size))
+          .map(x => (x, run(x)))))
+      futures.foreach(_.get().foreach { case (x, got) =>
+        val want = one(traces.indexWhere(_ eq x))
+        got.zip(want).foreach { case (g, w) =>
+          assert(java.util.Arrays.equals(g, w),
+            s"length ${x.length}: a thread's result differs from one thread's")
+        }
+      })
+    } finally pool.shutdown()
+  }
 }

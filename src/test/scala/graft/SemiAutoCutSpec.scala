@@ -236,8 +236,11 @@ class SemiAutoCutSpec extends SparkSpec {
     val binned = SemiAutoCut.binnedCut(d, "rq",
       Hist.bucket(col("t"), 0.0, 500.0, 5), CutPars(sigma = Some(2.0)),
       "cut_b")
-    val rated = SemiAutoCut.rateCut(binned, col("t"), 0.0, 500.0, 10,
-      col("trig") === 0.0, Right(("sigma", 1.0)), "cut_r")
+    // the bin counts are one job; the threshold is resolved on the driver
+    val (rated, _, rateJobs) = tools.Run.capture(spark)(
+      SemiAutoCut.rateCut(binned, col("t"), 0.0, 500.0, 10,
+        col("trig") === 0.0, Right(("sigma", 1.0)), "cut_r"))
+    assert(rateJobs == 1, s"rateCut launched $rateJobs jobs")
     Seq(binned, rated).foreach { out =>
       val plan = out.queryExecution.optimizedPlan
       assert(plan.collect { case a: Aggregate => a }.isEmpty, plan.toString)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.stats.{Hist, Quantiles}
 
@@ -53,7 +54,7 @@ class StatsSpec extends SparkSpec {
       else sorted(lo)
     }
     for (p <- Seq(0.1, 0.25, 0.5, 0.9, 0.99)) {
-      val got = Quantiles.exact1(df, col("x"), p)
+      val got = Quantiles.exact(df, col("x"), Seq(p)).head
       assert(math.abs(got - npPercentile(p)) < 1e-9, s"p=$p")
     }
   }
@@ -121,6 +122,114 @@ class StatsSpec extends SparkSpec {
         s"p=${ps(i)}: est ${est(i)} below exact ${exact(i)}")
       assert(est(i) - exact(i) <= width + 1e-9,
         s"p=${ps(i)}: est ${est(i)} over exact ${exact(i)} by > width")
+    }
+  }
+
+  // ---- the count-shaped views against their groupBy formulations
+
+  /** Nulls, NaN, values below `lo`, at `lo` and `hi` and above `hi` of
+    * the [0, 10] ranges used below; `k` is a nullable cut. */
+  private lazy val edgy = {
+    val rnd = new scala.util.Random(11)
+    def v(): Option[Double] = rnd.nextInt(10) match {
+      case 0 => None
+      case 1 => Some(Double.NaN)
+      case 2 => Some(Seq(-1.0, 0.0, 10.0, 10.5)(rnd.nextInt(4)))
+      case _ => Some(rnd.nextDouble() * 10.0)
+    }
+    (0 until 400).map { i =>
+      (v(), v(), i / 4.0,
+        if (rnd.nextInt(5) == 0) None else Some(rnd.nextBoolean()))
+    }.toDF("x", "y", "t", "k")
+  }
+
+  /** Each view under test with the `groupBy` formulation it replaced. */
+  private def views(d: DataFrame): Seq[(String, DataFrame, DataFrame)] = {
+    val (x, y, t, k) = (col("x"), col("y"), col("t"), col("k"))
+    def in(c: Column) = c >= 0.0 && c <= 10.0
+    Seq(
+      ("hist1d", Hist.hist1d(d, x, 7, 0.0, 10.0),
+        d.filter(in(x)).groupBy(Hist.bucket(x, 0.0, 10.0, 7).as("bin"))
+          .agg(count(lit(1)).as("cnt"))),
+      ("hist2d", Hist.hist2d(d, x, y, 4, 5, (0.0, 10.0), (0.0, 10.0)),
+        d.filter(in(x) && in(y))
+          .groupBy(Hist.bucket(x, 0.0, 10.0, 4).as("xbin"),
+            Hist.bucket(y, 0.0, 10.0, 5).as("ybin"))
+          .agg(count(lit(1)).as("cnt"))),
+      ("hist1dOverlay", Hist.hist1dOverlay(d, x, 6, 0.0, 10.0,
+          Map("k" -> k, "pos" -> (y > 5.0), "all" -> lit(true))),
+        d.filter(in(x)).groupBy(Hist.bucket(x, 0.0, 10.0, 6).as("bin"))
+          .agg(sum(when(lit(true), 1L).otherwise(0L)).as("cnt_all"),
+            sum(when(k, 1L).otherwise(0L)).as("cnt_k"),
+            sum(when(y > 5.0, 1L).otherwise(0L)).as("cnt_pos"))),
+      ("timeBinnedCount", Hist.timeBinnedCount(d, t, 10.0, 90.0, 9, k),
+        d.filter(t >= 10.0 && t <= 90.0)
+          .groupBy(Hist.bucket(t, 10.0, 90.0, 9).as("bin"))
+          .agg(sum(when(k, 1L).otherwise(0L)).as("cnt"))))
+  }
+
+  /** The view's schema and rows equal the reference's, and its rows
+    * come in bin order. */
+  private def assertSame(what: String, got: DataFrame, want: DataFrame)
+      : Unit = {
+    assert(got.schema == want.schema, s"$what schema")
+    val sorted = want.orderBy(want.columns.map(col).toSeq: _*).collect()
+    assert(got.collect().toSeq == sorted.toSeq, s"$what rows")
+  }
+
+  test("count-shaped views equal their groupBy formulations") {
+    val cases = Seq(
+      "6 partitions" -> edgy.repartition(6),
+      "empty input" -> edgy.filter(lit(false)).repartition(6),
+      "one row at hi" -> edgy.limit(1)
+        .select(lit(10.0).as("x"), lit(10.0).as("y"), lit(90.0).as("t"),
+          lit(null).cast("boolean").as("k")).repartition(6))
+    for ((label, d) <- cases; (view, got, want) <- views(d))
+      assertSame(s"$view over $label", got, want)
+    // the overlay's zero-match bins and the time bins' zero counts keep
+    // their rows, as a groupBy gives them
+    val none = Hist.timeBinnedCount(edgy, col("t"), 10.0, 90.0, 9, lit(false))
+    assert(none.collect().map(_.getLong(1)).toSeq == Seq.fill(9)(0L))
+  }
+
+  test("each count-shaped view is one Spark job, seen by query listeners") {
+    val d = edgy.filter(col("t") < 50.0) // no shuffle in the input plan
+    Seq[(String, () => DataFrame)](
+      "hist1d" -> (() => Hist.hist1d(d, col("x"), 7, 0.0, 10.0)),
+      "hist2d" -> (() =>
+        Hist.hist2d(d, col("x"), col("y"), 4, 5, (0.0, 10.0), (0.0, 10.0))),
+      "hist1dOverlay" -> (() => Hist.hist1dOverlay(d, col("x"), 6, 0.0, 10.0,
+        Map("k" -> col("k"), "all" -> lit(true)))),
+      "timeBinnedCount" -> (() =>
+        Hist.timeBinnedCount(d, col("t"), 0.0, 50.0, 9, col("k")))
+    ).foreach { case (view, run) =>
+      val (_, plans, jobs) = tools.Run.capture(spark)(run())
+      assert(jobs == 1, s"$view ran $jobs jobs")
+      assert(plans.map(_._1) == Seq("counts"), s"$view executed $plans")
+    }
+  }
+
+  test("driver percentile equals Spark's percentile, ties and ends included") {
+    val rnd = new scala.util.Random(5)
+    for (trial <- 0 until 60) {
+      val n = 1 + rnd.nextInt(60)
+      // few distinct values, so most arrays have ties; non-dyadic ones
+      // too, where interpolating between two equal values is not exact
+      val pool = Array.fill(5)(rnd.nextDouble() * 10.0)
+      val vals = Array.fill(n)(trial % 3 match {
+        case 0 => rnd.nextInt(8).toDouble
+        case 1 => math.round(rnd.nextGaussian() * 4) / 2.0
+        case _ => pool(rnd.nextInt(pool.length))
+      })
+      val ps = Seq(0.0, 1.0, 0.5, 0.15865, 0.84135, rnd.nextDouble())
+      val viaSpark = Quantiles.exact(vals.toSeq.toDF("v"), col("v"), ps)
+      val driver = Quantiles.ofSorted(vals.sorted, ps)
+      ps.indices.foreach { i =>
+        assert(java.lang.Double.doubleToRawLongBits(driver(i)) ==
+          java.lang.Double.doubleToRawLongBits(viaSpark(i)),
+          s"p=${ps(i)} over ${vals.sorted.mkString(",")}: " +
+            s"${driver(i)} vs ${viaSpark(i)}")
+      }
     }
   }
 }
