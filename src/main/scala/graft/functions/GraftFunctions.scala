@@ -164,176 +164,48 @@ object GraftFunctions {
       intLit(exprs(2), "k")).toAggregateExpression()
   }
 
-  private[functions] def minhashBuilderPublic(exprs: Seq[Expression])
-      : Expression = minhashBuilder(exprs)
-  private[functions] def hist2dBuilderPublic(exprs: Seq[Expression])
-      : Expression = hist2dBuilder(exprs)
-  private[functions] def fingerprintBuilderPublic(exprs: Seq[Expression])
-      : Expression = fingerprintBuilder(exprs)
-  private[functions] def cosineBuilderPublic(exprs: Seq[Expression])
-      : Expression = cosineBuilder(exprs)
-  private[functions] def simhashBuilderPublic(exprs: Seq[Expression])
-      : Expression = simhashBuilder(exprs)
-  private[functions] def fnvBuilderPublic(exprs: Seq[Expression])
-      : Expression = fnvBuilder(exprs)
-  private[functions] def winnowBuilderPublic(exprs: Seq[Expression])
-      : Expression = winnowBuilder(exprs)
-  private[functions] def minhashTextBuilderPublic(exprs: Seq[Expression])
-      : Expression = minhashTextBuilder(exprs)
-  private[functions] def simhashTextBuilderPublic(exprs: Seq[Expression])
-      : Expression = simhashTextBuilder(exprs)
-  private[functions] def topTokenBuilderPublic(exprs: Seq[Expression])
-      : Expression = topTokenBuilder(exprs)
-  private[functions] def shingleHashesBuilderPublic(exprs: Seq[Expression])
-      : Expression = shingleHashesBuilder(exprs)
-  private[functions] def ngramHashesBuilderPublic(exprs: Seq[Expression])
-      : Expression = ngramHashesBuilder(exprs)
-  private[functions] def gramHashesBuilderPublic(exprs: Seq[Expression])
-      : Expression = gramHashesBuilder(exprs)
-  private[functions] def topkByBuilderPublic(exprs: Seq[Expression])
-      : Expression = topkByBuilder(exprs)
-  private[functions] def bpeBuilderPublic(exprs: Seq[Expression])
-      : Expression = bpeBuilder(exprs)
-  private[functions] def bpeDecodeBuilderPublic(exprs: Seq[Expression])
-      : Expression = bpeDecodeBuilder(exprs)
-  private[functions] def gopherRepBuilderPublic(exprs: Seq[Expression])
-      : Expression = gopherRepBuilder(exprs)
-  private[functions] def htmlToTextBuilderPublic(exprs: Seq[Expression])
-      : Expression = htmlToTextBuilder(exprs)
-  private[functions] def htmlLinksBuilderPublic(exprs: Seq[Expression])
-      : Expression = htmlLinksBuilder(exprs)
-  private[functions] def htmlAnchorsBuilderPublic(exprs: Seq[Expression])
-      : Expression = htmlAnchorsBuilder(exprs)
-  private[functions] def htmlMainBuilderPublic(exprs: Seq[Expression])
-      : Expression = htmlMainBuilder(exprs)
-  private[functions] def robotsAllowedBuilderPublic(exprs: Seq[Expression])
-      : Expression = robotsAllowedBuilder(exprs)
-  private[functions] def normalizeTextBuilderPublic(exprs: Seq[Expression])
-      : Expression = normalizeTextBuilder(exprs)
+  /** The SQL surface, one row per function: (name, expression class,
+    * builder). [[register]] and [[GraftExtensions]] both read it. */
+  private[graft] val table
+      : Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] =
+    Seq(
+      ("minhash_sig", classOf[MinHashSig], minhashBuilder),
+      ("histogram2d", classOf[Histogram2D], hist2dBuilder),
+      ("fingerprint64", classOf[Fingerprint64], fingerprintBuilder),
+      ("cosine_sim", classOf[CosineSim], cosineBuilder),
+      ("simhash64", classOf[SimHash64], simhashBuilder),
+      ("fnv64", classOf[Fnv64], fnvBuilder),
+      ("winnowed_sketch", classOf[WinnowedSketch], winnowBuilder),
+      ("minhash_text", classOf[MinHashTextSig], minhashTextBuilder),
+      ("simhash_text", classOf[SimHashText], simhashTextBuilder),
+      ("top_token_ratio", classOf[TopTokenRatio], topTokenBuilder),
+      ("shingle_hashes", classOf[ShingleHashes], shingleHashesBuilder),
+      ("ngram_hashes", classOf[NgramHashes], ngramHashesBuilder),
+      ("gram_hashes", classOf[GramHashes], gramHashesBuilder),
+      ("topk_by", classOf[TopKByScore], topkByBuilder),
+      ("bpe_encode", classOf[BpeEncode], bpeBuilder),
+      ("bpe_decode", classOf[BpeDecode], bpeDecodeBuilder),
+      ("gopher_repetition", classOf[GopherRepetition], gopherRepBuilder),
+      ("html_to_text", classOf[HtmlToText], htmlToTextBuilder),
+      ("html_links", classOf[HtmlLinks], htmlLinksBuilder),
+      ("html_anchors", classOf[HtmlAnchors], htmlAnchorsBuilder),
+      ("html_main_text", classOf[HtmlMainText], htmlMainBuilder),
+      ("robots_allowed", classOf[RobotsAllowed], robotsAllowedBuilder),
+      ("normalize_text", classOf[NormalizeText], normalizeTextBuilder))
 
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("minhash_sig", minhashBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("histogram2d", hist2dBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("fingerprint64", fingerprintBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_sim", cosineBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64", simhashBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("fnv64", fnvBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("winnowed_sketch", winnowBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_text", minhashTextBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("simhash_text", simhashTextBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("top_token_ratio", topTokenBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("shingle_hashes", shingleHashesBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("ngram_hashes", ngramHashesBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("gram_hashes", gramHashesBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("topk_by", topkByBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("bpe_encode", bpeBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("bpe_decode", bpeDecodeBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("gopher_repetition", gopherRepBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("html_to_text", htmlToTextBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("html_links", htmlLinksBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("html_anchors", htmlAnchorsBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("html_main_text", htmlMainBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("robots_allowed", robotsAllowedBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("normalize_text", normalizeTextBuilder, "scala_udf")
+    table.foreach { case (name, _, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 }
 
 /** `spark.sql.extensions` entry point. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      GraftFunctions.minhashBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("histogram2d"),
-      new ExpressionInfo(classOf[Histogram2D].getName, "histogram2d"),
-      GraftFunctions.hist2dBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("fingerprint64"),
-      new ExpressionInfo(classOf[Fingerprint64].getName, "fingerprint64"),
-      GraftFunctions.fingerprintBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      GraftFunctions.cosineBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      GraftFunctions.simhashBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("fnv64"),
-      new ExpressionInfo(classOf[Fnv64].getName, "fnv64"),
-      GraftFunctions.fnvBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("winnowed_sketch"),
-      new ExpressionInfo(classOf[WinnowedSketch].getName, "winnowed_sketch"),
-      GraftFunctions.winnowBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_text"),
-      new ExpressionInfo(classOf[MinHashTextSig].getName, "minhash_text"),
-      GraftFunctions.minhashTextBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_text"),
-      new ExpressionInfo(classOf[SimHashText].getName, "simhash_text"),
-      GraftFunctions.simhashTextBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("top_token_ratio"),
-      new ExpressionInfo(classOf[TopTokenRatio].getName, "top_token_ratio"),
-      GraftFunctions.topTokenBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      GraftFunctions.shingleHashesBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("ngram_hashes"),
-      new ExpressionInfo(classOf[NgramHashes].getName, "ngram_hashes"),
-      GraftFunctions.ngramHashesBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("gram_hashes"),
-      new ExpressionInfo(classOf[GramHashes].getName, "gram_hashes"),
-      GraftFunctions.gramHashesBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("topk_by"),
-      new ExpressionInfo(classOf[TopKByScore].getName, "topk_by"),
-      GraftFunctions.topkByBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("bpe_encode"),
-      new ExpressionInfo(classOf[BpeEncode].getName, "bpe_encode"),
-      GraftFunctions.bpeBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("bpe_decode"),
-      new ExpressionInfo(classOf[BpeDecode].getName, "bpe_decode"),
-      GraftFunctions.bpeDecodeBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("gopher_repetition"),
-      new ExpressionInfo(classOf[GopherRepetition].getName,
-        "gopher_repetition"),
-      GraftFunctions.gopherRepBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("html_to_text"),
-      new ExpressionInfo(classOf[HtmlToText].getName, "html_to_text"),
-      GraftFunctions.htmlToTextBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("html_links"),
-      new ExpressionInfo(classOf[HtmlLinks].getName, "html_links"),
-      GraftFunctions.htmlLinksBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("html_anchors"),
-      new ExpressionInfo(classOf[HtmlAnchors].getName, "html_anchors"),
-      GraftFunctions.htmlAnchorsBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("html_main_text"),
-      new ExpressionInfo(classOf[HtmlMainText].getName, "html_main_text"),
-      GraftFunctions.htmlMainBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("robots_allowed"),
-      new ExpressionInfo(classOf[RobotsAllowed].getName, "robots_allowed"),
-      GraftFunctions.robotsAllowedBuilderPublic _))
-    ext.injectFunction((
-      FunctionIdentifier("normalize_text"),
-      new ExpressionInfo(classOf[NormalizeText].getName, "normalize_text"),
-      GraftFunctions.normalizeTextBuilderPublic _))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.table.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
 }

@@ -662,26 +662,20 @@ object Dedup {
       // small-star on the large-star output (already oriented u > v, so
       // Γ(u) here is exactly the smaller neighborhood and m < u)
       val minsS = large.groupBy("u").agg(min("v").as("m"))
-      val next = Scope.persist(large.join(minsS, Seq("u"))
+      // Eager localCheckpoint: the state is materialized before the
+      // previous one is released, and its lineage is truncated every
+      // round. One round references `ee` five times (bidirectional
+      // union, two min-joins, the small-star union), so an untruncated
+      // plan's explain text grows ~24× per round: truncating only every
+      // third round printed a 616 MB plan for a 19-edge graph.
+      val next = Scope.checkpoint(large.join(minsS, Seq("u"))
         .filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(minsS.select(col("u"), col("m").as("v")))
         .distinct())
-      next.count() // materialize before releasing the previous state
       converged = isStarForest(next)
       Scope.release(ee)
-      // Lineage truncation every 3 rounds: one round references `ee`
-      // five times (bidirectional union, two min-joins, the small-star
-      // union), so the ANALYZED plan grows ~5× per round — exponential.
-      // Caching bounds execution, not plan size: without truncation the
-      // plan string alone exceeds 2 GB by round ~14 (heap OOM inside
-      // explainString). 5³ subtree copies per segment is harmless. Same
-      // localCheckpoint pattern as Graph.pageRank (Graph.scala:83).
-      ee = if (!converged && (rounds + 1) % 3 == 0) {
-        val cp = Scope.checkpoint(next) // eager — reads the warm cache
-        Scope.release(next)
-        cp
-      } else next
+      ee = next
       rounds += 1
     }
     if (!converged) {

@@ -12,9 +12,12 @@ import graft.{Bench, GraftSession, SparkEntry}
 import graft.core.Scope
 
 /** Dev runner for registry queries, and the one way any runner executes
-  * a query ([[once]]; `graft.Bench` measures through it too). Modes:
-  *   - `time <q> [q ...]`: one warm-up plus SPARK_GRAFT_BENCH_RUNS
-  *     (default 3) runs per query, median printed;
+  * ([[once]]) and times ([[series]]) a query; `graft.Bench` is a
+  * [[series]] over the benched suite. Modes:
+  *   - `time <q> [q ...]`: a [[series]] over the named queries — one
+  *     warm-up pass, then SPARK_GRAFT_BENCH_RUNS (default 7) passes,
+  *     interleaved — printing each query's kept-run median and spread
+  *     (`graft.Bench`'s estimator);
   *   - `ab <q> <spark.conf> <a> <b> [pairs]`: same-JVM interleaved A/B
   *     of one query under two values of a `spark.*` session conf (read
   *     at plan time on every run), strictly alternating A,B,A,B so
@@ -35,6 +38,12 @@ object Run {
     * (`graft.Bench` runs on it too). */
   def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** Measured passes of a [[series]]: SPARK_GRAFT_BENCH_RUNS, default 7,
+    * at which [[Bench.keptRuns]] drops two warm-up passes and keeps the
+    * fastest 3 of the other 5. */
+  def benchRuns: Int =
+    sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "7").toInt
 
   /** The one way a runner executes a query: build it in a fresh
     * [[Scope]], hand its output to `sink`, then close the scope. Left
@@ -72,6 +81,23 @@ object Run {
       out.write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
+  }
+
+  /** The one timing loop: an unmeasured warm-up pass over `names`, then
+    * `runs` passes over all of them — interleaved at the suite level, so
+    * a transient load spike perturbs one pass, not one query — every run
+    * through [[once]]; per query, [[Bench.stats]] of the measured passes.
+    * A failed run is reported on stderr and records no time. */
+  def series(spark: SparkSession, names: Seq[String],
+      runs: Int): Seq[Bench.QueryStat] = {
+    names.foreach(once(spark, sfDir, _))
+    val passes = Seq.fill(runs)(names.map { name =>
+      val outcome = once(spark, sfDir, name)
+      outcome.left.foreach(e =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"))
+      outcome.toOption
+    })
+    Bench.stats(names, passes)
   }
 
   /** `body`'s result, with the (action, query execution) of every plan
@@ -119,14 +145,14 @@ object Run {
           s"runs=${ts.map(t => f"$t%.3f").mkString(",")}"
       }
 
-  private def time(spark: SparkSession, names: Seq[String]): Unit = {
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    names.foreach { name =>
-      once(spark, sfDir, name) // warm-up
-      val rs = Seq.fill(runs)(once(spark, sfDir, name))
-      println(f"[time] $name%-28s ${summary(rs)}")
+  private def time(spark: SparkSession, names: Seq[String]): Unit =
+    series(spark, names, benchRuns).foreach { q =>
+      val verdict =
+        if (q.failed) "  FAILED" else if (q.noisy) "  noisy" else ""
+      println(f"[time] ${q.name}%-28s median=${q.median}%6.3f  " +
+        f"spread=${q.spread * 100}%5.1f%%  " +
+        s"runs=${q.runs.map(t => f"$t%.3f").mkString(",")}$verdict")
     }
-  }
 
   private def ab(spark: SparkSession, name: String, conf: String,
       a: String, b: String, pairs: Int): Unit = {

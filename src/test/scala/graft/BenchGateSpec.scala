@@ -130,31 +130,26 @@ class BenchGateSpec extends AnyFunSuite {
     assert(!Bench.isNoisy(Bench.keptRuns(Nil, 7)))
   }
 
-  test("planAttempt: budget-aware mode × runs shape — full preferred, " +
-      "valid headline-subset beats invalid full (r16)") {
-    // the r15 driver regime replayed: full pass ~270 s, subset ~70 s,
-    // 7 runs wanted, 2400 s budget. Full@7 = 1890 s fits an empty
-    // budget; at 1500 s remaining full@7 does not fit but full@5 does;
-    // at 1200 s full@5 (1350) misses and subset@7 (490) takes over —
-    // VALID, where the old protocol degraded to an invalid full@3
-    def plan(remain: Double, have: Boolean = false) =
-      Bench.planAttempt(remain, 270.0, 70.0, 7, have)
-    assert(plan(2400.0) == Some((false, 7)))
-    assert(plan(1500.0) == Some((false, 5)))
-    assert(plan(1200.0) == Some((true, 7)))
-    assert(plan(400.0) == Some((true, 5)))
-    // below subset@5: first attempt shrinks to whatever fits (≥ 3,
-    // possibly invalid but SOME driver-visible number)…
-    assert(plan(250.0) == Some((true, 3)))
-    assert(plan(10.0) == Some((true, 3)))
-    // …but with a series already recorded, nothing further runs
-    assert(plan(250.0, have = true).isEmpty)
-    // runsWanted ≤ 5 never "degrades" upward to 5
-    assert(Bench.planAttempt(1000.0, 270.0, 70.0, 3, false) ==
-      Some((false, 3)))
-    // subset mode retains selection power exactly when runs do
-    assert(Bench.headlineInvalidReason(7, Nil).isEmpty)
-    assert(Bench.headlineInvalidReason(5, Nil).isEmpty)
-    assert(Bench.headlineInvalidReason(3, Nil).isDefined)
+  test("series statistics: a failed run marks only its query, the " +
+      "warm-up head is dropped") {
+    // 7 passes over two queries; q_fail throws in pass 5
+    val names = Seq("q_ok", "q_fail")
+    val ok = Seq(9.0, 8.0, 1.0, 5.0, 2.0, 3.0, 4.0)
+    val fail = Seq(Some(7.0), Some(6.0), Some(1.5), Some(2.5), None,
+      Some(0.5), Some(3.5))
+    val passes = ok.indices.map(i => Seq(Some(ok(i)), fail(i)))
+    val Seq(a, b) = Bench.stats(names, passes)
+    // the warm-up head (9.0, 8.0) is dropped: fastest 3 of the other 5
+    assert(a.name == "q_ok" && !a.failed)
+    assert(a.runs == ok && a.median == 2.0 && a.spread == 1.0)
+    // the failed run records no time; the other six are kept
+    assert(b.name == "q_fail" && b.failed)
+    assert(b.runs == fail.flatten)
+    assert(b.median == 1.5) // fastest 3 of (1.5, 2.5, 0.5, 3.5)
+    // the other query's kept median is the same as in a clean series
+    val clean = Bench.stats(Seq("q_ok"), ok.map(t => Seq(Some(t))))
+    assert(clean == Seq(a))
+    assert(Bench.headlineInvalidReason(passes.size,
+      Seq(a, b).filter(_.failed).map(_.name)).get.contains("q_fail"))
   }
 }
