@@ -47,15 +47,17 @@ final case class Thresholds(lower: Option[Double], upper: Option[Double]) {
   * cuts and bin limits, T4, `semiautocuts.py:508-541`) but the returned
   * predicate applies to any row (T1-T3 return plain `Column`s).
   *
-  * Every estimate is one Spark action that runs once: the cardinality
-  * guard rides in the estimation job ([[Quantiles.guardedEstimate]]).
-  * Binned variants (T6/T7) replace the reference's serial per-bin Python
-  * loops (`semiautocuts.py:696-716,835-855`) with one Spark job — T6 a
-  * `groupBy(bin).agg(...)`, T7 a dense per-bin count — whose ≤bins-row
-  * result is resolved on the driver and applied as a per-bin array
-  * literal: the returned frame is the input plan plus one projected
-  * boolean column, with no aggregation or join left in it for later
-  * actions to re-run (J3/J4).
+  * Every estimate is one Spark job that runs once: the cardinality
+  * guard rides in the estimation job ([[Quantiles.guardedEstimate]]),
+  * and only a sample over the guard's limit pays a second job, the
+  * sketch. Binned variants (T6/T7) replace the reference's serial
+  * per-bin Python loops (`semiautocuts.py:696-716,835-855`) with one
+  * Spark job — T6 the estimation sample collector
+  * ([[Quantiles.exactSample]]), whose per-bin values are sorted and
+  * resolved on the driver, T7 a dense per-bin count — and apply the
+  * result as a per-bin array literal: the returned frame is the input
+  * plan plus one projected boolean column, with no aggregation or join
+  * left in it for later actions to re-run (J3/J4).
   */
 object SemiAutoCut {
 
@@ -140,8 +142,8 @@ object SemiAutoCut {
   def timeIntervalCut(time: Column, pairs: Seq[(Double, Double)]): Column =
     pairs.map { case (lo, hi) => time >= lo && time <= hi }.reduce(_ || _)
 
-  /** T6: binned cut — per-bin thresholds from ONE grouped estimation
-    * action (J3), resolved on the driver and applied as literals.
+  /** T6: binned cut — per-bin thresholds from ONE estimation job (J3),
+    * resolved on the driver and applied as literals.
     *
     * `bin` must be a deterministic, integral bucket expression. A row
     * whose bin is null fails the cut. Keeping rows outside a binning
@@ -186,16 +188,14 @@ object SemiAutoCut {
     // are all null has no quantiles and passes every row.
     def estimated(ps: Seq[Double])(thr: Seq[Double] => Thresholds)
         : Map[Long, Thresholds] =
-      Quantiles.guardedEstimate(est, Seq(col("__bin__")), maxExactRows)(
-        pct => Seq(pct(x, array(ps.map(lit): _*))))._1
-        .map(r => r.getLong(0) ->
-          (if (r.isNullAt(1)) Thresholds(None, None)
-           else thr(r.getSeq[Double](1))))
-        .toMap
+      Quantiles.guardedEstimate(est, Some(col("__bin__")), x, ps,
+          maxExactRows)._1
+        .map { case (k, q) => k -> q.fold(Thresholds(None, None))(thr) }
     val perBin: Map[Long, Thresholds] =
       if (pars.isValue) {
-        est.select("__bin__").distinct().collect()
-          .map(_.getLong(0) -> Thresholds(pars.valLower, pars.valUpper))
+        // only the bins: a sample that keeps no value
+        Quantiles.exactSample(est, col("__bin__"), lit(null), cap = 0)
+          .bins.keys.map(_ -> Thresholds(pars.valLower, pars.valUpper))
           .toMap
       } else if (pars.isPercentile) {
         val (pl, pu) = pars.percent match {

@@ -524,10 +524,18 @@ object Warc {
   /** Parse the sidecar member indexes of a [[writeWetFiles]] /
     * [[writeWatFiles]] output dir: `(filename, offset, length, url)` —
     * the CDX essentials, enough to range-fetch any single record
-    * without touching the rest of its shard. Declarative text parse. */
+    * without touching the rest of its shard. Declarative text parse of
+    * the `.cdx` files, listed and read by name: a glob path would send
+    * the reader's metadata probe after a file named `*.cdx`. */
   def readMemberIndex(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, element_at, split}
-    spark.read.textFile(s"$dir/*.cdx").toDF("line")
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val files = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(path).map(_.getPath)
+      .filter(p => p.getName.endsWith(".cdx") && !p.getName.startsWith("."))
+      .map(_.toString).sorted
+    require(files.nonEmpty, s"no .cdx member index under $dir")
+    spark.read.textFile(files.toIndexedSeq: _*).toDF("line")
       .select(split(col("line"), " ", 4).as("p"))
       .select(
         element_at(col("p"), 1).as("filename"),

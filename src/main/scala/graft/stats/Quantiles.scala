@@ -1,6 +1,8 @@
 package graft.stats
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Quantile/robust-scale estimators.
@@ -23,12 +25,13 @@ object Quantiles {
   /** The quantile array in the first column of a global aggregate's row;
     * null there means the sample had no non-null value of `c`. */
   private def nonEmpty(r: Row, c: Column): Seq[Double] = {
-    if (r.isNullAt(0))
-      throw new IllegalArgumentException(
-        s"empty estimation sample for quantile over $c — the source " +
-          "DataFrame (or estimation condition) matched zero non-null rows")
+    if (r.isNullAt(0)) throw emptySample(c)
     r.getSeq[Double](0)
   }
+
+  private def emptySample(c: Column) = new IllegalArgumentException(
+    s"empty estimation sample for quantile over $c — the source " +
+      "DataFrame (or estimation condition) matched zero non-null rows")
 
   /** [[exact]] on the driver, over an ascending array: Spark's
     * `percentile` bit for bit. Position pos = (n−1)·p; between distinct
@@ -63,65 +66,157 @@ object Quantiles {
     * the cardinality guard routed to the sketch. */
   final case class GuardedQuantiles(values: Seq[Double], approximated: Boolean)
 
-  /** The cardinality guard, folded into the estimation itself: runs
-    * `estimate(pct)` grouped by `keys` over `sample` and collects the
-    * rows (keys, then the estimate columns), where `pct(x, p)` is the
-    * exact percentile while `sample` has at most `maxExactRows` rows and
-    * the GK sketch above. Also returns whether the sketch was used.
+  /** The cardinality guard, folded into the estimation itself: the
+    * percentiles `ps` of `x` over `sample`, per `bin` (a non-null long;
+    * `None` for one global estimate, returned under key 0). A bin whose
+    * values are all null maps to `None`. Also returns whether the GK
+    * sketch was used: the percentiles are exact while `sample` has at
+    * most `maxExactRows` rows, and come from `percentile_approx` above.
     *
-    * When the optimized plan reports a `rowCount` (a `LocalRelation`,
-    * whose filters the optimizer folds in, or an unfiltered `Range`; a
-    * filtered `Range` reports none) it decides up front. The
-    * plan's byte size is never trusted: for parquet it is the
-    * COMPRESSED file size, so a highly compressed sample far above the
-    * limit would pass as small (ADVICE r06). Otherwise (a parquet scan,
-    * anything filtered) ONE action aggregates
-    * `sample.limit(maxExactRows + 1)` with a `count` beside the exact
-    * percentiles: a total of at most `maxExactRows` means the limit
-    * removed nothing, so the percentiles are exact; a larger total
-    * re-runs the estimate with the sketch over the full sample. The
-    * exact aggregate therefore never sees more than `maxExactRows + 1`
-    * rows, and a sample within the limit costs one action. */
+    * When the optimized plan reports a `rowCount` over the limit (a
+    * `LocalRelation`, whose filters the optimizer folds in, or an
+    * unfiltered `Range`; a filtered `Range` reports none) the sketch runs
+    * at once. The plan's byte size is never trusted: for parquet it is
+    * the COMPRESSED file size, so a highly compressed sample far above
+    * the limit would pass as small (ADVICE r06). Otherwise ONE Spark job
+    * ([[exactSample]]) counts the rows and brings the sample to the
+    * driver while the count is within the limit, where each bin's values
+    * are sorted and resolved by [[ofSorted]], Spark's `percentile` bit
+    * for bit (up to the sign of a zero: see [[exactSample]]). The driver
+    * then holds at most `maxExactRows` × 16 B. A larger count re-runs the
+    * estimate with the sketch over the full sample, as a second job.
+    * `Int.MaxValue` forces the exact path at any size: that runs Spark's
+    * `percentile` aggregate, so no sample lands on the driver. */
   def guardedEstimate(
       sample: DataFrame,
-      keys: Seq[Column],
-      maxExactRows: Int)(
-      estimate: ((Column, Column) => Column) => Seq[Column])
-      : (Array[Row], Boolean) = {
-    def run(src: DataFrame, sketch: Boolean, extra: Seq[Column]) = {
-      val aggs = estimate { (x, p) =>
-        if (sketch) percentile_approx(x, p, lit(approxAcc))
-        else percentile(x, p)
-      } ++ extra
-      src.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*).collect()
-    }
-    val known =
-      if (maxExactRows == Int.MaxValue) Some(false)
-      else sample.queryExecution.optimizedPlan.stats.rowCount
-        .map(_ > maxExactRows)
-    known match {
-      case Some(sketch) => (run(sample, sketch, Nil), sketch)
-      case None =>
-        val rows = run(sample.limit(maxExactRows + 1), sketch = false,
-          Seq(count(lit(1))))
-        if (rows.map(r => r.getLong(r.length - 1)).sum > maxExactRows)
-          (run(sample, sketch = true, Nil), true)
-        else (rows, false)
+      bin: Option[Column],
+      x: Column,
+      ps: Seq[Double],
+      maxExactRows: Int): (Map[Long, Option[Seq[Double]]], Boolean) = {
+    def aggregate(pct: (Column, Column) => Column) =
+      sample.groupBy(bin.toSeq: _*).agg(pct(x, array(ps.map(lit): _*)))
+        .collect().map { r =>
+          val q = r.length - 1
+          (if (bin.isEmpty) 0L else r.getLong(0)) ->
+            Option.unless(r.isNullAt(q))(r.getSeq[Double](q))
+        }.toMap
+    def sketch = (aggregate(percentile_approx(_, _, lit(approxAcc))), true)
+    if (maxExactRows == Int.MaxValue) (aggregate(percentile(_, _)), false)
+    else if (sample.queryExecution.optimizedPlan.stats.rowCount
+        .exists(_ > maxExactRows)) sketch
+    else {
+      val s = exactSample(sample, bin.getOrElse(lit(0L)), x, maxExactRows)
+      if (s.rows > maxExactRows) sketch else (s.percentiles(ps), false)
     }
   }
 
+  /** The rows of one estimation sample, gathered per partition and merged
+    * by `treeAggregate`: the row count, every bin that has a row (also
+    * a bin whose values are all null), and the (bin, value) pairs of the
+    * non-null values while the row count is at most `cap`. Past `cap` the
+    * pairs are dropped and only the count and the bins go on. */
+  private[graft] final class Sample(cap: Int) extends Serializable {
+    var rows = 0L
+    val bins = mutable.LongMap.empty[Unit]
+    private var n = 0
+    private var keys = new Array[Long](16)
+    private var vals = new Array[Double](16)
+
+    /** Adds one (bin, value) row; the value may be null. */
+    def add(r: InternalRow): this.type = {
+      val k = r.getLong(0)
+      rows += 1
+      bins.update(k, ())
+      if (rows > cap) drop()
+      else if (!r.isNullAt(1)) {
+        if (n == keys.length) grow(math.max(16, 2 * n))
+        keys(n) = k; vals(n) = r.getDouble(1); n += 1
+      }
+      this
+    }
+
+    def merge(o: Sample): this.type = {
+      rows += o.rows
+      bins ++= o.bins
+      if (rows > cap) drop()
+      else {
+        if (n + o.n > keys.length) grow(n + o.n)
+        System.arraycopy(o.keys, 0, keys, n, o.n)
+        System.arraycopy(o.vals, 0, vals, n, o.n)
+        n += o.n
+      }
+      this
+    }
+
+    /** Per bin, the exact percentiles `ps` of its values, or `None` when
+      * its values are all null. Valid while `rows` ≤ `cap`. */
+    def percentiles(ps: Seq[Double]): Map[Long, Option[Seq[Double]]] = {
+      val byBin = mutable.LongMap.empty[mutable.ArrayBuilder.ofDouble]
+      var i = 0
+      while (i < n) {
+        byBin.getOrElseUpdate(keys(i), new mutable.ArrayBuilder.ofDouble) +=
+          vals(i)
+        i += 1
+      }
+      bins.keys.map { k =>
+        k -> byBin.get(k).map { b =>
+          val v = b.result()
+          java.util.Arrays.sort(v)
+          ofSorted(v, ps)
+        }
+      }.toMap
+    }
+
+    private def drop(): Unit =
+      if (keys.nonEmpty) { n = 0; keys = Array.empty; vals = Array.empty }
+
+    private def grow(size: Int): Unit = {
+      keys = java.util.Arrays.copyOf(keys, size)
+      vals = java.util.Arrays.copyOf(vals, size)
+    }
+
+    /** A task result carries the pairs, not the spare capacity. */
+    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
+      grow(n)
+      out.defaultWriteObject()
+    }
+  }
+
+  /** One Spark job: the [[Sample]] of `x` (cast to double, as `percentile`
+    * reads it) per long `bin` over `df`, holding values up to `cap` rows.
+    * The job is one SQL execution named `quantiles`, so query listeners
+    * see its scan.
+    *
+    * Resolved by [[Sample.percentiles]], the result equals Spark's
+    * `percentile` bit for bit with one exception: the sort puts −0.0
+    * before 0.0, where `percentile` orders the two as equal keys in hash
+    * order, so a percentile that lands on a zero may differ in its sign.
+    * Spark's comparisons treat the two zeros as equal, so no cut
+    * predicate tells them apart. */
+  private[graft] def exactSample(
+      df: DataFrame,
+      bin: Column,
+      x: Column,
+      cap: Int): Sample =
+    GraftSqlBridge.executeRows(
+        df.select(bin.cast("long"), x.cast("double")), "quantiles") {
+      _.treeAggregate(new Sample(cap))(
+        _ add _,
+        _ merge _)
+    }
+
   /** T2/T3 threshold quantiles behind the cardinality guard
-    * ([[guardedEstimate]]): one estimation action unless the sample is
-    * over the limit. */
+    * ([[guardedEstimate]]): one Spark job unless the sample is over the
+    * limit. */
   def thresholdQuantiles(
       df: DataFrame,
       c: Column,
       ps: Seq[Double],
       maxExactRows: Int = defaultMaxExactRows): GuardedQuantiles = {
-    val (rows, approximated) =
-      guardedEstimate(df.filter(c.isNotNull), Nil, maxExactRows)(pct =>
-        Seq(pct(c, array(ps.map(lit): _*))))
-    GuardedQuantiles(nonEmpty(rows.head, c), approximated)
+    val (q, approximated) =
+      guardedEstimate(df.filter(c.isNotNull), None, c, ps, maxExactRows)
+    GuardedQuantiles(q.get(0L).flatten.getOrElse(throw emptySample(c)),
+      approximated)
   }
 
   /** A5: approximate percentile (t-digest-free Greenwald-Khanna in Spark)

@@ -221,7 +221,7 @@ class SemiAutoCutSpec extends SparkSpec {
     }
   }
 
-  test("estimation runs once: one action per estimate, none left in the cut") {
+  test("estimation runs once: one job per estimate, none left in the cut") {
     val d = viaParquet(vals.zipWithIndex
       .map { case (v, i) => (i.toDouble, v, (i % 3).toDouble) }
       .toDF("t", "rq", "trig"))
@@ -230,12 +230,19 @@ class SemiAutoCutSpec extends SparkSpec {
         val (t, _, jobs) =
           tools.Run.capture(spark)(SemiAutoCut.thresholds(d, "rq", pars))
         assert(t.upper.isDefined)
-        assert(jobs <= 2, s"thresholds($pars) launched $jobs jobs")
+        assert(jobs == 1, s"thresholds($pars) launched $jobs jobs")
       }
     val (_, _, inputJobs) = tools.Run.capture(spark)(d.count())
-    val binned = SemiAutoCut.binnedCut(d, "rq",
-      Hist.bucket(col("t"), 0.0, 500.0, 5), CutPars(sigma = Some(2.0)),
-      "cut_b")
+    val bin = Hist.bucket(col("t"), 0.0, 500.0, 5)
+    Seq(CutPars(sigma = Some(2.0)), CutPars(percentUpper = Some(90.0)),
+        CutPars(valUpper = Some(50.0))).foreach { pars =>
+      val (out, _, jobs) = tools.Run.capture(spark)(
+        SemiAutoCut.binnedCut(d, "rq", bin, pars, "cut_b"))
+      assert(out.filter(col("cut_b")).count() > 0)
+      assert(jobs == 1, s"binnedCut($pars) launched $jobs jobs")
+    }
+    val binned = SemiAutoCut.binnedCut(d, "rq", bin,
+      CutPars(sigma = Some(2.0)), "cut_b")
     // the bin counts are one job; the threshold is resolved on the driver
     val (rated, _, rateJobs) = tools.Run.capture(spark)(
       SemiAutoCut.rateCut(binned, col("t"), 0.0, 500.0, 10,
