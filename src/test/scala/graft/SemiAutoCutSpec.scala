@@ -221,7 +221,7 @@ class SemiAutoCutSpec extends SparkSpec {
     }
   }
 
-  test("estimation runs once: one job per estimate, none left in the cut") {
+  test("estimation runs once: one action per estimate, none left in the cut") {
     val d = viaParquet(vals.zipWithIndex
       .map { case (v, i) => (i.toDouble, v, (i % 3).toDouble) }
       .toDF("t", "rq", "trig"))
