@@ -49,8 +49,9 @@ final case class Thresholds(lower: Option[Double], upper: Option[Double]) {
   *
   * Every estimate is one Spark job that runs once: the cardinality
   * guard rides in the estimation job ([[Quantiles.guardedEstimate]]),
-  * and only a sample over the guard's limit pays a second job, the
-  * sketch. Binned variants (T6/T7) replace the reference's serial
+  * and only a sample too large for the driver pays a second job: the
+  * exact aggregate on the executors, or the sketch past the guard's
+  * limit. Binned variants (T6/T7) replace the reference's serial
   * per-bin Python loops (`semiautocuts.py:696-716,835-855`) with one
   * Spark job — T6 the estimation sample collector
   * ([[Quantiles.exactSample]]), whose per-bin values are sorted and
@@ -193,10 +194,8 @@ object SemiAutoCut {
         .map { case (k, q) => k -> q.fold(Thresholds(None, None))(thr) }
     val perBin: Map[Long, Thresholds] =
       if (pars.isValue) {
-        // only the bins: a sample that keeps no value
-        Quantiles.exactSample(est, col("__bin__"), lit(null), cap = 0)
-          .bins.keys.map(_ -> Thresholds(pars.valLower, pars.valUpper))
-          .toMap
+        Quantiles.bins(est, col("__bin__"))
+          .map(_ -> Thresholds(pars.valLower, pars.valUpper)).toMap
       } else if (pars.isPercentile) {
         val (pl, pu) = pars.percent match {
           case Some(p) => (Some(0.5 - p / 200.0), Some(0.5 + p / 200.0))

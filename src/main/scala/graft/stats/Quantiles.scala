@@ -39,13 +39,18 @@ object Quantiles {
     * `(hi − pos)·v[lo] + (pos − lo)·v[hi]`, otherwise v[lo]. For a
     * sample already on the driver, where a local frame would cost two
     * Spark jobs. */
-  def ofSorted(v: Array[Double], ps: Seq[Double]): Seq[Double] = {
-    require(v.nonEmpty, "empty estimation sample for a percentile")
+  def ofSorted(v: Array[Double], ps: Seq[Double]): Seq[Double] =
+    ofSorted(v, 0, v.length, ps)
+
+  /** [[ofSorted]] over `v(from until until)`. */
+  private def ofSorted(v: Array[Double], from: Int, until: Int,
+      ps: Seq[Double]): Seq[Double] = {
+    require(until > from, "empty estimation sample for a percentile")
     ps.map { p =>
       require(p >= 0.0 && p <= 1.0, s"percentile $p outside [0, 1]")
-      val pos = (v.length - 1L) * p
+      val pos = (until - from - 1L) * p
       val (lo, hi) = (pos.floor.toLong, pos.ceil.toLong)
-      val (vl, vh) = (v(lo.toInt), v(hi.toInt))
+      val (vl, vh) = (v(from + lo.toInt), v(from + hi.toInt))
       if (lo == hi || vl == vh) vl
       else (hi - pos) * vl + (pos - lo) * vh
     }
@@ -72,21 +77,25 @@ object Quantiles {
     * values are all null maps to `None`. Also returns whether the GK
     * sketch was used: the percentiles are exact while `sample` has at
     * most `maxExactRows` rows, and come from `percentile_approx` above.
+    * `Int.MaxValue` switches the sketch off: every size is exact.
     *
-    * When the optimized plan reports a `rowCount` over the limit (a
-    * `LocalRelation`, whose filters the optimizer folds in, or an
-    * unfiltered `Range`; a filtered `Range` reports none) the sketch runs
-    * at once. The plan's byte size is never trusted: for parquet it is
-    * the COMPRESSED file size, so a highly compressed sample far above
-    * the limit would pass as small (ADVICE r06). Otherwise ONE Spark job
-    * ([[exactSample]]) counts the rows and brings the sample to the
-    * driver while the count is within the limit, where each bin's values
-    * are sorted and resolved by [[ofSorted]], Spark's `percentile` bit
-    * for bit (up to the sign of a zero: see [[exactSample]]). The driver
-    * then holds at most `maxExactRows` × 16 B. A larger count re-runs the
-    * estimate with the sketch over the full sample, as a second job.
-    * `Int.MaxValue` forces the exact path at any size: that runs Spark's
-    * `percentile` aggregate, so no sample lands on the driver. */
+    * Where the exact percentiles are computed depends on the sample's
+    * row count against [[collectorRows]], the rows the driver may take
+    * in. Within it, ONE Spark job ([[exactSample]]) counts the rows and
+    * brings the sample to the driver, where each bin's values are sorted
+    * and resolved by [[ofSorted]], Spark's `percentile` bit for bit (up
+    * to the sign of a zero: see [[exactSample]]). A larger sample, or
+    * one with a partition over its share of that bound, gets a second
+    * job instead: Spark's `percentile` aggregate on the executors, or
+    * the sketch when the count is over `maxExactRows`.
+    *
+    * When the optimized plan reports a `rowCount` over [[collectorRows]]
+    * (a `LocalRelation`, whose filters the optimizer folds in, or an
+    * unfiltered `Range`; a filtered `Range` reports none) that count
+    * picks the aggregate or the sketch at once. The plan's byte size is
+    * never trusted: for parquet it is the COMPRESSED file size, so a
+    * highly compressed sample far above the limit would pass as small
+    * (ADVICE r06). */
   def guardedEstimate(
       sample: DataFrame,
       bin: Option[Column],
@@ -100,45 +109,86 @@ object Quantiles {
           (if (bin.isEmpty) 0L else r.getLong(0)) ->
             Option.unless(r.isNullAt(q))(r.getSeq[Double](q))
         }.toMap
-    def sketch = (aggregate(percentile_approx(_, _, lit(approxAcc))), true)
-    if (maxExactRows == Int.MaxValue) (aggregate(percentile(_, _)), false)
-    else if (sample.queryExecution.optimizedPlan.stats.rowCount
-        .exists(_ > maxExactRows)) sketch
-    else {
-      val s = exactSample(sample, bin.getOrElse(lit(0L)), x, maxExactRows)
-      if (s.rows > maxExactRows) sketch else (s.percentiles(ps), false)
+    def onExecutors(rows: BigInt) =
+      if (rows > maxExactRows && maxExactRows < Int.MaxValue)
+        (aggregate(percentile_approx(_, _, lit(approxAcc))), true)
+      else (aggregate(percentile(_, _)), false)
+    val keep = collectorRows(sample.sparkSession, maxExactRows)
+    sample.queryExecution.optimizedPlan.stats.rowCount.filter(_ > keep) match {
+      case Some(rows) => onExecutors(rows)
+      case None =>
+        val s = exactSample(sample, bin.getOrElse(lit(0L)), x, keep)
+        s.percentiles(ps).map((_, false)).getOrElse(onExecutors(s.rows))
     }
+  }
+
+  /** The most estimation rows whose values [[exactSample]] brings to the
+    * driver: at most `maxExactRows`, and few enough that the task
+    * results, at [[Sample.bytesPerRow]] a row, stay within a quarter of
+    * `spark.driver.maxResultSize` (Spark's bound on the serialized task
+    * results of one job, past which it aborts the job; 0 sets none) and
+    * an eighth of the driver's heap. Merging them, the driver holds at
+    * most twice that. At Spark's default 1 GiB result bound that is
+    * 11,184,810 rows in 256 MiB of task results. */
+  private[graft] def collectorRows(
+      spark: org.apache.spark.sql.SparkSession,
+      maxExactRows: Int): Long =
+    collectorRows(
+      spark.sparkContext.getConf
+        .getSizeAsBytes("spark.driver.maxResultSize", "1g"),
+      Runtime.getRuntime.maxMemory,
+      maxExactRows)
+
+  private[graft] def collectorRows(
+      maxResultSize: Long,
+      heap: Long,
+      maxExactRows: Int): Long = {
+    val results = if (maxResultSize > 0) maxResultSize / 4 else Long.MaxValue
+    math.min(maxExactRows.toLong,
+      math.min(results, heap / 8) / Sample.bytesPerRow)
   }
 
   /** The rows of one estimation sample, gathered per partition and merged
     * by `treeAggregate`: the row count, every bin that has a row (also
     * a bin whose values are all null), and the (bin, value) pairs of the
-    * non-null values while the row count is at most `cap`. Past `cap` the
-    * pairs are dropped and only the count and the bins go on. */
-  private[graft] final class Sample(cap: Int) extends Serializable {
+    * non-null values. A partition keeps its pairs while it has at most
+    * `share` rows and its bins while it has at most `share` of them; past
+    * that it drops them and only counts, and a merge with a part that
+    * dropped them drops them too. So a partition's task result holds at
+    * most `share` × [[Sample.bytesPerRow]] bytes of pairs and bins,
+    * whatever the sample's size. */
+  private[graft] final class Sample(share: Long) extends Serializable {
     var rows = 0L
-    val bins = mutable.LongMap.empty[Unit]
+    @transient private var binSet = mutable.LongMap.empty[Unit]
     private var n = 0
     private var keys = new Array[Long](16)
     private var vals = new Array[Double](16)
+    /** The bins, packed while the sample is serialized. */
+    private var packed: Array[Long] = null
 
-    /** Adds one (bin, value) row; the value may be null. */
+    /** Adds one (bin, value) row of a partition; the value may be null. */
     def add(r: InternalRow): this.type = {
       val k = r.getLong(0)
       rows += 1
-      bins.update(k, ())
-      if (rows > cap) drop()
-      else if (!r.isNullAt(1)) {
-        if (n == keys.length) grow(math.max(16, 2 * n))
-        keys(n) = k; vals(n) = r.getDouble(1); n += 1
+      if (binSet != null) {
+        binSet.update(k, ())
+        if (binSet.size > share) binSet = null
+      }
+      if (keys != null) {
+        if (rows > share) dropPairs()
+        else if (!r.isNullAt(1)) {
+          if (n == keys.length) grow(math.max(16, 2 * n))
+          keys(n) = k; vals(n) = r.getDouble(1); n += 1
+        }
       }
       this
     }
 
     def merge(o: Sample): this.type = {
       rows += o.rows
-      bins ++= o.bins
-      if (rows > cap) drop()
+      binSet = if (binSet == null || o.binSet == null) null
+               else binSet ++= o.binSet
+      if (keys == null || o.keys == null) dropPairs()
       else {
         if (n + o.n > keys.length) grow(n + o.n)
         System.arraycopy(o.keys, 0, keys, n, o.n)
@@ -148,44 +198,78 @@ object Quantiles {
       this
     }
 
-    /** Per bin, the exact percentiles `ps` of its values, or `None` when
-      * its values are all null. Valid while `rows` ≤ `cap`. */
-    def percentiles(ps: Seq[Double]): Map[Long, Option[Seq[Double]]] = {
-      val byBin = mutable.LongMap.empty[mutable.ArrayBuilder.ofDouble]
-      var i = 0
-      while (i < n) {
-        byBin.getOrElseUpdate(keys(i), new mutable.ArrayBuilder.ofDouble) +=
-          vals(i)
-        i += 1
-      }
-      bins.keys.map { k =>
-        k -> byBin.get(k).map { b =>
-          val v = b.result()
-          java.util.Arrays.sort(v)
-          ofSorted(v, ps)
-        }
-      }.toMap
-    }
+    /** Every bin that has a row, unless a partition dropped its bins. */
+    def bins: Option[Iterable[Long]] = Option(binSet).map(_.keys)
 
-    private def drop(): Unit =
-      if (keys.nonEmpty) { n = 0; keys = Array.empty; vals = Array.empty }
+    /** Per bin, the exact percentiles `ps` of its values, or `None` when
+      * its values are all null; `None` in all when a partition dropped
+      * its pairs. */
+    def percentiles(ps: Seq[Double]): Option[Map[Long, Option[Seq[Double]]]] =
+      Option.when(keys != null && binSet != null) {
+        // each bin's values into one contiguous slice: count, offset, copy
+        val start = mutable.LongMap.empty[Int]
+        var i = 0
+        while (i < n) {
+          start(keys(i)) = start.getOrElse(keys(i), 0) + 1
+          i += 1
+        }
+        var offset = 0
+        start.mapValuesInPlace { (_, count) => offset += count; offset - count }
+        val end = start.clone()
+        val sorted = new Array[Double](n)
+        i = 0
+        while (i < n) {
+          val j = end(keys(i))
+          sorted(j) = vals(i)
+          end(keys(i)) = j + 1
+          i += 1
+        }
+        binSet.keys.map { k =>
+          k -> start.get(k).map { from =>
+            java.util.Arrays.sort(sorted, from, end(k))
+            ofSorted(sorted, from, end(k), ps)
+          }
+        }.toMap
+      }
+
+    private def dropPairs(): Unit = { n = 0; keys = null; vals = null }
 
     private def grow(size: Int): Unit = {
       keys = java.util.Arrays.copyOf(keys, size)
       vals = java.util.Arrays.copyOf(vals, size)
     }
 
-    /** A task result carries the pairs, not the spare capacity. */
+    /** A task result carries the pairs and the bins as primitive arrays,
+      * not the spare capacity or the hash table. */
     private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      grow(n)
+      if (keys != null && keys.length != n) grow(n)
+      packed = if (binSet == null) null else binSet.keys.toArray
       out.defaultWriteObject()
+      packed = null
+    }
+
+    private def readObject(in: java.io.ObjectInputStream): Unit = {
+      in.defaultReadObject()
+      if (packed != null) {
+        binSet = mutable.LongMap.empty[Unit]
+        packed.foreach(binSet.update(_, ()))
+        packed = null
+      }
     }
   }
 
+  private[graft] object Sample {
+    /** The task-result bytes a row may add: a (bin, value) pair and its
+      * bin, 8 B each. */
+    val bytesPerRow = 24
+  }
+
   /** One Spark job: the [[Sample]] of `x` (cast to double, as `percentile`
-    * reads it) per long `bin` over `df`, holding values up to `cap` rows.
-    * The job is one SQL execution named `quantiles`, so query listeners
-    * see its scan.
+    * reads it) per long `bin` over `df`. Each partition keeps its values
+    * while it holds at most its share of `maxRows` (`maxRows` divided by
+    * the partition count), so the task results come to at most `maxRows`
+    * × [[Sample.bytesPerRow]] bytes plus a header per task. The job is one
+    * SQL execution named `quantiles`, so query listeners see its scan.
     *
     * Resolved by [[Sample.percentiles]], the result equals Spark's
     * `percentile` bit for bit with one exception: the sort puts −0.0
@@ -197,17 +281,28 @@ object Quantiles {
       df: DataFrame,
       bin: Column,
       x: Column,
-      cap: Int): Sample =
+      maxRows: Long): Sample =
     GraftSqlBridge.executeRows(
-        df.select(bin.cast("long"), x.cast("double")), "quantiles") {
-      _.treeAggregate(new Sample(cap))(
+        df.select(bin.cast("long"), x.cast("double")), "quantiles") { rdd =>
+      rdd.treeAggregate(
+          new Sample(maxRows / math.max(1, rdd.getNumPartitions)))(
         _ add _,
         _ merge _)
     }
 
+  /** The distinct values of `bin` (a non-null long) over `df`: one job
+    * ([[exactSample]] keeping no value), and a second (a `distinct`) only
+    * when a partition has more bins than its share of
+    * [[collectorRows]]. */
+  def bins(df: DataFrame, bin: Column): Iterable[Long] =
+    exactSample(df, bin, lit(null),
+        collectorRows(df.sparkSession, Int.MaxValue)).bins
+      .getOrElse(df.select(bin.cast("long")).distinct().collect()
+        .map(_.getLong(0)).toSeq)
+
   /** T2/T3 threshold quantiles behind the cardinality guard
     * ([[guardedEstimate]]): one Spark job unless the sample is over the
-    * limit. */
+    * driver's bound ([[collectorRows]]) or the limit. */
   def thresholdQuantiles(
       df: DataFrame,
       c: Column,

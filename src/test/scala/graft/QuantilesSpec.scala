@@ -72,7 +72,7 @@ class QuantilesSpec extends SparkSpec {
       val df = sample(seed).cache()
       Seq("d", "f", "i", "m").foreach { x =>
         val grouped = Quantiles.exactSample(df, col("bin"), col(x),
-          cap = 100000).percentiles(ps)
+          maxRows = 100000).percentiles(ps).get
         val want = sparkPercentiles(df, Seq(col("bin")), x)
         assert(grouped.keySet == want.keySet, s"seed $seed $x")
         assert(grouped(7L).isEmpty && grouped(8L).nonEmpty)
@@ -81,7 +81,7 @@ class QuantilesSpec extends SparkSpec {
             s"${grouped(k)} vs $q")
         }
         val global = Quantiles.exactSample(df, lit(0L), col(x),
-          cap = 100000).percentiles(ps)
+          maxRows = 100000).percentiles(ps).get
         assert(sameAll(global(0L), sparkPercentiles(df, Nil, x)(0L)),
           s"seed $seed $x global")
       }
@@ -94,36 +94,114 @@ class QuantilesSpec extends SparkSpec {
         Seq(Row(0L, 0.0), Row(0L, -0.0), Row(0L, 0.0), Row(0L, 1.0)), 2),
       StructType(Seq(StructField("bin", LongType),
         StructField("x", DoubleType))))
-    val got = Quantiles.exactSample(df, col("bin"), col("x"), cap = 10)
-      .percentiles(Seq(0.0, 0.5))(0L).get
+    val got = Quantiles.exactSample(df, col("bin"), col("x"), maxRows = 10)
+      .percentiles(Seq(0.0, 0.5)).get(0L).get
     assert(got.map(java.lang.Double.doubleToRawLongBits) ==
       Seq(-0.0, 0.0).map(java.lang.Double.doubleToRawLongBits))
   }
 
-  test("sample buffers: values up to the cap, past it only the count") {
-    def filled(cap: Int, bin: Long, xs: Double*) = {
-      val s = new Quantiles.Sample(cap)
+  test("sample buffers: a partition keeps values up to its share, past " +
+      "it only the count") {
+    def filled(share: Int, bin: Long, xs: Double*) = {
+      val s = new Quantiles.Sample(share)
       xs.foreach(v => s.add(InternalRow(bin, v)))
       s
     }
-    // each partial under the cap, together over it: only the count stays
-    val over = filled(5, 1L, 1.0, 2.0, 3.0).merge(filled(5, 2L, 4.0, 5.0, 6.0))
-    assert(over.rows == 6)
-    assert(over.bins.keySet == Set(1L, 2L))
-    assert(over.percentiles(Seq(0.5)) == Map(1L -> None, 2L -> None))
-    // within the cap the merge keeps every value; a null row keeps its bin
-    val under = filled(7, 1L, 3.0, 1.0).merge(filled(7, 1L, 2.0, 4.0))
-    under.add(InternalRow(3L, null))
+    // a partition past its share keeps the count and its bins; a merge
+    // with it drops the other part's pairs too
+    val over = filled(2, 1L, 1.0, 2.0, 3.0).merge(filled(5, 2L, 4.0, 5.0))
+    assert(over.rows == 5)
+    assert(over.bins.map(_.toSet) == Some(Set(1L, 2L)))
+    assert(over.percentiles(Seq(0.5)).isEmpty)
+    // past its share of bins it drops the bins as well
+    val wide = new Quantiles.Sample(2)
+    Seq(1L, 2L, 3L).foreach(k => wide.add(InternalRow(k, null)))
+    assert(wide.rows == 3 && wide.bins.isEmpty)
+    assert(filled(5, 4L, 1.0).merge(wide).bins.isEmpty)
+    // partitions within their shares: the merge keeps every value, also
+    // past any one share; a null row keeps its bin
+    val under = filled(2, 1L, 3.0, 1.0).merge(filled(2, 1L, 2.0, 4.0))
+      .merge(new Quantiles.Sample(1).add(InternalRow(3L, null)))
     assert(under.rows == 5)
     assert(under.percentiles(Seq(0.5, 1.0)) ==
-      Map(1L -> Some(Seq(2.5, 4.0)), 3L -> None))
-    // a task result carries the pairs, and only them
+      Some(Map(1L -> Some(Seq(2.5, 4.0)), 3L -> None)))
+    // a task result carries the pairs and the bins, and only them
     val bytes = new java.io.ByteArrayOutputStream
     new java.io.ObjectOutputStream(bytes).writeObject(under)
     val back = new java.io.ObjectInputStream(
       new java.io.ByteArrayInputStream(bytes.toByteArray)).readObject()
       .asInstanceOf[Quantiles.Sample]
     assert(back.percentiles(Seq(0.5, 1.0)) == under.percentiles(Seq(0.5, 1.0)))
-    assert(back.add(InternalRow(1L, 9.0)).rows == 6)
+    assert(back.bins.map(_.toSet) == Some(Set(1L, 3L)))
+    assert(back.merge(filled(1, 1L, 9.0)).percentiles(Seq(0.5, 1.0)) ==
+      Some(Map(1L -> Some(Seq(3.0, 9.0)), 3L -> None)))
+  }
+
+  test("the driver bound: a quarter of the result limit, an eighth of " +
+      "the heap, at most maxExactRows") {
+    val gib = 1L << 30
+    assert(Quantiles.collectorRows(gib, 16 * gib, 100000000) == 11184810L)
+    // no result limit: the heap bounds
+    assert(Quantiles.collectorRows(0L, 16 * gib, 100000000) == 89478485L)
+    assert(Quantiles.collectorRows(4 * gib, gib, Int.MaxValue) ==
+      gib / 8 / Quantiles.Sample.bytesPerRow)
+    assert(Quantiles.collectorRows(gib, 16 * gib, 1000) == 1000L)
+  }
+
+  test("task results stay within the driver bound: a sample past it, " +
+      "a skewed one under it, and one that fits") {
+    val cap = 1000
+    val sc = spark.sparkContext
+    /** (bin, x) rows, `sizes(p)` of them in partition p. */
+    def sample(sizes: Int*): DataFrame = spark.createDataFrame(
+      sc.parallelize(sizes.indices, sizes.size).flatMap { p =>
+        val rnd = new scala.util.Random(p)
+        Seq.fill(sizes(p))(Row(rnd.nextInt(3).toLong, rnd.nextGaussian()))
+      },
+      StructType(Seq(StructField("bin", LongType),
+        StructField("x", DoubleType))))
+    /** The estimate, its jobs, and the bytes of every task result. */
+    def estimate(df: DataFrame) = {
+      val bytes = new java.util.concurrent.atomic.AtomicLong
+      val results = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(
+            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null)
+            bytes.addAndGet(e.taskMetrics.resultSize)
+      }
+      org.apache.spark.GraftListenerBus.drain(sc)
+      sc.addSparkListener(results)
+      try {
+        val ((q, approximated), _, jobs) = tools.Run.capture(spark)(
+          Quantiles.guardedEstimate(df, Some(col("bin")), col("x"), ps,
+            cap))
+        (q, approximated, jobs, bytes.get)
+      } finally sc.removeSparkListener(results)
+    }
+    // 4 × 900 rows, each partition under the cap: every one is over its
+    // share (250), so only counts and bins reach the driver, not the
+    // 3,600 pairs (57.6 KB)
+    val (_, sketched, _, overBytes) = estimate(sample(900, 900, 900, 900))
+    assert(sketched)
+    assert(overBytes <= cap * Quantiles.Sample.bytesPerRow, overBytes)
+    // 800 rows, one partition over its share: the exact aggregate runs
+    // on the executors, in a second job
+    val skewed = sample(100, 100, 100, 500)
+    val (q, approx, jobs, skewBytes) = estimate(skewed)
+    assert(!approx && jobs >= 2)
+    assert(skewBytes <= cap * Quantiles.Sample.bytesPerRow, skewBytes)
+    assert(q.keySet == sparkPercentiles(skewed, Seq(col("bin")), "x").keySet)
+    sparkPercentiles(skewed, Seq(col("bin")), "x").foreach { case (k, w) =>
+      assert(sameAll(q(k), w), s"bin $k: ${q(k)} vs $w")
+    }
+    // 800 rows, every partition within its share: one job, on the driver
+    val fits = sample(200, 200, 200, 200)
+    val (qf, approxF, jobsF, fitBytes) = estimate(fits)
+    assert(!approxF && jobsF == 1)
+    assert(fitBytes >= 800 * 16 &&
+      fitBytes <= cap * Quantiles.Sample.bytesPerRow, fitBytes)
+    sparkPercentiles(fits, Seq(col("bin")), "x").foreach { case (k, w) =>
+      assert(sameAll(qf(k), w), s"bin $k: ${qf(k)} vs $w")
+    }
   }
 }
