@@ -47,67 +47,65 @@ final case class Thresholds(lower: Option[Double], upper: Option[Double]) {
   * cuts and bin limits, T4, `semiautocuts.py:508-541`) but the returned
   * predicate applies to any row (T1-T3 return plain `Column`s).
   *
-  * Every estimate is one Spark job that runs once: the cardinality
-  * guard rides in the estimation job ([[Quantiles.guardedEstimate]]),
-  * and only a sample too large for the driver pays a second job: the
-  * exact aggregate on the executors, or the sketch past the guard's
-  * limit. Binned variants (T6/T7) replace the reference's serial
-  * per-bin Python loops (`semiautocuts.py:696-716,835-855`) with one
-  * Spark job — T6 the estimation sample collector
-  * ([[Quantiles.exactSample]]), whose per-bin values are sorted and
-  * resolved on the driver, T7 a dense per-bin count — and apply the
-  * result as a per-bin array literal: the returned frame is the input
-  * plan plus one projected boolean column, with no aggregation or join
-  * left in it for later actions to re-run (J3/J4).
+  * One resolver turns a [[CutPars]] family into thresholds for the
+  * global, the binned and the rate cut alike. Every estimate is one
+  * Spark job that runs once: the cardinality guard rides in the
+  * estimation job ([[Quantiles.guardedEstimate]]), and only a sample too
+  * large for the driver pays a second job: the exact aggregate on the
+  * executors, or the sketch past the guard's limit. Binned variants
+  * (T6/T7) replace the reference's serial per-bin Python loops
+  * (`semiautocuts.py:696-716,835-855`) with one Spark job — T6 the
+  * estimation sample collector ([[Quantiles.exactSample]]), whose
+  * per-bin values are sorted and resolved on the driver, T7 a dense
+  * per-bin count — and apply the result as a per-bin array literal: the
+  * returned frame is the input plan plus one projected boolean column,
+  * with no aggregation or join left in it for later actions to re-run
+  * (J3/J4).
   */
 object SemiAutoCut {
 
-  /** T1-T3 dispatch: resolve thresholds for `rq` from the estimation
-    * sample (`_get_cut_mask`, `semiautocuts.py:491-647`). Exact
-    * percentiles (SURVEY §7.3 item 3) while the estimation sample is at
-    * most `maxExactRows` rows — above that the cardinality guard routes
-    * to the GK sketch (rank error ≤ 1/`Quantiles.approxAcc`): an exact
-    * percentile over a billion-row estimation sample shuffles the full
-    * value multiset, and the reference's conditioned-sample regime never
-    * intended that (VERDICT r05 §6). Pass `Int.MaxValue` to force the
-    * exact path regardless of size. */
+  /** The one family dispatch of every semi-auto cut (`_get_cut_mask`,
+    * `semiautocuts.py:548-627`): the percentiles `pars` needs of an
+    * estimation sample, and how its [[Thresholds]] follow from their
+    * values. Value (T1, `:548-561`), then percentile, then sigma:
+    * `percent = p` keeps the central p percent, `sigma = k` brackets the
+    * median by k robust sigmas. A value family, or no family set, needs
+    * no percentile. */
+  private def resolver(pars: CutPars)
+      : (Seq[Double], Seq[Double] => Thresholds) =
+    if (pars.isValue) (Nil, _ => Thresholds(pars.valLower, pars.valUpper))
+    else if (pars.isPercentile) {                   // T2 (`:563-586`)
+      val (pl, pu) = pars.percent match {
+        case Some(p) => (Some(0.5 - p / 200.0), Some(0.5 + p / 200.0))
+        case None    => (pars.percentLower.map(_ / 100.0),
+                         pars.percentUpper.map(_ / 100.0))
+      }
+      (pl.toSeq ++ pu.toSeq,
+        q => Thresholds(pl.map(_ => q.head), pu.map(_ => q.last)))
+    } else if (pars.isSigma) {                      // T3 (`:588-627`)
+      val (kl, ku) = pars.sigma.fold((pars.sigmaLower, pars.sigmaUpper))(
+        k => (Some(k), Some(k)))
+      (Quantiles.sigmaPercentiles, { q =>
+        val (med, sig) = Quantiles.medianRobustSigma(q)
+        Thresholds(kl.map(k => med - k * sig), ku.map(k => med + k * sig))
+      })
+    } else (Nil, _ => Thresholds(None, None))
+
+  /** T1-T3: thresholds for `rq` from ONE global estimate over `est`
+    * ([[Quantiles.thresholdQuantiles]]; none for a value family or no
+    * family). Exact percentiles (SURVEY §7.3 item 3) while `est` has at
+    * most `maxExactRows` rows, the GK sketch above (rank error
+    * ≤ 1/`Quantiles.approxAcc`; VERDICT r05 §6); `Int.MaxValue` keeps
+    * every size exact. Throws when `est` has no non-null `rq`. */
   def thresholds(
       est: DataFrame,
       rq: String,
       pars: CutPars,
       maxExactRows: Int = Quantiles.defaultMaxExactRows): Thresholds = {
-    val x = col(rq)
-    def quantiles(ps: Seq[Double]): Seq[Double] =
-      Quantiles.thresholdQuantiles(est, x, ps, maxExactRows).values
-    if (pars.isValue) {
-      Thresholds(pars.valLower, pars.valUpper) // T1 (`:548-561`)
-    } else if (pars.isPercentile) {            // T2 (`:563-586`)
-      pars.percent match {
-        case Some(p) =>
-          // symmetric about the median: keep the central p percent
-          val half = p / 2.0
-          val Seq(lo, hi) =
-            quantiles(Seq(0.5 - half / 100.0, 0.5 + half / 100.0))
-          Thresholds(Some(lo), Some(hi))
-        case None =>
-          // resolve both bounds in ONE estimation pass when both are set
-          val ps = pars.percentLower.toSeq ++ pars.percentUpper.toSeq
-          val vs = if (ps.isEmpty) Nil else quantiles(ps.map(_ / 100.0))
-          val lo = pars.percentLower.map(_ => vs.head)
-          val hi = pars.percentUpper.map(_ => vs.last)
-          Thresholds(lo, hi)
-      }
-    } else if (pars.isSigma) {                 // T3 (`:588-627`)
-      val (med, sig) = Quantiles.medianRobustSigmaGuarded(est, x, maxExactRows)
-      pars.sigma match {
-        case Some(k) =>
-          Thresholds(Some(med - k * sig), Some(med + k * sig))
-        case None =>
-          Thresholds(
-            pars.sigmaLower.map(k => med - k * sig),
-            pars.sigmaUpper.map(k => med + k * sig))
-      }
-    } else Thresholds(None, None)
+    val (ps, resolve) = resolver(pars)
+    resolve(if (ps.isEmpty) Nil
+            else Quantiles.thresholdQuantiles(est, col(rq), ps, maxExactRows)
+              .values)
   }
 
   /** T1-T4 in one step: estimation-conditioned cut predicate. */
@@ -144,7 +142,8 @@ object SemiAutoCut {
     pairs.map { case (lo, hi) => time >= lo && time <= hi }.reduce(_ || _)
 
   /** T6: binned cut — per-bin thresholds from ONE estimation job (J3),
-    * resolved on the driver and applied as literals.
+    * resolved on the driver as [[thresholds]] resolves them and applied
+    * as literals.
     *
     * `bin` must be a deterministic, integral bucket expression. A row
     * whose bin is null fails the cut. Keeping rows outside a binning
@@ -175,46 +174,25 @@ object SemiAutoCut {
       cutName: String,
       exceptions: Map[Long, Thresholds] = Map.empty,
       estimationCondition: Column = lit(true),
-      maxExactRows: Int = graft.stats.Quantiles.defaultMaxExactRows)
-      : DataFrame = {
+      maxExactRows: Int = Quantiles.defaultMaxExactRows): DataFrame = {
     val b = bin.cast("long")
     val x = col(rq)
     val est = df.filter(estimationCondition && b.isNotNull)
       .select(b.as("__bin__"), x)
 
-    // per-bin thresholds over the estimation sample, behind the same
-    // cardinality guard as the global thresholds (T2/T3): past
-    // maxExactRows estimation rows the per-bin percentiles come from the
-    // GK sketch (rank error ≤ 1/approxAcc per bin). A bin whose values
-    // are all null has no quantiles and passes every row.
-    def estimated(ps: Seq[Double])(thr: Seq[Double] => Thresholds)
-        : Map[Long, Thresholds] =
-      Quantiles.guardedEstimate(est, Some(col("__bin__")), x, ps,
+    // per-bin percentiles behind the same guard as the global thresholds
+    // (the GK sketch past maxExactRows estimation rows, rank error
+    // ≤ 1/approxAcc per bin); a bin whose values are all null passes
+    // every row. With no percentile to take, every bin with a row gets
+    // the value thresholds.
+    val (ps, resolve) = resolver(pars)
+    val perBin: Iterable[(Long, Thresholds)] =
+      if (ps.isEmpty)
+        Quantiles.bins(est, col("__bin__")).map(_ -> resolve(Nil))
+      else Quantiles.guardedEstimate(est, Some(col("__bin__")), x, ps,
           maxExactRows)._1
-        .map { case (k, q) => k -> q.fold(Thresholds(None, None))(thr) }
-    val perBin: Map[Long, Thresholds] =
-      if (pars.isValue) {
-        Quantiles.bins(est, col("__bin__"))
-          .map(_ -> Thresholds(pars.valLower, pars.valUpper)).toMap
-      } else if (pars.isPercentile) {
-        val (pl, pu) = pars.percent match {
-          case Some(p) => (Some(0.5 - p / 200.0), Some(0.5 + p / 200.0))
-          case None    => (pars.percentLower.map(_ / 100.0),
-                           pars.percentUpper.map(_ / 100.0))
-        }
-        estimated(pl.toSeq ++ pu.toSeq)(q =>
-          Thresholds(pl.map(_ => q.head), pu.map(_ => q.last)))
-      } else { // sigma family
-        val (kl, ku) = pars.sigma match {
-          case Some(k) => (Some(k), Some(k))
-          case None    => (pars.sigmaLower, pars.sigmaUpper)
-        }
-        estimated(Quantiles.sigmaPercentiles) { q =>
-          val (med, sig) = Quantiles.medianRobustSigma(q)
-          Thresholds(kl.map(k => med - k * sig), ku.map(k => med + k * sig))
-        }
-      }
-    val resolved = perBin ++ exceptions
+        .map { case (k, q) => k -> q.fold(Thresholds(None, None))(resolve) }
+    val resolved = perBin.toMap ++ exceptions
 
     // pass = strict inside (lo, hi); an unset bound passes its side
     val cut =
@@ -235,16 +213,18 @@ object SemiAutoCut {
     * bins whose count exceeds a threshold; events keep/lose by their bin's
     * verdict (J4). The reference does an O(events×bins) Python loop
     * (`semiautocuts.py:800-811`); here the `bins` counts come from one
-    * Spark job (`Hist.binCounts`), the threshold (Spark's exact
-    * percentile, reproduced by [[Quantiles.ofSorted]]) and verdicts are
+    * Spark job (`Hist.binCounts`); the threshold, resolved as
+    * [[thresholds]] resolves the limit's upper bound over the counts'
+    * exact percentiles ([[Quantiles.ofSorted]]), and the verdicts are
     * resolved on the driver, and the returned frame is `df` plus
     * `cutName`, a projection that indexes a boolean array literal by the
-    * event's bin.
+    * event's bin: a bin keeps while its count is at most the threshold.
     *
     * `limit` semantics (`_do_time_binned_count_cut`, `semiautocuts.py:
     * 738-811`): Left(absolute count) | Right((mode, k)) where mode is
-    * "percent" (percentile of bin counts) or "sigma" (median + k·robust
-    * sigma of bin counts).
+    * "percent" (k-th percentile of bin counts) or "sigma" (median +
+    * k·robust sigma of bin counts) — `valUpper`, `percentUpper` and
+    * `sigmaUpper` of a [[CutPars]].
     */
   def rateCut(
       df: DataFrame,
@@ -261,18 +241,15 @@ object SemiAutoCut {
     // bins would bias the threshold upward.
     val n = Hist.binCounts(df, time, tlo, thi, bins, Seq(inRange))
     val counts = Array.tabulate(bins)(b => n(2 * b + 1))
-    def sorted = counts.map(_.toDouble).sorted
-    val threshold: Double = limit match {
-      case Left(abs) => abs
-      case Right(("percent", p)) =>
-        Quantiles.ofSorted(sorted, Seq(p / 100.0)).head
-      case Right(("sigma", k)) =>
-        val (med, sig) = Quantiles.medianRobustSigma(
-          Quantiles.ofSorted(sorted, Quantiles.sigmaPercentiles))
-        med + k * sig
+    val (ps, resolve) = resolver(limit match {
+      case Left(abs)             => CutPars(valUpper = Some(abs))
+      case Right(("percent", p)) => CutPars(percentUpper = Some(p))
+      case Right(("sigma", k))   => CutPars(sigmaUpper = Some(k))
       case Right((m, _)) =>
         throw new IllegalArgumentException(s"unknown rate-cut mode $m")
-    }
+    })
+    val threshold = resolve(
+      Quantiles.ofSorted(counts.map(_.toDouble).sorted, ps)).upper.get
     // events OUTSIDE [tlo, thi] belong to no bin and always keep (the
     // reference flips only events strictly inside a bin's window) — so
     // the bucket is null out of range, never clamped into an edge bin.

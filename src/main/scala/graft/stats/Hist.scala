@@ -31,17 +31,23 @@ object Hist {
   /** W1/W3: equal-width bucket index in [0, bins-1]; values exactly at the
     * upper edge fall in the last bin (numpy half-open-except-last
     * convention, matching `np.histogram`). Out-of-range values are
-    * clamped out by callers' range predicate. */
+    * clamped out by callers' range predicate. Needs `bins` ≥ 1 and a
+    * finite range `lo` < `hi`, checked when the expression is built. */
   def bucket(x: Column, lo: Double, hi: Double, bins: Int): Column = {
+    require(bins >= 1, s"$bins bins: a histogram needs at least one")
+    require(lo < hi && !(hi - lo).isInfinite,
+      s"histogram range [$lo, $hi] is not a finite range with lo < hi")
     val w = (hi - lo) / bins
     least(floor((x - lo) / w), lit(bins - 1L)).cast("long")
   }
 
   /** Equal-width binning where edges are data-driven (two-pass). Returns
-    * (lo, hi) from one min/max aggregation (`semiautocuts.py:257-259`). */
+    * (lo, hi) from one min/max aggregation (`semiautocuts.py:257-259`);
+    * throws when `df` has no non-null value of `c`. */
   def minmax(df: DataFrame, c: String): (Double, Double) = {
     val r = df.agg(min(col(c)).cast("double"), max(col(c)).cast("double"))
       .head()
+    require(!r.isNullAt(0), s"no limits for column $c: no non-null value")
     (r.getDouble(0), r.getDouble(1))
   }
 
@@ -158,10 +164,12 @@ object Hist {
   }
 
   /** A7 with data-driven limits (`limits='minmax'`,
-    * `analyzer.py:592-596`). */
+    * `analyzer.py:592-596`). Equal limits widen to (v − 0.5, v + 0.5),
+    * as `np.histogram` widens them. */
   def hist1dAuto(df: DataFrame, column: String, bins: Int): DataFrame = {
     val (lo, hi) = minmax(df, column)
-    hist1d(df, col(column), bins, lo, hi)
+    if (lo == hi) hist1d(df, col(column), bins, lo - 0.5, hi + 0.5)
+    else hist1d(df, col(column), bins, lo, hi)
   }
 
   /** A8: 2-D histogram (heatmap backing table) as (xbin, ybin, cnt) rows

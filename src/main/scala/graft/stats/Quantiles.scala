@@ -1,33 +1,33 @@
 package graft.stats
 
 import scala.collection.mutable
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Quantile/robust-scale estimators.
   *
-  * Reference mixes exact `np.percentile` in threshold paths
-  * (`detanalysis/semiautocuts.py:565-585`) with vaex `percentile_approx`
+  * The reference takes exact `np.percentile` in its threshold paths
+  * (`detanalysis/semiautocuts.py:565-585`) and vaex `percentile_approx`
   * for equal-count time bins (`semiautocuts.py:253`). Thresholds feed cut
-  * predicates, so the exact form matters for oracle hash-equality
-  * (SURVEY.md §7.3 item 3): we use Spark's exact `percentile` aggregate in
-  * every threshold path and reserve `percentile_approx` for bin-edge
-  * estimation where the reference itself was approximate.
+  * predicates, so the exact form matters for oracle equality (SURVEY.md
+  * §7.3 item 3). Every exact percentile here — the cut thresholds, A4
+  * ([[exact]]), A6 ([[medianRobustSigma]]) and the W2 edges
+  * ([[equalCountEdges]]) — runs through one estimation path,
+  * [[guardedEstimate]]: one Spark job ([[exactSample]]) brings the
+  * sample to the driver, which sorts it and resolves the percentiles
+  * ([[ofSorted]], Spark's `percentile` bit for bit). Only a sample past
+  * the driver's bound runs Spark's `percentile` aggregate on the
+  * executors, or `percentile_approx` (the GK sketch) past the caller's
+  * `maxExactRows`.
   */
 object Quantiles {
 
-  /** A4: exact percentiles (linear interpolation, numpy-compatible).
-    * `ps` in [0,1]. Returns one array column. */
+  /** A4: exact percentiles `ps` (in [0,1]; linear interpolation,
+    * numpy-compatible) of `c` over `df`: [[thresholdQuantiles]] with the
+    * sketch off. Throws when `df` has no non-null value of `c`. */
   def exact(df: DataFrame, c: Column, ps: Seq[Double]): Seq[Double] =
-    nonEmpty(df.agg(percentile(c, array(ps.map(lit): _*))).head(), c)
-
-  /** The quantile array in the first column of a global aggregate's row;
-    * null there means the sample had no non-null value of `c`. */
-  private def nonEmpty(r: Row, c: Column): Seq[Double] = {
-    if (r.isNullAt(0)) throw emptySample(c)
-    r.getSeq[Double](0)
-  }
+    thresholdQuantiles(df, c, ps, Int.MaxValue).values
 
   private def emptySample(c: Column) = new IllegalArgumentException(
     s"empty estimation sample for quantile over $c — the source " +
@@ -57,13 +57,14 @@ object Quantiles {
   }
 
   /** Above this estimation-sample row count, THRESHOLD estimation
-    * (T2/T3/T6) switches from the exact percentile — which shuffles the
-    * full per-group value multiset — to the GK sketch (rank error
-    * ≤ 1/[[approxAcc]] of the sample size). The reference's regime keeps
-    * estimation samples conditioned and small, so the exact path is the
-    * default; this guard is the 100×-scale escape hatch VERDICT r05
-    * flagged: nothing used to steer a caller off the exact path when the
-    * estimation sample was a billion rows. */
+    * (T2/T3/T6) switches from the exact percentile — which, past the
+    * driver's bound ([[collectorRows]]), is Spark's `percentile`
+    * aggregate holding each group's full value multiset — to the GK
+    * sketch (rank error ≤ 1/[[approxAcc]] of the sample size). The
+    * reference's regime keeps estimation samples conditioned and small,
+    * so the exact path is the default; this guard is the 100×-scale
+    * escape hatch VERDICT r05 flagged: nothing used to steer a caller off
+    * the exact path when the estimation sample was a billion rows. */
   val defaultMaxExactRows: Int = 100000000
   val approxAcc: Int = 10000
 
@@ -300,9 +301,10 @@ object Quantiles {
       .getOrElse(df.select(bin.cast("long")).distinct().collect()
         .map(_.getLong(0)).toSeq)
 
-  /** T2/T3 threshold quantiles behind the cardinality guard
-    * ([[guardedEstimate]]): one Spark job unless the sample is over the
-    * driver's bound ([[collectorRows]]) or the limit. */
+  /** The percentiles `ps` of `c` over `df`, one global estimate behind
+    * the cardinality guard ([[guardedEstimate]]): one Spark job unless
+    * the sample is over the driver's bound ([[collectorRows]]) or the
+    * limit. Throws when `df` has no non-null value of `c`. */
   def thresholdQuantiles(
       df: DataFrame,
       c: Column,
@@ -312,17 +314,6 @@ object Quantiles {
       guardedEstimate(df.filter(c.isNotNull), None, c, ps, maxExactRows)
     GuardedQuantiles(q.get(0L).flatten.getOrElse(throw emptySample(c)),
       approximated)
-  }
-
-  /** A5: approximate percentile (t-digest-free Greenwald-Khanna in Spark)
-    * — direct equivalent of vaex `percentile_approx`
-    * (`semiautocuts.py:253`). */
-  def approx(df: DataFrame, c: Column, ps: Seq[Double], acc: Int = 10000)
-      : Seq[Double] = {
-    val r = df
-      .agg(percentile_approx(c, array(ps.map(lit): _*), lit(acc)).as("q"))
-      .head()
-    r.getSeq[Double](0)
   }
 
   /** The ±1σ-equivalent and median percentiles behind the robust sigma. */
@@ -336,20 +327,13 @@ object Quantiles {
     (med, ((med - q1) + (q3 - med)) / 2.0)
   }
 
-  /** [[medianRobustSigma]] of `c` over `df`: one exact-percentile pass. */
+  /** [[medianRobustSigma]] of `c` over `df`: one [[exact]] estimate. */
   def medianRobustSigma(df: DataFrame, c: Column): (Double, Double) =
     medianRobustSigma(exact(df, c, sigmaPercentiles))
 
-  /** [[medianRobustSigma]] behind the T3 cardinality guard. */
-  def medianRobustSigmaGuarded(
-      df: DataFrame,
-      c: Column,
-      maxExactRows: Int = defaultMaxExactRows): (Double, Double) =
-    medianRobustSigma(
-      thresholdQuantiles(df, c, sigmaPercentiles, maxExactRows).values)
-
-  /** W2: equal-count bin edges at percentiles of `c`
-    * (`semiautocuts.py:244-255`) — returns bins+1 edges including min/max. */
+  /** W2: equal-count bin edges at [[exact]] percentiles of `c`
+    * (`semiautocuts.py:244-255`, where vaex approximates them) — returns
+    * bins+1 edges including min/max. */
   def equalCountEdges(df: DataFrame, c: Column, bins: Int): Seq[Double] = {
     val ps = (0 to bins).map(i => i.toDouble / bins)
     exact(df, c, ps)

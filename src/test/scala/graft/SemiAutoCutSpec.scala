@@ -62,6 +62,53 @@ class SemiAutoCutSpec extends SparkSpec {
       vals.count(v => v > med - sig && v < med + sig))
   }
 
+  test("one resolver: binnedCut and rateCut resolve as thresholds does") {
+    val value = CutPars(valLower = Some(10.0), valUpper = Some(80.0))
+    val families = Seq(value,
+      CutPars(percent = Some(60.0)),
+      CutPars(percentLower = Some(10.0), percentUpper = Some(90.0)),
+      CutPars(percentUpper = Some(75.0)),
+      CutPars(sigma = Some(1.0)),
+      CutPars(sigmaLower = Some(0.5), sigmaUpper = Some(1.5)),
+      CutPars(sigmaLower = Some(1.0)),
+      CutPars(),
+      value.copy(percent = Some(60.0), sigmaUpper = Some(1.0)))
+    def ids(d: DataFrame) = d.select("id").as[Long].collect().sorted.toSeq
+    families.foreach { pars =>
+      val t = SemiAutoCut.thresholds(df, "rq", pars)
+      val binned = SemiAutoCut.binnedCut(df, "rq", lit(0L), pars, "cut")
+      assert(ids(binned.filter(col("cut"))) ==
+        ids(df.filter(t.predicate(col("rq")))), s"$pars")
+    }
+    // value before percentile before sigma
+    assert(SemiAutoCut.thresholds(df, "rq", families.last) ==
+      SemiAutoCut.thresholds(df, "rq", value))
+    assert(SemiAutoCut.thresholds(df, "rq",
+        CutPars(percentUpper = Some(75.0), sigma = Some(1.0))) ==
+      SemiAutoCut.thresholds(df, "rq", CutPars(percentUpper = Some(75.0))))
+    assert(SemiAutoCut.thresholds(df, "rq", CutPars()) ==
+      Thresholds(None, None))
+
+    // rate cut: a bin keeps iff its count is at most thresholds' upper
+    // bound over the bin counts as a frame
+    val counts = Seq(5, 12, 7, 30, 7, 9, 3, 18, 11, 7)
+    val d = counts.zipWithIndex.flatMap { case (n, b) =>
+      (0 until n).map(j => b * 10.0 + 0.5 + j * 0.25)
+    }.toDF("t")
+    Seq(("percent", 40.0) -> CutPars(percentUpper = Some(40.0)),
+        ("percent", 85.0) -> CutPars(percentUpper = Some(85.0)),
+        ("sigma", 0.0) -> CutPars(sigmaUpper = Some(0.0)),
+        ("sigma", 1.0) -> CutPars(sigmaUpper = Some(1.0))).foreach {
+      case (limit, pars) =>
+        val thr = SemiAutoCut.thresholds(counts.map(_.toDouble).toDF("n"),
+          "n", pars).upper.get
+        val out = SemiAutoCut.rateCut(d, col("t"), 0.0, 100.0, 10, lit(true),
+          Right(limit), "keep")
+        assert(out.filter(col("keep")).count() ==
+          counts.filter(_ <= thr).sum, s"$limit: threshold $thr")
+    }
+  }
+
   test("T5 time-interval cut ORs disjoint intervals (bug-fix divergence)") {
     val c = SemiAutoCut.timeIntervalCut(col("rq"),
       Seq((0.0, 10.0), (50.0, 60.0)))

@@ -56,6 +56,9 @@ class StatsSpec extends SparkSpec {
     for (p <- Seq(0.1, 0.25, 0.5, 0.9, 0.99)) {
       val got = Quantiles.exact(df, col("x"), Seq(p)).head
       assert(math.abs(got - npPercentile(p)) < 1e-9, s"p=$p")
+      // and so does Spark's own percentile aggregate, its reference
+      val viaSpark = df.agg(percentile(col("x"), lit(p))).head.getDouble(0)
+      assert(math.abs(viaSpark - npPercentile(p)) < 1e-9, s"Spark p=$p")
     }
   }
 
@@ -85,6 +88,33 @@ class StatsSpec extends SparkSpec {
         math.min(math.floor(i / w).toLong, 2L))
       .view.mapValues(_.count(i => i % 7 >= 3).toLong).toMap
     assert(tb == expected)
+  }
+
+  test("bucket rejects no bins and empty, inverted or non-finite ranges") {
+    val x = col("x")
+    Seq((1.0, 1.0, 4), (2.0, 1.0, 4), (0.0, Double.NaN, 4),
+        (Double.NaN, 1.0, 4), (0.0, Double.PositiveInfinity, 4),
+        (Double.NegativeInfinity, 0.0, 4), (0.0, 1.0, 0)).foreach {
+      case (lo, hi, bins) =>
+        intercept[IllegalArgumentException](Hist.bucket(x, lo, hi, bins))
+        intercept[IllegalArgumentException](Hist.hist1d(df, x, bins, lo, hi))
+    }
+  }
+
+  test("minmax over no non-null value names the column") {
+    val e = intercept[IllegalArgumentException](
+      Hist.minmax(Seq[Option[Double]](None, None).toDF("amp"), "amp"))
+    assert(e.getMessage.contains("amp"))
+    intercept[IllegalArgumentException](Hist.minmax(df.limit(0), "x"))
+  }
+
+  test("hist1dAuto widens a constant column's limits by ±0.5") {
+    val d = Seq.fill(7)(Tuple1(3.25)).toDF("v")
+    for (bins <- Seq(1, 4, 5, 64)) {
+      val h = Hist.hist1dAuto(d, "v", bins).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(h == Seq((bins / 2).toLong -> 7L), s"$bins bins")
+    }
   }
 
   test("exact percentile on an empty sample fails with a clear message") {
@@ -222,7 +252,9 @@ class StatsSpec extends SparkSpec {
         case _ => pool(rnd.nextInt(pool.length))
       })
       val ps = Seq(0.0, 1.0, 0.5, 0.15865, 0.84135, rnd.nextDouble())
-      val viaSpark = Quantiles.exact(vals.toSeq.toDF("v"), col("v"), ps)
+      val viaSpark = vals.toSeq.toDF("v")
+        .agg(percentile(col("v"), array(ps.map(lit): _*))).head
+        .getSeq[Double](0)
       val driver = Quantiles.ofSorted(vals.sorted, ps)
       ps.indices.foreach { i =>
         assert(java.lang.Double.doubleToRawLongBits(driver(i)) ==
