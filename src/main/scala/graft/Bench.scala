@@ -47,7 +47,8 @@ import java.nio.file.{Files, Paths}
   * Verify-only queries are excluded from the measured suite, two kinds:
   *   - correctness MIRRORS of an operator whose scale path is benched
   *     under its own name (w4_rechunk_decl — the explode+global-window
-  *     formulation kept as rechunkExec's independent test mirror);
+  *     formulation kept as the independent test mirror of
+  *     `TraceStore.rechunk`);
   *   - ASSERTION HARNESSES and side-effecting lifecycles whose cost is
   *     gate construction, not a scale path (llm_ann_recall: brute-force
   *     truth + 4 batch ANN paths + 16 sequential point probes; the
@@ -132,7 +133,7 @@ object Bench {
     }
 
   private val verifyOnly = Set(
-    "w4_rechunk_decl",     // mirror of the benched rechunkExec path
+    "w4_rechunk_decl",     // mirror of the benched rechunk path
     "llm_ann_recall",      // recall gate: brute force + every ANN path
     "llm_zorder_optimize", // append→optimize lifecycle gate (side-effect)
     "llm_retrieval_persisted", // index write+read lifecycle (side-effect)

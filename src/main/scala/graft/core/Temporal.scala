@@ -791,8 +791,8 @@ object Temporal {
     * but cannot change the nested-min result.
     *
     * Shape: prune → ONE hash exchange on user → sort within partitions
-    * by (user, ts, step) → a streaming per-partition automaton with
-    * O(1) state per user (stage index + two timestamps). No per-user
+    * by (user, ts, step) → each user's sorted group folds through the
+    * automaton with O(1) state (stage index + two timestamps). No per-user
     * event list is ever materialized, so a hot user costs one linear
     * pass — the same skew posture as [[asofJoin]], without even a
     * window frame. Null timestamps are dropped.
@@ -815,9 +815,13 @@ object Temporal {
 
   /** [[funnel]] with the full per-stage timestamp vector: (user_id,
     * stages, stage_ts) where `stage_ts(i)` is the matched time of step
-    * i (length = stages). Same automaton, same O(1)-per-user state
-    * plus the ≤ k-long stage array — the input to per-step drop-off /
-    * time-to-convert reporting ([[funnelDropoff]]). */
+    * i (length = stages). An ordered per-user scan on Spark's
+    * sorted-group operator (`flatMapSortedGroups`): one hash exchange
+    * of the pruned rows on the user plus a partition-local sort on
+    * (user, ts, step), then each user's sorted group folds through
+    * [[FunnelRule]] with O(1) state (stage index plus the ≤ k-long
+    * stage array) — the input to per-step drop-off / time-to-convert
+    * reporting ([[funnelDropoff]]). */
   def funnelTimes(
       df: DataFrame,
       userCol: String,
@@ -825,52 +829,45 @@ object Temporal {
       stepCol: String,
       steps: Seq[String],
       withinUs: Long): DataFrame = {
-    require(steps.nonEmpty, "funnel needs at least one step")
-    require(steps.distinct.size == steps.size, "funnel steps must be unique")
-    require(withinUs > 0, "withinUs must be positive")
+    val rule = FunnelRule(steps, withinUs)
     val spark = df.sparkSession
     import spark.implicits._
-    val pruned = df
-      .filter(col(stepCol).isin(steps: _*) && tsCol.isNotNull &&
+    df.filter(col(stepCol).isin(steps: _*) && tsCol.isNotNull &&
         col(userCol).isNotNull)
       .select(col(userCol).cast("long").as("u"),
         tsCol.cast("long").as("t"), col(stepCol).as("s"))
-      .repartition(col("u"))
-      .sortWithinPartitions(col("u"), col("t"), col("s"))
-      .as[(Long, Long, String)]
-    val k = steps.length
-    val stepArr = steps.toArray
-    pruned.mapPartitions { it =>
-      new Iterator[FunnelTimesRow] {
-        private var cur: Option[Long] = None
-        private var stage = 0
-        private val ts = new Array[Long](k)
-        private var pending: FunnelTimesRow = null
-        private def close(): FunnelTimesRow = FunnelTimesRow(
-          cur.get, stage, ts.take(stage).toSeq)
-        private def step(): Unit =
-          while (pending == null && it.hasNext) {
-            val (u, t, s) = it.next()
-            if (cur.isEmpty) { cur = Some(u); stage = 0 }
-            else if (cur.get != u) { pending = close(); cur = Some(u); stage = 0 }
-            if (stage < k && s == stepArr(stage) &&
-                (stage == 0 ||
-                  (t > ts(stage - 1) && t - ts(0) <= withinUs))) {
-              ts(stage) = t
-              stage += 1
-            }
+      .groupBy(col("u")).as[Long, (Long, Long, String)]
+      .flatMapSortedGroups(col("t"), col("s")) { (u, evs) =>
+        val ts = new Array[Long](steps.length)
+        var stage = 0
+        evs.foreach { case (_, t, s) =>
+          if (rule.accepts(stage, ts(0), if (stage > 0) ts(stage - 1) else 0L,
+              s, t)) {
+            ts(stage) = t
+            stage += 1
           }
-        override def hasNext: Boolean = {
-          step()
-          pending != null || (cur.nonEmpty && !it.hasNext)
         }
-        override def next(): FunnelTimesRow = {
-          step()
-          if (pending != null) { val r = pending; pending = null; r }
-          else { val r = close(); cur = None; r }
-        }
+        Iterator.single(FunnelTimesRow(u, stage, ts.take(stage).toSeq))
       }
-    }.toDF("user_id", "stages", "stage_ts")
+      .toDF("user_id", "stages", "stage_ts")
+  }
+
+  /** The funnel's accept rule, shared by [[funnelTimes]] and
+    * `StreamingFunnel.funnelStream`: an event of `step` at `t` advances
+    * a user at `stage` (stage 0 first matched at `tFirst`, the previous
+    * stage at `tPrev`) iff it is the expected step, strictly after the
+    * previous stage and within `withinUs` of the first. */
+  private[graft] final case class FunnelRule(
+      steps: Seq[String], withinUs: Long) {
+    require(steps.nonEmpty, "funnel needs at least one step")
+    require(steps.distinct.size == steps.size, "funnel steps must be unique")
+    require(withinUs > 0, "withinUs must be positive")
+    private val stepArr = steps.toArray
+
+    def accepts(stage: Int, tFirst: Long, tPrev: Long, step: String,
+        t: Long): Boolean =
+      stage < stepArr.length && step == stepArr(stage) &&
+        (stage == 0 || (t > tPrev && t - tFirst <= withinUs))
   }
 
   /** Per-step funnel drop-off table — the reporting twin of the cohort

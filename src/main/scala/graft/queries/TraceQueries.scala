@@ -343,8 +343,8 @@ object TraceQueries {
     }),
 
     // W4 again through the declarative window+explode formulation (the
-    // independent mirror of the custom operator — `rechunk` itself now
-    // delegates to RechunkExec); same oracle, results must be identical
+    // independent mirror of `rechunk`'s ordered per-channel scan); same
+    // oracle, results must be identical
     "w4_rechunk_decl" -> ((s, dir) => {
       val stream = events(s, dir).filter(col("event_id") < 50)
         .select(col("event_id").as("event_index"), lit("ch1").as("channel"),

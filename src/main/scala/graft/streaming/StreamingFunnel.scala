@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.core.Temporal
 
 /** Streaming funnel — the streaming form of
   * [[graft.core.Temporal.funnel]] (earliest ordered step chain within
@@ -11,8 +12,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * three numbers, O(keys) total and independent of event volume (the
   * batch operator's O(1)-state posture carried into streaming). Each
   * micro-batch's events for a user are sorted by (ts, step) and folded
-  * through the automaton from the saved state; a row is emitted
-  * whenever the user's stage ADVANCES (update semantics — the latest
+  * through the batch funnel's accept rule
+  * ([[graft.core.Temporal.FunnelRule]]) from the saved state; a row is
+  * emitted whenever the user's stage ADVANCES (update semantics — the latest
   * emission per user, i.e. max `stages`, is the current funnel state;
   * `stages` is monotone so that selection is deterministic).
   *
@@ -40,13 +42,10 @@ object StreamingFunnel {
       steps: Seq[String],
       withinUs: Long,
       stateTtl: String = ""): Dataset[Progress] = {
-    require(steps.nonEmpty, "funnel needs at least one step")
-    require(steps.distinct.size == steps.size, "funnel steps must be unique")
-    require(withinUs > 0, "withinUs must be positive")
+    val rule = Temporal.FunnelRule(steps, withinUs)
     val spark = events.sparkSession
     import spark.implicits._
     val k = steps.length
-    val stepArr = steps.toArray
     val stepSet = steps.toSet
     val timeout =
       if (stateTtl.isEmpty) GroupStateTimeout.NoTimeout()
@@ -63,32 +62,23 @@ object StreamingFunnel {
             val before = st.stage
             // batch-local sort: bounded by this user's rows in THIS
             // micro-batch, not their history
-            val sorted = rows.toArray.sortBy(e => (e.ts, e.step))
-            var i = 0
-            var emitted = List.empty[Progress]
-            while (i < sorted.length && st.stage < k) {
-              val e = sorted(i)
-              if (e.step == stepArr(st.stage) &&
-                  (st.stage == 0 ||
-                    (e.ts > st.tPrev && e.ts - st.tFirst <= withinUs))) {
+            rows.toArray.sortBy(e => (e.ts, e.step)).foreach { e =>
+              if (rule.accepts(st.stage, st.tFirst, st.tPrev, e.step, e.ts))
                 st = FunnelState(st.stage + 1,
                   if (st.stage == 0) e.ts else st.tFirst, e.ts)
-              }
-              i += 1
             }
-            if (st.stage != before || !state.exists) {
-              state.update(st)
-              emitted = Progress(user, st.stage,
-                if (st.stage > 0) Some(st.tFirst) else None,
-                if (st.stage > 0) Some(st.tPrev) else None,
-                st.stage == k) :: emitted
-            }
+            val emit = st.stage != before || !state.exists
+            if (emit) state.update(st)
             // refresh the TTL on EVERY batch that saw events for this
             // key (not just stage advances) — an active-but-stalled
             // user stays alive; TTL measures idleness, as documented
             if (stateTtl.nonEmpty && state.exists)
               state.setTimeoutDuration(stateTtl)
-            emitted.iterator
+            if (!emit) Iterator.empty
+            else Iterator.single(Progress(user, st.stage,
+              if (st.stage > 0) Some(st.tFirst) else None,
+              if (st.stage > 0) Some(st.tPrev) else None,
+              st.stage == k))
           }
         })
   }

@@ -3,17 +3,19 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.traces.TraceStore
 
 /** Streaming forms of the trace pipeline (SURVEY W4 streaming variant +
   * a watermarked rate monitor).
   *
-  * The batch re-chunker ([[graft.traces.TraceStore.rechunk]], the
-  * RechunkExec sorted-run chop) assumes a bounded input; unbounded
-  * input needs bounded state instead: per
-  * channel we keep only the carry-over samples (< chunkLen doubles) in
-  * `flatMapGroupsWithState`, emitting every completed chunk as it fills
-  * — the exact streaming analogue of the reference's sequential
-  * concat-and-chop loop (`vibration_analyzer.py:406-437`).
+  * The batch re-chunker ([[graft.traces.TraceStore.rechunk]]) scans a
+  * bounded input's channels once each; unbounded input needs bounded
+  * state instead: per channel we keep only the carry-over samples
+  * (< chunkLen doubles) in `flatMapGroupsWithState` and seed the same
+  * chop ([[graft.traces.TraceStore.Chop]]) with them each micro-batch,
+  * emitting every completed chunk as it fills — the exact streaming
+  * analogue of the reference's sequential concat-and-chop loop
+  * (`vibration_analyzer.py:406-437`).
   */
 object StreamingRechunk {
 
@@ -38,19 +40,14 @@ object StreamingRechunk {
         (channel: String, rows: Iterator[TraceSeg],
             state: GroupState[Carry]) => {
           val carry = state.getOption.getOrElse(Carry(0L, Vector.empty))
-          var buf = carry.buffer.toVector
-          var nextId = carry.nextChunkId
-          val out = Vector.newBuilder[Chunk]
-          rows.toSeq.sortBy(_.eventIndex).foreach { seg =>
-            buf = buf ++ seg.trace
-            while (buf.length >= chunkLen) {
-              out += Chunk(channel, nextId, buf.take(chunkLen))
-              buf = buf.drop(chunkLen)
-              nextId += 1
-            }
-          }
-          state.update(Carry(nextId, buf)) // bounded: < chunkLen samples
-          out.result().iterator
+          val chop = new TraceStore.Chop(
+            chunkLen, carry.nextChunkId, carry.buffer.toArray)
+          val out = rows.toSeq.sortBy(_.eventIndex)
+            .flatMap(seg => chop.push(Option(seg.trace).map(_.toArray).orNull))
+            .map { case (id, t) => Chunk(channel, id, t.toSeq) }
+          // bounded: < chunkLen samples
+          state.update(Carry(chop.nextId, chop.leftover.toSeq))
+          out.iterator
         })
   }
 

@@ -14,8 +14,8 @@ import org.apache.spark.sql.expressions.Window
   * event_number)` so key fetches hit contiguous row groups.
   *
   * Scale shapes: the selected-key side is always capped (≤5000,
-  * `analyzer.py:953,1016`) so every fetch broadcasts keys — the traces
-  * table is never shuffled.
+  * `analyzer.py:953,1016`) so every fetch broadcasts keys and never
+  * shuffles the traces table; only [[rechunk]] does, once, by channel.
   */
 object TraceStore {
 
@@ -113,23 +113,75 @@ object TraceStore {
     * fixed-length windows with the remainder discarded
     * (`vibration_analyzer.py:406-437`).
     *
-    * Delegates to the custom physical operator
-    * ([[graft.plans.RechunkPlan.rechunkExec]]): one hash exchange of the
-    * un-exploded trace ROWS plus a partition-local sort, then a linear
-    * chop with carry-over. The declarative formulation
-    * ([[rechunkDeclarative]]) is semantically identical but pays a
-    * per-SAMPLE explode and funnels each channel through one window
-    * partition — with few channels that is a global window over the
-    * sample stream, the r03 bench's `WindowExec: No Partition Defined`
-    * hot spot. It is kept as the independent test mirror only. */
+    * An ordered per-channel scan on Spark's sorted-group operator
+    * (`flatMapSortedGroups`): one hash exchange of the un-exploded
+    * trace ROWS on the channel plus a partition-local sort on
+    * (channel, index), then each channel's run streams through one
+    * [[Chop]] — O(chunkLen) state per channel, so a hot channel costs
+    * one linear pass. A null trace adds no samples and null channels
+    * form one channel of their own. Output: (channel, chunk_id, trace).
+    * The declarative formulation ([[rechunkDeclarative]]) is
+    * semantically identical but pays a per-SAMPLE explode and funnels
+    * each channel through one window partition; it is kept as the
+    * independent test mirror only. */
   def rechunk(
       traces: DataFrame,
       chunkLen: Int,
       indexCol: String = "event_index",
       traceCol: String = "trace",
-      channelCol: String = "channel"): DataFrame =
-    graft.plans.RechunkPlan.rechunkExec(
-      traces, chunkLen, indexCol, traceCol, channelCol)
+      channelCol: String = "channel"): DataFrame = {
+    require(chunkLen > 0, "chunkLen must be positive")
+    val spark = traces.sparkSession
+    import spark.implicits._
+    traces.select(col(channelCol).as("channel"), col(indexCol).as("index"),
+        col(traceCol).as("trace"))
+      .groupBy(col("channel")).as[String, Segment]
+      .flatMapSortedGroups(col("index")) { (channel, run) =>
+        val chop = new Chop(chunkLen, 0L, Array.emptyDoubleArray)
+        run.flatMap(seg => chop.push(seg.trace))
+          .map { case (id, t) => (channel, id, t) }
+      }
+      .toDF(channelCol, "chunk_id", traceCol)
+  }
+
+  /** The samples of one [[rechunk]] input row; the channel is the group
+    * key and the index only orders the group. */
+  private[traces] final case class Segment(trace: Array[Double])
+
+  /** The W4 concat-and-chop over one channel's ordered run, shared by
+    * [[rechunk]] and `StreamingRechunk.rechunkStream`. Seeded with a
+    * carry — the next chunk id and the leftover (< chunkLen) samples of
+    * the run so far; [[push]] appends one trace (null adds no samples)
+    * and returns the (chunk id, chunk) pairs it completes; `nextId`
+    * and [[leftover]] are the carry after the last push. Each sample
+    * is copied once, into the chunk it lands in. */
+  private[graft] final class Chop(
+      chunkLen: Int, var nextId: Long, carried: Array[Double]) {
+    require(carried.length < chunkLen, "carry must be shorter than a chunk")
+    private var cur = java.util.Arrays.copyOf(carried, chunkLen)
+    private var fill = carried.length
+
+    def push(trace: Array[Double]): Seq[(Long, Array[Double])] = {
+      val done = Seq.newBuilder[(Long, Array[Double])]
+      var off = 0
+      val n = if (trace == null) 0 else trace.length
+      while (off < n) {
+        val take = math.min(chunkLen - fill, n - off)
+        System.arraycopy(trace, off, cur, fill, take)
+        off += take
+        fill += take
+        if (fill == chunkLen) {
+          done += ((nextId, cur))
+          nextId += 1
+          cur = new Array[Double](chunkLen)
+          fill = 0
+        }
+      }
+      done.result()
+    }
+
+    def leftover: Array[Double] = java.util.Arrays.copyOf(cur, fill)
+  }
 
   /** W4, declarative formulation (test mirror of [[rechunk]] — not the
     * scale path): a running global sample offset (window cumsum of

@@ -2,19 +2,14 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Bridge into `private[sql]` helpers for building `Column`s from custom
-  * Catalyst expressions (the supported classic-API path in Spark 4). */
+/** Bridge into `private[sql]` helpers: `Column`s from custom Catalyst
+  * expressions (the supported classic-API path in Spark 4), a named SQL
+  * execution over a plan's rows, and the session's cache check. No
+  * logical or physical plan node is built here — every query goes
+  * through the public Dataset API and Spark's own planner. */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-
-  /** Build a DataFrame from a custom logical plan (e.g. a
-    * [[graft.plans.RechunkPlan]] node lowered by an injected strategy). */
-  def ofRows(
-      spark: SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** `body` over the rows `df`'s physical plan produces, run as ONE SQL
     * execution named `name` — the wrapping a `collect` gets — so query

@@ -5,8 +5,10 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, ScalaUDF}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{EmptyRelationExec, FileSourceScanExec,
-  QueryExecution, SparkPlan}
+  MapGroupsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper,
   LogicalQueryStage}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -212,6 +214,17 @@ object RunnerSpec extends AdaptiveSparkPlanHelper {
     })
   }
 
+  /** No explode or window anywhere, and every sorted-group
+    * (`MapGroups`) node reads exactly one hash exchange. */
+  private def sortedGroupScan(plans: Plans): Boolean = {
+    val groups = plans.flatten.collect { case m: MapGroupsExec => m }
+    groups.nonEmpty && groups.forall(m => collect(m) {
+      case e: ShuffleExchangeExec =>
+        e.outputPartitioning.isInstanceOf[HashPartitioning]
+    } == Seq(true)) &&
+      !plans.flatten.exists(o => isGenerate(o) || isWindow(o))
+  }
+
   private def scans(plans: Plans): Seq[FileSourceScanExec] =
     plans.flatten.collect { case s: FileSourceScanExec => s }
 
@@ -253,6 +266,9 @@ object RunnerSpec extends AdaptiveSparkPlanHelper {
       "llm_ccnet_paragraphs" -> s"$oneRow: the cutoff pair, plus $lm",
       "llm_pack_ffd" -> s"$oneRow: the padding-waste summary row")
   }
+
+  private val sortedScan = "a sorted-group node over exactly one hash " +
+    "exchange, no explode, no window"
 
   /** Plan rules by query, each read over EVERY plan the query executed:
     * (query, what must hold, the check). */
@@ -298,7 +314,11 @@ object RunnerSpec extends AdaptiveSparkPlanHelper {
       // candidates are k-bounded upstream; a row_number fusion would put
       // every candidate of a query on one task
       ("llm_hybrid_rrf", "the fusion carries no window",
-        ps => !ps.flatten.exists(isWindow)))
+        ps => !ps.flatten.exists(isWindow)),
+      // ordered per-key scans: the un-exploded rows shuffle once on the
+      // key into Spark's sorted-group operator
+      ("w4_rechunk", sortedScan, sortedGroupScan),
+      ("funnel_signup_purchase", sortedScan, sortedGroupScan))
 
   /** What `name`'s executed plans break of the gate. */
   private def planFaults(name: String, plans: Plans): Seq[String] = {

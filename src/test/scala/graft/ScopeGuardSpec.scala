@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every persist, checkpoint and free under `src/main/scala` goes through
   * [[graft.core.Scope]], and every exact or approximate percentile
   * through [[graft.stats.Quantiles]]; the only direct calls elsewhere are
-  * the allow-listed lines below, each with its reason. */
+  * the allow-listed lines below, each with its reason. No planner hook
+  * is installed or defined there at all. */
 class ScopeGuardSpec extends AnyFunSuite {
 
   /** (file name, line fragment) → why the call is not the scope's. */
@@ -39,6 +40,12 @@ class ScopeGuardSpec extends AnyFunSuite {
   private def percentileExempt(p: Path): Boolean =
     p.getFileName.toString == "Quantiles.scala" ||
       p.getParent.endsWith("graft/queries")
+
+  /** A planner hook changes every session it touches: a strategy
+    * install, or a strategy or physical plan node of our own. */
+  private val plannerHook =
+    ("""\b(extraStrategies|injectPlannerStrategy)\b|\b(extends|with)\s+""" +
+      """(SparkStrategy|Strategy|SparkPlan|\w*ExecNode)\b""").r
 
   private def isComment(line: String): Boolean = {
     val t = line.trim
@@ -95,6 +102,12 @@ class ScopeGuardSpec extends AnyFunSuite {
       "percentile calls outside graft.stats.Quantiles")
   }
 
+  test("no planner strategy or physical plan node under src/main") {
+    assertAllowed(
+      directCalls(Paths.get("src/main/scala"), plannerHook, _ => false),
+      Map.empty, "planner hooks under src/main")
+  }
+
   test("the guard recognises every call form and skips comments") {
     val dir = Files.createTempDirectory("scope-guard")
     val src = dir.resolve("Planted.scala")
@@ -127,6 +140,25 @@ class ScopeGuardSpec extends AnyFunSuite {
       "}").mkString("\n"))
     try assert(directCalls(dir, percentileCall, percentileExempt)
       .map(_._2) == Seq(2, 3))
+    finally { Files.delete(src); Files.delete(dir) }
+  }
+
+  test("the planner-hook guard sees installs and node definitions only") {
+    val dir = Files.createTempDirectory("planner-guard")
+    val src = dir.resolve("Planted.scala")
+    Files.writeString(src, Seq(
+      "object Planted {",
+      "  spark.experimental.extraStrategies = Seq(MyStrategy)",
+      "  object MyStrategy extends SparkStrategy {",
+      "  case class MyExec(child: SparkPlan) extends UnaryExecNode {",
+      "  case class Leaf() extends LeafExecNode with CodegenSupport",
+      "  ext.injectPlannerStrategy(_ => MyStrategy)",
+      "  // object Hook extends SparkStrategy in a comment",
+      "  val p: SparkPlan = df.queryExecution.executedPlan",
+      "  ds.groupBy(col(\"k\")).as[String, Long].flatMapSortedGroups(o)(f)",
+      "}").mkString("\n"))
+    try assert(directCalls(dir, plannerHook, _ => false).map(_._2) ==
+      Seq(2, 3, 4, 5, 6))
     finally { Files.delete(src); Files.delete(dir) }
   }
 }

@@ -57,7 +57,7 @@ class StreamingQueriesSpec extends SparkSpec {
     assert(streamed.sameElements(batch))
   }
 
-  test("stream_rechunk matches the batch RechunkExec operator") {
+  test("stream_rechunk matches the batch rechunk") {
     val streamed = StreamingQueries.queries("stream_rechunk")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     val batch = graft.queries.TraceQueries.queries("w4_rechunk")(spark, sf)

@@ -1,14 +1,25 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{GenerateExec, MapGroupsExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExecBase
 import org.apache.spark.sql.functions._
 import graft.traces.TraceStore
 import graft.stats.VectorStats
 
 /** S5-S6, J2, W4-W5 trace store + A13/A14 vector aggregators. */
-class TraceStoreSpec extends SparkSpec {
+class TraceStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  test("custom RechunkExec operator matches the declarative rechunk") {
-    import graft.plans.RechunkPlan
+  private def chunks(df: org.apache.spark.sql.DataFrame) =
+    df.collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1),
+        r.getSeq[Double](2).toList))
+      .sortBy(t => (t._1, t._2))
+      .toSeq
+
+  test("rechunk on the sorted-group operator matches the declarative rechunk") {
     // multiple channels, variable-length traces, shuffled input order,
     // multiple input partitions — the operator must still see each
     // channel as one ordered run (planner inserts exchange + sort)
@@ -21,21 +32,52 @@ class TraceStoreSpec extends SparkSpec {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(scala.util.Random.shuffle(rows), 5))
       .toDF("channel", "event_index", "trace")
-    val viaExec = RechunkPlan.rechunkExec(df, chunkLen = 5)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getSeq[Double](2).toList))
-      .sortBy(t => (t._1, t._2))
-    val viaDecl = graft.traces.TraceStore.rechunkDeclarative(df, chunkLen = 5)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getSeq[Double](2).toList))
-      .sortBy(t => (t._1, t._2))
-    assert(viaExec.nonEmpty)
-    assert(viaExec.toSeq == viaDecl.toSeq)
-    // the custom plan shape: no per-sample explode, exactly one exchange
-    val plan = RechunkPlan.rechunkExec(df, chunkLen = 5)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("Rechunk")) // SparkPlan display strips "Exec"
-    assert(!plan.contains("Generate")) // no explode
+    val viaScan = chunks(TraceStore.rechunk(df, chunkLen = 5))
+    assert(viaScan.nonEmpty)
+    assert(viaScan == chunks(TraceStore.rechunkDeclarative(df, chunkLen = 5)))
+    // the plan shape: one hash exchange of the un-exploded rows feeds
+    // the sorted-group node; no per-sample explode, no window
+    val plan = TraceStore.rechunk(df, chunkLen = 5)
+      .queryExecution.executedPlan
+    val groups = collect(plan) { case m: MapGroupsExec => m }
+    assert(groups.size == 1, plan)
+    assert(collect(groups.head) { case e: ShuffleExchangeExec =>
+      e.outputPartitioning.isInstanceOf[HashPartitioning] } == Seq(true),
+      plan)
+    assert(collect(plan) {
+      case g: GenerateExec => g
+      case w: WindowExecBase => w
+    }.isEmpty, plan)
+  }
+
+  test("rechunk follows the declarative rule on null traces and channels") {
+    // a null trace adds no samples; null channels form one channel
+    val rows = Seq[(String, Long, Seq[Double])](
+      ("chA", 0L, Seq(1.0, 2.0, 3.0)), ("chA", 1L, null),
+      ("chA", 2L, Seq(4.0, 5.0)), ("chA", 3L, Seq(6.0, 7.0, 8.0)),
+      (null, 0L, Seq(9.0, 10.0)), (null, 1L, null),
+      (null, 2L, Seq(11.0, 12.0, 13.0)), (null, 3L, Seq(14.0)))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 3))
+      .toDF("channel", "event_index", "trace")
+    val got = chunks(TraceStore.rechunk(df, chunkLen = 2))
+    assert(got.exists(_._1.isEmpty) && got.exists(_._1.contains("chA")))
+    assert(got == chunks(TraceStore.rechunkDeclarative(df, chunkLen = 2)))
+  }
+
+  test("rechunk carries a trace many chunks long across partitions") {
+    // one 10,000-sample trace between short ones, chunkLen 7: most
+    // chunks are cut from inside one trace, the carry spans the seams
+    val rows = (0 until 12).map { i =>
+      val n = if (i == 5) 10000 else 3 + i % 5
+      ("ch1", i.toLong, Seq.tabulate(n)(s => (i * 100000 + s).toDouble))
+    }
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(scala.util.Random.shuffle(rows), 4))
+      .toDF("channel", "event_index", "trace")
+    val got = chunks(TraceStore.rechunk(df, chunkLen = 7))
+    assert(got.size == rows.map(_._3.size).sum / 7)
+    assert(got == chunks(TraceStore.rechunkDeclarative(df, chunkLen = 7)))
   }
   import spark.implicits._
 
