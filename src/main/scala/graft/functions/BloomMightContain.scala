@@ -1,13 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Native Catalyst expression: membership probe of a long key against a
+/** Native kernel ([[Kernel]]): membership probe of a long key against a
   * pre-built [[org.apache.spark.util.sketch.BloomFilter]].
   *
   * `bloom_might_contain(key)` → boolean. False ⇒ definitely absent;
@@ -22,41 +19,18 @@ import org.apache.spark.util.sketch.BloomFilter
   * its shuffle input by ~(1−fpp) of the non-members), then confirm with
   * the exact semi-join. See [[graft.core.Masks.bloomSemiJoin]].
   */
-case class BloomMightContain(child: Expression, bloom: BloomFilter)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType | ShortType | ByteType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bloom_might_contain expects an integral key, got ${other.catalogString}")
-  }
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    bloom.mightContainLong(input.asInstanceOf[Number].longValue)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val bloomRef = ctx.addReferenceObj("bloom", bloom,
-      classOf[BloomFilter].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $bloomRef.mightContainLong((long) $c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : BloomMightContain = copy(child = newChild)
-
-  override def prettyName: String = "bloom_might_contain"
-
-  // the sketch has no usable toString; keep plan output readable
-  override def toString: String = s"bloom_might_contain($child)"
-}
-
-object BloomMightContain {
+object BloomMightContain extends Kernel("bloom_might_contain", Nil, BooleanType) {
   /** Column API: `BloomMightContain(keyCol, bloom)`. */
-  def apply(c: Column, bloom: BloomFilter): Column =
-    GraftSqlBridge.column(
-      BloomMightContain(GraftSqlBridge.expression(c), bloom))
+  def apply(c: Column, bloom: BloomFilter): Column = call(c)(bloom)
+
+  override def checkInputs(types: Seq[DataType]): Option[String] =
+    types match {
+      case Seq(LongType | IntegerType | ShortType | ByteType) => None
+      case _ => Some("bloom_might_contain expects an integral key, got " +
+        Kernel.show(types))
+    }
+
+  /** Narrower integral keys widen to long, as `(long)` did. */
+  def compute(key: Long, bloom: BloomFilter): Boolean =
+    bloom.mightContainLong(key)
 }

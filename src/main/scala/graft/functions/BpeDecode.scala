@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,40 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scale shape: pure map stage, whole-stage-codegen'd, the merge
   * table rides as a codegen reference object (KBs) — identical
   * physical profile to [[BpeEncode]]. */
-case class BpeDecode(child: Expression, merges: BpeMerges)
-    extends UnaryExpression {
+object BpeDecode extends Kernel("bpe_decode", Seq(ArrayType(IntegerType)), StringType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bpe_decode expects array<int>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    BpeDecode.compute(input.asInstanceOf[ArrayData], merges)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val ref = ctx.addReferenceObj("bpeMerges", merges,
-      classOf[BpeMerges].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeDecode.compute($c, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : BpeDecode = copy(child = newChild)
-
-  override def prettyName: String = "bpe_decode"
-}
-
-object BpeDecode {
-
-  def apply(ids: Column, merges: BpeMerges): Column =
-    GraftSqlBridge.column(
-      BpeDecode(GraftSqlBridge.expression(ids), merges))
+  def apply(ids: Column, merges: BpeMerges): Column = call(ids)(merges)
 
   /** Shared kernel for interpreted eval and generated code. Ids may
     * contain nulls only if the array type says so; [[BpeEncode]]

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types._
@@ -103,45 +100,15 @@ final class BpeMerges(val pairs: Array[(String, String)])
   * engine surface for the training-data pipeline — budget/packing/
   * chunking consume these REAL counts instead of heuristics
   * (VERDICT r08 "What's missing" 1). */
-case class BpeEncode(child: Expression, merges: BpeMerges)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bpe_encode expects string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    BpeEncode.compute(input.asInstanceOf[UTF8String], merges)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val ref = ctx.addReferenceObj("bpeMerges", merges,
-      classOf[BpeMerges].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeEncode.compute($c, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : BpeEncode = copy(child = newChild)
-
-  override def prettyName: String = "bpe_encode"
-}
-
-object BpeEncode {
+object BpeEncode extends Kernel("bpe_encode",
+    Seq(StringType), ArrayType(IntegerType, containsNull = false)) {
 
   /** Ids at or above this are merged symbols (id − base = merge rank);
     * below are raw Unicode code points. Above the code-point ceiling
     * (0x10FFFF), so the two ranges never collide. */
   val MergedIdBase: Int = 1000000
 
-  def apply(text: Column, merges: BpeMerges): Column =
-    GraftSqlBridge.column(
-      BpeEncode(GraftSqlBridge.expression(text), merges))
+  def apply(text: Column, merges: BpeMerges): Column = call(text)(merges)
 
   /** Per-thread word → ids memo. Corpora are Zipf-distributed, so the
     * same words encode over and over — real BPE tokenizers all carry

@@ -1,13 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression: cosine similarity of two numeric arrays
+/** Native kernel ([[Kernel]]): cosine similarity of two numeric arrays
   * in double precision.
   *
   * `cosine_sim(a, b)` → double. Bit-identical to the HOF formulation
@@ -23,10 +20,16 @@ import org.apache.spark.sql.types._
   * Null semantics mirror the HOF chain: null arrays, length mismatch,
   * or a null element → null.
   */
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
+object CosineSim extends Kernel("cosine_sim", Nil, DoubleType) {
 
-  private def elemCode(dt: DataType): Int = dt match {
+  /** Column API: `CosineSim(a, b)`. */
+  def apply(a: Column, b: Column): Column = call(a, b)()
+
+  // a length mismatch or a null element gives null
+  override def nullableResult: Boolean = true
+  override def nullIntolerant: Boolean = false
+
+  private[functions] def elemCode(dt: DataType): Int = dt match {
     case ArrayType(DoubleType, _) => 0
     case ArrayType(FloatType, _) => 1
     case ArrayType(LongType, _) => 2
@@ -36,49 +39,15 @@ case class CosineSim(left: Expression, right: Expression)
     case _ => -1
   }
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (elemCode(left.dataType) >= 0 && elemCode(right.dataType) >= 0)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim expects arrays of integral or floating elements, got " +
-        s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
+  override def checkInputs(types: Seq[DataType]): Option[String] =
+    if (types.length == 2 && types.forall(elemCode(_) >= 0)) None
+    else Some("cosine_sim expects arrays of integral or floating " +
+      s"elements, got ${types.map(_.catalogString).mkString(", ")}")
 
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
+  /** Each side's element type, as [[get]]'s code. */
+  override def typeArgs(types: Seq[DataType]): Seq[Int] = types.map(elemCode)
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    CosineSim.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      elemCode(left.dataType), elemCode(right.dataType))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val lc = elemCode(left.dataType)
-    val rc = elemCode(right.dataType)
-    // fresh name: a fixed identifier collides when two cosine_sim calls
-    // over non-nullable inputs land in one codegen scope (ADVICE r03)
-    val r = ctx.freshName("cosRes")
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      Object $r = graft.functions.CosineSim.compute($a, $b, $lc, $rc);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ((java.lang.Double) $r).doubleValue(); }
-    """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "cosine_sim"
-}
-
-object CosineSim {
-
-  /** Column API: `CosineSim(a, b)`. */
-  def apply(a: Column, b: Column): Column =
-    GraftSqlBridge.column(
-      CosineSim(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-
-  private def get(a: ArrayData, i: Int, code: Int): Double = (code: @annotation.switch) match {
+  private[functions] def get(a: ArrayData, i: Int, code: Int): Double = (code: @annotation.switch) match {
     case 0 => a.getDouble(i)
     case 1 => a.getFloat(i).toDouble
     case 2 => a.getLong(i).toDouble

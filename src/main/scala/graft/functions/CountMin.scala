@@ -3,9 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -299,38 +298,11 @@ object MergeCmsSketches {
   * the serve-side scorer: the (driver-small) sketch ships as a codegen
   * reference object (the [[BpeEncode]]/[[UnigramEncode]] vocabulary
   * pattern), so scoring any term table is map-only. Null term → null. */
-case class CmsQuery(child: Expression, sketch: CmsSketch)
-    extends UnaryExpression {
+object CmsQuery extends Kernel("cms_query", Seq(StringType), LongType) {
+  def apply(term: Column, sketch: CmsSketch): Column = call(term)(sketch)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"cms_query expects string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    sketch.query(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val ref = ctx.addReferenceObj("cmsSketch", sketch,
-      classOf[CmsSketch].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ref.query($c.toString());")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : CmsQuery = copy(child = newChild)
-
-  override def prettyName: String = "cms_query"
-}
-
-object CmsQuery {
-  def apply(term: Column, sketch: CmsSketch): Column =
-    GraftSqlBridge.column(CmsQuery(GraftSqlBridge.expression(term), sketch))
+  def compute(term: UTF8String, sketch: CmsSketch): Long =
+    sketch.query(term.toString)
 
   /** Rebuild a driver-side [[CmsSketch]] from a collected
     * [[CountMinTerms]] output row (`struct<total, counts>`). */

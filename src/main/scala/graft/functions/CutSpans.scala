@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -31,21 +28,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * callers keep the `when(spans IS NULL, text)` wrapper for the
   * span-free fast path.
   */
-case class CutSpans(left: Expression, right: Expression)
-  extends BinaryExpression {
+object CutSpans extends Kernel("cut_spans", Nil, StringType) {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, ArrayType(s: StructType, _))
-          if s.fields.length == 2 &&
-            s.fields.forall(_.dataType == LongType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"cut_spans expects (string, array<struct<long, long>>), got " +
-          s"(${l.catalogString}, ${r.catalogString})")
+  def apply(text: Column, spans: Column): Column = call(text, spans)()
+
+  /** Any two long fields: the field names are not part of the contract. */
+  override def checkInputs(types: Seq[DataType]): Option[String] =
+    types match {
+      case Seq(StringType, ArrayType(s: StructType, _))
+          if s.fields.length == 2 && s.fields.forall(_.dataType == LongType) =>
+        None
+      case _ => Some("cut_spans expects (string, array<struct<long, " +
+        s"long>>), got ${Kernel.show(types)}")
     }
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
 
   def compute(text: UTF8String, spansData: ArrayData): UTF8String = {
     // no m==0 shortcut: an explicit empty span list still goes through
@@ -97,27 +92,4 @@ case class CutSpans(left: Expression, right: Expression)
     }
     UTF8String.fromBytes(java.util.Arrays.copyOf(out, outLen))
   }
-
-  override def nullSafeEval(textAny: Any, spansAny: Any): Any =
-    compute(textAny.asInstanceOf[UTF8String],
-      spansAny.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val ref = ctx.addReferenceObj("cutSpans", this, getClass.getName)
-    nullSafeCodeGen(ctx, ev,
-      (t, s) => s"${ev.value} = $ref.compute($t, $s);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CutSpans =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "cut_spans"
-}
-
-object CutSpans {
-  def apply(text: Column, spans: Column): Column =
-    GraftSqlBridge.column(CutSpans(
-      GraftSqlBridge.expression(text), GraftSqlBridge.expression(spans)))
 }

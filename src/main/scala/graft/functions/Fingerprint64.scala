@@ -1,86 +1,27 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: rolling polynomial document fingerprint
+/** Native kernel ([[Kernel]]): rolling polynomial document fingerprint
   * (Rabin-Karp style) over UTF-8 bytes.
   *
   * `fingerprint64(text)` → bigint: h = 17, then h = h·1000003 + byte for
   * each UTF-8 byte, with 64-bit wrapping multiplies. Stable across
   * partitioning and file layout (a pure function of the text).
   *
-  * Why an Expression rather than a UDF (SURVEY §2.12 preference order):
+  * Why a kernel rather than a UDF (SURVEY §2.12 preference order):
   * wrapping 64-bit arithmetic is exactly what ANSI-mode SQL `*`/`+`
   * forbids, and a Scala UDF would pay UTF8String→String conversion per
   * row; here the kernel runs on the raw UTF-8 bytes inside whole-stage
   * codegen with zero per-row allocation.
   */
-case class Fingerprint64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"fingerprint64 expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    Fingerprint64.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Fingerprint64.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : Fingerprint64 = copy(child = newChild)
-
-  override def prettyName: String = "fingerprint64"
-}
-
-/** Native Catalyst expression: FNV-1a 64 of a string's UTF-8 bytes —
-  * the same token-hash kernel the MinHash signatures use
-  * ([[MinHashSig.fnv64]]), exposed as a scalar so SimHash bit-voting
-  * runs on a hash that an ANSI-SQL oracle can reproduce (wrapping
-  * multiply emulated in 128-bit arithmetic mod 2^64). */
-case class Fnv64(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"fnv64 expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(input: Any): Any =
-    MinHashSig.fnv64(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashSig.fnv64($c);")
-  override protected def withNewChildInternal(newChild: Expression)
-      : Fnv64 = copy(child = newChild)
-  override def prettyName: String = "fnv64"
-}
-
-object Fnv64 {
-  /** Column API: `Fnv64(text)`. */
-  def apply(c: Column): Column =
-    GraftSqlBridge.column(Fnv64(GraftSqlBridge.expression(c)))
-}
-
-object Fingerprint64 {
+object Fingerprint64 extends Kernel("fingerprint64", Seq(StringType), LongType) {
 
   /** Column API: `fingerprint(text)`. */
-  def apply(c: Column): Column =
-    GraftSqlBridge.column(Fingerprint64(GraftSqlBridge.expression(c)))
+  def apply(c: Column): Column = call(c)()
 
-  /** Shared kernel for interpreted eval and generated code. */
   def compute(s: UTF8String): Long = {
     val bytes = s.getBytes
     var h = 17L
@@ -91,4 +32,16 @@ object Fingerprint64 {
     }
     h
   }
+}
+
+/** Native kernel ([[Kernel]]): FNV-1a 64 of a string's UTF-8 bytes —
+  * the same token-hash kernel the MinHash signatures use
+  * ([[MinHashSig.fnv64]]), exposed as a scalar so SimHash bit-voting
+  * runs on a hash that an ANSI-SQL oracle can reproduce (wrapping
+  * multiply emulated in 128-bit arithmetic mod 2^64). */
+object Fnv64 extends Kernel("fnv64", Seq(StringType), LongType) {
+  /** Column API: `Fnv64(text)`. */
+  def apply(c: Column): Column = call(c)()
+
+  def compute(s: UTF8String): Long = MinHashSig.fnv64(s)
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -42,47 +39,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *    NON-EMPTY token code points over total token code points.
   * All divisions are double divisions of exact integers — bit-equal to
   * the mirror. Null text → null (callers coalesce). */
-case class GopherRepetition(child: Expression) extends UnaryExpression {
+object GopherRepetition extends Kernel("gopher_repetition", Seq(StringType),
+    // field order = [[graft.llm.Repetition.GopherThresholds]] order
+    StructType(Seq(
+      "dup_line_frac", "dup_para_frac",
+      "dup_line_char_frac", "dup_para_char_frac",
+      "top_2gram_char_frac", "top_3gram_char_frac", "top_4gram_char_frac",
+      "dup_5gram_char_frac", "dup_6gram_char_frac", "dup_7gram_char_frac",
+      "dup_8gram_char_frac", "dup_9gram_char_frac", "dup_10gram_char_frac")
+      .map(StructField(_, DoubleType, nullable = false)))) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"gopher_repetition expects string, got ${other.catalogString}")
-  }
+  val FieldNames: Seq[String] = dataType.asInstanceOf[StructType].fieldNames.toSeq
 
-  override def dataType: DataType = GopherRepetition.Schema
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    GopherRepetition.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GopherRepetition.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : GopherRepetition = copy(child = newChild)
-
-  override def prettyName: String = "gopher_repetition"
-}
-
-object GopherRepetition {
-
-  /** Field order = [[graft.llm.Repetition.GopherThresholds]] order. */
-  val FieldNames: Seq[String] = Seq(
-    "dup_line_frac", "dup_para_frac",
-    "dup_line_char_frac", "dup_para_char_frac",
-    "top_2gram_char_frac", "top_3gram_char_frac", "top_4gram_char_frac",
-    "dup_5gram_char_frac", "dup_6gram_char_frac", "dup_7gram_char_frac",
-    "dup_8gram_char_frac", "dup_9gram_char_frac", "dup_10gram_char_frac")
-
-  val Schema: StructType = StructType(
-    FieldNames.map(StructField(_, DoubleType, nullable = false)))
-
-  def apply(text: Column): Column =
-    GraftSqlBridge.column(
-      GopherRepetition(GraftSqlBridge.expression(text)))
+  def apply(text: Column): Column = call(text)()
 
   private def cpLen(s: String): Int = s.codePointCount(0, s.length)
 

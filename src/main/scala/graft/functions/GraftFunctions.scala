@@ -22,10 +22,15 @@ object GraftFunctions {
       s"$what must be an integer literal, got $other")
   }
 
-  private def minhashBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 2, "minhash_sig(shingles, k)")
-    MinHashSig(exprs.head, intLit(exprs(1), "k"))
-  }
+  /** `k` over the SQL arguments `args…, ints…`: each of `args` a column,
+    * each of `ints` an integer literal (a constant of `compute`). */
+  private def row(k: Kernel, args: String*)(ints: String*) =
+    (k.name, k.getClass, (exprs: Seq[Expression]) => {
+      require(exprs.length == args.length + ints.length,
+        (args ++ ints).mkString(s"${k.name}(", ", ", ")"))
+      val (cols, lits) = exprs.splitAt(args.length)
+      KernelCall(k, cols, ints.zip(lits).map { case (w, e) => intLit(e, w) })
+    })
 
   private def hist2dBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 8,
@@ -47,97 +52,23 @@ object GraftFunctions {
       .toAggregateExpression()
   }
 
-  private def fingerprintBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 1, "fingerprint64(text)")
-    Fingerprint64(exprs.head)
-  }
-
-  private def cosineBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 2, "cosine_sim(a, b)")
-    CosineSim(exprs(0), exprs(1))
-  }
-
-  private def simhashBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 1, "simhash64(tokens)")
-    SimHash64(exprs.head)
-  }
-
-  private def fnvBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 1, "fnv64(text)")
-    Fnv64(exprs.head)
-  }
-
-  private def winnowBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 2, "winnowed_sketch(tokens, w)")
-    WinnowedSketch(exprs.head, intLit(exprs(1), "w"))
-  }
-
-  private def minhashTextBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 3, "minhash_text(text, k, n)")
-    MinHashTextSig(exprs.head, intLit(exprs(1), "k"), intLit(exprs(2), "n"))
-  }
-
-  private def simhashTextBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 1, "simhash_text(text)")
-    SimHashText(exprs.head)
-  }
-
-  private def topTokenBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 1, "top_token_ratio(text)")
-    TopTokenRatio(exprs.head)
-  }
-
-  private def shingleHashesBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 2, "shingle_hashes(text, n)")
-    ShingleHashes(exprs.head, intLit(exprs(1), "n"))
-  }
-
-  private def ngramHashesBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 2, "ngram_hashes(text, n)")
-    NgramHashes(exprs.head, intLit(exprs(1), "n"))
-  }
-
-  private def gramHashesBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 2, "gram_hashes(text, k)")
-    GramHashes(exprs.head, intLit(exprs(1), "k"))
-  }
-
   private def bpeBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 1, "bpe_encode(text) [default merge table]")
-    BpeEncode(exprs.head, graft.llm.Bpe.defaultMerges)
+    KernelCall(BpeEncode, exprs, Seq(graft.llm.Bpe.defaultMerges))
   }
 
   private def bpeDecodeBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 1, "bpe_decode(ids) [default merge table]")
-    BpeDecode(exprs.head, graft.llm.Bpe.defaultMerges)
-  }
-
-  private def gopherRepBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 1, "gopher_repetition(text)")
-    GopherRepetition(exprs.head)
-  }
-
-  private def htmlToTextBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 1, "html_to_text(html)")
-    HtmlToText(exprs.head)
-  }
-
-  private def htmlLinksBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 1, "html_links(html)")
-    HtmlLinks(exprs.head)
-  }
-
-  private def htmlAnchorsBuilder(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 1, "html_anchors(html)")
-    HtmlAnchors(exprs.head)
+    KernelCall(BpeDecode, exprs, Seq(graft.llm.Bpe.defaultMerges))
   }
 
   private def htmlMainBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 1 || exprs.length == 3,
       "html_main_text(html[, min_chars, max_link_permille])")
-    if (exprs.length == 1) HtmlMainText(exprs.head)
-    else HtmlMainText(exprs.head, intLit(exprs(1), "min_chars"),
-      intLit(exprs(2), "max_link_permille"))
+    KernelCall(HtmlMainText, exprs.take(1),
+      if (exprs.length == 1) HtmlMainText.Defaults
+      else Seq(intLit(exprs(1), "min_chars"),
+        intLit(exprs(2), "max_link_permille")))
   }
 
   private def robotsAllowedBuilder(exprs: Seq[Expression]): Expression = {
@@ -148,12 +79,12 @@ object GraftFunctions {
       case other => throw new IllegalArgumentException(
         s"agent must be a string literal, got $other")
     }
-    RobotsAllowed(exprs(0), exprs(1), agent)
+    KernelCall(RobotsAllowed, exprs.take(2), Seq(agent))
   }
 
   private def normalizeTextBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 1, "normalize_text(text) [NFC + fold + ws]")
-    NormalizeText(exprs.head)
+    KernelCall(NormalizeText, exprs, NormalizeText.Defaults)
   }
 
   private def topkByBuilder(exprs: Seq[Expression]): Expression = {
@@ -164,34 +95,34 @@ object GraftFunctions {
       intLit(exprs(2), "k")).toAggregateExpression()
   }
 
-  /** The SQL surface, one row per function: (name, expression class,
+  /** The SQL surface, one row per function: (name, implementing class,
     * builder). [[register]] and [[GraftExtensions]] both read it. */
   private[graft] val table
-      : Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] =
+      : Seq[(String, Class[_], Seq[Expression] => Expression)] =
     Seq(
-      ("minhash_sig", classOf[MinHashSig], minhashBuilder),
+      row(MinHashSig, "shingles")("k"),
       ("histogram2d", classOf[Histogram2D], hist2dBuilder),
-      ("fingerprint64", classOf[Fingerprint64], fingerprintBuilder),
-      ("cosine_sim", classOf[CosineSim], cosineBuilder),
-      ("simhash64", classOf[SimHash64], simhashBuilder),
-      ("fnv64", classOf[Fnv64], fnvBuilder),
-      ("winnowed_sketch", classOf[WinnowedSketch], winnowBuilder),
-      ("minhash_text", classOf[MinHashTextSig], minhashTextBuilder),
-      ("simhash_text", classOf[SimHashText], simhashTextBuilder),
-      ("top_token_ratio", classOf[TopTokenRatio], topTokenBuilder),
-      ("shingle_hashes", classOf[ShingleHashes], shingleHashesBuilder),
-      ("ngram_hashes", classOf[NgramHashes], ngramHashesBuilder),
-      ("gram_hashes", classOf[GramHashes], gramHashesBuilder),
+      row(Fingerprint64, "text")(),
+      row(CosineSim, "a", "b")(),
+      row(SimHash64, "tokens")(),
+      row(Fnv64, "text")(),
+      row(WinnowedSketch, "tokens")("w"),
+      row(MinHashTextSig, "text")("k", "n"),
+      row(SimHashText, "text")(),
+      row(TopTokenRatio, "text")(),
+      row(ShingleHashes, "text")("n"),
+      row(NgramHashes, "text")("n"),
+      row(GramHashes, "text")("k"),
       ("topk_by", classOf[TopKByScore], topkByBuilder),
-      ("bpe_encode", classOf[BpeEncode], bpeBuilder),
-      ("bpe_decode", classOf[BpeDecode], bpeDecodeBuilder),
-      ("gopher_repetition", classOf[GopherRepetition], gopherRepBuilder),
-      ("html_to_text", classOf[HtmlToText], htmlToTextBuilder),
-      ("html_links", classOf[HtmlLinks], htmlLinksBuilder),
-      ("html_anchors", classOf[HtmlAnchors], htmlAnchorsBuilder),
-      ("html_main_text", classOf[HtmlMainText], htmlMainBuilder),
-      ("robots_allowed", classOf[RobotsAllowed], robotsAllowedBuilder),
-      ("normalize_text", classOf[NormalizeText], normalizeTextBuilder))
+      ("bpe_encode", BpeEncode.getClass, bpeBuilder),
+      ("bpe_decode", BpeDecode.getClass, bpeDecodeBuilder),
+      row(GopherRepetition, "text")(),
+      row(HtmlToText, "html")(),
+      row(HtmlLinks, "html")(),
+      row(HtmlAnchors, "html")(),
+      ("html_main_text", HtmlMainText.getClass, htmlMainBuilder),
+      ("robots_allowed", RobotsAllowed.getClass, robotsAllowedBuilder),
+      ("normalize_text", NormalizeText.getClass, normalizeTextBuilder))
 
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry

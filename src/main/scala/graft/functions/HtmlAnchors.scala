@@ -1,12 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `html_anchors(html)` — the `<a href>` links of a page WITH their
@@ -25,39 +22,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * parser rule — anchors never nest); EOF closes with whatever text
   * accumulated. `<a>` without href contributes nothing. Null in →
   * null out. Map-only, codegen'd. */
-case class HtmlAnchors(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"html_anchors expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("href", StringType, nullable = false),
-      StructField("text", StringType, nullable = false))),
-    containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlAnchors.extract(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = HtmlAnchors.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $cls.extract($c);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): HtmlAnchors = copy(child = newChild)
-
-  override def prettyName: String = "html_anchors"
-}
-
-object HtmlAnchors {
+object HtmlAnchors extends Kernel("html_anchors", Seq(StringType),
+    ArrayType(
+      StructType(Seq(
+        StructField("href", StringType, nullable = false),
+        StructField("text", StringType, nullable = false))),
+      containsNull = false)) {
 
   /** Java-facing entry (called from generated code). */
-  def extract(s: UTF8String): GenericArrayData =
+  def compute(s: UTF8String): GenericArrayData =
     new GenericArrayData(anchors(s.toString).map { case (h, t) =>
       new GenericInternalRow(Array[Any](
         UTF8String.fromString(h), UTF8String.fromString(t)))
@@ -150,6 +123,5 @@ object HtmlAnchors {
     out.toSeq
   }
 
-  def apply(html: Column): Column =
-    GraftSqlBridge.column(HtmlAnchors(GraftSqlBridge.expression(html)))
+  def apply(html: Column): Column = call(html)()
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `html_links(html)` — the `<a href>` targets of a page in document
@@ -22,35 +19,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * entity-decoded (an `&amp;` in a URL is an `&` — the one place
   * entity decode applies INSIDE a tag). `<a>` without an href
   * contributes nothing. Null in → null out. Map-only, codegen'd. */
-case class HtmlLinks(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"html_links expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlLinks.extract(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = HtmlLinks.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $cls.extract($c);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): HtmlLinks = copy(child = newChild)
-
-  override def prettyName: String = "html_links"
-}
-
-object HtmlLinks {
+object HtmlLinks extends Kernel("html_links",
+    Seq(StringType), ArrayType(StringType, containsNull = false)) {
 
   /** Java-facing entry (called from generated code). */
-  def extract(s: UTF8String): GenericArrayData =
+  def compute(s: UTF8String): GenericArrayData =
     new GenericArrayData(
       links(s.toString).map(UTF8String.fromString).toArray[Any])
 
@@ -138,6 +111,5 @@ object HtmlLinks {
     None
   }
 
-  def apply(html: Column): Column =
-    GraftSqlBridge.column(HtmlLinks(GraftSqlBridge.expression(html)))
+  def apply(html: Column): Column = call(html)()
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `html_main_text(html)` — BOILERPLATE REMOVAL, the curation step
@@ -39,40 +36,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * same task that parsed the WARC record — no exchange, and dropping
   * boilerplate HERE shrinks every shuffle downstream (dedup
   * signatures, quality scores, tokenization all see less text). */
-case class HtmlMainText(
-    child: Expression,
-    minChars: Int = 25,
-    maxLinkPermille: Int = 300) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"html_main_text expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlMainText.extract(
-      input.asInstanceOf[UTF8String], minChars, maxLinkPermille)
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = HtmlMainText.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $cls.extract($c, $minChars, $maxLinkPermille);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): HtmlMainText = copy(child = newChild)
-
-  override def prettyName: String = "html_main_text"
-}
-
-object HtmlMainText {
+object HtmlMainText extends Kernel("html_main_text", Seq(StringType), StringType) {
 
   /** Java-facing entry (called from generated code). */
-  def extract(s: UTF8String, minChars: Int, maxPermille: Int): UTF8String =
+  def compute(s: UTF8String, minChars: Int, maxPermille: Int): UTF8String =
     UTF8String.fromString(extract(s.toString, minChars, maxPermille))
 
   def extract(html: String, minChars: Int, maxPermille: Int): String = {
@@ -166,10 +133,11 @@ object HtmlMainText {
     out.toString
   }
 
-  def apply(html: Column): Column =
-    GraftSqlBridge.column(HtmlMainText(GraftSqlBridge.expression(html)))
+  /** `min_chars`, `max_link_permille` when the call names none. */
+  private[functions] val Defaults = Seq(25, 300)
+
+  def apply(html: Column): Column = call(html)(Defaults: _*)
 
   def apply(html: Column, minChars: Int, maxLinkPermille: Int): Column =
-    GraftSqlBridge.column(HtmlMainText(
-      GraftSqlBridge.expression(html), minChars, maxLinkPermille))
+    call(html)(minChars, maxLinkPermille)
 }

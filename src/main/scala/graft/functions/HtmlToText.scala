@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `html_to_text(html)` — the WET "conversion" step of a crawl
@@ -42,32 +39,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Null → null. Per-row scalar work, map-only — embarrassingly
   * parallel; at 100 TB this runs inside the same task that parsed the
   * WARC record, no extra exchange. */
-case class HtmlToText(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"html_to_text expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlToText.extract(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = HtmlToText.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $cls.extract($c);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): HtmlToText = copy(child = newChild)
-
-  override def prettyName: String = "html_to_text"
-}
-
-object HtmlToText {
+object HtmlToText extends Kernel("html_to_text", Seq(StringType), StringType) {
 
   private val BlockTags: Set[String] = Set(
     "html", "head", "body", "title", "p", "div", "br", "hr",
@@ -111,7 +83,7 @@ object HtmlToText {
     "quot" -> "\"", "apos" -> "'", "nbsp" -> "\u00A0")
 
   /** Java-facing entry (called from generated code). */
-  def extract(s: UTF8String): UTF8String =
+  def compute(s: UTF8String): UTF8String =
     UTF8String.fromString(extract(s.toString))
 
   def extract(html: String): String = {
@@ -271,6 +243,5 @@ object HtmlToText {
     out.toString
   }
 
-  def apply(html: Column): Column =
-    GraftSqlBridge.column(HtmlToText(GraftSqlBridge.expression(html)))
+  def apply(html: Column): Column = call(html)()
 }

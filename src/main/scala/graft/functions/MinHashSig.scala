@@ -1,14 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: MinHash signature of a shingle array.
+/** Native kernel ([[Kernel]]): MinHash signature of a shingle array.
   *
   * `minhash_sig(shingles, k)` → array<bigint> of length k: minima of k
   * universal hashes h_i = (lo31(h)·a_i mod 2⁶⁴) xor hi33(h) over
@@ -22,42 +19,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * multiplication by a random odd a is a bijection of Z₂⁶⁴ whose
   * induced ordering differs per a — a genuine min-wise family.
   *
-  * Why an Expression rather than a UDF (SURVEY §2.12 preference order):
-  * it participates in whole-stage codegen via [[doGenCode]] and operates
-  * directly on Tungsten `ArrayData`/`UTF8String` — no Seq[String]
+  * Why a kernel rather than a UDF (SURVEY §2.12 preference order):
+  * it runs inside whole-stage codegen as a direct `compute` call and
+  * operates directly on Tungsten `ArrayData`/`UTF8String` — no Seq[String]
   * deserialization, no boxing, per-row garbage ≈ the output array only.
   * This is the hot inner loop of corpus-scale dedup.
   */
-case class MinHashSig(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig expects array<string>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashSig.compute(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashSig.compute($c, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : MinHashSig = copy(child = newChild)
-
-  override def prettyName: String = "minhash_sig"
-}
-
-object MinHashSig {
+object MinHashSig extends Kernel("minhash_sig",
+    Seq(ArrayType(StringType)), ArrayType(LongType, containsNull = false)) {
 
   /** Column API: `minhashSig(shingleArray, k)`. */
-  def apply(c: Column, k: Int): Column =
-    GraftSqlBridge.column(MinHashSig(GraftSqlBridge.expression(c), k))
+  def apply(c: Column, k: Int): Column = call(c)(k)
 
   private val mixerCache =
     new java.util.concurrent.ConcurrentHashMap[Int, Array[Long]]()

@@ -1,13 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression: index of the nearest centroid (squared
+/** Native kernel ([[Kernel]]): index of the nearest centroid (squared
   * L2) for a numeric array, with the centroid matrix embedded as a
   * reference object in the generated code.
   *
@@ -23,63 +20,23 @@ import org.apache.spark.sql.types._
   * (same pattern as [[CosineSim]]); the IVF assignment becomes a pure
   * map stage.
   */
-case class NearestCentroid(child: Expression, cents: Array[Array[Double]])
-    extends UnaryExpression {
-
-  private def elemCode(dt: DataType): Int = dt match {
-    case ArrayType(DoubleType, _) => 0
-    case ArrayType(FloatType, _) => 1
-    case ArrayType(LongType, _) => 2
-    case ArrayType(IntegerType, _) => 3
-    case ArrayType(ShortType, _) => 4
-    case ArrayType(ByteType, _) => 5
-    case _ => -1
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (cents.isEmpty)
-      TypeCheckResult.TypeCheckFailure("nearest_centroid: empty centroid set")
-    else if (elemCode(child.dataType) >= 0) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"nearest_centroid expects an array of integral or floating " +
-        s"elements, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    NearestCentroid.compute(input.asInstanceOf[ArrayData],
-      elemCode(child.dataType), cents)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val code = elemCode(child.dataType)
-    val ref = ctx.addReferenceObj("centroids", cents, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NearestCentroid.compute($c, $code, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : NearestCentroid = copy(child = newChild)
-
-  override def prettyName: String = "nearest_centroid"
-}
-
-object NearestCentroid {
+object NearestCentroid extends Kernel("nearest_centroid", Nil, IntegerType) {
 
   /** Column API: `NearestCentroid(vec, cents)`. */
-  def apply(c: Column, cents: Array[Array[Double]]): Column =
-    GraftSqlBridge.column(
-      NearestCentroid(GraftSqlBridge.expression(c), cents))
+  def apply(c: Column, cents: Array[Array[Double]]): Column = call(c)(cents)
 
-  private def get(a: ArrayData, i: Int, code: Int): Double = (code: @annotation.switch) match {
-    case 0 => a.getDouble(i)
-    case 1 => a.getFloat(i).toDouble
-    case 2 => a.getLong(i).toDouble
-    case 3 => a.getInt(i).toDouble
-    case 4 => a.getShort(i).toDouble
-    case 5 => a.getByte(i).toDouble
-  }
+  override def checkConsts(consts: Seq[Any]): Unit =
+    require(consts.head.asInstanceOf[Array[Array[Double]]].nonEmpty,
+      "nearest_centroid: empty centroid set")
+
+  override def checkInputs(types: Seq[DataType]): Option[String] =
+    if (types.length == 1 && CosineSim.elemCode(types.head) >= 0) None
+    else Some("nearest_centroid expects an array of integral or " +
+      s"floating elements, got ${Kernel.show(types)}")
+
+  /** The vector's element type, as [[compute]]'s `code`. */
+  override def typeArgs(types: Seq[DataType]): Seq[Int] =
+    types.map(CosineSim.elemCode)
 
   /** Shared kernel for interpreted eval and generated code. Sequential
     * accumulation in index order (oracle-mirrorable); null elements
@@ -96,7 +53,7 @@ object NearestCentroid {
       var i = 0
       while (i < n) {
         if (!v.isNullAt(i)) {
-          val t = get(v, i, code) - row(i)
+          val t = CosineSim.get(v, i, code) - row(i)
           d += t * t
         }
         i += 1

@@ -1,13 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression: repeated word-n-gram fraction of a token
+/** Native kernel ([[Kernel]]): repeated word-n-gram fraction of a token
   * array — `1 − distinct/total` over the sliding n-grams, the
   * Gopher/C4-style repetition quality signal.
   *
@@ -27,42 +24,14 @@ import org.apache.spark.sql.types._
   * a whitespace split — so distinct counts equal the oracle's distinct
   * joined strings exactly.
   */
-case class RepeatedNgramRatio(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (n <= 0)
-      TypeCheckResult.TypeCheckFailure("repeated_ngram_ratio: n must be > 0")
-    else child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"repeated_ngram_ratio expects array<string>, got " +
-          s"${other.catalogString}")
-    }
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    RepeatedNgramRatio.compute(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RepeatedNgramRatio.compute($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : RepeatedNgramRatio = copy(child = newChild)
-
-  override def prettyName: String = "repeated_ngram_ratio"
-}
-
-object RepeatedNgramRatio {
+object RepeatedNgramRatio extends Kernel("repeated_ngram_ratio",
+    Seq(ArrayType(StringType)), DoubleType) {
 
   /** Column API: `RepeatedNgramRatio(tokenArray, n)`. */
-  def apply(c: Column, n: Int): Column =
-    GraftSqlBridge.column(
-      RepeatedNgramRatio(GraftSqlBridge.expression(c), n))
+  def apply(c: Column, n: Int): Column = call(c)(n)
+
+  override def checkConsts(consts: Seq[Any]): Unit =
+    require(consts.head.asInstanceOf[Int] > 0, "repeated_ngram_ratio: n must be > 0")
 
   /** Shared kernel for interpreted eval and generated code. Null token
     * elements join as empty strings (split never produces them). */

@@ -3,11 +3,8 @@ package graft.functions
 import java.util.Locale
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `normalize_text(text)` — the standard pre-dedup text canonicalization
@@ -28,45 +25,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * collapse into the same exact-hash or shingle groups. Null → null.
   * Per-row scalar work, map-only — embarrassingly parallel at any scale.
   */
-case class NormalizeText(
-    child: Expression,
-    form: String = "NFC",
-    caseFold: Boolean = true,
-    collapseWs: Boolean = true)
-  extends UnaryExpression {
-
-  require(form == "NFC" || form == "NFKC", s"form must be NFC|NFKC: $form")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"normalize_text expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    NormalizeText.normalize(
-      input.asInstanceOf[UTF8String], form, caseFold, collapseWs)
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = NormalizeText.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = $cls.normalize($c, "$form", $caseFold, $collapseWs);""")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): NormalizeText = copy(child = newChild)
-
-  override def prettyName: String = "normalize_text"
-}
-
-object NormalizeText {
+object NormalizeText extends Kernel("normalize_text", Seq(StringType), StringType) {
   // explicit ASCII-whitespace class — see the \x0B note in the scaladoc
   private val WsRun = Pattern.compile("[ \t\n" + "\u000B" + "\f\r]+")
 
-  def normalize(
+  def compute(
       s: UTF8String,
       form: String,
       caseFold: Boolean,
@@ -85,14 +48,20 @@ object NormalizeText {
     UTF8String.fromString(str)
   }
 
-  def apply(text: Column): Column =
-    GraftSqlBridge.column(NormalizeText(GraftSqlBridge.expression(text)))
+  /** `form`, `caseFold`, `collapseWs` when the call names none. */
+  private[functions] val Defaults = Seq("NFC", true, true)
+
+  def apply(text: Column): Column = call(text)(Defaults: _*)
 
   def apply(
       text: Column,
       form: String,
       caseFold: Boolean,
       collapseWs: Boolean): Column =
-    GraftSqlBridge.column(NormalizeText(
-      GraftSqlBridge.expression(text), form, caseFold, collapseWs))
+    call(text)(form, caseFold, collapseWs)
+
+  override def checkConsts(consts: Seq[Any]): Unit = {
+    val form = consts.head
+    require(form == "NFC" || form == "NFKC", s"form must be NFC|NFKC: $form")
+  }
 }

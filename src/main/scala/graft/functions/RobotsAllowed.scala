@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.Robots
@@ -23,42 +22,17 @@ import graft.sources.Robots
   * happens, never the verdict — results are deterministic under any
   * partitioning. Null robots or null path → null (callers supply the
   * no-robots default explicitly). */
-case class RobotsAllowed(left: Expression, right: Expression, agent: String)
-  extends BinaryExpression {
+object RobotsAllowed extends Kernel("robots_allowed",
+    Seq(StringType, StringType), BooleanType) {
 
-  require(agent.nonEmpty && agent != "*",
-    s"agent must be a concrete product token, got '$agent'")
+  def apply(robotsTxt: Column, path: Column, agent: String): Column =
+    call(robotsTxt, path)(agent)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"robots_allowed expects (string, string), got " +
-          s"(${l.catalogString}, ${r.catalogString})")
-    }
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(robots: Any, path: Any): Any =
-    RobotsAllowed.allowed(robots.asInstanceOf[UTF8String],
-      path.asInstanceOf[UTF8String], agent)
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = RobotsAllowed.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val agentRef = ctx.addReferenceObj("agent", agent, "java.lang.String")
-    nullSafeCodeGen(ctx, ev, (r, p) =>
-      s"${ev.value} = $cls.allowed($r, $p, $agentRef);")
+  override def checkConsts(consts: Seq[Any]): Unit = {
+    val agent = consts.head.asInstanceOf[String]
+    require(agent.nonEmpty && agent != "*",
+      s"agent must be a concrete product token, got '$agent'")
   }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): RobotsAllowed =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "robots_allowed"
-}
-
-object RobotsAllowed {
 
   /** Parsed-rules memo: bounded, cleared wholesale on overflow (crude
     * but deterministic — a miss only re-parses). Keyed by a SHA-256
@@ -86,7 +60,7 @@ object RobotsAllowed {
     java.util.Base64.getEncoder.encodeToString(md.digest())
   }
 
-  def allowed(robots: UTF8String, path: UTF8String, agent: String): Boolean = {
+  def compute(robots: UTF8String, path: UTF8String, agent: String): Boolean = {
     val key = digestKey(robots, agent)
     var rules = cache.get(key)
     if (rules == null) {
@@ -96,9 +70,25 @@ object RobotsAllowed {
     }
     Robots.isAllowed(rules, path.toString)
   }
+}
 
-  def apply(robotsTxt: Column, path: Column, agent: String): Column =
-    GraftSqlBridge.column(RobotsAllowed(
-      GraftSqlBridge.expression(robotsTxt),
-      GraftSqlBridge.expression(path), agent))
+/** `robots_directives(robots_txt)` for a fixed crawler `agent` →
+  * `struct<crawl_delay: double, sitemaps: array<string>>`, the
+  * scheduler half of [[graft.sources.Robots.directivesFor]]: the crawl
+  * delay of the agent's groups (null when they set none) and the
+  * file's distinct sitemap URLs. One row per host, so no memo. Null
+  * robots → null. */
+object RobotsDirectives extends Kernel("robots_directives", Seq(StringType),
+    StructType(Seq(
+      StructField("crawl_delay", DoubleType),
+      StructField("sitemaps", ArrayType(StringType, containsNull = false),
+        nullable = false)))) {
+
+  def apply(robotsTxt: Column, agent: String): Column = call(robotsTxt)(agent)
+
+  def compute(robots: UTF8String, agent: String): InternalRow = {
+    val d = Robots.directivesFor(robots.toString, agent)
+    InternalRow(d.crawlDelay.map(Double.box).orNull,
+      new GenericArrayData(d.sitemaps.map(UTF8String.fromString).toArray[Any]))
+  }
 }

@@ -1,13 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression: 64-bit SimHash of a token array.
+/** Native kernel ([[Kernel]]): 64-bit SimHash of a token array.
   *
   * `simhash64(tokens)` → bigint: per-token FNV-1a 64 hash (the
   * [[MinHashSig.fnv64]] kernel — chosen because an ANSI-SQL oracle can
@@ -24,35 +21,10 @@ import org.apache.spark.sql.types._
   * exactly like [[MinHashSig]]. At 100 TB that removes the whole
   * token-shuffle volume from the SimHash dedup path.
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash64 expects array<string>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    SimHash64.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SimHash64.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : SimHash64 = copy(child = newChild)
-
-  override def prettyName: String = "simhash64"
-}
-
-object SimHash64 {
+object SimHash64 extends Kernel("simhash64", Seq(ArrayType(StringType)), LongType) {
 
   /** Column API: `SimHash64(tokenArray)`. */
-  def apply(c: Column): Column =
-    GraftSqlBridge.column(SimHash64(GraftSqlBridge.expression(c)))
+  def apply(c: Column): Column = call(c)()
 
   /** Shared kernel for interpreted eval and generated code. Null tokens
     * are skipped (they contribute no vote), matching the aggregation

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -132,35 +129,10 @@ object TextTokenize {
   * the document's word-n-gram shingle set, fused end to end — see
   * [[TextTokenize]]. Output is identical to
   * `MinHashSig(Dedup.shingles(text, n), k)`. */
-case class MinHashTextSig(child: Expression, k: Int, n: Int)
-    extends UnaryExpression {
+object MinHashTextSig extends Kernel("minhash_text", Seq(StringType),
+    ArrayType(LongType, containsNull = false)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_text expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashTextSig.compute(input.asInstanceOf[UTF8String], k, n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashTextSig.compute($c, $k, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : MinHashTextSig = copy(child = newChild)
-
-  override def prettyName: String = "minhash_text"
-}
-
-object MinHashTextSig {
-
-  def apply(c: Column, k: Int, n: Int): Column =
-    GraftSqlBridge.column(MinHashTextSig(GraftSqlBridge.expression(c), k, n))
+  def apply(c: Column, k: Int, n: Int): Column = call(c)(k, n)
 
   def compute(text: UTF8String, k: Int, n: Int): ArrayData = {
     val bytes = text.getBytes
@@ -197,35 +169,10 @@ object MinHashTextSig {
   * (the composed `array_distinct(ngrams(...))` chain instead collapses
   * null to the [""] shingle via `concat_ws` — same artifact the
   * MinHash kernel drops; TextSigSpec pins both). */
-case class ShingleHashes(child: Expression, n: Int)
-    extends UnaryExpression {
+object ShingleHashes extends Kernel("shingle_hashes", Seq(StringType),
+    ArrayType(LongType, containsNull = false)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"shingle_hashes expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleHashes.compute(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ShingleHashes.compute($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : ShingleHashes = copy(child = newChild)
-
-  override def prettyName: String = "shingle_hashes"
-}
-
-object ShingleHashes {
-
-  def apply(c: Column, n: Int): Column =
-    GraftSqlBridge.column(ShingleHashes(GraftSqlBridge.expression(c), n))
+  def apply(c: Column, n: Int): Column = call(c)(n)
 
   def compute(text: UTF8String, n: Int): ArrayData = {
     val bytes = text.getBytes
@@ -258,35 +205,10 @@ object ShingleHashes {
   * corpus models (bigram counts, familiarity scoring) where joins and
   * aggregations should move 8-byte hashes, never n-gram strings.
   * Null text → null. */
-case class NgramHashes(child: Expression, n: Int)
-    extends UnaryExpression {
+object NgramHashes extends Kernel("ngram_hashes", Seq(StringType),
+    ArrayType(LongType, containsNull = false)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"ngram_hashes expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    NgramHashes.compute(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NgramHashes.compute($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : NgramHashes = copy(child = newChild)
-
-  override def prettyName: String = "ngram_hashes"
-}
-
-object NgramHashes {
-
-  def apply(c: Column, n: Int): Column =
-    GraftSqlBridge.column(NgramHashes(GraftSqlBridge.expression(c), n))
+  def apply(c: Column, n: Int): Column = call(c)(n)
 
   def compute(text: UTF8String, n: Int): ArrayData = {
     val bytes = text.getBytes
@@ -324,37 +246,12 @@ object NgramHashes {
   * collision stance — exact absent 64-bit collisions. Null text →
   * null (posexplode then emits no rows, like the composed chain's
   * null-tokens filter). */
-case class GramHashes(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"gram_hashes expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    GramHashes.compute(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GramHashes.compute($c, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : GramHashes = copy(child = newChild)
-
-  override def prettyName: String = "gram_hashes"
-}
-
-object GramHashes {
+object GramHashes extends Kernel("gram_hashes", Seq(StringType),
+    ArrayType(LongType, containsNull = false)) {
 
   private val Empty = new GenericArrayData(new Array[Long](0))
 
-  def apply(c: Column, k: Int): Column =
-    GraftSqlBridge.column(GramHashes(GraftSqlBridge.expression(c), k))
+  def apply(c: Column, k: Int): Column = call(c)(k)
 
   def compute(text: UTF8String, k: Int): ArrayData = {
     val bytes = text.getBytes
@@ -377,34 +274,9 @@ object GramHashes {
   * tokens, fused — identical to `SimHash64(TextAnalysis.tokens(text))`
   * (per-token-OCCURRENCE voting; empty tokens vote like the composed
   * form's empty strings). */
-case class SimHashText(child: Expression) extends UnaryExpression {
+object SimHashText extends Kernel("simhash_text", Seq(StringType), LongType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash_text expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    SimHashText.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SimHashText.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : SimHashText = copy(child = newChild)
-
-  override def prettyName: String = "simhash_text"
-}
-
-object SimHashText {
-
-  def apply(c: Column): Column =
-    GraftSqlBridge.column(SimHashText(GraftSqlBridge.expression(c)))
+  def apply(c: Column): Column = call(c)()
 
   def compute(text: UTF8String): Long = {
     val bytes = text.getBytes

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,34 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Null text → null (nullIntolerant).
   */
-case class TopTokenRatio(child: Expression) extends UnaryExpression {
+object TopTokenRatio extends Kernel("top_token_ratio", Seq(StringType), DoubleType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"top_token_ratio expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    TopTokenRatio.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TopTokenRatio.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : TopTokenRatio = copy(child = newChild)
-
-  override def prettyName: String = "top_token_ratio"
-}
-
-object TopTokenRatio {
-
-  def apply(c: Column): Column =
-    GraftSqlBridge.column(TopTokenRatio(GraftSqlBridge.expression(c)))
+  def apply(c: Column): Column = call(c)()
 
   def compute(text: UTF8String): Double = {
     val bytes = text.getBytes

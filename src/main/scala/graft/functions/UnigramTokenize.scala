@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types._
@@ -215,7 +212,7 @@ object UnigramKernel {
     override def initialValue(): WordCache = new WordCache
   }
 
-  private def segmentCached(word: String, v: UnigramVocab): Array[String] = {
+  private[functions] def segmentCached(word: String, v: UnigramVocab): Array[String] = {
     val wc = cache.get()
     if (wc.vocab ne v) { wc.map.clear(); wc.vocab = v }
     var ps = wc.map.get(word)
@@ -226,10 +223,19 @@ object UnigramKernel {
     }
     ps
   }
+}
+
+/** `unigram_segment(text)` → `array<string>` of vocabulary pieces — the
+  * training E-step surface ([[graft.llm.Unigram.learn]] counts these
+  * over the distinct-word table). Null text → null. */
+object UnigramSegment extends Kernel("unigram_segment",
+    Seq(StringType), ArrayType(StringType, containsNull = false)) {
+
+  def apply(text: Column, vocab: UnigramVocab): Column = call(text)(vocab)
 
   /** Text → the pieces of its whitespace words, concatenated in order
     * (the training E-step's view). */
-  def computePieces(text: UTF8String, v: UnigramVocab): ArrayData = {
+  def compute(text: UTF8String, v: UnigramVocab): ArrayData = {
     val bytes = text.getBytes
     val (starts, ends, n) = TextTokenize.tokenize(bytes)
     val out = Seq.newBuilder[UTF8String]
@@ -237,15 +243,24 @@ object UnigramKernel {
     while (t < n) {
       if (ends(t) > starts(t)) {
         val word = new String(bytes, starts(t), ends(t) - starts(t), "UTF-8")
-        segmentCached(word, v).foreach(p => out += UTF8String.fromString(p))
+        UnigramKernel.segmentCached(word, v)
+          .foreach(p => out += UTF8String.fromString(p))
       }
       t += 1
     }
     new GenericArrayData(out.result().toArray[Any])
   }
+}
+
+/** `unigram_encode(text)` → `array<int>` of unigram-LM token ids (the
+  * [[BpeEncode]] twin for the SentencePiece family). Null → null. */
+object UnigramEncode extends Kernel("unigram_encode",
+    Seq(StringType), ArrayType(IntegerType, containsNull = false)) {
+
+  def apply(text: Column, vocab: UnigramVocab): Column = call(text)(vocab)
 
   /** Text → token ids (the serve-side encode). */
-  def computeIds(text: UTF8String, v: UnigramVocab): ArrayData = {
+  def compute(text: UTF8String, v: UnigramVocab): ArrayData = {
     val bytes = text.getBytes
     val (starts, ends, n) = TextTokenize.tokenize(bytes)
     var out = new Array[Int](16)
@@ -254,7 +269,7 @@ object UnigramKernel {
     while (t < n) {
       if (ends(t) > starts(t)) {
         val word = new String(bytes, starts(t), ends(t) - starts(t), "UTF-8")
-        val ps = segmentCached(word, v)
+        val ps = UnigramKernel.segmentCached(word, v)
         if (outLen + ps.length > out.length)
           out = java.util.Arrays.copyOf(out,
             math.max(out.length * 2, outLen + ps.length))
@@ -269,9 +284,20 @@ object UnigramKernel {
     }
     UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(out, outLen))
   }
+}
+
+/** `unigram_decode(ids)` → string — inverse of [[UnigramEncode]]'s id
+  * scheme; `decode(encode(text))` equals text with its whitespace
+  * squeezed out (the [[BpeDecode]] round-trip equation — word
+  * boundaries are the single lossy step). Invalid ids fail loudly.
+  * Null ids → null. */
+object UnigramDecode extends Kernel("unigram_decode",
+    Seq(ArrayType(IntegerType)), StringType) {
+
+  def apply(ids: Column, vocab: UnigramVocab): Column = call(ids)(vocab)
 
   /** Ids → concatenated pieces (decode; invalid ids fail loudly). */
-  def computeDecode(ids: ArrayData, v: UnigramVocab): UTF8String = {
+  def compute(ids: ArrayData, v: UnigramVocab): UTF8String = {
     val sb = new java.lang.StringBuilder
     var i = 0
     val n = ids.numElements()
@@ -281,121 +307,4 @@ object UnigramKernel {
     }
     UTF8String.fromString(sb.toString)
   }
-}
-
-/** `unigram_segment(text)` → `array<string>` of vocabulary pieces — the
-  * training E-step surface ([[graft.llm.Unigram.learn]] counts these
-  * over the distinct-word table). Null text → null. */
-case class UnigramSegment(child: Expression, vocab: UnigramVocab)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"unigram_segment expects string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    UnigramKernel.computePieces(input.asInstanceOf[UTF8String], vocab)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val ref = ctx.addReferenceObj("unigramVocab", vocab,
-      classOf[UnigramVocab].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.UnigramKernel.computePieces($c, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : UnigramSegment = copy(child = newChild)
-
-  override def prettyName: String = "unigram_segment"
-}
-
-object UnigramSegment {
-  def apply(text: Column, vocab: UnigramVocab): Column =
-    GraftSqlBridge.column(
-      UnigramSegment(GraftSqlBridge.expression(text), vocab))
-}
-
-/** `unigram_encode(text)` → `array<int>` of unigram-LM token ids (the
-  * [[BpeEncode]] twin for the SentencePiece family). Null → null. */
-case class UnigramEncode(child: Expression, vocab: UnigramVocab)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"unigram_encode expects string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType =
-    ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    UnigramKernel.computeIds(input.asInstanceOf[UTF8String], vocab)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val ref = ctx.addReferenceObj("unigramVocab", vocab,
-      classOf[UnigramVocab].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.UnigramKernel.computeIds($c, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : UnigramEncode = copy(child = newChild)
-
-  override def prettyName: String = "unigram_encode"
-}
-
-object UnigramEncode {
-  def apply(text: Column, vocab: UnigramVocab): Column =
-    GraftSqlBridge.column(
-      UnigramEncode(GraftSqlBridge.expression(text), vocab))
-}
-
-/** `unigram_decode(ids)` → string — inverse of [[UnigramEncode]]'s id
-  * scheme; `decode(encode(text))` equals text with its whitespace
-  * squeezed out (the [[BpeDecode]] round-trip equation — word
-  * boundaries are the single lossy step). Invalid ids fail loudly.
-  * Null ids → null. */
-case class UnigramDecode(child: Expression, vocab: UnigramVocab)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"unigram_decode expects array<int>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    UnigramKernel.computeDecode(input.asInstanceOf[ArrayData], vocab)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val ref = ctx.addReferenceObj("unigramVocab", vocab,
-      classOf[UnigramVocab].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.UnigramKernel.computeDecode($c, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : UnigramDecode = copy(child = newChild)
-
-  override def prettyName: String = "unigram_decode"
-}
-
-object UnigramDecode {
-  def apply(ids: Column, vocab: UnigramVocab): Column =
-    GraftSqlBridge.column(
-      UnigramDecode(GraftSqlBridge.expression(ids), vocab))
 }

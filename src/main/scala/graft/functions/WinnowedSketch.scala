@@ -1,13 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression: winnowing fingerprint set of a token
+/** Native kernel ([[Kernel]]): winnowing fingerprint set of a token
   * array — the distinct minima of every `w`-token sliding window of
   * FNV-1a 64 token hashes (the plagiarism-detection sketch).
   *
@@ -30,38 +27,16 @@ import org.apache.spark.sql.types._
   * sf0.1) before this kernel. The DuckDB oracle is unchanged — same
   * hash, same window minima.
   */
-case class WinnowedSketch(child: Expression, w: Int)
-    extends UnaryExpression {
-
-  require(w >= 1, s"winnowed_sketch window must be >= 1, got $w")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"winnowed_sketch expects array<string>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    WinnowedSketch.compute(input.asInstanceOf[ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WinnowedSketch.compute($c, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : WinnowedSketch = copy(child = newChild)
-
-  override def prettyName: String = "winnowed_sketch"
-}
-
-object WinnowedSketch {
+object WinnowedSketch extends Kernel("winnowed_sketch",
+    Seq(ArrayType(StringType)), ArrayType(LongType, containsNull = false)) {
 
   /** Column API: `WinnowedSketch(tokenArray, w)`. */
-  def apply(c: Column, w: Int): Column =
-    GraftSqlBridge.column(WinnowedSketch(GraftSqlBridge.expression(c), w))
+  def apply(c: Column, w: Int): Column = call(c)(w)
+
+  override def checkConsts(consts: Seq[Any]): Unit = {
+    val w = consts.head
+    require(w.asInstanceOf[Int] >= 1, s"winnowed_sketch window must be >= 1, got $w")
+  }
 
   /** Shared kernel for interpreted eval and generated code.
     *

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types._
@@ -147,7 +144,7 @@ object WordPieceKernel {
     override def initialValue(): WordCache = new WordCache
   }
 
-  private def segmentCached(word: String, v: WordPieceVocab): Array[Int] = {
+  private[functions] def segmentCached(word: String, v: WordPieceVocab): Array[Int] = {
     val wc = cache.get()
     if (wc.vocab ne v) { wc.map.clear(); wc.vocab = v }
     var ids = wc.map.get(word)
@@ -158,9 +155,17 @@ object WordPieceKernel {
     }
     ids
   }
+}
+
+/** `wordpiece_encode(text)` → `array<int>` of WordPiece token ids (the
+  * [[BpeEncode]]/[[UnigramEncode]] sibling). Null → null. */
+object WordPieceEncode extends Kernel("wordpiece_encode",
+    Seq(StringType), ArrayType(IntegerType, containsNull = false)) {
+
+  def apply(text: Column, vocab: WordPieceVocab): Column = call(text)(vocab)
 
   /** Text → token ids of its whitespace words, concatenated. */
-  def computeIds(text: UTF8String, v: WordPieceVocab): ArrayData = {
+  def compute(text: UTF8String, v: WordPieceVocab): ArrayData = {
     val bytes = text.getBytes
     val (starts, ends, n) = TextTokenize.tokenize(bytes)
     var out = new Array[Int](16)
@@ -169,7 +174,7 @@ object WordPieceKernel {
     while (t < n) {
       if (ends(t) > starts(t)) {
         val word = new String(bytes, starts(t), ends(t) - starts(t), "UTF-8")
-        val ids = segmentCached(word, v)
+        val ids = WordPieceKernel.segmentCached(word, v)
         if (outLen + ids.length > out.length)
           out = java.util.Arrays.copyOf(out,
             math.max(out.length * 2, outLen + ids.length))
@@ -180,12 +185,22 @@ object WordPieceKernel {
     }
     UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(out, outLen))
   }
+}
+
+/** `wordpiece_decode(ids)` → string — inverse of [[WordPieceEncode]]'s
+  * id scheme up to whitespace squeezing (the family round-trip
+  * equation). Invalid ids fail loudly. Null ids → null. */
+object WordPieceDecode extends Kernel("wordpiece_decode",
+    Seq(ArrayType(IntegerType)), StringType) {
+
+  def apply(ids: Column, vocab: WordPieceVocab): Column = call(ids)(vocab)
 
   /** Ids → concatenated piece contents (decode; the marker is the
     * single lossy step beyond word boundaries — both engines squeeze
     * whitespace, the round-trip equation of the other two families).
     * Invalid ids fail loudly. */
-  def computeDecode(ids: ArrayData, v: WordPieceVocab): UTF8String = {
+  def compute(ids: ArrayData, v: WordPieceVocab): UTF8String = {
+    import WordPieceKernel.{ContBase, MultiBase}
     val sb = new java.lang.StringBuilder
     var i = 0
     val n = ids.numElements()
@@ -206,80 +221,4 @@ object WordPieceKernel {
     }
     UTF8String.fromString(sb.toString)
   }
-}
-
-/** `wordpiece_encode(text)` → `array<int>` of WordPiece token ids (the
-  * [[BpeEncode]]/[[UnigramEncode]] sibling). Null → null. */
-case class WordPieceEncode(child: Expression, vocab: WordPieceVocab)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"wordpiece_encode expects string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType =
-    ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    WordPieceKernel.computeIds(input.asInstanceOf[UTF8String], vocab)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val ref = ctx.addReferenceObj("wordPieceVocab", vocab,
-      classOf[WordPieceVocab].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordPieceKernel.computeIds($c, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : WordPieceEncode = copy(child = newChild)
-
-  override def prettyName: String = "wordpiece_encode"
-}
-
-object WordPieceEncode {
-  def apply(text: Column, vocab: WordPieceVocab): Column =
-    GraftSqlBridge.column(
-      WordPieceEncode(GraftSqlBridge.expression(text), vocab))
-}
-
-/** `wordpiece_decode(ids)` → string — inverse of [[WordPieceEncode]]'s
-  * id scheme up to whitespace squeezing (the family round-trip
-  * equation). Invalid ids fail loudly. Null ids → null. */
-case class WordPieceDecode(child: Expression, vocab: WordPieceVocab)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"wordpiece_decode expects array<int>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    WordPieceKernel.computeDecode(input.asInstanceOf[ArrayData], vocab)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val ref = ctx.addReferenceObj("wordPieceVocab", vocab,
-      classOf[WordPieceVocab].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordPieceKernel.computeDecode($c, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : WordPieceDecode = copy(child = newChild)
-
-  override def prettyName: String = "wordpiece_decode"
-}
-
-object WordPieceDecode {
-  def apply(ids: Column, vocab: WordPieceVocab): Column =
-    GraftSqlBridge.column(
-      WordPieceDecode(GraftSqlBridge.expression(ids), vocab))
 }

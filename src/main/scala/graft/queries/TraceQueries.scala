@@ -92,7 +92,7 @@ object TraceQueries {
           element_at(col("ce.stdComplex"), 2).as("std_2"))
     }),
 
-    // K1/K2: one-sided PSD via the FFT UDF (oracle: brute-DFT mirror)
+    // K1/K2: one-sided PSD via the psd kernel (oracle: brute-DFT mirror)
     "k1_psd" -> ((s, dir) =>
       syntheticTraces(s, dir).filter(col("event_id") < 20)
         .select(col("event_id"),
@@ -101,7 +101,7 @@ object TraceQueries {
             lit(0.0), (acc, x) => acc + x), 6).as("total_power"))
         .orderBy("event_id")),
 
-    // K3: Butterworth low-pass UDF (oracle: recursive-CTE IIR mirror)
+    // K3: Butterworth low-pass kernel (oracle: recursive-CTE IIR mirror)
     "k3_lowpass" -> ((s, dir) =>
       syntheticTraces(s, dir).filter(col("event_id") < 20)
         .select(col("event_id"),

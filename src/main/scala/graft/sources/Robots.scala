@@ -228,14 +228,9 @@ object Robots {
       agent: String,
       hostCol: String = "host",
       robotsCol: String = "robots_txt"): DataFrame = {
-    val dir = udf { (content: String) =>
-      val d = directivesFor(content, agent)
-      (d.crawlDelay, d.sitemaps)
-    }
     robots.select(lower(col(hostCol)).as("host"),
-        dir(col(robotsCol)).as("__d"))
-      .select(col("host"), col("__d._1").as("crawl_delay"),
-        col("__d._2").as("sitemaps"))
+        graft.functions.RobotsDirectives(col(robotsCol), agent).as("__d"))
+      .select(col("host"), col("__d.crawl_delay"), col("__d.sitemaps"))
   }
 
   /** Polite fetch schedule: assign every URL a per-host serial slot

@@ -2,16 +2,21 @@ package graft.traces
 
 import scala.collection.mutable
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import org.jtransforms.fft.DoubleFFT_1D
+import graft.functions.Kernel
 
 /** Signal-processing kernels over trace arrays (SURVEY §2.10 K1-K3).
   *
   * Reference uses scipy/numpy FFTs (`photon_calibration.py:15,1363-1401`,
   * `vibration_analyzer.py:344-357`) and qetpy's 2nd-order Butterworth
   * low-pass (`analyzer.py:880-886`). Here: JTransforms (ships with Spark)
-  * for FFTs inside UDFs/aggregator preprocessing, and a direct-form
-  * biquad for the filter. All functions are pure and deterministic.
+  * for the FFTs, and a direct-form biquad for the filter. All functions
+  * are pure and deterministic; [[Psd]], [[Lowpass]] and
+  * [[ScaledSpectrum]] run them per trace as codegen'd kernels.
   */
 object Dsp {
 
@@ -112,26 +117,11 @@ object Dsp {
     y
   }
 
-  // ------------------------------------------------------------ UDF forms
-
-  /** K1 as a column function: trace → struct(re, im) half-spectrum. */
-  val rfftUdf = udf { x: Seq[Double] =>
-    val (re, im) = rfft(x.toArray); (re, im)
-  }
-
-  /** K2 as a column function: trace → one-sided PSD array. */
-  def psdUdf(fs: Double) = udf { x: Seq[Double] => psd(x.toArray, fs) }
-
-  /** K3 as a column function. */
-  def lowpassUdf(cutoff: Double, fs: Double) =
-    udf { x: Seq[Double] => butterworthLowpass(x.toArray, cutoff, fs) }
-
   /** PSD-scaled half-spectrum, interleaved [re0,im0,re1,im1,…] — the
     * preprocessing step feeding [[graft.vibration.MomentAggregator]]. */
-  def scaledSpectrumUdf(fs: Double) = udf { x: Seq[Double] =>
-    val arr = x.toArray
-    val (re, im) = rfft(arr)
-    val s = scale(arr.length, fs)
+  def scaledSpectrum(x: Array[Double], fs: Double): Array[Double] = {
+    val (re, im) = rfft(x)
+    val s = scale(x.length, fs)
     val out = Array.ofDim[Double](2 * re.length)
     var k = 0
     while (k < re.length) {
@@ -139,6 +129,31 @@ object Dsp {
     }
     out
   }
+
+  /** A trace's samples, unboxed. A null sample is an error that names
+    * the kernel: no spectrum or filter is defined over a gap. */
+  private[traces] def samples(trace: ArrayData, kernel: String): Array[Double] = {
+    val n = trace.numElements()
+    var i = 0
+    while (i < n) {
+      if (trace.isNullAt(i)) throw new IllegalArgumentException(
+        s"$kernel: null sample at index $i of a trace")
+      i += 1
+    }
+    trace.toDoubleArray()
+  }
+
+  // ------------------------------------------------ column functions
+
+  /** K2 as a column function: trace → one-sided PSD array. */
+  def psdUdf(fs: Double): Column => Column = Psd(_, fs)
+
+  /** K3 as a column function. */
+  def lowpassUdf(cutoff: Double, fs: Double): Column => Column =
+    Lowpass(_, cutoff, fs)
+
+  /** [[scaledSpectrum]] as a column function. */
+  def scaledSpectrumUdf(fs: Double): Column => Column = ScaledSpectrum(_, fs)
 
   // --------------------------------------------- declarative array helpers
 
@@ -162,4 +177,33 @@ object Dsp {
     transform(
       array(baseline(trace, i0, i1)),
       b => transform(trace, x => x - b)).getItem(0)
+}
+
+/** The per-trace DSP kernels over `array<double>` ([[graft.functions.Kernel]]):
+  * the samples are read unboxed with `toDoubleArray` and the result is
+  * written with `UnsafeArrayData.fromPrimitiveArray`. A null trace gives
+  * null; a null sample fails with the kernel's name. */
+object Psd extends Kernel("psd", Seq(ArrayType(DoubleType)),
+    ArrayType(DoubleType, containsNull = false)) {
+  def apply(trace: Column, fs: Double): Column = call(trace)(fs)
+  def compute(trace: ArrayData, fs: Double): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(Dsp.psd(Dsp.samples(trace, name), fs))
+}
+
+object Lowpass extends Kernel("lowpass", Seq(ArrayType(DoubleType)),
+    ArrayType(DoubleType, containsNull = false)) {
+  def apply(trace: Column, cutoff: Double, fs: Double): Column =
+    call(trace)(cutoff, fs)
+  def compute(trace: ArrayData, cutoff: Double, fs: Double): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(
+      Dsp.butterworthLowpass(Dsp.samples(trace, name), cutoff, fs))
+}
+
+object ScaledSpectrum
+    extends Kernel("scaled_spectrum", Seq(ArrayType(DoubleType)),
+    ArrayType(DoubleType, containsNull = false)) {
+  def apply(trace: Column, fs: Double): Column = call(trace)(fs)
+  def compute(trace: ArrayData, fs: Double): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(
+      Dsp.scaledSpectrum(Dsp.samples(trace, name), fs))
 }

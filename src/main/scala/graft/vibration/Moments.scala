@@ -51,7 +51,8 @@ final case class Moments(
 /** Mergeable moment accumulator. Input rows are per-event channel
   * spectra: `Seq[Seq[Double]]`, outer = channel (fixed order), inner =
   * interleaved [re0, im0, re1, im1, …] of length 2·nFreq (produced by
-  * [[graft.traces.Dsp.scaledSpectrumUdf]] for the continuous path, or
+  * the [[graft.traces.ScaledSpectrum]] kernel
+  * ([[graft.traces.Dsp.scaledSpectrumUdf]]) for the continuous path, or
   * assembled directly from `amp_real_<ch>`/`amp_imag_<ch>` columns for
   * the transducer-sweep path with nFreq = 1).
   *

@@ -69,6 +69,33 @@ class DspSpec extends SparkSpec {
     assert(math.abs(out(4) - 3.0) < 1e-12)
   }
 
+  test("DSP kernels: a null trace gives null, a null sample names the kernel") {
+    import org.apache.spark.sql.functions._
+    // generated from a range, so the kernels run in generated code and
+    // are not folded on the driver
+    val traces = spark.range(3).select(
+      when(col("id") === 0, array((1 to 8).map(i => lit(i.toDouble)): _*))
+        .when(col("id") === 1,
+          array(lit(1.0), lit(null).cast("double"), lit(3.0), lit(4.0)))
+        .as("trace"),
+      col("id"))
+    val kernels = Seq("psd" -> Dsp.psdUdf(fs),
+      "lowpass" -> Dsp.lowpassUdf(100.0, fs),
+      "scaled_spectrum" -> Dsp.scaledSpectrumUdf(fs))
+    kernels.foreach { case (name, f) =>
+      val got = traces.filter(col("id") =!= 1).orderBy("id")
+        .select(f(col("trace"))).collect()
+      assert(!got(0).isNullAt(0), name)
+      assert(got(1).isNullAt(0), s"$name of a null trace")
+      val e = intercept[Exception](
+        traces.filter(col("id") === 1).select(f(col("trace"))).collect())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      assert(messages.exists(_.contains(s"$name: null sample at index 1")),
+        s"$name: ${e.getMessage}")
+    }
+  }
+
   test("reused FFT plans and scales: every thread gets one fresh plan's bits") {
     import org.jtransforms.fft.DoubleFFT_1D
     // the kernels as they were before plans were reused: a fresh plan

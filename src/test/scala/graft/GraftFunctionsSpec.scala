@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, Literal}
 import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{GraftExtensions, GraftFunctions}
+import graft.functions.{GraftExtensions, GraftFunctions, KernelCall}
 
 /** The SQL surface's one table, seen through the `spark.sql.extensions`
   * path: [[GraftExtensions]] applied to a fresh
@@ -57,7 +57,10 @@ class GraftFunctionsSpec extends AnyFunSuite {
       assert(reg.lookupFunction(id).map(_.getClassName)
         .contains(cls.getName), name)
       val built = reg.lookupFunction(id, sampleArgs(name))
-      assert(built.find(cls.isInstance).isDefined,
+      assert(built.find {
+        case k: KernelCall => cls.isInstance(k.kernel)
+        case e => cls.isInstance(e)
+      }.isDefined,
         s"$name built $built, no ${cls.getSimpleName} in it")
     }
     // argument checks keep their messages

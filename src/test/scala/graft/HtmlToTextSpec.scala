@@ -86,10 +86,10 @@ class HtmlToTextSpec extends SparkSpec {
       .collect().map(r => Option(r.getString(0)))
     assert(got.toSeq == Seq(Some("a & b\nc"), Some(""), None))
     // interpreted path (no codegen) must match
-    val interp = graft.functions.HtmlToText(
-      org.apache.spark.sql.catalyst.expressions.Literal(
+    val interp = graft.functions.KernelCall(HtmlToText,
+      Seq(org.apache.spark.sql.catalyst.expressions.Literal(
         org.apache.spark.unsafe.types.UTF8String.fromString(
-          "<p>a &amp; b</p><script>x</script>c")))
+          "<p>a &amp; b</p><script>x</script>c"))), Nil)
       .eval(null).toString
     assert(interp == "a & b\nc")
   }

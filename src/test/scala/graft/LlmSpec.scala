@@ -3145,7 +3145,7 @@ class LlmSpec extends SparkSpec {
       .select(NormalizeText(col("t")).as("n")).head
     assert(n.isNullAt(0))
     // interpreted (non-codegen) path agrees with the codegen path
-    assert(graft.functions.NormalizeText.normalize(
+    assert(graft.functions.NormalizeText.compute(
       org.apache.spark.unsafe.types.UTF8String.fromString(" X\tY "),
       "NFC", caseFold = true, collapseWs = true).toString == "x y")
   }

@@ -47,6 +47,18 @@ class ScopeGuardSpec extends AnyFunSuite {
     ("""\b(extraStrategies|injectPlannerStrategy)\b|\b(extends|with)\s+""" +
       """(SparkStrategy|Strategy|SparkPlan|\w*ExecNode)\b""").r
 
+  /** A Scala UDF: every per-row native function is a
+    * [[graft.functions.Kernel]]. The registry queries are exempt: some
+    * test Spark's UDF path against DuckDB. */
+  private val udfCall = """\budf\s*[({]""".r
+
+  private def udfExempt(p: Path): Boolean = p.getParent.endsWith("graft/queries")
+
+  /** A hand-bound Catalyst expression: the kernels share
+    * [[graft.functions.KernelCall]]. */
+  private val handBound =
+    """\b(extends|with)\s+(Unary|Binary|Ternary)Expression\b""".r
+
   private def isComment(line: String): Boolean = {
     val t = line.trim
     t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
@@ -106,6 +118,38 @@ class ScopeGuardSpec extends AnyFunSuite {
     assertAllowed(
       directCalls(Paths.get("src/main/scala"), plannerHook, _ => false),
       Map.empty, "planner hooks under src/main")
+  }
+
+  test("no Scala UDF under src/main, queries aside") {
+    assertAllowed(
+      directCalls(Paths.get("src/main/scala"), udfCall, udfExempt),
+      Map.empty, "Scala UDFs outside the registry queries")
+  }
+
+  test("no hand-bound unary or binary expression under src/main") {
+    assertAllowed(
+      directCalls(Paths.get("src/main/scala"), handBound, _ => false),
+      Map.empty, "Catalyst expressions bound by hand")
+  }
+
+  test("the UDF and expression guards see definitions, not comments") {
+    val dir = Files.createTempDirectory("kernel-guard")
+    val src = dir.resolve("Planted.scala")
+    Files.writeString(src, Seq(
+      "object Planted {",
+      "  val f = udf { x: Seq[Double] => x.sum }",
+      "  val g = udf((s: String) => s.length)",
+      "  case class K(child: Expression) extends UnaryExpression {",
+      "  case class B(left: Expression, right: Expression)",
+      "      extends BinaryExpression with NullIntolerant {",
+      "  // val h = udf { x: Int => x } in a comment",
+      "  val k = graft.functions.MinHashSig(col(\"s\"), 64)",
+      "  val psdUdf = Dsp.psdUdf(1000.0)",
+      "}").mkString("\n"))
+    try {
+      assert(directCalls(dir, udfCall, _ => false).map(_._2) == Seq(2, 3))
+      assert(directCalls(dir, handBound, _ => false).map(_._2) == Seq(4, 6))
+    } finally { Files.delete(src); Files.delete(dir) }
   }
 
   test("the guard recognises every call form and skips comments") {
